@@ -261,7 +261,7 @@ def main() -> None:
     # sub-second at sf0.1, dominated by job-launch/codegen constants,
     # so the driver's 8-vs-32-core comparison reads ≈1 everywhere and
     # says nothing about operator parallelism. This leg is built to
-    # SCALE: the sf documents corpus replicated 8x row-wise (generated
+    # SCALE: the sf documents corpus replicated 24x row-wise (generated
     # in the timed setup, deterministic, no caching), spread over
     # 4x-cores partitions, through the md5-heavy MinHash
     # shingle→signature pass — embarrassingly parallel CPU work whose

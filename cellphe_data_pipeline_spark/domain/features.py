@@ -39,7 +39,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cellphe_data_pipeline_spark.domain.images import decode_frame
+from cellphe_data_pipeline_spark.domain.images import (
+    _largest_component,
+    _raster_dtype,
+    trace_outer_contour,
+)
 
 STATIC_FEATURE_NAMES = (
     "Area",
@@ -633,11 +637,62 @@ def _cell_features(img: np.ndarray, coords: np.ndarray) -> dict[str, float] | No
     return feats
 
 
+def _frame_features(tagged: DataFrame, frame_cells) -> DataFrame:
+    """The ONE M4 per-frame loop behind both public forms: decode the raw
+    raster (dtype from the byte count, ``_raster_dtype``), min-max
+    normalise it once per frame, then run ``_cell_features`` over the
+    frame's cells, skipping degenerate ROIs. ``tagged`` carries one row
+    per frame (path, FrameID, height, width, data, ...); ``frame_cells(r)``
+    yields that frame's ``(CellID, ROI_filename, coords)`` with
+    coords an (n, 2) int64 array of (x, y) boundary points — the only
+    step in which the two forms differ."""
+    out_cols = [f.name for f in FEATURES_SCHEMA.fields]
+
+    def kernel(batches):
+        for pdf in batches:
+            rows = []
+            for _, r in pdf.iterrows():
+                raw = r["data"]
+                h, w = int(r["height"]), int(r["width"])
+                img = np.frombuffer(raw, dtype=_raster_dtype(raw, h, w)).reshape(
+                    h, w
+                ).astype("float64")
+                lo, hi = img.min(), img.max()  # A6+F10 min-max normalise once/frame
+                if hi > lo:
+                    img = (img - lo) / (hi - lo)
+                for cell_id, roi_filename, coords in frame_cells(r):
+                    feats = _cell_features(img, coords)
+                    if feats is None:
+                        continue  # degenerate ROI skip
+                    rows.append(
+                        {
+                            "path": r["path"],
+                            "FrameID": int(r["FrameID"]),
+                            "CellID": cell_id,
+                            "ROI_filename": roi_filename,
+                            **feats,
+                        }
+                    )
+            yield pd.DataFrame(rows, columns=out_cols)
+
+    # CPU-bound kernel over tiny rows: spread with an explicit
+    # ROUND-ROBIN repartition sized to cores so AQE's byte-based
+    # coalescing cannot serialize all frames through one task (measured
+    # 19s -> 1.9s at the 726-frame bench shape when coalesced). The
+    # kernel needs no co-location by key — each row already carries a
+    # complete frame — so round-robin replaces the old
+    # repartitionByRange, whose RangePartitioner SAMPLING pass executed
+    # the frames⋈cells join twice per action (measured ~1s/action at
+    # the bench shape; guide §2.4 "remove shuffles outright").
+    n = max(2, tagged.sparkSession.sparkContext.defaultParallelism)
+    return tagged.repartition(n).mapInPandas(kernel, FEATURES_SCHEMA)
+
+
 def static_features(frames: DataFrame, rois: DataFrame) -> DataFrame:
     """M4: per-(cell, frame) static features.
 
-    `frames`: (path, frame_index, height, width, data=binary container
-    payload or raw raster bytes). `rois`: (FrameID, CellID,
+    `frames`: (path, frame_index, height, width, data=raw raster bytes,
+    8- or 16-bit — the ``split_frames`` shape). `rois`: (FrameID, CellID,
     ROI_filename, coords array<struct<x,y>>) — optionally carrying a
     ``path`` column; when present the join keys on (path, FrameID) so
     multiple timelapses in one DataFrame stay separated. Without it the
@@ -670,51 +725,12 @@ def static_features(frames: DataFrame, rois: DataFrame) -> DataFrame:
         "data",
     ).join(cells_agg, join_keys)
 
-    out_cols = [f.name for f in FEATURES_SCHEMA.fields]
+    def frame_cells(r):
+        for cell in r["_cells"]:
+            coords = np.array([(c["x"], c["y"]) for c in cell["coords"]], dtype="int64")
+            yield int(cell["CellID"]), cell["ROI_filename"], coords
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                raw = r["data"]
-                if bytes(raw[:5]) == b"FAKE1":
-                    img = decode_frame(bytes(raw))[0].astype("float64")
-                else:
-                    img = np.frombuffer(raw, dtype=np.uint8).reshape(
-                        r["height"], r["width"]
-                    ).astype("float64")
-                lo, hi = img.min(), img.max()  # A6+F10 min-max normalise once/frame
-                if hi > lo:
-                    img = (img - lo) / (hi - lo)
-                for cell in r["_cells"]:
-                    coords = np.array(
-                        [(c["x"], c["y"]) for c in cell["coords"]], dtype="int64"
-                    )
-                    feats = _cell_features(img, coords)
-                    if feats is None:
-                        continue  # degenerate ROI skip
-                    rows.append(
-                        {
-                            "path": r["path"],
-                            "FrameID": int(r["FrameID"]),
-                            "CellID": int(cell["CellID"]),
-                            "ROI_filename": cell["ROI_filename"],
-                            **feats,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    # CPU-bound kernel over tiny rows: spread with an explicit
-    # ROUND-ROBIN repartition sized to cores so AQE's byte-based
-    # coalescing cannot serialize all frames through one task (measured
-    # 19s -> 1.9s at the 726-frame bench shape when coalesced). The
-    # kernel needs no co-location by key — each row already carries a
-    # complete frame — so round-robin replaces the old
-    # repartitionByRange, whose RangePartitioner SAMPLING pass executed
-    # the frames⋈cells join twice per action (measured ~1s/action at
-    # the bench shape; guide §2.4 "remove shuffles outright").
-    n = max(2, frames.sparkSession.sparkContext.defaultParallelism)
-    return tagged.repartition(n).mapInPandas(kernel, FEATURES_SCHEMA)
+    return _frame_features(tagged, frame_cells)
 
 
 def static_features_fused(fused: DataFrame, keep: DataFrame) -> DataFrame:
@@ -748,18 +764,8 @@ def static_features_fused(fused: DataFrame, keep: DataFrame) -> DataFrame:
     whose row set equals the staged join's (every QC survivor has >= 1
     mask pixel, hence >= 1 contour row). Only KEPT cells are traced
     (the staged form traced every label, then discarded the QC
-    failures at the join).
-
-    16-bit note: raster dtype is derived from the byte count
-    (``_raster_dtype``); the staged kernel assumed uint8 for raw
-    payloads and would raise on a 16-bit raster's reshape, so no
-    behaviour silently diverges."""
-    from cellphe_data_pipeline_spark.domain.images import (
-        _largest_component,
-        _raster_dtype,
-        trace_outer_contour,
-    )
-
+    failures at the join). The frame loop itself is shared with
+    ``static_features`` (``_frame_features``)."""
     widths = keep.agg(
         *[
             F.max(F.length(F.col(c).cast("string"))).alias(f"_w_{c}")
@@ -782,60 +788,33 @@ def static_features_fused(fused: DataFrame, keep: DataFrame) -> DataFrame:
         .crossJoin(F.broadcast(widths))
     )
 
-    out_cols = [f.name for f in FEATURES_SCHEMA.fields]
+    def frame_cells(r):
+        m = np.frombuffer(r["mask"], dtype=np.uint16).reshape(
+            int(r["height"]), int(r["width"])
+        )
+        wf, wt, wc = int(r["_w_FrameID"]), int(r["_w_TRACK_ID"]), int(r["_w_CellID"])
+        for cell in r["_keep"]:
+            label = int(cell["CellID"])
+            lys, lxs = np.nonzero(m == label)
+            if len(lys) == 0:
+                continue  # defensive: kept cell absent from mask
+            y0, x0 = int(lys.min()), int(lxs.min())
+            region = _largest_component(
+                m[y0 : int(lys.max()) + 1, x0 : int(lxs.max()) + 1] == label
+            )
+            cxs, cys = trace_outer_contour(region)
+            # trace order == the staged array_sort((seq,x,y)) order (seq
+            # is unique per step)
+            coords = np.column_stack(
+                [(cxs + x0).astype("int64"), (cys + y0).astype("int64")]
+            )
+            roi_filename = "-".join(
+                (
+                    str(int(r["FrameID"])).rjust(wf, "0"),
+                    str(int(cell["TRACK_ID"])).rjust(wt, "0"),
+                    str(label).rjust(wc, "0"),
+                )
+            )
+            yield label, roi_filename, coords
 
-    def kernel(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                raw = r["data"]
-                h, w = int(r["height"]), int(r["width"])
-                if bytes(raw[:5]) == b"FAKE1":
-                    img = decode_frame(bytes(raw))[0].astype("float64")
-                else:
-                    img = np.frombuffer(raw, dtype=_raster_dtype(raw, h, w)).reshape(
-                        h, w
-                    ).astype("float64")
-                lo, hi = img.min(), img.max()  # A6+F10 min-max normalise once/frame
-                if hi > lo:
-                    img = (img - lo) / (hi - lo)
-                m = np.frombuffer(r["mask"], dtype=np.uint16).reshape(h, w)
-                wf, wt, wc = int(r["_w_FrameID"]), int(r["_w_TRACK_ID"]), int(r["_w_CellID"])
-                for cell in r["_keep"]:
-                    label = int(cell["CellID"])
-                    lys, lxs = np.nonzero(m == label)
-                    if len(lys) == 0:
-                        continue  # defensive: kept cell absent from mask
-                    y0, x0 = int(lys.min()), int(lxs.min())
-                    region = _largest_component(
-                        m[y0 : int(lys.max()) + 1, x0 : int(lxs.max()) + 1] == label
-                    )
-                    cxs, cys = trace_outer_contour(region)
-                    # trace order == the staged array_sort((seq,x,y))
-                    # order (seq is unique per step)
-                    coords = np.column_stack(
-                        [(cxs + x0).astype("int64"), (cys + y0).astype("int64")]
-                    )
-                    feats = _cell_features(img, coords)
-                    if feats is None:
-                        continue  # degenerate ROI skip
-                    rows.append(
-                        {
-                            "path": r["path"],
-                            "FrameID": int(r["FrameID"]),
-                            "CellID": label,
-                            "ROI_filename": "-".join(
-                                (
-                                    str(int(r["FrameID"])).rjust(wf, "0"),
-                                    str(int(cell["TRACK_ID"])).rjust(wt, "0"),
-                                    str(label).rjust(wc, "0"),
-                                )
-                            ),
-                            **feats,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    # same round-robin spread rationale as static_features
-    n = max(2, fused.sparkSession.sparkContext.defaultParallelism)
-    return tagged.repartition(n).mapInPandas(kernel, FEATURES_SCHEMA)
+    return _frame_features(tagged, frame_cells)

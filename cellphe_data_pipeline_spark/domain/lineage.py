@@ -36,8 +36,7 @@ from pyspark.sql import functions as F
 from cellphe_data_pipeline_spark.operators.graph import connected_components
 
 #: tracks-per-call bound under which head numbering happens driver-side
-#: (one take(); ~100k heads ≈ a few MB of driver memory). Same pattern
-#: and rationale as plans/pipeline.py TL_DIM_DRIVER_CAP.
+#: (one take(); ~100k heads ≈ a few MB of driver memory).
 TRACK_DIM_DRIVER_CAP = 100_000
 
 #: edge count under which the WHOLE renumbering runs driver-side through
@@ -49,7 +48,7 @@ TRACK_DIM_DRIVER_CAP = 100_000
 #: head numbering, final join) — a pure scheduling floor at these sizes.
 #: 500k edges ≈ tens of MB of driver memory; beyond it the fully
 #: distributed path runs unchanged. Same bounded-smallness pattern as
-#: TL_DIM_DRIVER_CAP and graph.CC_DRIVER_FINISH_CAP.
+#: graph.CC_DRIVER_FINISH_CAP.
 EDGE_DRIVER_CAP = 500_000
 
 

@@ -133,17 +133,6 @@ def roi_filename(
     )
 
 
-def roi_mask_points(df: DataFrame, coords_col: str = "coords") -> DataFrame:
-    """S11 analogue: rasterise ROI boundaries to (row-key, x, y) pixel
-    rows — the relational form of the uint16 mask PNG (the binary PNG
-    encode itself is an edge-side export, out of engine core)."""
-    return df.withColumn("_pt", F.explode(F.col(coords_col))).select(
-        *[c for c in df.columns if c != coords_col],
-        F.col("_pt.x").alias("px"),
-        F.col("_pt.y").alias("py"),
-    )
-
-
 ROI_ZIP_SCHEMA_DDL = "group_key string, roi_zip binary, n_rois int"
 
 

@@ -137,10 +137,10 @@ def _contract_local(e: DataFrame, num_parts: int) -> DataFrame:
 
 #: contracted-edge count under which the CC alternation is FINISHED on
 #: the driver in one union-find pass (~16 bytes/row ⇒ the cap is ~16 MB
-#: of driver memory). Same bounded-smallness pattern as the pipeline's
-#: TL_DIM_DRIVER_CAP / lineage's TRACK_DIM_DRIVER_CAP, and the same
-#: runtime-adaptive rationale as AQE demoting a shuffle join to
-#: broadcast: after the partition-local contraction the surviving
+#: of driver memory). Same bounded-smallness pattern as lineage's
+#: TRACK_DIM_DRIVER_CAP, and the same runtime-adaptive rationale as
+#: AQE demoting a shuffle join to broadcast: after the partition-local
+#: contraction the surviving
 #: cross-partition star graph is usually orders of magnitude smaller
 #: than the input, and ONE take() + in-memory union-find replaces
 #: O(log n) scheduled rounds of (2 shuffles + checkpoint + probe) —

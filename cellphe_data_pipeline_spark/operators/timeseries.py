@@ -10,12 +10,15 @@ Two implementations:
 1. ``timeseries_stats`` — the SQL-expressible subset (count/mean/std/
    skewness via explicit moment sums, ascent/descent via lag) as pure
    native window/agg ops. Used for the DuckDB-oracle correctness gate.
-2. ``timeseries_features`` — the full kernel incl. Haar wavelet detail
-   energies, as a ``groupBy(key).applyInPandas`` Arrow-batched UDAF.
-   Haar DWT is implemented directly in numpy (pairwise sums/diffs per
-   level) — no pywt dependency. One group = one trajectory (bounded:
-   ≤ thousands of rows), so executor memory is independent of total
-   data volume; the only shuffle is the groupBy hash partitioning.
+2. ``timeseries_features_multi`` — the full kernel incl. Haar wavelet
+   detail energies over any number of value columns, as a
+   ``groupBy(key).applyInPandas`` Arrow-batched UDAF.
+   ``timeseries_features`` is the same kernel over one column, renamed
+   to the single-feature contract. Haar DWT is implemented directly in
+   numpy (pairwise sums/diffs per level) — no pywt dependency. One group
+   = one trajectory (bounded: ≤ thousands of rows), so executor memory
+   is independent of total data volume; the only shuffle is the groupBy
+   hash partitioning.
 """
 
 from __future__ import annotations
@@ -110,50 +113,25 @@ def _haar_details(x: np.ndarray, levels: int = 3) -> list[float]:
     return out
 
 
+def _stat_names(levels: int) -> list[str]:
+    return ["mean", "std", "ascent", "descent"] + [f"haar_l{i + 1}" for i in range(levels)]
+
+
 def timeseries_features(
     df: DataFrame, key: str, order: list[str], value: str, levels: int = 3
 ) -> DataFrame:
-    """Full A8 analogue for ONE value column: stats + ascent/descent +
-    Haar detail energies, one output row per key (column names match the
-    original single-feature contract)."""
-    schema = T.StructType(
-        [
-            df.schema[key],
-            T.StructField("n_obs", T.LongType()),
-            T.StructField("mean_val", T.DoubleType()),
-            T.StructField("std_pop", T.DoubleType()),
-            T.StructField("ascent", T.DoubleType()),
-            T.StructField("descent", T.DoubleType()),
-        ]
-        + [T.StructField(f"haar_l{i + 1}", T.DoubleType()) for i in range(levels)]
-    )
-    order_cols = list(order)
-    val = value
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_cols)
-        x = pdf[val].to_numpy(dtype="float64")
-        d = np.diff(x)
-        row = {
-            key: pdf[key].iloc[0],
-            "n_obs": len(x),
-            "mean_val": float(np.mean(x)) if len(x) else 0.0,
-            "std_pop": float(np.std(x)) if len(x) else 0.0,
-            "ascent": float(d[d > 0].sum()) if len(d) else 0.0,
-            "descent": float(d[d < 0].sum()) if len(d) else 0.0,
-        }
-        for i, e in enumerate(_haar_details(x, levels)):
-            row[f"haar_l{i + 1}"] = e
-        return pd.DataFrame([row])
-
-    from cellphe_data_pipeline_spark.operators.scale import (
-        repartition_for_cpu_kernel,
-    )
-
-    return (
-        repartition_for_cpu_kernel(df.select(key, *order_cols, val), key)
-        .groupBy(key)
-        .applyInPandas(kernel, schema)
+    """Full A8 analogue for ONE value column: ``timeseries_features_multi``
+    over ``[value]``, with the columns renamed to the original
+    single-feature contract (``mean_val``, ``std_pop``, ``ascent``,
+    ``descent``, ``haar_l*``)."""
+    rename = {"mean": "mean_val", "std": "std_pop"}
+    return timeseries_features_multi(df, key, order, [value], levels).select(
+        key,
+        "n_obs",
+        *[
+            F.col(f"{value}_{stat}").alias(rename.get(stat, stat))
+            for stat in _stat_names(levels)
+        ],
     )
 
 
@@ -169,9 +147,7 @@ def timeseries_features_multi(
     Still ONE shuffle: all feature columns ride the same groupBy; the
     kernel loops features inside the Arrow batch (vectorised numpy per
     feature), so cost is O(features) CPU on an unchanged data motion."""
-    per_feature = ["mean", "std", "ascent", "descent"] + [
-        f"haar_l{i + 1}" for i in range(levels)
-    ]
+    per_feature = _stat_names(levels)
     schema = T.StructType(
         [df.schema[key], T.StructField("n_obs", T.LongType())]
         + [

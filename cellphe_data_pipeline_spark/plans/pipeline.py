@@ -19,7 +19,7 @@ and pushes down across the whole chain, so e.g. a user who only reads
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cellphe_data_pipeline_spark.domain.images import decode_segment_centroid
@@ -78,12 +78,6 @@ def mask_rois(masks: DataFrame) -> DataFrame:
     )
 
 
-#: containers-per-batch bound under which the timelapse dim is numbered
-#: driver-side (one take()); beyond it the two-pass distributed
-#: numbering takes over. ~100k paths ≈ a few MB of driver memory.
-TL_DIM_DRIVER_CAP = 100_000
-
-
 def run_pipeline(
     binaries: DataFrame,
     qc: dict | None = None,
@@ -132,53 +126,24 @@ def run_pipeline(
     # MBs, not the input corpus. Under the replicated parquet cut
     # (CELLPHE_CHECKPOINT_DIR) the read-back is column-pruned, so a
     # frames-only consumer never scans the mask bytes.
-    # The timelapse-dim probe below is an INDEPENDENT job over the
-    # 33-row-ish binaries relation (~0.35s of pure job-launch cost at
-    # the bench shape) — run it on a driver thread WHILE the fused
-    # kernel checkpoint materialises (guide §2.6 "overlap independent
-    # jobs"): actions are only sequential because driver code calls
-    # them sequentially. inheritable_thread_target propagates the
-    # JVM thread-local job group/description into the pool thread.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    spark = binaries.sparkSession
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _probe_f = _pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: binaries.select(F.col("path"))
-                .distinct()
-                .take(TL_DIM_DRIVER_CAP + 1)
-            )
-        )
-        fused = cut_lineage(
-            decode_segment_centroid(binaries, method=segmentation_method),
-            name="fused_frames",
-        )  # S3/S4 + M1/M2 + detection kernel
-        probe = _probe_f.result()
+    fused = cut_lineage(
+        decode_segment_centroid(binaries, method=segmentation_method),
+        name="fused_frames",
+    )  # S3/S4 + M1/M2 + detection kernel
     frames = fused.select("path", "frame_index", "height", "width", "data")
     masks = fused.select("path", "frame_index", "height", "width", "mask")
     # broadcast timelapse index dim: spot ids must be unique ACROSS
     # timelapses (lineage runs on the union) and frame-monotone within
-    # one. The dim has one row per CONTAINER in this ingest batch —
-    # operationally bounded (33 in the reference run) — so the default
-    # path numbers it driver-side in one job and broadcasts the result;
-    # only a batch beyond TL_DIM_DRIVER_CAP falls back to the scale-safe
-    # two-pass numbering. (The old unconditional two-pass form cost ~8s
-    # of the pipeline's cold start in sampling/checkpoint/collect jobs
-    # for a 33-row relation.)
-    if len(probe) <= TL_DIM_DRIVER_CAP:
-        tl_dim = spark.createDataFrame(
-            [(p, i) for i, p in enumerate(sorted(r["path"] for r in probe), start=1)],
-            "path string, _tl_idx long",
-        )
-    else:
-        from cellphe_data_pipeline_spark.operators.scale import global_row_number
-
-        tl_dim = global_row_number(
-            binaries.select(F.col("path")).distinct(), ["path"], "_tl_idx", num_parts=4
-        )
+    # one. Numbered over the INPUT containers, not the decoded frames, so
+    # a container that decodes to zero frames still takes its index and
+    # later spot ids do not shift. One short string per container (33 in
+    # the reference run): the single-partition window is enough, and the
+    # dim is built inside the first job that needs it — no driver action.
+    tl_dim = (
+        binaries.select("path")
+        .distinct()
+        .withColumn("_tl_idx", F.row_number().over(Window.orderBy("path")).cast("long"))
+    )
     # detection rows come straight off the fused checkpoint's nested
     # centroid structs — a native explode, no third Python wave
     cent_rows = fused.select(

@@ -63,10 +63,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TEST_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (mirrors the DuckDB oracle's
-    pre-registered views) so queries can be pure SQL where convenient."""
-    for name in TEST_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -114,23 +114,27 @@ def test_approx_distinct_within_rsd(spark, sf_dir):
 def test_timeseries_multi_feature(spark):
     import numpy as np
 
-    from cellphe_data_pipeline_spark.operators.timeseries import (
-        timeseries_features,
-        timeseries_features_multi,
-    )
+    from cellphe_data_pipeline_spark.operators.timeseries import timeseries_features_multi
 
     rows = [(1, i, float(i % 5), float(i * i % 7)) for i in range(12)]
     df = spark.createDataFrame(rows, "k int, t int, f1 double, f2 double")
     multi = timeseries_features_multi(df, key="k", order=["t"], values=["f1", "f2"]).collect()[0]
-    # per-feature values equal the single-feature kernel's
-    for feat in ("f1", "f2"):
-        single = timeseries_features(
-            df.select("k", "t", feat), key="k", order=["t"], value=feat
-        ).collect()[0]
-        assert multi[f"{feat}_mean"] == single["mean_val"]
-        assert multi[f"{feat}_std"] == single["std_pop"]
-        assert multi[f"{feat}_ascent"] == single["ascent"]
-        assert multi[f"{feat}_haar_l2"] == single["haar_l2"]
+    # every per-feature column equals a straight numpy computation
+    for col, feat in ((2, "f1"), (3, "f2")):
+        x = np.array([r[col] for r in sorted(rows, key=lambda r: r[1])])
+        d = np.diff(x)
+        assert multi[f"{feat}_mean"] == float(np.mean(x))
+        assert multi[f"{feat}_std"] == float(np.std(x))
+        assert multi[f"{feat}_ascent"] == float(d[d > 0].sum())
+        assert multi[f"{feat}_descent"] == float(d[d < 0].sum())
+        a = x
+        for level in range(1, 4):
+            pairs = a[: 2 * (len(a) // 2)].reshape(-1, 2)
+            detail = (pairs[:, 0] - pairs[:, 1]) / np.sqrt(2.0)
+            assert math.isclose(
+                multi[f"{feat}_haar_l{level}"], float(np.abs(detail).sum()), rel_tol=1e-12
+            )
+            a = (pairs[:, 0] + pairs[:, 1]) / np.sqrt(2.0)
     assert multi["n_obs"] == 12
 
 

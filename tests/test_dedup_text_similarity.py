@@ -214,6 +214,44 @@ def test_minhash_verify_is_rowwise_set_algebra(spark):
     )
 
 
+def test_verify_evaluates_array_intersect_once(spark, monkeypatch):
+    """Plan pin for ``_eval_once_barrier``: in the executed (final AQE)
+    d3/d10/d14 plans the verify projection evaluates ``array_intersect``
+    exactly once. Without the barrier, CollapseProject re-inlines the
+    intersect into the jaccard/containment ratio and the filter
+    conjuncts, so the same plans carry it several times — shown here by
+    re-planning with the barrier patched to identity."""
+    from pyspark.sql import functions as F
+
+    from cellphe_data_pipeline_spark.operators import dedup
+
+    def intersect_counts():
+        docs = _docs_df(spark)
+        counts = {}
+        for name, df in (
+            ("d3", dedup.minhash_near_duplicates(docs, band_size=2)),
+            (
+                "d10",
+                dedup.incremental_near_duplicates(
+                    docs.filter(F.col("doc_id") % 2 == 1),
+                    docs.filter(F.col("doc_id") % 2 == 0),
+                    band_size=2,
+                ),
+            ),
+            ("d14", dedup.containment_near_duplicates(docs)),
+        ):
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            final = plan.split("== Initial Plan ==")[0]
+            counts[name] = final.count("array_intersect(")
+        return counts
+
+    assert intersect_counts() == {"d3": 1, "d10": 1, "d14": 1}
+    monkeypatch.setattr(dedup, "_eval_once_barrier", lambda col, cast_type: col)
+    unpinned = intersect_counts()
+    assert all(n > 1 for n in unpinned.values()), unpinned
+
+
 def test_gopher_gate_mask_not_pushed_into_scan(spark):
     """r16 (guide §4.4 for native trees): gopher_rules(gate_mask=...)
     must keep the rule gate ABOVE the tokenise/count projections. A
@@ -2977,7 +3015,7 @@ def test_minhash_spread_gated_on_scan_parallelism(spark):
 
 def test_minhash_verify_hash_shortcircuit_matches_intersect(spark):
     """r17 (verdict item 5): the verify's equal-set short-circuit
-    (precomputed md5 witness + size compare) must change no values —
+    (precomputed xxhash64 witness + size compare) must change no values —
     identical docs still score jaccard 1.0, near-dups still take the
     intersect path, and the family (d3/d10/d14) agrees pair-for-pair
     with the always-intersect oracle expression."""

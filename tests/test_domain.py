@@ -206,13 +206,12 @@ def test_static_features(spark):
     from cellphe_data_pipeline_spark.domain.features import static_features
 
     payload = make_fake_image(seed=3, height=16, width=16, n_frames=1)
-    frames = spark.createDataFrame(
-        [("t.fake", 1, 16, 16, bytearray(payload))],
-        "path string, frame_index int, height int, width int, data binary",
+    frames = split_frames(
+        spark.createDataFrame([("t.fake", bytearray(payload))], "path string, content binary")
     )
     square = [{"x": x, "y": y} for x in range(4, 8) for y in range(4, 8)]
     rois = spark.createDataFrame(
-        [(1, 10, "001-01-010", square), (1, 11, "001-01-011", [{"x": 0, "y": 0}])],
+        [(0, 10, "000-01-010", square), (0, 11, "000-01-011", [{"x": 0, "y": 0}])],
         "FrameID int, CellID int, ROI_filename string, coords array<struct<x:int,y:int>>",
     )
     out = static_features(frames, rois).collect()
@@ -221,6 +220,31 @@ def test_static_features(spark):
     assert r["CellID"] == 10 and r["Area"] == 16.0
     assert r["x"] == 5.5 and r["y"] == 5.5
     assert 0.0 <= r["Int_min"] <= r["Int_q25"] <= r["Int_mean"] <= r["Int_q75"] <= r["Int_max"] <= 1.0
+
+
+def test_static_features_16bit_raster(spark):
+    """A 16-bit raw raster (2 bytes per pixel, the other width the codec
+    ladder produces) decodes by its byte count — it used to be reshaped
+    as uint8 and raise."""
+    from cellphe_data_pipeline_spark.domain.features import static_features
+
+    img = np.arange(16 * 16, dtype=np.uint16).reshape(16, 16) * 200
+    frames = spark.createDataFrame(
+        [("t16.tif", 0, 16, 16, bytearray(img.tobytes()))],
+        "path string, frame_index int, height int, width int, data binary",
+    )
+    square = [{"x": x, "y": y} for x in range(4, 8) for y in range(4, 8)]
+    rois = spark.createDataFrame(
+        [(0, 10, "000-01-010", square)],
+        "FrameID int, CellID int, ROI_filename string, coords array<struct<x:int,y:int>>",
+    )
+    (r,) = static_features(frames, rois).collect()
+    assert r["CellID"] == 10 and r["Area"] == 16.0
+    # min-max normalised over the 16-bit range: pixel (x, y) -> (16y + x) / 255
+    xs, ys = zip(*[(c["x"], c["y"]) for c in square])
+    expect = (16 * np.array(ys) + np.array(xs)) / 255.0
+    assert math.isclose(r["Int_min"], float(expect.min()), rel_tol=1e-12)
+    assert math.isclose(r["Int_max"], float(expect.max()), rel_tol=1e-12)
 
 
 def test_tracking(spark):
@@ -744,13 +768,15 @@ def test_static_features_multi_timelapse_path_join(spark):
 
     pa = make_fake_image(seed=11, height=16, width=16, n_frames=1)
     pb = make_fake_image(seed=22, height=16, width=16, n_frames=1)
-    frames = spark.createDataFrame(
-        [("a.fake", 1, 16, 16, bytearray(pa)), ("b.fake", 1, 16, 16, bytearray(pb))],
-        "path string, frame_index int, height int, width int, data binary",
+    frames = split_frames(
+        spark.createDataFrame(
+            [("a.fake", bytearray(pa)), ("b.fake", bytearray(pb))],
+            "path string, content binary",
+        )
     )
     square = [{"x": x, "y": y} for x in range(4, 8) for y in range(4, 8)]
     rois = spark.createDataFrame(
-        [("a.fake", 1, 10, "001-01-010", square), ("b.fake", 1, 20, "001-01-020", square)],
+        [("a.fake", 0, 10, "000-01-010", square), ("b.fake", 0, 20, "000-01-020", square)],
         "path string, FrameID int, CellID int, ROI_filename string,"
         " coords array<struct<x:int,y:int>>",
     )

@@ -448,3 +448,102 @@ def test_static_features_fused_matches_staged_branch(spark):
     # and the pipeline's features stage IS the fused form now
     prows = out["features"].select(*staged.columns).collect()
     assert key(prows) == key(srows)
+
+
+PIN_THREAD_OFF_SCRIPT = """
+from cellphe_data_pipeline_spark.domain.images import make_fake_timelapse
+from cellphe_data_pipeline_spark.plans.pipeline import run_pipeline
+from cellphe_data_pipeline_spark.session import get_spark
+
+spark = get_spark(app_name="pin-thread-off")
+bins = spark.createDataFrame(
+    [
+        (f"tl_{i}.fake", bytearray(make_fake_timelapse(seed=40 + i, height=32, width=32, n_frames=4)))
+        for i in range(2)
+    ],
+    "path string, content binary",
+)
+out = run_pipeline(bins)
+print("summary", out["summary"].count(), "timeseries", out["timeseries"].count())
+spark.stop()
+"""
+
+
+def test_pipeline_runs_with_pinned_thread_mode_off(tmp_path):
+    """``run_pipeline`` must not depend on pyspark's pinned-thread mode:
+    with ``PYSPARK_PIN_THREAD=false`` (a supported configuration, read at
+    SparkContext start, hence a fresh interpreter) the whole chain runs
+    through to the summary and time-series tables."""
+    import os
+    import re
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {
+        **os.environ,
+        "PYSPARK_PIN_THREAD": "false",
+        # workers import the package too
+        "PYTHONPATH": os.pathsep.join(
+            p for p in (repo, os.environ.get("PYTHONPATH")) if p
+        ),
+        "SPARK_GRAFT_CPUS": "2",
+        "SPARK_GRAFT_SHUFFLE": "2",
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    proc = subprocess.run(
+        [sys.executable, "-c", PIN_THREAD_OFF_SCRIPT],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    m = re.search(r"^summary (\d+) timeseries (\d+)$", proc.stdout, re.M)
+    assert m and int(m.group(1)) > 0 and int(m.group(2)) > 0, proc.stdout
+
+
+def test_pipeline_frames_starting_with_container_magic(spark):
+    """A decoded frame is a raw raster, whatever its first pixels hold:
+    frames whose first five pixels are the bytes ``FAKE1`` (the container
+    magic) run through M4 like any other frame, and give the same summary
+    as the same frames with those five background pixels changed."""
+    import zlib
+
+    import numpy as np
+
+    from cellphe_data_pipeline_spark.domain.images import (
+        FAKE_MAGIC,
+        decode_frame,
+        make_fake_timelapse,
+    )
+
+    frames = np.stack(
+        decode_frame(make_fake_timelapse(seed=5, height=32, width=32, n_frames=5, n_cells=3))
+    )
+    # the corner pixels used below lie outside every cell
+    assert not frames[:, 0, :5].any() and not frames[:, -1, -1].any()
+    # background 80 keeps the magic bytes (49..75) below the median
+    # threshold; one 0 pixel pins the frame minimum of both variants
+    frames[frames == 0] = 80
+    frames[:, -1, -1] = 0
+    magic = frames.copy()
+    magic[:, 0, :5] = np.frombuffer(FAKE_MAGIC, dtype=np.uint8)
+
+    def summary(stack):
+        n, h, w = stack.shape
+        container = (
+            FAKE_MAGIC
+            + np.array([h, w, n], dtype="<u4").tobytes()
+            + zlib.compress(stack.tobytes())
+        )
+        bins = spark.createDataFrame(
+            [("tl.fake", bytearray(container))], "path string, content binary"
+        )
+        rows = run_pipeline(bins)["summary"].collect()
+        return sorted(tuple(r) for r in rows)
+
+    got = summary(magic)
+    assert got, "no QC-surviving cells"
+    assert got == summary(frames)
