@@ -6,12 +6,14 @@ frame (P4, :46) fetch its ROI (J5, :49-54), clip negatives (F9,
 :55-56), and call ``cellphe.features.extract_static_features`` [pkg]
 (~74 size/shape/boundary/intensity/texture features, Wiseman 2023).
 
-Engine shape: ``applyInPandas`` grouped by (path, frame_index) — the
-image is decoded ONCE per frame and all its cells are looped inside the
-kernel, exactly the reference's economy. The shuffle key is the frame,
-so executor memory is bounded by one image + its ROIs regardless of
-corpus size; 721-frame × N-timelapse corpora parallelise frame-wise
-(the reference's own speedup axis, README.md:409).
+Engine shape: one ``mapInPandas`` over rows that each carry a whole
+frame (the raster plus that frame's cells, nested by one aggregation),
+after a round-robin repartition sized to the cores — the image is
+decoded ONCE per frame and all its cells are looped inside the kernel,
+exactly the reference's economy. Executor memory is bounded by one
+image + its ROIs regardless of corpus size; 721-frame × N-timelapse
+corpora parallelise frame-wise (the reference's own speedup axis,
+README.md:409).
 
 The 74-feature vector covers every structural CellPhe block at the
 reference's feature count (Wiseman 2023): size/shape (area, centroid,
@@ -254,7 +256,7 @@ def _glcm_features(
             ((patch[inmask] - lo) / (hi - lo) * GLCM_LEVELS).astype(np.int64),
             GLCM_LEVELS - 1,
         )
-    glcm = np.zeros((GLCM_LEVELS, GLCM_LEVELS), dtype=np.float64)
+    pairs = [np.empty(0, dtype=np.int64)]
     for dy, dx in ((0, dist), (dist, 0)):
         if patch.shape[0] <= dy or patch.shape[1] <= dx:
             continue
@@ -263,8 +265,13 @@ def _glcm_features(
         both = a_mask & b_mask
         a = q[: patch.shape[0] - dy, : patch.shape[1] - dx][both]
         b = q[dy:, dx:][both]
-        np.add.at(glcm, (a, b), 1.0)
-        np.add.at(glcm, (b, a), 1.0)  # symmetric
+        pairs += [a * GLCM_LEVELS + b, b * GLCM_LEVELS + a]  # symmetric
+    # integer counts: exact, so the same matrix as accumulating 1.0s
+    glcm = (
+        np.bincount(np.concatenate(pairs), minlength=GLCM_LEVELS * GLCM_LEVELS)
+        .reshape(GLCM_LEVELS, GLCM_LEVELS)
+        .astype(np.float64)
+    )
     total = glcm.sum()
     if total == 0:
         return {
@@ -323,15 +330,23 @@ def _haar2d_energies(patch: np.ndarray, levels: int = 2) -> list[float]:
 
 def _hull_area(xs: np.ndarray, ys: np.ndarray) -> float:
     """Convex hull area of the REGION covered by unit pixels centred at
-    (xs, ys): the hull is taken over each pixel's four corners
-    (x±0.5, y±0.5), so a filled w×h rectangle of pixels reports w·h —
-    making Solidity = Area/Hull_area exactly 1 for convex filled cells
-    instead of the pixel-count-vs-polygon-area mismatch a centre-point
-    hull gives. Monotone chain (pure numpy/python, no scipy) + shoelace.
+    the integer points (xs, ys): the hull is taken over each pixel's
+    four corners (x±0.5, y±0.5), so a filled w×h rectangle of pixels
+    reports w·h — making Solidity = Area/Hull_area exactly 1 for convex
+    filled cells instead of the pixel-count-vs-polygon-area mismatch a
+    centre-point hull gives. Monotone chain + shoelace (no scipy) on
+    Python ints of the DOUBLED corner coordinates (2x±1, 2y±1): every
+    product is exact, so the area is the exact value, divided once.
     """
-    cx = np.concatenate([xs - 0.5, xs - 0.5, xs + 0.5, xs + 0.5])
-    cy = np.concatenate([ys - 0.5, ys + 0.5, ys - 0.5, ys + 0.5])
-    pts = np.unique(np.stack([cx, cy], axis=1), axis=0)  # lexicographic sort
+    pts = sorted(
+        {
+            (2 * x + dx, 2 * y + dy)
+            for x, y in zip(np.asarray(xs, dtype=np.int64).tolist(),
+                            np.asarray(ys, dtype=np.int64).tolist())
+            for dx in (-1, 1)
+            for dy in (-1, 1)
+        }
+    )
     if len(pts) < 3:
         return 0.0
 
@@ -349,9 +364,12 @@ def _hull_area(xs: np.ndarray, ys: np.ndarray) -> float:
             upper.pop()
         upper.append(p)
     hull = lower[:-1] + upper[:-1]
-    x = np.array([p[0] for p in hull])
-    y = np.array([p[1] for p in hull])
-    return float(abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1))) / 2.0)
+    # shoelace sum over doubled coordinates: 2 (the formula) x 4 (the
+    # doubling) = 8 times the area
+    area8 = sum(
+        x0 * y1 - y0 * x1 for (x0, y0), (x1, y1) in zip(hull, hull[1:] + hull[:1])
+    )
+    return abs(area8) / 8
 
 
 def _haar1d_energies(series: np.ndarray, levels: int = 3) -> list[float]:
@@ -486,10 +504,12 @@ def _cell_features(img: np.ndarray, coords: np.ndarray) -> dict[str, float] | No
     inmask = np.zeros(patch.shape, dtype=bool)
     patch[ys - y0, xs - x0] = vals
     inmask[ys - y0, xs - x0] = True
-    haar = _haar2d_energies(patch)
+    haar = _haar2d_energies(patch, levels=3)
+    upts = np.unique(np.stack([xs, ys], axis=1), axis=0)
+    iq = np.quantile(vals, [0.05, 0.10, 0.25, 0.50, 0.75, 0.90, 0.95])
 
     feats = {
-        "Area": float(len(np.unique(np.stack([xs, ys], axis=1), axis=0))),
+        "Area": float(len(upts)),
         "x": cx,
         "y": cy,
         "Rad_mean": float(rad.mean()),
@@ -500,11 +520,11 @@ def _cell_features(img: np.ndarray, coords: np.ndarray) -> dict[str, float] | No
         "Int_std": float(vals.std()),
         "Int_min": float(vals.min()),
         "Int_max": float(vals.max()),
-        "Int_q10": float(np.quantile(vals, 0.10)),
-        "Int_q25": float(np.quantile(vals, 0.25)),
-        "Int_q50": float(np.quantile(vals, 0.50)),
-        "Int_q75": float(np.quantile(vals, 0.75)),
-        "Int_q90": float(np.quantile(vals, 0.90)),
+        "Int_q10": float(iq[1]),
+        "Int_q25": float(iq[2]),
+        "Int_q50": float(iq[3]),
+        "Int_q75": float(iq[4]),
+        "Int_q90": float(iq[5]),
         "Haar2d_l1": haar[0],
         "Haar2d_l2": haar[1],
     }
@@ -528,8 +548,7 @@ def _cell_features(img: np.ndarray, coords: np.ndarray) -> dict[str, float] | No
     bbox_area = float(patch.shape[0] * patch.shape[1])
     feats["Box"] = feats["Area"] / bbox_area
     feats["Rect"] = feats["Area"] / (length * width) if length * width > 0 else 1.0
-    ux, uy = np.unique(np.stack([xs, ys], axis=1), axis=0).T
-    hull = _hull_area(ux.astype("float64"), uy.astype("float64"))
+    hull = _hull_area(upts[:, 0], upts[:, 1])
     feats["Hull_area"] = hull
     feats["Solidity"] = feats["Area"] / hull if hull > 0 else 1.0
     feats["Eccentricity"] = (
@@ -578,7 +597,7 @@ def _cell_features(img: np.ndarray, coords: np.ndarray) -> dict[str, float] | No
 
     # multi-scale texture: cooccurrence at pixel distance 2 + Haar l3
     feats.update(_glcm_features(patch, inmask, dist=2, prefix="Coo2"))
-    feats["Haar2d_l3"] = _haar2d_energies(patch, levels=3)[2]
+    feats["Haar2d_l3"] = haar[2]
 
     # first-order intensity entropy over GLCM_LEVELS bins of the cell's
     # own [min,max] range (flat cell -> 0 by convention)
@@ -596,8 +615,8 @@ def _cell_features(img: np.ndarray, coords: np.ndarray) -> dict[str, float] | No
         feats["Int_entropy"] = float(-(ph * np.log2(ph)).sum())
     else:
         feats["Int_entropy"] = 0.0
-    feats["Int_q05"] = float(np.quantile(vals, 0.05))
-    feats["Int_q95"] = float(np.quantile(vals, 0.95))
+    feats["Int_q05"] = float(iq[0])
+    feats["Int_q95"] = float(iq[6])
 
     # boundary roughness: first differences of the radius profile along
     # the closed boundary (wrap)
@@ -612,9 +631,10 @@ def _cell_features(img: np.ndarray, coords: np.ndarray) -> dict[str, float] | No
     )
 
     # radial quartiles + spread
-    feats["Rad_q25"] = float(np.quantile(rad, 0.25))
-    feats["Rad_q50"] = float(np.quantile(rad, 0.50))
-    feats["Rad_q75"] = float(np.quantile(rad, 0.75))
+    rq = np.quantile(rad, [0.25, 0.50, 0.75])
+    feats["Rad_q25"] = float(rq[0])
+    feats["Rad_q50"] = float(rq[1])
+    feats["Rad_q75"] = float(rq[2])
     feats["Rad_iqr"] = feats["Rad_q75"] - feats["Rad_q25"]
 
     # intensity centre-of-mass offset from the geometric centroid

@@ -262,6 +262,26 @@ def _eval_once_barrier(col, cast_type: str):
     return col + (F.rand(0) * F.lit(0.0)).cast(cast_type)
 
 
+def _verify_intersection_size():
+    """``|A ∩ B|`` of the verify rows' two per-doc DISTINCT shingle-set
+    arrays ``_sa``/``_sb``, with the O(1) equal-set witness (r17) shared
+    by every row-wise verify (d3, d10, d14): equal xxhash64 set hashes
+    (``_hha``/``_hhb``, computed once per doc inside its cut), equal
+    sizes AND equal first elements give ``|A|`` — exact whenever the
+    sets ARE equal — and anything else falls through to
+    ``size(array_intersect)``. A wrong count needs a 64-bit hash
+    collision between two different sets of the same size that also
+    start with the same shingle. ``try_element_at`` keeps empty sets
+    (NULL first element) on the intersect arm instead of raising under
+    ANSI mode."""
+    return F.when(
+        (F.col("_hha") == F.col("_hhb"))
+        & (F.size("_sa") == F.size("_sb"))
+        & (F.try_element_at("_sa", F.lit(1)) == F.try_element_at("_sb", F.lit(1))),
+        F.size("_sa"),
+    ).otherwise(F.size(F.array_intersect("_sa", "_sb")))
+
+
 def _spread_docs(df: DataFrame, id_col: str) -> DataFrame:
     """Keyed repartition of the doc table to defaultParallelism — ONLY
     when the input has fewer partitions than cores (r17). The spread
@@ -357,11 +377,10 @@ def minhash_near_duplicates(
     # O(K² · shingles-per-doc) intersect compute. xxhash64 hashes the
     # ARRAY natively (element boundaries included — no separator
     # ambiguity, no concat materialisation; measured cheaper than an
-    # md5-of-concat in the cut); the size compare stays as a cheap
-    # second witness. 64-bit collisions across equal-size different
-    # sets are accepted like every other hash gate in this engine
-    # (_ha never reaches the oracle — it gates an internal branch
-    # whose two arms agree whenever the sets ARE equal).
+    # md5-of-concat in the cut); the size and first-element compares
+    # stay as cheap further witnesses (_verify_intersection_size states
+    # the collision bound; _ha never reaches the oracle — it gates an
+    # internal branch whose two arms agree whenever the sets ARE equal).
     arr = cut_lineage(
         shingle_arrays(spread, text_col, id_col, n).withColumn(
             "_ha", F.xxhash64(F.col("sh_set"))
@@ -393,20 +412,15 @@ def minhash_near_duplicates(
         arr.withColumnsRenamed({"doc_id": "doc_b", "sh_set": "_sb", "_ha": "_hhb"}),
         "doc_b",
     )
-    # identical sets (equal hash + equal size) skip the O(n) intersect:
-    # |A∩A| = |A| exactly, so values are unchanged. The intersect is
-    # projected ONCE behind the eval-once barrier — without it the
-    # jaccard ratio and the two filter conjuncts re-inline the whole
-    # intersect ~4x per candidate row (measured 3.57s -> 1.1s on the
-    # c24 corpus verify; see _eval_once_barrier).
-    ni = F.when(
-        (F.col("_hha") == F.col("_hhb")) & (F.size("_sa") == F.size("_sb")),
-        F.size("_sa"),
-    ).otherwise(F.size(F.array_intersect("_sa", "_sb")))
+    # identical sets skip the O(n) intersect (_verify_intersection_size).
+    # The intersect is projected ONCE behind the eval-once barrier —
+    # without it the jaccard ratio and the two filter conjuncts
+    # re-inline the whole intersect ~4x per candidate row (measured
+    # 3.57s -> 1.1s on the c24 corpus verify; see _eval_once_barrier).
     scored = ab.select(
         "doc_a",
         "doc_b",
-        _eval_once_barrier(ni, "int").alias("_ni"),
+        _eval_once_barrier(_verify_intersection_size(), "int").alias("_ni"),
         (F.size("_sa") + F.size("_sb")).alias("_nab"),
     ).withColumn(
         "jaccard",
@@ -1435,14 +1449,10 @@ def incremental_near_duplicates(
     )
     # intersect projected ONCE behind the eval-once barrier (see
     # minhash_near_duplicates / _eval_once_barrier)
-    inter = F.when(
-        (F.col("_hha") == F.col("_hhb")) & (F.size("_sa") == F.size("_sb")),
-        F.size("_sa"),
-    ).otherwise(F.size(F.array_intersect("_sa", "_sb")))
     scored = ab.select(
         "doc_a",
         "doc_b",
-        _eval_once_barrier(inter, "int").alias("_inter"),
+        _eval_once_barrier(_verify_intersection_size(), "int").alias("_inter"),
         (F.size("_sa") + F.size("_sb")).alias("_nab"),
     )
     # threshold on the RAW ratio, round after — the same order as
@@ -1536,21 +1546,14 @@ def containment_near_duplicates(
         )
         # bigint: the pre-r16 count aggregate emitted long — the
         # oracle gate compares numeric TYPES, not just values.
-        # Equal-hash pairs (r17): |A∩A| = |A| exactly, O(1); the
-        # intersect is projected ONCE behind the eval-once barrier
-        # (see _eval_once_barrier — the ratio + filter would otherwise
-        # re-inline it per consumer).
+        # Equal sets (r17): |A∩A| = |A| exactly, O(1)
+        # (_verify_intersection_size); the intersect is projected ONCE
+        # behind the eval-once barrier (see _eval_once_barrier — the
+        # ratio + filter would otherwise re-inline it per consumer).
         .select(
             "doc_a",
             "doc_b",
-            _eval_once_barrier(
-                F.when(
-                    (F.col("_hha") == F.col("_hhb"))
-                    & (F.size("_sa") == F.size("_sb")),
-                    F.size("_sa"),
-                ).otherwise(F.size(F.array_intersect("_sa", "_sb"))),
-                "bigint",
-            ).alias("n_inter"),
+            _eval_once_barrier(_verify_intersection_size(), "bigint").alias("n_inter"),
             F.least(F.size("_sa"), F.size("_sb")).alias("_minab"),
         )
     )

@@ -14,6 +14,11 @@ Scale rationale (100 TB target):
   required for DuckDB-oracle hash equality.
 - 128 MiB parquet split size: keeps per-task input bounded so executor
   memory sizing is independent of total data volume.
+- Python workers start from the engine's daemon entry
+  (``cellphe_data_pipeline_spark.worker``), which stops every task from
+  re-reading the pyspark/py4j zip directories; the package's parent
+  directory is put on the workers' ``PYTHONPATH`` so they can import it
+  whatever the calling process's working directory and environment.
 """
 
 from __future__ import annotations
@@ -21,6 +26,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: directory holding the package, for the Python workers' import path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -91,6 +99,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
+    conf["spark.python.daemon.module"] = "cellphe_data_pipeline_spark.worker"
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

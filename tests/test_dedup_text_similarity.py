@@ -3015,10 +3015,11 @@ def test_minhash_spread_gated_on_scan_parallelism(spark):
 
 def test_minhash_verify_hash_shortcircuit_matches_intersect(spark):
     """r17 (verdict item 5): the verify's equal-set short-circuit
-    (precomputed xxhash64 witness + size compare) must change no values —
-    identical docs still score jaccard 1.0, near-dups still take the
-    intersect path, and the family (d3/d10/d14) agrees pair-for-pair
-    with the always-intersect oracle expression."""
+    (precomputed xxhash64 witness + size and first-element compares)
+    must change no values — identical docs still score jaccard 1.0,
+    near-dups still take the intersect path, and the family
+    (d3/d10/d14) agrees pair-for-pair with the always-intersect oracle
+    expression."""
     from cellphe_data_pipeline_spark.operators.dedup import (
         containment_near_duplicates,
         incremental_near_duplicates,
@@ -3075,3 +3076,33 @@ def test_minhash_verify_hash_shortcircuit_matches_intersect(spark):
         for b in range(a + 1, 5):
             ni, c = cont[(a, b)]
             assert c == 1.0 and ni == n_sh
+
+
+def test_equal_set_witness_falls_through_on_forced_hash_collision(spark):
+    """The shared verify witness (``_verify_intersection_size``) trusts a
+    hash match only together with equal sizes AND equal first elements:
+    two different, equal-size sets given the SAME forced hash still get
+    ``size(array_intersect)``, equal sets get their size, and empty sets
+    (no first element) take the intersect arm without an error."""
+    from pyspark.sql import functions as F
+
+    from cellphe_data_pipeline_spark.operators.dedup import _verify_intersection_size
+
+    rows = [
+        (["a", "b", "c"], ["x", "b", "c"]),  # different first element
+        (["a", "b", "c"], ["a", "y", "z"]),  # same first element, rest differ
+        (["a", "b", "c"], ["a", "b", "c"]),  # equal sets
+        ([], []),  # empty sets
+    ]
+    df = spark.createDataFrame(rows, "_sa array<string>, _sb array<string>").select(
+        "*", F.lit(7).cast("long").alias("_hha"), F.lit(7).cast("long").alias("_hhb")
+    )
+    got = [r["n"] for r in df.select(_verify_intersection_size().alias("n")).collect()]
+    # row 2 is the stated residual: a forced collision between sets that
+    # also share size and first element is trusted
+    assert got == [2, 3, 3, 0]
+    # and with distinct hashes every row is the real intersection
+    real = df.select(
+        F.size(F.array_intersect("_sa", "_sb")).alias("n")
+    ).collect()
+    assert [r["n"] for r in real] == [2, 1, 3, 0]

@@ -4,6 +4,8 @@ time-series, checking cross-stage invariants."""
 
 from __future__ import annotations
 
+import pytest
+
 from cellphe_data_pipeline_spark.domain.images import make_fake_image
 from cellphe_data_pipeline_spark.plans.pipeline import run_pipeline
 
@@ -502,6 +504,81 @@ def test_pipeline_runs_with_pinned_thread_mode_off(tmp_path):
     assert proc.returncode == 0, proc.stderr[-4000:]
     m = re.search(r"^summary (\d+) timeseries (\d+)$", proc.stdout, re.M)
     assert m and int(m.group(1)) > 0 and int(m.group(2)) > 0, proc.stdout
+
+
+OUTSIDE_REPO_SCRIPT = """
+import sys
+
+sys.path.insert(0, {repo!r})
+from cellphe_data_pipeline_spark.domain.images import make_fake_timelapse
+from cellphe_data_pipeline_spark.plans.pipeline import run_pipeline
+from cellphe_data_pipeline_spark.session import get_spark
+
+spark = get_spark(app_name="outside-repo")
+assert spark.conf.get("spark.python.daemon.module") == "cellphe_data_pipeline_spark.worker"
+
+
+def plus_one(batches):
+    for pdf in batches:
+        yield pdf.assign(id=pdf["id"] + 1)
+
+
+print("mapInPandas", sorted(r.id for r in spark.range(3).mapInPandas(plus_one, "id long").collect()))
+bins = spark.createDataFrame(
+    [
+        (f"tl_{{i}}.fake", bytearray(make_fake_timelapse(seed=50 + i, height=32, width=32, n_frames=4)))
+        for i in range(2)
+    ],
+    "path string, content binary",
+)
+out = run_pipeline(bins)
+print("summary", out["summary"].count(), "timeseries", out["timeseries"].count())
+spark.stop()
+"""
+
+
+@pytest.mark.parametrize(
+    "variant",
+    [
+        {},
+        # one core, replicated lineage cuts
+        {"SPARK_GRAFT_CPUS": "1", "SPARK_GRAFT_SHUFFLE": "1", "CELLPHE_CHECKPOINT_DIR": "ckpt"},
+    ],
+    ids=["default", "local1-replicated-cuts"],
+)
+def test_pipeline_runs_from_outside_the_repo(tmp_path, variant):
+    """The Python workers import the package (the engine's daemon entry
+    lives in it) with no help from the calling process's environment:
+    it runs with its working directory outside the repo, ``PYTHONPATH``
+    unset and the repo on ``sys.path`` only, and both a ``mapInPandas``
+    and ``run_pipeline`` go through."""
+    import os
+    import re
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(
+        {"SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_SHUFFLE": "2", "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    )
+    env.update(variant)
+    if "CELLPHE_CHECKPOINT_DIR" in env:
+        env["CELLPHE_CHECKPOINT_DIR"] = str(tmp_path / env["CELLPHE_CHECKPOINT_DIR"])
+    proc = subprocess.run(
+        [sys.executable, "-c", OUTSIDE_REPO_SCRIPT.format(repo=repo)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert re.search(r"^mapInPandas \[1, 2, 3\]$", proc.stdout, re.M), proc.stdout
+    m = re.search(r"^summary (\d+) timeseries (\d+)$", proc.stdout, re.M)
+    assert m and int(m.group(1)) > 0 and int(m.group(2)) > 0, proc.stdout
+    if "CELLPHE_CHECKPOINT_DIR" in variant:
+        assert os.listdir(env["CELLPHE_CHECKPOINT_DIR"])
 
 
 def test_pipeline_frames_starting_with_container_magic(spark):
