@@ -41,11 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cellphe_data_pipeline_spark.domain.images import (
-    _largest_component,
-    _raster_dtype,
-    trace_outer_contour,
-)
+from cellphe_data_pipeline_spark.domain.images import _raster_dtype, label_contour
 
 STATIC_FEATURE_NAMES = (
     "Area",
@@ -761,31 +757,20 @@ def static_features_fused(fused: DataFrame, keep: DataFrame) -> DataFrame:
     height, width, data, mask, cents). ``keep``: the QC-surviving cell
     keys (path, FrameID, CellID, TRACK_ID) — NARROW rows.
 
-    Equivalent to the staged pipeline M4 branch
-    (``mask_rois(masks) ⋈ keep → roi_filename → static_features``),
-    pinned by test, but the staged branch paid: a mask_contours Python
-    wave over every mask, a corpus-wide groupBy shuffle of the contour
-    PIXEL rows (collect_list per cell), the kept-cells join against
-    those coords arrays, and a second aggregation nesting the coords
-    back per frame. Here the only pre-kernel work is one aggregation of
+    Row-for-row equal to the composed form over external-style ROIs
+    (``mask_rois(masks) ⋈ keep → roi_filename → static_features``,
+    pinned by test), without its cost: that form traces every label and
+    ships each cell's coords array through the join and a per-frame
+    re-aggregation. Here the only pre-kernel work is one aggregation of
     the NARROW keep keys per frame (collect_list of (CellID, TRACK_ID)
     structs — bytes per cell, not per boundary pixel) joined onto the
-    fused rows (broadcast-sized at any realistic per-batch frame
-    count), and the kernel traces each kept cell's contour from the
-    mask raster it already holds — the guide §8 rule (shuffle
-    keys/metadata, not payload-derived row sets) applied to the
-    boundary geometry.
-
-    Contour, ordering, ROI naming and feature math are IDENTICAL to
-    the staged form: same per-label bbox crop + largest-component +
-    Moore trace (shared code), trace order == the staged
-    array_sort(seq) order; the 3-part FRAME-TRACK-ID zero-padding
-    widths are computed with the same global aggregate — over ``keep``,
-    whose row set equals the staged join's (every QC survivor has >= 1
-    mask pixel, hence >= 1 contour row). Only KEPT cells are traced
-    (the staged form traced every label, then discarded the QC
-    failures at the join). The frame loop itself is shared with
-    ``static_features`` (``_frame_features``)."""
+    fused rows, and the kernel traces each KEPT cell's contour from the
+    mask raster it already holds (:func:`label_contour`, the tracer
+    ``mask_rois`` uses) — the guide §8 rule (shuffle keys/metadata, not
+    payload-derived row sets) applied to the boundary geometry. The
+    3-part FRAME-TRACK-ID zero-padding widths are computed with the same
+    global aggregate as ``roi_filename``, over ``keep``. The frame loop
+    itself is shared with ``static_features`` (``_frame_features``)."""
     widths = keep.agg(
         *[
             F.max(F.length(F.col(c).cast("string"))).alias(f"_w_{c}")
@@ -815,19 +800,9 @@ def static_features_fused(fused: DataFrame, keep: DataFrame) -> DataFrame:
         wf, wt, wc = int(r["_w_FrameID"]), int(r["_w_TRACK_ID"]), int(r["_w_CellID"])
         for cell in r["_keep"]:
             label = int(cell["CellID"])
-            lys, lxs = np.nonzero(m == label)
-            if len(lys) == 0:
+            coords = label_contour(m, label)
+            if coords is None:
                 continue  # defensive: kept cell absent from mask
-            y0, x0 = int(lys.min()), int(lxs.min())
-            region = _largest_component(
-                m[y0 : int(lys.max()) + 1, x0 : int(lxs.max()) + 1] == label
-            )
-            cxs, cys = trace_outer_contour(region)
-            # trace order == the staged array_sort((seq,x,y)) order (seq
-            # is unique per step)
-            coords = np.column_stack(
-                [(cxs + x0).astype("int64"), (cys + y0).astype("int64")]
-            )
             roi_filename = "-".join(
                 (
                     str(int(r["FrameID"])).rjust(wf, "0"),

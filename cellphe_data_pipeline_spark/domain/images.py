@@ -18,11 +18,15 @@ Scale notes:
   ``mapInPandas`` — 1 container file → N frame rows; one input file per
   Arrow batch keeps executor memory bounded by the largest container,
   independent of corpus size.
-- ``segment_frames`` (M1/M2, segment_image.py:20-23): model-per-
-  executor pattern — the (stub) model loads once per partition, frames
-  stream through it in batches (the GPU-batching economics of
-  segment_image_batch.py:20-25 map to partition batching + stage-level
-  resource scheduling on a real cluster).
+- ``decode_segment_centroid`` (S3/S4 + M1/M2 + detection,
+  segment_image.py:20-23): the ONE segmentation entry point — decode,
+  segment and centroid in one kernel, the model loaded once per
+  partition (the GPU-batching economics of segment_image_batch.py:20-25
+  map to partition batching + stage-level resource scheduling on a real
+  cluster). Consumers that only want masks select them off its rows.
+- ``mask_rois`` (M6 / TrackMate ROIs, parse_xml.py:47-67): one ordered
+  contour per label, traced by ``label_contour`` — the same tracer the
+  M4 kernel uses.
 """
 
 from __future__ import annotations
@@ -37,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cellphe_data_pipeline_spark.domain.rois import COORDS_TYPE
+
 FAKE_MAGIC = b"FAKE1"
 
 FRAME_SCHEMA = T.StructType(
@@ -46,16 +52,6 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("height", T.IntegerType()),
         T.StructField("width", T.IntegerType()),
         T.StructField("data", T.BinaryType()),
-    ]
-)
-
-MASK_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("mask", T.BinaryType()),  # uint16 labels, row-major
     ]
 )
 
@@ -546,10 +542,9 @@ SEGMENT_METHODS = ("median", "otsu", "model")
 
 
 def _validate_segment_method(method: str, model_cls: type | None) -> type | None:
-    """Driver-side method/model resolution shared by
-    :func:`segment_frames` and :func:`decode_segment_centroid` — one
-    home so the two entry points cannot drift (fail-fast import check
-    happens on the DRIVER, not inside a task)."""
+    """Driver-side method/model resolution for
+    :func:`decode_segment_centroid`: the fail-fast import check happens
+    on the DRIVER, not inside a task."""
     if method not in SEGMENT_METHODS:
         raise ValueError(f"unknown segmentation method: {method!r}")
     if method == "model" and model_cls is None:
@@ -574,9 +569,7 @@ def _make_segmenter(
     model_cls: type | None,
 ):
     """Build the per-task frame→uint16-mask callable (heavyweight model
-    construction happens HERE, once per task — guide §4.5). Shared by
-    both segmentation entry points; the uint16 overflow invariant is
-    identical in each."""
+    construction happens HERE, once per task — guide §4.5)."""
     if method == "model":
         inst = model_cls(**(model_args or {}))
 
@@ -598,60 +591,6 @@ def _make_segmenter(
 
         return model
     return _otsu_segment if method == "otsu" else _fake_segment
-
-
-def segment_frames(
-    frames: DataFrame,
-    model_args: dict | None = None,
-    method: str = "median",
-    eval_args: dict | None = None,
-    model_cls: type | None = None,
-) -> DataFrame:
-    """M1/M2: per-frame segmentation → uint16 label mask. Model-per-
-    partition: the model is constructed once per mapInPandas partition
-    and reused across its frames — the Spark translation of the
-    reference's GPU batch economics (segment_image_batch.py:20-25).
-    `model_args` pass through verbatim like the reference's config.
-
-    `method`: "median" (median threshold + pixel-BFS labeling — the
-    original deterministic fixture kernel, kept as default so every
-    golden stays byte-stable), "otsu" (Otsu auto-threshold + run-based
-    union-find labeling — the vectorised classical path for production
-    raster sizes), or "model" — the reference's deep-model contract
-    (segment_image.py:20-23): ``model_cls(**model_args)`` once per
-    partition, ``model.eval(image, **eval_args)[0].astype(uint16)``
-    per frame, both dicts passed through VERBATIM (main.nf:38 ships
-    params.segmentation.model / .eval as JSON the same way). By
-    default ``model_cls`` is ``cellpose.models.CellposeModel``
-    (import checked at CALL time on the driver — fails fast with a
-    clear message when the package is absent in this environment);
-    injecting any class with that constructor/eval signature — the
-    contract test does — requires no code changes here."""
-    model_cls = _validate_segment_method(method, model_cls)
-
-    def seg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _make_segmenter(method, model_args, eval_args, model_cls)
-        for pdf in batches:
-            masks = []
-            for _, row in pdf.iterrows():
-                h, w = row["height"], row["width"]
-                # 16-bit pages (the codec ladder produces both widths)
-                # must not be misread as uint8 — shared rule
-                img = np.frombuffer(
-                    row["data"], dtype=_raster_dtype(row["data"], h, w)
-                ).reshape(h, w)
-                masks.append(model(img).tobytes())
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "frame_index": pdf["frame_index"],
-                    "height": pdf["height"],
-                    "width": pdf["width"],
-                    "mask": masks,
-                }
-            )
-
-    return frames.mapInPandas(seg, MASK_SCHEMA)
 
 
 MASK_HIST_SCHEMA = T.StructType(
@@ -821,18 +760,6 @@ def trace_outer_contour(region: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     )
 
 
-CONTOUR_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("mask_id", T.IntegerType()),
-        T.StructField("seq", T.IntegerType()),
-        T.StructField("px", T.IntegerType()),
-        T.StructField("py", T.IntegerType()),
-    ]
-)
-
-
 def _largest_component(region: np.ndarray) -> np.ndarray:
     """Largest 4-connected component of a binary region (tie → the one
     whose seed comes first in scan order). Pure-python BFS over the
@@ -867,85 +794,77 @@ def _largest_component(region: np.ndarray) -> np.ndarray:
     return best if best is not None else region
 
 
-def mask_contours(masks: DataFrame) -> DataFrame:
-    """Ordered per-cell boundary: Moore-traced outer contour of every
-    label, one row per contour step with its traversal index ``seq``.
-    This is the mask-path analogue of the reference's TrackMate contour
-    ROIs (parse_xml.py:47-67), whose vertex order F16 interpolation and
-    the order-dependent M4 features (Perim, Compactness, Cur_*, Poly_*,
-    Rad_haar_*, Rad_diff_*) all assume — an unordered boundary-pixel
-    set (``mask_boundary_overlay``) is only valid for the QC overlay.
-    Per-label bbox crop keeps tracing O(perimeter) per cell.
+def label_contour(m: np.ndarray, label: int) -> np.ndarray | None:
+    """Ordered outer contour of one mask label as an ``(n, 2)`` int64
+    array of frame (x, y) points in Moore trace order, or ``None`` when
+    the label is absent. The mask-path analogue of the reference's
+    TrackMate contour ROIs (parse_xml.py:47-67), whose vertex order F16
+    interpolation and the order-dependent M4 features (Perim,
+    Compactness, Cur_*, Poly_*, Rad_haar_*, Rad_diff_*) all assume.
+    The label's bbox crop keeps tracing O(perimeter) per cell.
 
     Fragmented labels (a segmenter emitting one id as several disjoint
-    blobs): ONE contour per label is still emitted — the reference's
-    one-polygon-per-spot shape — taken from the LARGEST 4-connected
-    component (deterministic tie-break: earliest seed in scan order),
-    not whichever fragment happens to contain the topmost pixel. The
-    smaller fragments are deliberately excluded from the ROI; use
-    ``mask_boundary_overlay`` when every fragment pixel matters (QC)."""
-
-    def trace(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts: list[pd.DataFrame] = []  # one Arrow batch per input batch
-            for _, row in pdf.iterrows():
-                m = np.frombuffer(row["mask"], dtype=np.uint16).reshape(
-                    row["height"], row["width"]
-                )
-                for label in np.unique(m):
-                    if label == 0:
-                        continue
-                    lys, lxs = np.nonzero(m == label)
-                    y0, x0 = int(lys.min()), int(lxs.min())
-                    region = _largest_component(
-                        m[y0 : int(lys.max()) + 1, x0 : int(lxs.max()) + 1] == label
-                    )
-                    cxs, cys = trace_outer_contour(region)
-                    parts.append(
-                        pd.DataFrame(
-                            {
-                                "path": row["path"],
-                                "frame_index": row["frame_index"],
-                                "mask_id": int(label),
-                                "seq": np.arange(len(cxs), dtype="int32"),
-                                "px": (cxs + x0).astype("int32"),
-                                "py": (cys + y0).astype("int32"),
-                            }
-                        )
-                    )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    return masks.mapInPandas(trace, CONTOUR_SCHEMA)
-
-
-def mask_to_pgm(masks: DataFrame) -> DataFrame:
-    """S11 (segment_image.py:23 uint16 PNG sink): encode each label mask
-    as a 16-bit binary PGM (P5, maxval 65535) — a real, dependency-free
-    raster container (PNG needs a codec this container lacks; PGM is the
-    same uint16 payload with a text header and is accepted by ImageJ).
-    Pure per-row encode, no shuffle."""
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = []
-            for _, row in pdf.iterrows():
-                m = np.frombuffer(row["mask"], dtype=np.uint16).reshape(
-                    row["height"], row["width"]
-                )
-                header = f"P5\n{row['width']} {row['height']}\n65535\n".encode()
-                blobs.append(header + m.astype(">u2").tobytes())
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "frame_index": pdf["frame_index"],
-                    "pgm": blobs,
-                }
-            )
-
-    return masks.mapInPandas(
-        enc, "path string, frame_index int, pgm binary"
+    blobs) still get ONE contour — the reference's one-polygon-per-spot
+    shape — taken from the LARGEST 4-connected component (tie: earliest
+    seed in scan order); use ``mask_boundary_overlay`` when every
+    fragment pixel matters (QC)."""
+    lys, lxs = np.nonzero(m == label)
+    if len(lys) == 0:
+        return None
+    y0, x0 = int(lys.min()), int(lxs.min())
+    region = _largest_component(
+        m[y0 : int(lys.max()) + 1, x0 : int(lxs.max()) + 1] == label
     )
+    cxs, cys = trace_outer_contour(region)
+    return np.column_stack([cxs + x0, cys + y0])
+
+
+ROI_SCHEMA = T.StructType(
+    [
+        T.StructField("path", T.StringType()),
+        T.StructField("FrameID", T.IntegerType()),
+        T.StructField("CellID", T.IntegerType()),
+        T.StructField("coords", COORDS_TYPE),
+        T.StructField("ROI_filename", T.StringType()),
+    ]
+)
+
+
+def mask_rois(masks: DataFrame) -> DataFrame:
+    """Label masks → one ROI row per cell, ``coords`` in contour
+    traversal order (:func:`label_contour`): the engine's analogue of
+    the reference's TrackMate-XML ROI extraction (parse_xml.py:97-101).
+    One map-side kernel, no shuffle.
+
+    ``ROI_filename`` here is the ENGINE-LOCAL 2-part FrameID-CellID
+    name (fixed %05d widths): track ids don't exist at mask time. The
+    pipeline's M4 branch names ROIs with the reference's 3-part
+    FRAME-TRACK-ID name and data-driven padding (parse_xml.py:202-211)
+    once tracking has run — see ``static_features_fused``."""
+
+    def rois(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cols = [f.name for f in ROI_SCHEMA.fields]
+        for pdf in batches:
+            rows = []
+            for _, row in pdf.iterrows():
+                m = np.frombuffer(row["mask"], dtype=np.uint16).reshape(
+                    row["height"], row["width"]
+                )
+                fid = int(row["frame_index"])
+                for label in [v for v in np.unique(m).tolist() if v]:
+                    coords = label_contour(m, label)
+                    rows.append(
+                        {
+                            "path": row["path"],
+                            "FrameID": fid,
+                            "CellID": label,
+                            "coords": [{"x": x, "y": y} for x, y in coords.tolist()],
+                            "ROI_filename": f"{fid:05d}-{label:05d}",
+                        }
+                    )
+            yield pd.DataFrame(rows, columns=cols)
+
+    return masks.mapInPandas(rois, ROI_SCHEMA)
 
 
 def encode_png_gray16(img: np.ndarray) -> bytes:
@@ -985,8 +904,7 @@ def encode_png_gray16(img: np.ndarray) -> bytes:
 def mask_to_png(masks: DataFrame) -> DataFrame:
     """S11 exact form (segment_image.py:23 uint16 PNG sink): each label
     mask as a 16-bit grayscale PNG via the dependency-free encoder.
-    Pure per-row encode, no shuffle; the PGM variant stays for ImageJ
-    streams that prefer it."""
+    Pure per-row encode, no shuffle."""
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1009,61 +927,7 @@ def mask_to_png(masks: DataFrame) -> DataFrame:
     )
 
 
-CENTROID_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("mask_id", T.IntegerType()),
-        T.StructField("area", T.LongType()),
-        T.StructField("cx", T.DoubleType()),
-        T.StructField("cy", T.DoubleType()),
-    ]
-)
-
-
-def mask_centroids(masks: DataFrame) -> DataFrame:
-    """Per-label centroid + pixel area from each mask — the detection
-    table that feeds tracking (the engine's analogue of TrackMate's
-    LabelImageDetector, track_images.py:60-71). Background (0) excluded."""
-
-    def cent(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # ONE output frame per Arrow batch (not per mask): per-row
-            # yields made every ~7-row result its own Arrow batch — 726
-            # batch flushes per bench run, ~2x the stage's real work
-            parts: list[pd.DataFrame] = []
-            for _, row in pdf.iterrows():
-                m = np.frombuffer(row["mask"], dtype=np.uint16).reshape(
-                    row["height"], row["width"]
-                )
-                ids, counts = np.unique(m, return_counts=True)
-                keep = ids != 0
-                ids, counts = ids[keep], counts[keep]
-                if len(ids) == 0:
-                    continue
-                ys, xs = np.indices(m.shape)
-                sum_x = np.bincount(m.ravel(), weights=xs.ravel())
-                sum_y = np.bincount(m.ravel(), weights=ys.ravel())
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "path": row["path"],
-                            "frame_index": row["frame_index"],
-                            "mask_id": ids.astype("int32"),
-                            "area": counts.astype("int64"),
-                            "cx": sum_x[ids] / counts,
-                            "cy": sum_y[ids] / counts,
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    return masks.mapInPandas(cent, CENTROID_SCHEMA)
-
-
-#: per-cell centroid struct nested into FUSED_FRAME_SCHEMA — the same
-#: fields (minus the frame keys, carried by the row) as CENTROID_SCHEMA
+#: one row per frame; ``cents`` nests the frame's per-cell detections
 FUSED_FRAME_SCHEMA = T.StructType(
     [
         T.StructField("path", T.StringType()),
@@ -1098,21 +962,26 @@ def decode_segment_centroid(
 ) -> DataFrame:
     """S3/S4 + M1/M2 + detection in ONE Python wave (r17, guide §4/§1.2):
     container → per-frame (raster, mask, nested centroid structs) rows.
+    The engine's only segmentation entry point:
+    ``select(path, frame_index, height, width, data)`` is the frames
+    table, ``...mask`` the masks table (uint16 labels, row-major) and
+    ``explode(cents)`` the detection rows (the analogue of TrackMate's
+    LabelImageDetector, track_images.py:60-71; background excluded).
+    The payload crosses the JVM↔Python boundary ONCE. Frames with zero
+    cells carry ``cents == []``, which ``explode`` drops.
 
-    Row-for-row equivalent to the staged
-    ``split_frames → segment_frames → mask_centroids`` chain (property
-    test pins it): ``select(path, frame_index, height, width, data)``
-    is the frames table, ``...mask`` the masks table, and
-    ``explode(cents)`` the detection rows — but the payload crosses the
-    JVM↔Python boundary ONCE instead of four times (data out, data in →
-    mask out, mask in → centroids out), and a pipeline that previously
-    materialised three kernel checkpoints (three actions, three Python
-    stage launches at ~200 ms fixed cost each on the bench host) now
-    materialises one. Frames with zero cells carry ``cents == []`` —
-    ``explode`` drops them, matching ``mask_centroids``'s skip.
-
-    Same method menu / model-injection contract as
-    :func:`segment_frames` (shared helpers, cannot drift)."""
+    `method`: "median" (median threshold + pixel-BFS labeling — the
+    deterministic fixture kernel, kept as default so every golden stays
+    byte-stable), "otsu" (Otsu auto-threshold + run-based union-find
+    labeling — the vectorised classical path for production raster
+    sizes), or "model" — the reference's deep-model contract
+    (segment_image.py:20-23): ``model_cls(**model_args)`` once per
+    partition, ``model.eval(image, **eval_args)[0].astype(uint16)`` per
+    frame, both dicts passed through VERBATIM (main.nf:38 ships
+    params.segmentation.model / .eval as JSON the same way). By default
+    ``model_cls`` is ``cellpose.models.CellposeModel`` (import checked
+    at CALL time on the driver); any class with that constructor/eval
+    signature can be injected."""
     model_cls = _validate_segment_method(method, model_cls)
 
     def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1130,8 +999,6 @@ def decode_segment_centroid(
                         ys, xs = np.indices(m.shape)
                         sum_x = np.bincount(m.ravel(), weights=xs.ravel())
                         sum_y = np.bincount(m.ravel(), weights=ys.ravel())
-                        # identical float math to mask_centroids
-                        # (float64 / int64 division per label)
                         cx = sum_x[ids] / counts
                         cy = sum_y[ids] / counts
                         cents = [
@@ -1202,23 +1069,6 @@ def make_fake_timelapse(
     return header + zlib.compress(frames.tobytes())
 
 
-def register_split_frames_udtf(spark: SparkSession, name: str = "split_frames_udtf"):
-    """S3/S4 as a NATIVE SQL table function (PySpark 4 Python UDTF):
-    `SELECT b.path, t.* FROM bins b, LATERAL split_frames_udtf(b.content) t`
-    — the declarative twin of :func:`split_frames` for SQL-first users.
-    Same codec boundary (decode_frame), same 1-file→N-frames contract."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="frame_index int, height int, width int, data binary")
-    class SplitFrames:
-        def eval(self, content):
-            for i, f in enumerate(decode_frame(bytes(content))):
-                yield i, f.shape[0], f.shape[1], f.tobytes()
-
-    spark.udtf.register(name, SplitFrames)
-    return SplitFrames
-
-
 PIXEL_SCHEMA = T.StructType(
     [
         T.StructField("path", T.StringType()),
@@ -1234,8 +1084,7 @@ def mask_pixels(masks: DataFrame) -> DataFrame:
     """Relational pixel view of label masks (r5c): one row per non-
     background pixel — the exploded form that turns mask OVERLAP
     computations (IoU tracking, M3's Overlap tracker option) into plain
-    equi-joins on (path, px, py). One Arrow frame per input batch (the
-    mask_centroids batching contract)."""
+    equi-joins on (path, px, py). One Arrow frame per input batch."""
 
     def pix(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -73,3 +73,26 @@ def portable_hash64(col: Column, seed: str = "") -> Column:
     md5-per-shingle is still JVM-side codegen (no Python), ~100ns/row.
     """
     return F.conv(F.substring(F.md5(F.concat(F.lit(seed), col)), 1, 8), 16, 10).cast("bigint")
+
+
+def nondeterministic_zero() -> Column:
+    """``rand(0) * 0.0``: always exactly 0.0, but NON-deterministic — the
+    engine's one Catalyst barrier. Added to a projected field (the dedup
+    verify's intersection size) or OR-ed into one as the never-true
+    disjunct ``> 1.0`` (the gopher ``gate_mask`` gate), it keeps that
+    field evaluated once, where it is projected. Filter and Project are
+    separate codegen operators with no cross-operator subexpression
+    elimination, so a re-inlined expensive field runs once per
+    reference. It relies on two Catalyst behaviours:
+
+    1. The optimizer never copies a non-deterministic expression:
+       CollapseProject does not re-inline the field into its consumers,
+       and PushPredicateThroughNonJoin does not push a filter through a
+       project holding it.
+    2. ConstantFolding keeps ``rand`` (non-deterministic), and the
+       Multiply hides its [0, 1) range from the rand-range comparison
+       simplification, so ``zero > 1.0`` is not folded to false.
+
+    Values never change. Call sites and their plan pins: SCALE.md
+    Spark-upgrade checklist item 1."""
+    return F.rand(0) * F.lit(0.0)

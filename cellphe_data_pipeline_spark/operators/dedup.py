@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cellphe_data_pipeline_spark.functions.scalars import round_z
+from cellphe_data_pipeline_spark.functions.scalars import nondeterministic_zero, round_z
 
 from cellphe_data_pipeline_spark.checkpoint import cut_lineage
 
@@ -242,27 +242,7 @@ def lsh_candidate_pairs(band_keys: DataFrame, dedup: bool = True) -> DataFrame:
     return pairs.distinct() if dedup else pairs
 
 
-def _eval_once_barrier(col, cast_type: str):
-    """Append a STATICALLY-ZERO non-deterministic term to an expensive
-    projection field so it is evaluated exactly ONCE (r17).
-
-    CollapseProject re-inlines deterministic aliases into every
-    consumer, and Filter/Project are separate codegen operators with no
-    cross-operator subexpression elimination — measured on the c24
-    verify: the aliased ``size(array_intersect(...))`` ran ~4x per row
-    (once for the output column, twice inside the jaccard ratio, once
-    per filter conjunct), 3.57s vs 0.91s for a single evaluation over
-    the same joined rows. A non-deterministic project field blocks both
-    the re-inlining and predicate pushdown through it — the same two
-    Catalyst facts the gopher ``gate_mask`` barrier pins
-    (ConstantFolding keeps ``rand()`` because it is non-deterministic;
-    the ``* 0.0`` hides the rand-range constant fold). The added term
-    is exactly 0, so values are unchanged; the SCALE.md Spark-upgrade
-    checklist covers the fragility."""
-    return col + (F.rand(0) * F.lit(0.0)).cast(cast_type)
-
-
-def _verify_intersection_size():
+def _verify_intersection_size(cast_type: str = "int"):
     """``|A ∩ B|`` of the verify rows' two per-doc DISTINCT shingle-set
     arrays ``_sa``/``_sb``, with the O(1) equal-set witness (r17) shared
     by every row-wise verify (d3, d10, d14): equal xxhash64 set hashes
@@ -273,13 +253,20 @@ def _verify_intersection_size():
     collision between two different sets of the same size that also
     start with the same shingle. ``try_element_at`` keeps empty sets
     (NULL first element) on the intersect arm instead of raising under
-    ANSI mode."""
-    return F.when(
+    ANSI mode.
+
+    The ``nondeterministic_zero`` term (cast to ``cast_type``) makes the
+    projected size evaluate exactly ONCE (r17): without it
+    CollapseProject re-inlines the intersect into the jaccard ratio and
+    every filter conjunct — ~4x per row on the c24 verify, 3.57s vs
+    0.91s."""
+    size = F.when(
         (F.col("_hha") == F.col("_hhb"))
         & (F.size("_sa") == F.size("_sb"))
         & (F.try_element_at("_sa", F.lit(1)) == F.try_element_at("_sb", F.lit(1))),
         F.size("_sa"),
     ).otherwise(F.size(F.array_intersect("_sa", "_sb")))
+    return size + nondeterministic_zero().cast(cast_type)
 
 
 def _spread_docs(df: DataFrame, id_col: str) -> DataFrame:
@@ -336,8 +323,7 @@ def minhash_near_duplicates(
     and the 16 mins are one map-side-combinable hash aggregate whose
     exchange carries partial states (1 row/doc/map-partition), while
     the HOF array form evaluates on the interpreted expression path —
-    measured 5x slower staged, 50x monolithic (r8 hierarchy note in
-    :func:`minhash_band_key_rows`).
+    measured 5x slower (r8 note in :func:`minhash_band_key_rows`).
 
     Equivalence to the pairwise_jaccard verify (oracle-reproven r16):
     both arrays are per-doc DISTINCT sets, so size(array_intersect) is
@@ -412,15 +398,12 @@ def minhash_near_duplicates(
         arr.withColumnsRenamed({"doc_id": "doc_b", "sh_set": "_sb", "_ha": "_hhb"}),
         "doc_b",
     )
-    # identical sets skip the O(n) intersect (_verify_intersection_size).
-    # The intersect is projected ONCE behind the eval-once barrier —
-    # without it the jaccard ratio and the two filter conjuncts
-    # re-inline the whole intersect ~4x per candidate row (measured
-    # 3.57s -> 1.1s on the c24 corpus verify; see _eval_once_barrier).
+    # identical sets skip the O(n) intersect, and the intersect is
+    # projected ONCE (both: _verify_intersection_size).
     scored = ab.select(
         "doc_a",
         "doc_b",
-        _eval_once_barrier(_verify_intersection_size(), "int").alias("_ni"),
+        _verify_intersection_size().alias("_ni"),
         (F.size("_sa") + F.size("_sb")).alias("_nab"),
     ).withColumn(
         "jaccard",
@@ -1175,77 +1158,6 @@ def duplicated_spans(
     )
 
 
-def minhash_band_key_cols(
-    text_col, num_hashes: int = 16, band_size: int = 4, n: int = 3
-):
-    """MinHash LSH band keys as ONE stateless Column expression:
-    array<struct<band, band_key>> computed per row with zero shuffle —
-    same hash family and band-key formula as :func:`minhash_band_keys`
-    (md5("g{g}"||shingle) sliced into 8-hex windows; order-independent
-    weighted band sums), so the two paths are interchangeable.
-
-    When to use which: the groupBy form materialises shingles as rows
-    (reusable by Jaccard verify, map-side-combinable when shingle rows
-    already exist); this expression form is the zero-shuffle signature
-    for one-row-per-doc pipelines — and the ONLY shape a streaming
-    source can use, since a per-doc groupBy would be a stateful
-    aggregation. Docs with < n tokens yield an EMPTY array — explode
-    drops them, and callers must NOT add a null/size filter after the
-    explode (see the inline comment: the optimizer rewrites such a
-    filter into a per-element predicate that re-runs the whole
-    signature per band — measured 64x). The 4-hashes-per-md5 digest
-    trick means Catalyst's common subexpression elimination evaluates
-    4 md5s per shingle, not 16.
-    """
-    t = F.split(F.trim(F.regexp_replace(text_col, r"\s+", " ")), " ")
-    sh = F.when(
-        F.size(t) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - n),
-            lambda i: F.concat_ws(" ", *[F.element_at(t, i + j + 1) for j in range(n)]),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-    def hash_min(s: int):
-        # NOTE: the inner lambda must be single-arg — F.transform passes
-        # the element INDEX to any second parameter, clobbering a
-        # default-bound loop variable.
-        g, w = s // 4, s % 4
-
-        def one(c):
-            dig = F.md5(F.concat(F.lit(f"g{g}"), c))
-            return F.conv(F.substring(dig, 1 + 8 * w, 8), 16, 10).cast("bigint")
-
-        return F.array_min(F.transform(sh, one))
-
-    mins = [hash_min(s) for s in range(num_hashes)]
-    n_bands = num_hashes // band_size
-    bands = []
-    for b in range(n_bands):
-        key = sum(
-            (mins[b * band_size + i] * F.lit(i + 1) for i in range(band_size)),
-            start=F.lit(0),
-        )
-        bands.append(
-            F.struct(F.lit(b).alias("band"), key.cast("bigint").alias("band_key"))
-        )
-    # Short docs (< n tokens) yield an EMPTY array, not null band keys:
-    # explode() then drops them with no downstream filter — a
-    # post-explode IS NOT NULL filter gets optimizer-rewritten into a
-    # per-element predicate on the array-under-construction,
-    # re-evaluating the full signature per band. NOTE (r8): even
-    # without that footgun, this monolithic Column inlines the
-    # shingle/digest sub-expressions into all 16 mins and HOFs are
-    # interpreted (no codegen CSE) — re-measured ~150s at sf0.1 vs
-    # ~13s for the staged minhash_band_key_rows and ~2.7s for the
-    # groupBy row form. Treat this function as the semantic SPEC;
-    # hot paths use minhash_band_key_rows (streaming) or
-    # minhash_band_keys (batch).
-    return F.when(F.size(t) >= n, F.array(*bands)).otherwise(
-        F.array().cast(f"array<struct<band:int,band_key:bigint>>")
-    )
-
-
 def minhash_band_key_rows(
     df: DataFrame,
     text_col: str = "text",
@@ -1256,32 +1168,34 @@ def minhash_band_key_rows(
     n: int = 3,
 ) -> DataFrame:
     """STAGED-PROJECTION expression-form band keys (r8): the same
-    (doc_id, band, band_key) rows as :func:`minhash_band_keys` and
-    :func:`minhash_band_key_cols` (bit-identical, equality-tested),
-    still zero shuffle and stateless (streaming-legal), but each
-    pipeline level — shingle array, md5 digest arrays, per-window
-    mins, band structs — is its own ``select`` so downstream levels
-    reference ATTRIBUTES instead of re-inlined expressions.
+    (doc_id, band, band_key) rows as :func:`minhash_band_keys`
+    (bit-identical, equality-tested) — same hash family and band-key
+    formula (md5("g{g}"||shingle) sliced into 8-hex windows;
+    order-independent weighted band sums) — but zero shuffle and
+    stateless: the only shape a streaming source can use, since a
+    per-doc groupBy would be a stateful aggregation. Each pipeline
+    level — shingle array, md5 digest arrays, per-window mins, band
+    structs — is its own ``select`` so downstream levels reference
+    ATTRIBUTES instead of re-inlined expressions.
 
-    Why this matters (r8 measurement, sf0.1, noop sink): the
-    single-Column form inlines the shingle/digest sub-expressions into
-    every one of the 16 min computations, and higher-order functions
-    (transform/array_min/aggregate) are NOT whole-stage-codegen'd —
-    they evaluate on the interpreted expression path with no common
-    subexpression elimination, so every inlined copy re-runs:
-    ~150s. Staging across Project boundaries (CollapseProject keeps
-    non-cheap multi-referenced aliases materialised) cuts that to
-    ~13s — 11x. The explode+groupBy row form (:func:`minhash_band_keys`)
-    is still ~5x faster again (~2.7s): per-row md5 IS codegen'd and the
-    mins are one map-side-combinable hash aggregate. Hierarchy, fastest
-    first: groupBy rows (batch default) > staged projections (streaming,
-    where a per-doc groupBy would be a stateful aggregation) >
-    monolithic Column (kept as the semantic spec; avoid in hot paths).
+    Why this matters (r8 measurement, sf0.1, noop sink): higher-order
+    functions (transform/array_min/aggregate) are NOT
+    whole-stage-codegen'd — they evaluate on the interpreted expression
+    path with no common subexpression elimination, so a single-Column
+    form, which inlines the shingle/digest sub-expressions into every
+    one of the 16 mins, re-runs every copy: ~150s. Staging across
+    Project boundaries (CollapseProject keeps non-cheap multi-referenced
+    aliases materialised) cuts that to ~13s. The explode+groupBy row
+    form (:func:`minhash_band_keys`) is still ~5x faster again (~2.7s):
+    per-row md5 IS codegen'd and the mins are one map-side-combinable
+    hash aggregate — it stays the batch default.
 
     `passthrough` columns (e.g. the event-time column a streaming
     join needs) ride alongside doc_id through every stage. Docs with
-    < n tokens vanish at the explode (empty array), preserving
-    minhash_band_key_cols's no-post-filter contract.
+    < n tokens vanish at the explode (empty band array), so callers
+    need no post-explode filter — one would be optimizer-rewritten into
+    a per-element predicate re-running the signature per band
+    (measured 64x; plan-pinned by test).
     """
     t = F.split(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), " ")
     sh = F.when(
@@ -1299,8 +1213,8 @@ def minhash_band_key_rows(
 
     def dig_fn(g: int):
         # single-arg lambda factory: a second lambda parameter would
-        # receive the element INDEX from F.transform (see the
-        # minhash_band_key_cols NOTE)
+        # receive the element INDEX from F.transform, clobbering a
+        # default-bound loop variable
         return lambda c: F.md5(F.concat(F.lit(f"g{g}"), c))
 
     n_digests = -(-num_hashes // 4)
@@ -1341,8 +1255,8 @@ def minhash_band_key_rows(
         )
     # short docs: empty _sh -> array_min over empty = NULL mins; guard
     # the band array on the (attribute, cheap) first min so they
-    # vanish at the explode — the same no-post-filter contract as the
-    # Column form, at zero re-evaluation cost
+    # vanish at the explode — no post-filter, at zero re-evaluation
+    # cost
     band_arr = F.when(F.col("_h0").isNotNull(), F.array(*bands)).otherwise(
         F.array().cast("array<struct<band:int,band_key:bigint>>")
     )
@@ -1447,12 +1361,11 @@ def incremental_near_duplicates(
         ),
         "doc_b",
     )
-    # intersect projected ONCE behind the eval-once barrier (see
-    # minhash_near_duplicates / _eval_once_barrier)
+    # intersect projected ONCE (_verify_intersection_size)
     scored = ab.select(
         "doc_a",
         "doc_b",
-        _eval_once_barrier(_verify_intersection_size(), "int").alias("_inter"),
+        _verify_intersection_size().alias("_inter"),
         (F.size("_sa") + F.size("_sb")).alias("_nab"),
     )
     # threshold on the RAW ratio, round after — the same order as
@@ -1547,13 +1460,12 @@ def containment_near_duplicates(
         # bigint: the pre-r16 count aggregate emitted long — the
         # oracle gate compares numeric TYPES, not just values.
         # Equal sets (r17): |A∩A| = |A| exactly, O(1)
-        # (_verify_intersection_size); the intersect is projected ONCE
-        # behind the eval-once barrier (see _eval_once_barrier — the
-        # ratio + filter would otherwise re-inline it per consumer).
+        # and the intersect is projected ONCE
+        # (_verify_intersection_size).
         .select(
             "doc_a",
             "doc_b",
-            _eval_once_barrier(_verify_intersection_size(), "bigint").alias("n_inter"),
+            _verify_intersection_size("bigint").alias("n_inter"),
             F.least(F.size("_sa"), F.size("_sb")).alias("_minab"),
         )
     )

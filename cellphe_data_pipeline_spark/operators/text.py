@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cellphe_data_pipeline_spark.functions.scalars import nondeterministic_zero
+
 #: Language set matches the driver's `documents.lang` domain (en/de/fr/es/zh).
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "a", "in", "is"],
@@ -908,10 +910,10 @@ def gopher_rules(
     whole document parse runs once for the filter and again for the
     projection (measured 3.0x at the c24 corpus shape: 0.88s unfiltered
     vs 2.64s with the pushed filter, sf0.1 noop). The in-operator gate
-    filters on the ALREADY-STAGED counts; its non-deterministic
-    disjunct (seeded ``rand() > 2``, statically false) blocks the
-    pushdown — guide §4.4's asNondeterministic() remedy, applied to a
-    native expression tree. Row set and all output values are
+    filters on the ALREADY-STAGED counts; its statically false
+    ``nondeterministic_zero() > 1.0`` disjunct blocks the pushdown —
+    guide §4.4's asNondeterministic() remedy, applied to a native
+    expression tree. Row set and all output values are
     identical to the external-filter form (oracle-reproven: c24, e32).
     """
     t = F.coalesce(F.col(text_col), F.lit(""))
@@ -1008,21 +1010,16 @@ def gopher_rules(
     )
     if gate_mask is not None:
         # Gate on the STAGED count attributes, through a projected gate
-        # COLUMN whose expression carries statically-false seeded-rand
-        # noise (rand(0)*0.0 > 1.0). Why each piece is load-bearing:
-        # Spark 4 pushes even NON-deterministic filter conditions
-        # through deterministic projects, so the barrier must be a
-        # nondeterministic PROJECT FIELD (PushPredicateThroughNonJoin
-        # requires fields.forall(_.deterministic)); and a bare
-        # rand() > 2 disjunct is constant-folded away by the
-        # rand-range simplification, while the Multiply hides it.
-        # The filter therefore stays ABOVE this projection instead of
-        # being re-inlined into one giant un-CSE'd scan predicate
-        # (guide §4.4; measured 3.0x — see docstring). Values: the
-        # disjunct is always false, so the row set is exactly
+        # COLUMN carrying the never-true nondeterministic_zero() > 1.0
+        # disjunct. Spark 4 pushes even NON-deterministic filter
+        # conditions through deterministic projects, so the barrier
+        # must be a nondeterministic PROJECT FIELD; the filter then
+        # stays ABOVE this projection instead of being re-inlined into
+        # one giant un-CSE'd scan predicate (guide §4.4; measured 3.0x
+        # — see docstring). The row set is exactly
         # fail_mask & gate_mask == 0.
         gate = (mask.bitwiseAND(F.lit(gate_mask)) == 0) | (
-            F.rand(0) * F.lit(0.0) > F.lit(1.0)
+            nondeterministic_zero() > F.lit(1.0)
         )
         p2 = (
             p2.withColumn("_gq_gate", gate)

@@ -35,49 +35,6 @@ from cellphe_data_pipeline_spark.operators.timeseries import timeseries_features
 DEFAULT_QC = {"minimum_cell_size": 2.0, "minimum_observations": 3}
 
 
-def mask_rois(masks: DataFrame) -> DataFrame:
-    """Label masks → per-cell boundary ROIs in CONTOUR TRAVERSAL ORDER:
-    the engine's analogue of the reference's TrackMate-XML ROI
-    extraction (parse_xml.py:97-101) when tracking runs on mask
-    centroids. The Moore-traced contour (``mask_contours``) carries a
-    ``seq`` index, so `array_sort` on (seq, x, y) reconstructs the
-    closed traversal deterministically regardless of partitioning —
-    the ordered-boundary contract the order-dependent M4 features
-    (Perim, Compactness, Cur_*, Poly_*, Rad_haar_*) assume, exactly as
-    the reference's contours preserve vertex order (parse_xml.py:47-67).
-    One keyed shuffle.
-
-    ``ROI_filename`` here is the ENGINE-LOCAL 2-part FrameID-CellID
-    name (fixed %05d widths): track ids don't exist at mask time. The
-    pipeline rebuilds the reference's 3-part FRAME-TRACK-ID name with
-    data-driven padding (parse_xml.py:202-211) once tracking has run —
-    see ``run_pipeline``.
-    """
-    from cellphe_data_pipeline_spark.domain.images import mask_contours
-
-    b = mask_contours(masks)
-    return (
-        b.groupBy(
-            "path",
-            F.col("frame_index").alias("FrameID"),
-            F.col("mask_id").alias("CellID"),
-        )
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("seq", F.col("px").alias("x"), F.col("py").alias("y"))
-                    )
-                ),
-                lambda s: F.struct(s["x"].alias("x"), s["y"].alias("y")),
-            ).alias("coords")
-        )
-        .withColumn(
-            "ROI_filename", F.format_string("%05d-%05d", F.col("FrameID"), F.col("CellID"))
-        )
-    )
-
-
 def run_pipeline(
     binaries: DataFrame,
     qc: dict | None = None,
@@ -114,18 +71,17 @@ def run_pipeline(
     # ONE fused kernel checkpoint (r17, guide §4/§1.2): decode +
     # segment + centroid run in a single Python wave and materialise
     # behind a single cut — the r16 record measured ~200 ms of fixed
-    # launch cost PER Python stage wave on the bench host, and the
-    # staged chain paid three waves (and shipped each raster across
-    # the JVM↔Python boundary four times: data out, data in → mask
-    # out, mask in → centroids out). frames/masks/detections become
-    # column selects over the fused rows; every downstream consumer —
-    # tracking AND the M4 feature branch, which re-reads both frames
-    # (pixels) and masks (ROIs) — reuses the checkpointed rows instead
-    # of re-running the upstream Python kernels per action. Payloads
-    # are one raster+mask per frame (~2-5 KB at QC sizes): the cut is
-    # MBs, not the input corpus. Under the replicated parquet cut
-    # (CELLPHE_CHECKPOINT_DIR) the read-back is column-pruned, so a
-    # frames-only consumer never scans the mask bytes.
+    # launch cost PER Python stage wave on the bench host, and each
+    # raster crosses the JVM↔Python boundary once. frames, masks and
+    # detections are column selects over the fused rows; every
+    # downstream consumer — tracking AND the M4 feature branch, which
+    # re-reads both frames (pixels) and masks (ROIs) — reuses the
+    # checkpointed rows instead of re-running the upstream Python
+    # kernels per action. Payloads are one raster+mask per frame
+    # (~2-5 KB at QC sizes): the cut is MBs, not the input corpus.
+    # Under the replicated parquet cut (CELLPHE_CHECKPOINT_DIR) the
+    # read-back is column-pruned, so a frames-only consumer never scans
+    # the mask bytes.
     fused = cut_lineage(
         decode_segment_centroid(binaries, method=segmentation_method),
         name="fused_frames",
@@ -304,8 +260,7 @@ def run_pipeline(
     )
     # M4: per-(cell, frame) static features over the QC-surviving cells
     # — the reference's heaviest per-op budget (frame-features 5 min /
-    # 16 GB, nextflow.config). ROIs come from the mask boundaries (M6
-    # relational form) grouped per label; the semi-join keeps only
+    # 16 GB, nextflow.config). ROIs are the traced mask contours of the
     # cells that passed P1/P2, exactly the reference's filtered->M4
     # ordering (main.nf:499 -> 511-514 manual predicate-push).
     from cellphe_data_pipeline_spark.domain.features import static_features_fused
@@ -316,12 +271,9 @@ def run_pipeline(
     # frame, so no fan-out) and bring TRACK_ID in, letting the ROI
     # name follow the reference's 3-part FRAME-TRACK-ID convention with
     # data-driven zero-padding (parse_xml.py:202-211, F3 two-pass).
-    # r17: contour tracing happens INSIDE the M4 kernel over the fused
-    # rows (static_features_fused) — the staged
-    # mask_rois → roi_filename → static_features branch paid a
-    # mask_contours Python wave plus a corpus-wide contour-pixel
-    # shuffle to deliver coords the kernel can trace from the mask
-    # raster it already holds; equivalence is test-pinned.
+    # Contour tracing happens INSIDE the M4 kernel over the fused rows
+    # (static_features_fused): the kernel traces each kept cell from
+    # the mask raster it already holds, so no coords are shuffled.
     keep = filtered.select(
         F.col("timelapse_id").alias("path"),
         F.col("frame").alias("FrameID"),

@@ -2504,16 +2504,19 @@ def m3f(spark, sf_dir):
 )
 def a5b(spark, sf_dir):
     """S3/S4 + M1/M2 + A5 chained (main.nf:305-320, segment_image.py:
-    20-23, segmentation_qc.qmd:159-170): fake container -> frame split
-    UDTF -> per-partition (stub) segmentation -> label histogram."""
+    20-23, segmentation_qc.qmd:159-170): fake container -> fused
+    decode + (stub) segmentation kernel -> label histogram."""
     from cellphe_data_pipeline_spark.domain.images import (
+        decode_segment_centroid,
         mask_label_histogram,
-        segment_frames,
-        split_frames,
     )
     from cellphe_data_pipeline_spark.testing.fixtures import fake_frames_df
 
-    return mask_label_histogram(segment_frames(split_frames(fake_frames_df(spark))))
+    return mask_label_histogram(
+        decode_segment_centroid(fake_frames_df(spark)).select(
+            "path", "frame_index", "height", "width", "mask"
+        )
+    )
 
 
 @register(
@@ -2647,8 +2650,8 @@ def m4(spark, sf_dir):
 )
 def m6b(spark, sf_dir):
     """M6 ordered form (r5, ADVICE r4 high): Moore-traced outer contour
-    per mask label, traversal order preserved through the grouped
-    shuffle by the seq index — the ordered-closed-boundary contract the
+    per mask label, emitted in traversal order by the mask_rois kernel
+    (seq = array position) — the ordered-closed-boundary contract the
     order-dependent M4 features assume, matching the vertex-order-
     preserving TrackMate contour path (parse_xml.py:47-67). Golden is
     the HAND-DERIVED clockwise traversal of a rectangle and a concave L
@@ -2657,7 +2660,7 @@ def m6b(spark, sf_dir):
     asserted point-for-point in tests/test_domain.py."""
     import numpy as np
 
-    from cellphe_data_pipeline_spark.plans.pipeline import mask_rois
+    from cellphe_data_pipeline_spark.domain.images import mask_rois
 
     m = np.zeros((10, 10), dtype=np.uint16)
     m[1:4, 2:6] = 5  # rectangle label 5: rows 1-3, cols 2-5
@@ -6328,10 +6331,9 @@ def m3d(spark, sf_dir):
     tracking necessary); cross-checked against a python IoU replay in
     tests/test_domain.py::test_overlap_links_match_python_iou."""
     from cellphe_data_pipeline_spark.domain.images import (
+        decode_segment_centroid,
         make_fake_timelapse,
         mask_pixels,
-        segment_frames,
-        split_frames,
     )
     from cellphe_data_pipeline_spark.domain.tracking import overlap_links
 
@@ -6340,9 +6342,10 @@ def m3d(spark, sf_dir):
           bytearray(make_fake_timelapse(seed=101, height=48, width=48, n_frames=4)))],
         "path string, content binary",
     )
-    return overlap_links(
-        mask_pixels(segment_frames(split_frames(bins))), iou_threshold=0.1
+    masks = decode_segment_centroid(bins).select(
+        "path", "frame_index", "height", "width", "mask"
     )
+    return overlap_links(mask_pixels(masks), iou_threshold=0.1)
 
 
 @register(
@@ -7332,7 +7335,7 @@ def s11(spark, sf_dir):
 )
 def m1b(spark, sf_dir):
     """M1 REAL classical kernel (r5b): Otsu auto-threshold + run-based
-    union-find labeling (segment_frames method="otsu",
+    union-find labeling (decode_segment_centroid method="otsu",
     domain/images.py) on a hand-derivable bimodal fixture — background
     10, two planted 200-valued blobs of 4x5=20 and 4x7=28 px, scan
     order fixing labels 1 and 2. The golden is computed BY HAND from
@@ -7345,9 +7348,8 @@ def m1b(spark, sf_dir):
 
     from cellphe_data_pipeline_spark.domain.images import (
         FAKE_MAGIC,
+        decode_segment_centroid,
         mask_label_histogram,
-        segment_frames,
-        split_frames,
     )
 
     img = np.full((20, 20), 10, dtype=np.uint8)
@@ -7362,7 +7364,9 @@ def m1b(spark, sf_dir):
         [("bimodal.fake", bytearray(payload))], "path string, content binary"
     )
     return mask_label_histogram(
-        segment_frames(split_frames(bins), method="otsu")
+        decode_segment_centroid(bins, method="otsu").select(
+            "path", "frame_index", "height", "width", "mask"
+        )
     )
 
 
@@ -7500,13 +7504,13 @@ def d3b(spark, sf_dir):
     STAGED-projection shape, dedup.minhash_band_key_rows): the same
     (doc_id, band, band_key) rows as the groupBy signature path,
     computed with ZERO shuffle per doc — the form the streaming source
-    uses (streaming_minhash_neardup). r8 re-measurement: the original
-    monolithic-Column form re-evaluated its inlined sub-expressions on
-    the interpreted HOF path (~150s at sf0.1); the staged selects cut
-    that 11x (~13s), and the batch groupBy form (d3) remains ~5x
-    faster again — see minhash_band_key_rows's docstring. This query
-    pins staged-expression ≡ groupBy ≡ SQL oracle equality for the
-    whole hash family."""
+    uses (streaming_minhash_neardup). The staged selects keep the
+    interpreted HOF path from re-evaluating inlined sub-expressions
+    (~13s at sf0.1 vs ~150s for one monolithic Column), and the batch
+    groupBy form (d3) remains ~5x faster again — see
+    minhash_band_key_rows's docstring. This query pins
+    staged-expression ≡ SQL oracle equality for the whole hash family
+    (staged ≡ groupBy is pinned by test)."""
     from cellphe_data_pipeline_spark.operators.dedup import minhash_band_key_rows
 
     d = load_table(spark, sf_dir, "documents")

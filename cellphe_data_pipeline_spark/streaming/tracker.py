@@ -1090,10 +1090,10 @@ def streaming_minhash_neardup(
     from cellphe_data_pipeline_spark.operators.dedup import minhash_band_key_rows
 
     def side(a: str) -> DataFrame:
-        # staged-projection signatures (r8): same rows as the
-        # monolithic-Column form but ~11x faster (HOFs are interpreted;
-        # staging turns re-inlined sub-expressions into attribute
-        # references) — still a stateless map chain, streaming-legal
+        # staged-projection signatures (r8): same rows as the batch
+        # minhash_band_keys, as a stateless map chain (streaming-legal);
+        # staging turns re-inlined HOF sub-expressions into attribute
+        # references (~11x over one monolithic Column)
         return minhash_band_key_rows(
             docs.withWatermark(ts_col, watermark),
             text_col=text_col,

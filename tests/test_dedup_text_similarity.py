@@ -215,12 +215,14 @@ def test_minhash_verify_is_rowwise_set_algebra(spark):
 
 
 def test_verify_evaluates_array_intersect_once(spark, monkeypatch):
-    """Plan pin for ``_eval_once_barrier``: in the executed (final AQE)
+    """Plan pin for the ``nondeterministic_zero`` barrier in
+    ``_verify_intersection_size``: in the executed (final AQE)
     d3/d10/d14 plans the verify projection evaluates ``array_intersect``
     exactly once. Without the barrier, CollapseProject re-inlines the
     intersect into the jaccard/containment ratio and the filter
     conjuncts, so the same plans carry it several times — shown here by
-    re-planning with the barrier patched to identity."""
+    re-planning with the barrier patched to a deterministic literal
+    zero (an identity on the values)."""
     from pyspark.sql import functions as F
 
     from cellphe_data_pipeline_spark.operators import dedup
@@ -247,7 +249,7 @@ def test_verify_evaluates_array_intersect_once(spark, monkeypatch):
         return counts
 
     assert intersect_counts() == {"d3": 1, "d10": 1, "d14": 1}
-    monkeypatch.setattr(dedup, "_eval_once_barrier", lambda col, cast_type: col)
+    monkeypatch.setattr(dedup, "nondeterministic_zero", lambda: F.lit(0.0))
     unpinned = intersect_counts()
     assert all(n > 1 for n in unpinned.values()), unpinned
 
@@ -1270,16 +1272,12 @@ def test_minhash_expr_bands_plan_has_no_filter(spark):
     predicate that re-runs the full signature per band (measured 1.8s
     -> 122s at sf0.1). Short docs must be dropped INSIDE the band
     expression (empty array), leaving no Filter node in the plan."""
-    from pyspark.sql import functions as F
-
-    from cellphe_data_pipeline_spark.operators.dedup import minhash_band_key_cols
+    from cellphe_data_pipeline_spark.operators.dedup import minhash_band_key_rows
 
     df = spark.createDataFrame(
         [(1, "a b c d"), (2, "x")], "doc_id bigint, text string"
     )
-    out = df.select(
-        "doc_id", F.explode(minhash_band_key_cols(F.col("text"))).alias("bk")
-    ).select("doc_id", "bk.band", "bk.band_key")
+    out = minhash_band_key_rows(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Filter" not in plan
     # and the short doc vanished via the empty array, not a filter
@@ -1287,14 +1285,12 @@ def test_minhash_expr_bands_plan_has_no_filter(spark):
 
 
 def test_minhash_band_key_rows_matches_groupby_and_column_forms(spark, sf_dir):
-    """The r8 staged-projection form must be bit-identical to BOTH the
-    groupBy row form and the monolithic Column form (the three-way pin
-    behind d3b's oracle claim), including the short-doc empty-array
-    drop and passthrough columns."""
+    """The r8 staged-projection form must be bit-identical to the
+    groupBy row form (the pin behind d3b's oracle claim), including the
+    short-doc empty-array drop and passthrough columns."""
     from pyspark.sql import functions as F
 
     from cellphe_data_pipeline_spark.operators.dedup import (
-        minhash_band_key_cols,
         minhash_band_key_rows,
         minhash_band_keys,
         word_shingles,
@@ -1309,14 +1305,10 @@ def test_minhash_band_key_rows_matches_groupby_and_column_forms(spark, sf_dir):
 
     staged = minhash_band_key_rows(d)
     grouped = minhash_band_keys(word_shingles(d))
-    column = d.select(
-        "doc_id", F.explode(minhash_band_key_cols(F.col("text"))).alias("bk")
-    ).select("doc_id", "bk.band", "bk.band_key")
 
     key = lambda rows: sorted((r[0], r[1], r[2]) for r in rows)
     got = key(staged.collect())
     assert got == key(grouped.collect())
-    assert got == key(column.collect())
     assert not any(r[0] >= 100001 for r in got)  # short docs dropped
 
     # passthrough columns ride every stage

@@ -5,15 +5,16 @@ chain (golden fixture per SURVEY §5)."""
 from __future__ import annotations
 
 import math
+import zlib
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from cellphe_data_pipeline_spark.domain.images import (
+    decode_segment_centroid,
     make_fake_image,
     mask_label_histogram,
-    segment_frames,
     split_frames,
 )
 from cellphe_data_pipeline_spark.domain.lineage import (
@@ -186,7 +187,9 @@ def test_image_chain(spark):
     assert {r["path"] for r in rows} == {"f1.fake", "f2.fake"}
     assert all(len(r["data"]) == 16 * 16 for r in rows)
 
-    masks = segment_frames(frames)
+    masks = decode_segment_centroid(bins).select(
+        "path", "frame_index", "height", "width", "mask"
+    )
     hist = mask_label_histogram(masks)
     out = hist.collect()
     # background label present, counts sum to pixel count per frame
@@ -198,7 +201,7 @@ def test_image_chain(spark):
         assert sum(r["n"] for r in rows_) == 16 * 16
         assert any(r["mask_id"] == 0 for r in rows_)
     # deterministic: same seed -> same histogram
-    out2 = mask_label_histogram(segment_frames(split_frames(bins))).collect()
+    out2 = mask_label_histogram(masks).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
 
 
@@ -468,24 +471,6 @@ def test_roi_zip_roundtrip(spark):
     assert got[("f2", "002-01-010")] == [(7, 8)]
 
 
-def test_mask_pgm_sink(spark):
-    from cellphe_data_pipeline_spark.domain.images import (
-        make_fake_image,
-        mask_to_pgm,
-        segment_frames,
-        split_frames,
-    )
-
-    bins = spark.createDataFrame(
-        [("m.fake", bytearray(make_fake_image(seed=9, height=8, width=8)))],
-        "path string, content binary",
-    )
-    [row] = mask_to_pgm(segment_frames(split_frames(bins))).collect()
-    blob = bytes(row["pgm"])
-    assert blob.startswith(b"P5\n8 8\n65535\n")
-    assert len(blob) == len(b"P5\n8 8\n65535\n") + 8 * 8 * 2  # uint16 payload
-
-
 def test_scan_images_glob(spark, tmp_path):
     from cellphe_data_pipeline_spark.domain.images import make_fake_image, scan_images
 
@@ -675,12 +660,12 @@ def test_trace_outer_contour_random_components_property():
 
 
 def test_mask_contours_ordering(spark):
-    """mask_contours emits the traversal with seq; re-sorting by seq
-    reconstructs a closed 8-adjacent loop regardless of shuffle — the
-    fix for the lexicographic-order boundary bug (ADVICE r4 high)."""
+    """mask_rois emits each label's contour in traversal order: the
+    coords array is a closed 8-adjacent loop — the fix for the
+    lexicographic-order boundary bug (ADVICE r4 high)."""
     import numpy as np
 
-    from cellphe_data_pipeline_spark.domain.images import mask_contours
+    from cellphe_data_pipeline_spark.domain.images import mask_rois
 
     m = np.zeros((10, 10), dtype=np.uint16)
     m[2:8, 2:4] = 5          # concave L of label 5
@@ -690,40 +675,32 @@ def test_mask_contours_ordering(spark):
         [("m", 0, 10, 10, bytearray(m.tobytes()))],
         "path string, frame_index int, height int, width int, mask binary",
     )
-    rows = mask_contours(masks).collect()
-    by_label: dict = {}
-    for r in rows:
-        by_label.setdefault(r["mask_id"], []).append((r["seq"], r["px"], r["py"]))
+    rows = mask_rois(masks).collect()
+    by_label = {r["CellID"]: r for r in rows}
     assert set(by_label) == {5, 9}
-    for label, pts in by_label.items():
-        pts.sort()
-        assert [s for s, _, _ in pts] == list(range(len(pts)))
-        xy = np.array([(x, y) for _, x, y in pts])
+    for label, r in by_label.items():
+        assert r["FrameID"] == 0 and r["ROI_filename"] == f"00000-{label:05d}"
+        xy = np.array([(c["x"], c["y"]) for c in r["coords"]])
         steps = np.diff(np.concatenate([xy, xy[:1]], axis=0), axis=0)
         assert np.abs(steps).max() == 1  # closed 8-adjacent loop
 
 
-def test_split_frames_udtf_matches_mapinpandas(spark):
-    from cellphe_data_pipeline_spark.domain.images import (
-        make_fake_image,
-        register_split_frames_udtf,
-        split_frames,
-    )
+def test_mask_rois_plan_has_no_exchange(spark):
+    """mask_rois is one map-side kernel: the contour comes out of the
+    tracer already in traversal order, so no shuffle regroups per-pixel
+    rows to rebuild it."""
+    from cellphe_data_pipeline_spark.domain.images import mask_rois
 
-    register_split_frames_udtf(spark)
-    bins = spark.createDataFrame(
-        [("u1.fake", bytearray(make_fake_image(seed=13, height=8, width=8, n_frames=4)))],
-        "path string, content binary",
+    m = np.zeros((6, 6), dtype=np.uint16)
+    m[1:4, 1:3] = 2
+    masks = spark.createDataFrame(
+        [("m", 0, 6, 6, bytearray(m.tobytes()))],
+        "path string, frame_index int, height int, width int, mask binary",
     )
-    bins.createOrReplaceTempView("udtf_bins")
-    sql_rows = spark.sql(
-        "SELECT b.path, t.* FROM udtf_bins b, LATERAL split_frames_udtf(b.content) t"
-    ).collect()
-    mip_rows = split_frames(bins).collect()
-    key = lambda r: (r["path"], r["frame_index"])
-    assert sorted((key(r), bytes(r["data"])) for r in sql_rows) == sorted(
-        (key(r), bytes(r["data"])) for r in mip_rows
-    )
+    rois = mask_rois(masks)
+    assert [len(r["coords"]) for r in rois.collect()] == [6]
+    plan = rois._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "Exchange" not in plan, plan
 
 
 def test_audio_windows_and_features(spark):
@@ -920,11 +897,7 @@ def test_decode_frame_jpeg_baseline(spark):
     """S5 real path (r5): a BYTE-BUILT baseline JPEG decodes through
     the codec ladder within 1 gray level at quality 100, and JPEG
     containers run the split→segment Spark chain end to end."""
-    from cellphe_data_pipeline_spark.domain.images import (
-        decode_frame,
-        segment_frames,
-        split_frames,
-    )
+    from cellphe_data_pipeline_spark.domain.images import decode_frame
     from cellphe_data_pipeline_spark.domain.jpeg import encode_jpeg_gray
 
     rng = np.random.RandomState(17)
@@ -944,7 +917,7 @@ def test_decode_frame_jpeg_baseline(spark):
         np.frombuffer(rows[0]["data"], dtype=np.uint8).reshape(24, 40).astype(int)
         - img.astype(int)
     ).max() <= 1
-    assert segment_frames(frames).count() == 1
+    assert decode_segment_centroid(bins).count() == 1
 
 
 def test_jpeg_to_gray_tiff_conversion(spark):
@@ -1091,7 +1064,7 @@ def test_mask_contours_fragmented_label_takes_largest_component(spark):
     """Review-found: a label split into disjoint blobs keeps ONE
     contour (reference's one-polygon-per-spot), taken from the LARGEST
     component — not whichever fragment holds the topmost pixel."""
-    from cellphe_data_pipeline_spark.domain.images import mask_contours
+    from cellphe_data_pipeline_spark.domain.images import mask_rois
 
     m = np.zeros((12, 12), dtype=np.uint16)
     m[1, 1] = 5            # 1-px fragment, topmost
@@ -1100,7 +1073,8 @@ def test_mask_contours_fragmented_label_takes_largest_component(spark):
         [("f", 0, 12, 12, bytearray(m.tobytes()))],
         "path string, frame_index int, height int, width int, mask binary",
     )
-    pts = {(r["px"], r["py"]) for r in mask_contours(masks).collect()}
+    [roi] = mask_rois(masks).collect()
+    pts = {(c["x"], c["y"]) for c in roi["coords"]}
     assert (1, 1) not in pts           # fragment excluded
     assert (5, 5) in pts and (8, 8) in pts  # body contour present
 
@@ -1625,14 +1599,17 @@ def test_mask_png_sink_roundtrip(spark):
     scanlines) and comparing pixels."""
     import struct
     import zlib
-    from cellphe_data_pipeline_spark.domain.images import mask_to_png, segment_frames
+    from cellphe_data_pipeline_spark.domain.images import mask_to_png
 
     bins = spark.createDataFrame(
         [("p.fake", bytearray(make_fake_image(seed=6, height=16, width=16, n_frames=2)))],
         "path string, content binary",
     )
-    masks = {r["frame_index"]: r for r in segment_frames(split_frames(bins)).collect()}
-    pngs = {r["frame_index"]: bytes(r["png"]) for r in mask_to_png(segment_frames(split_frames(bins))).collect()}
+    mask_df = decode_segment_centroid(bins).select(
+        "path", "frame_index", "height", "width", "mask"
+    )
+    masks = {r["frame_index"]: r for r in mask_df.collect()}
+    pngs = {r["frame_index"]: bytes(r["png"]) for r in mask_to_png(mask_df).collect()}
     assert sorted(pngs) == [0, 1]
 
     for fi, blob in pngs.items():
@@ -2176,7 +2153,7 @@ def test_run_labeling_equals_bfs_property():
 
 def test_otsu_threshold_bimodal_and_segment():
     """r5b: Otsu on a clean bimodal image must threshold between the
-    modes, and the otsu segment_frames method must label the two
+    modes, and the otsu segmentation method must label the two
     planted blobs with hand-derivable areas."""
     from cellphe_data_pipeline_spark.domain.images import (
         _otsu_segment,
@@ -2194,35 +2171,29 @@ def test_otsu_threshold_bimodal_and_segment():
 
 
 def test_segment_frames_otsu_method(spark):
-    """r5b: the otsu method flows through the Spark kernel and differs
-    from the median path where the histogram is skewed; unknown method
-    names are rejected."""
+    """r5b: the otsu method flows through the segmentation kernel
+    (decode_segment_centroid); unknown method names are rejected on
+    the driver."""
     import pytest
-
-    from cellphe_data_pipeline_spark.domain.images import (
-        segment_frames,
-        split_frames,
-    )
 
     bins = spark.createDataFrame(
         [("q.fake", bytearray(make_fake_image(seed=9, height=16, width=16)))],
         "path string, content binary",
     )
-    frames = split_frames(bins)
-    out = segment_frames(frames, method="otsu").collect()
+    out = decode_segment_centroid(bins, method="otsu").collect()
     assert len(out) == 1 and len(out[0]["mask"]) == 16 * 16 * 2
     with pytest.raises(ValueError, match="unknown segmentation method"):
-        segment_frames(frames, method="cellpose2")
+        decode_segment_centroid(bins, method="cellpose2")
 
 
 def test_segment_frames_otsu_on_16bit_raster(spark):
-    """r5b review fix: 16-bit pages (2 bytes/px) must flow through
-    segment_frames without being misread as uint8, and Otsu must
-    threshold over the real uint16 value range."""
+    """r5b review fix: 16-bit pages must flow through the segmentation
+    kernel (decode_segment_centroid) without being misread as uint8,
+    and Otsu must threshold over the real uint16 value range."""
     from cellphe_data_pipeline_spark.domain.images import (
         _otsu_segment,
+        encode_tiff_gray,
         otsu_threshold,
-        segment_frames,
     )
 
     img16 = np.full((8, 8), 1000, dtype=np.uint16)
@@ -2231,19 +2202,22 @@ def test_segment_frames_otsu_on_16bit_raster(spark):
     assert 1000 <= t < 40000
     labels = _otsu_segment(img16)
     assert {int(l): int((labels == l).sum()) for l in np.unique(labels) if l} == {1: 12}
-    # and through the Spark kernel: frame rows carry 2-byte payloads
-    frames = spark.createDataFrame(
-        [("p16", 0, 8, 8, bytearray(img16.tobytes()))],
-        "path string, frame_index int, height int, width int, data binary",
+    # and through the Spark kernel: a 16-bit TIFF container decodes to
+    # 2-byte rasters
+    bins = spark.createDataFrame(
+        [("p16.tiff", bytearray(encode_tiff_gray([img16])))],
+        "path string, content binary",
     )
-    out = segment_frames(frames, method="otsu").collect()
-    m = np.frombuffer(out[0]["mask"], dtype=np.uint16).reshape(8, 8)
+    [row] = decode_segment_centroid(bins, method="otsu").collect()
+    assert np.frombuffer(row["data"], dtype=np.uint16).reshape(8, 8).tolist() == img16.tolist()
+    m = np.frombuffer(row["mask"], dtype=np.uint16).reshape(8, 8)
     assert (m == labels).all()
+    assert [(c["mask_id"], c["area"]) for c in row["cents"]] == [(1, 12)]
 
 
 def test_segment_frames_model_contract(spark):
-    """r6 (VERDICT ask #4): a real CellposeModel must slot into
-    segment_frames' third method WITHOUT code changes. Inject a fake
+    """r6 (VERDICT ask #4): a real CellposeModel must slot into the
+    segmentation kernel's third method WITHOUT code changes. Inject a fake
     model class with the reference's constructor/eval signature and
     prove: model_args/eval_args pass through verbatim (main.nf:38
     JSON semantics), the model is constructed ONCE per partition (the
@@ -2251,11 +2225,6 @@ def test_segment_frames_model_contract(spark):
     missing cellpose package fails fast with a clear driver-side
     error."""
     import pytest
-
-    from cellphe_data_pipeline_spark.domain.images import (
-        segment_frames,
-        split_frames,
-    )
 
     class ContractSegModel:
         """Stand-in with the reference's exact model contract
@@ -2290,9 +2259,9 @@ def test_segment_frames_model_contract(spark):
         ],
         "path string, content binary",
     )
-    frames = split_frames(bins).repartition(1)  # one partition => one model
-    out = segment_frames(
-        frames,
+    bins = bins.repartition(1)  # one partition => one model
+    out = decode_segment_centroid(
+        bins,
         method="model",
         model_cls=ContractSegModel,
         model_args=dict(ContractSegModel.EXPECT_MODEL),
@@ -2311,7 +2280,7 @@ def test_segment_frames_model_contract(spark):
     # no injected class and no cellpose package: clear fail-fast error
     # at CALL time (driver side), not deep inside a worker
     with pytest.raises(ImportError, match="cellpose"):
-        segment_frames(frames, method="model")
+        decode_segment_centroid(bins, method="model")
 
     # label_components_runs' overflow invariant holds for model masks
     # too: a label > 65535 must fail loudly, not wrap into background
@@ -2325,7 +2294,7 @@ def test_segment_frames_model_contract(spark):
             return mask, None, None
 
     with pytest.raises(Exception, match="65535"):
-        segment_frames(frames, method="model", model_cls=OverflowModel).collect()
+        decode_segment_centroid(bins, method="model", model_cls=OverflowModel).collect()
 
 
 def test_label_components_runs_overflow_guard():
@@ -2474,8 +2443,6 @@ def test_overlap_links_match_python_iou(spark):
     from cellphe_data_pipeline_spark.domain.images import (
         make_fake_timelapse,
         mask_pixels,
-        segment_frames,
-        split_frames,
     )
     from cellphe_data_pipeline_spark.domain.tracking import overlap_links
 
@@ -2484,7 +2451,11 @@ def test_overlap_links_match_python_iou(spark):
                                                    n_frames=5)))],
         "path string, content binary",
     )
-    px = mask_pixels(segment_frames(split_frames(bins)))
+    px = mask_pixels(
+        decode_segment_centroid(bins).select(
+            "path", "frame_index", "height", "width", "mask"
+        )
+    )
     rows = px.collect()
     got = {
         (r["frame_index"], r["src_mask"], r["dst_mask"]): r["iou"]
@@ -2853,81 +2824,50 @@ def test_frame_phash_invariances_and_oracle(spark):
     assert bin(got["other.fake"] ^ got["base.fake"]).count("1") > 10
 
 
-def test_decode_segment_centroid_matches_staged_chain(spark):
-    """r17 fused kernel: decode+segment+centroid in ONE Python wave must
-    reproduce the staged split_frames -> segment_frames -> mask_centroids
-    chain row-for-row (frames, masks, and detections), for both the
-    median and otsu segmentation methods — the pipeline now derives all
-    three tables from the fused rows."""
-    from pyspark.sql import functions as F
-
+def test_decode_segment_centroid_matches_numpy_oracle(spark):
+    """The engine's one segmentation kernel against numpy directly, for
+    the median and otsu methods: frames equal ``decode_frame``, masks
+    equal ``_fake_segment`` / ``_otsu_segment`` on them, and each
+    frame's ``cents`` equal the per-label mean of the ``np.nonzero``
+    coordinates (a different formula from the kernel's weighted
+    bincount, exact for these integer sums). A blank frame must come
+    out with ``cents == []``."""
     from cellphe_data_pipeline_spark.domain.images import (
-        decode_segment_centroid,
+        FAKE_MAGIC,
+        _fake_segment,
+        _otsu_segment,
+        decode_frame,
         make_fake_timelapse,
-        mask_centroids,
-        segment_frames,
-        split_frames,
     )
 
+    blank = (
+        FAKE_MAGIC
+        + np.array([12, 10, 1], dtype="<u4").tobytes()
+        + zlib.compress(np.zeros((12, 10), dtype=np.uint8).tobytes())
+    )
+    payloads = {
+        f"tl_{i}.fake": make_fake_timelapse(seed=200 + i, height=40, width=40, n_frames=4)
+        for i in range(3)
+    }
+    payloads["blank.fake"] = blank
     bins = spark.createDataFrame(
-        [
-            (
-                f"tl_{i}.fake",
-                bytearray(
-                    make_fake_timelapse(seed=200 + i, height=40, width=40, n_frames=4)
-                ),
-            )
-            for i in range(3)
-        ],
-        "path string, content binary",
+        [(p, bytearray(b)) for p, b in payloads.items()], "path string, content binary"
     )
-    for method in ("median", "otsu"):
-        fused = decode_segment_centroid(bins, method=method)
-        frames = split_frames(bins)
-        masks = segment_frames(frames, method=method)
-        cents = mask_centroids(masks)
-
-        def fkey(rows, payload):
-            return sorted(
-                (r["path"], r["frame_index"], r["height"], r["width"],
-                 bytes(r[payload]))
-                for r in rows
-            )
-
-        got_frames = fused.select(
-            "path", "frame_index", "height", "width", "data"
-        ).collect()
-        assert fkey(got_frames, "data") == fkey(frames.collect(), "data")
-        got_masks = fused.select(
-            "path", "frame_index", "height", "width", "mask"
-        ).collect()
-        assert fkey(got_masks, "mask") == fkey(masks.collect(), "mask")
-
-        got_cents = (
-            fused.select("path", "frame_index", F.explode("cents").alias("_c"))
-            .select(
-                "path",
-                "frame_index",
-                F.col("_c.mask_id").alias("mask_id"),
-                F.col("_c.area").alias("area"),
-                F.col("_c.cx").alias("cx"),
-                F.col("_c.cy").alias("cy"),
-            )
-            .collect()
-        )
-
-        def ckey(rows):
-            return sorted(
-                (r["path"], r["frame_index"], r["mask_id"], r["area"],
-                 r["cx"], r["cy"])
-                for r in rows
-            )
-
-        # exact equality including float bits: identical numpy math
-        assert ckey(got_cents) == ckey(cents.collect())
-        # schema parity for the exploded detection rows
-        got_schema = dict(
-            fused.select(F.explode("cents").alias("_c")).select("_c.*").dtypes
-        )
-        want_schema = dict(cents.drop("path", "frame_index").dtypes)
-        assert got_schema == want_schema
+    for method, segment in (("median", _fake_segment), ("otsu", _otsu_segment)):
+        rows = decode_segment_centroid(bins, method=method).collect()
+        want = {
+            (p, i): img for p, b in payloads.items() for i, img in enumerate(decode_frame(b))
+        }
+        assert sorted((r["path"], r["frame_index"]) for r in rows) == sorted(want)
+        for r in rows:
+            img = want[(r["path"], r["frame_index"])]
+            assert (r["height"], r["width"]) == img.shape
+            assert bytes(r["data"]) == img.tobytes()
+            m = segment(img)
+            assert bytes(r["mask"]) == m.tobytes()
+            cents = []
+            for label in [int(v) for v in np.unique(m) if v]:
+                ys, xs = np.nonzero(m == label)
+                cents.append((label, len(ys), xs.mean(), ys.mean()))
+            assert [(c["mask_id"], c["area"], c["cx"], c["cy"]) for c in r["cents"]] == cents
+        assert [r["cents"] for r in rows if r["path"] == "blank.fake"] == [[]]

@@ -34,11 +34,10 @@ from cellphe_data_pipeline_spark.domain.features import (  # noqa: E402
     _cell_features,
 )
 from cellphe_data_pipeline_spark.domain.images import (  # noqa: E402
-    _largest_component,
     _otsu_segment,
     decode_frame,
+    label_contour,
     make_fake_timelapse,
-    trace_outer_contour,
 )
 
 GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "m4_golden.json")
@@ -74,14 +73,7 @@ def _disk_contours(seed, size, cells, frame, keep):
     pipeline's fused M4 form traces them."""
     frames = decode_frame(make_fake_timelapse(seed, size, size, n_frames=frame + 1, n_cells=cells))
     m = _otsu_segment(frames[frame])
-    out = []
-    for label in [int(v) for v in np.unique(m) if v][:keep]:
-        lys, lxs = np.nonzero(m == label)
-        y0, x0 = int(lys.min()), int(lxs.min())
-        region = _largest_component(m[y0 : int(lys.max()) + 1, x0 : int(lxs.max()) + 1] == label)
-        cxs, cys = trace_outer_contour(region)
-        out.append(np.column_stack([cxs + x0, cys + y0]).astype("int64").tolist())
-    return out
+    return [label_contour(m, label).tolist() for label in [int(v) for v in np.unique(m) if v][:keep]]
 
 
 def _degenerate_coords() -> list[list[list[int]]]:

@@ -70,7 +70,7 @@ def test_full_pipeline(spark):
     got_keys = {(r["path"], r["FrameID"], r["CellID"]) for r in feats}
     assert got_keys <= want_keys
     assert len(got_keys) > 0
-    from cellphe_data_pipeline_spark.plans.pipeline import mask_rois
+    from cellphe_data_pipeline_spark.domain.images import mask_rois
 
     boundary_n = {
         (r["path"], r["FrameID"], r["CellID"]): len(r["coords"])
@@ -397,9 +397,10 @@ def test_static_features_fused_matches_staged_branch(spark):
     from cellphe_data_pipeline_spark.domain.images import (
         decode_segment_centroid,
         make_fake_timelapse,
+        mask_rois,
     )
     from cellphe_data_pipeline_spark.domain.rois import roi_filename
-    from cellphe_data_pipeline_spark.plans.pipeline import mask_rois, run_pipeline
+    from cellphe_data_pipeline_spark.plans.pipeline import run_pipeline
 
     bins = spark.createDataFrame(
         [

@@ -6,10 +6,9 @@ from __future__ import annotations
 import statistics
 
 from cellphe_data_pipeline_spark.domain.images import (
+    decode_segment_centroid,
     make_fake_timelapse,
     mask_label_histogram,
-    segment_frames,
-    split_frames,
 )
 from cellphe_data_pipeline_spark.plans.pipeline import run_pipeline
 from cellphe_data_pipeline_spark.plans.qc import segmentation_qc, tracking_qc
@@ -41,7 +40,11 @@ def test_qc_reports(spark):
     for t, v in td.items():
         assert abs(by_track[t] - v) < 1e-6
 
-    hist = mask_label_histogram(segment_frames(split_frames(bins)))
+    hist = mask_label_histogram(
+        decode_segment_centroid(bins).select(
+            "path", "frame_index", "height", "width", "mask"
+        )
+    )
     seg = segmentation_qc(hist)
     areas = seg["cell_areas"].collect()
     assert all(r["mask_id"] != 0 for r in areas)
@@ -61,7 +64,9 @@ def test_segmentation_highlight_frames(spark):
         [("tl.fake", bytearray(make_fake_timelapse(seed=9, height=32, width=32, n_frames=12, n_cells=3)))],
         "path string, content binary",
     )
-    masks = segment_frames(split_frames(bins))
+    masks = decode_segment_centroid(bins).select(
+        "path", "frame_index", "height", "width", "mask"
+    )
     fill = segmentation_highlight_frames(masks, "fill", stride=10).collect()
     outline = segmentation_highlight_frames(masks, "outline", stride=10).collect()
     # stride: frames 0 and 10 only

@@ -598,7 +598,10 @@ def test_streaming_minhash_neardup_matches_batch(spark, tmp_path):
     band bucket, one pair row — multi-band collisions collapsed."""
     import datetime
 
-    from cellphe_data_pipeline_spark.operators.dedup import minhash_band_key_cols
+    from cellphe_data_pipeline_spark.operators.dedup import (
+        minhash_band_keys,
+        word_shingles,
+    )
     from cellphe_data_pipeline_spark.streaming.tracker import (
         streaming_minhash_neardup,
     )
@@ -638,15 +641,13 @@ def test_streaming_minhash_neardup_matches_batch(spark, tmp_path):
         for r in spark.sql("SELECT doc_a, doc_b FROM mh_pairs").collect()
     }
 
-    # batch oracle: same expression-form band keys, python pair logic
-    keys = {}
-    for r in (
-        df.select("doc_id", "ts", F.explode(minhash_band_key_cols(F.col("text"), band_size=2)).alias("bk"))
-        .select("doc_id", "ts", "bk.band", "bk.band_key")
-        .collect()
-    ):
-        keys.setdefault((r["band"], r["band_key"]), []).append((r["doc_id"], r["ts"]))
+    # batch oracle: the batch groupBy band keys, python pair logic
     ts_of = {d: t for d, _, t in docs}
+    keys = {}
+    for r in minhash_band_keys(word_shingles(df), band_size=2).collect():
+        keys.setdefault((r["band"], r["band_key"]), []).append(
+            (r["doc_id"], ts_of[r["doc_id"]])
+        )
     expect = set()
     for members in keys.values():
         for (da, ta) in members:
