@@ -24,7 +24,8 @@ hard part #5) is *same-shape, simplified* linking:
     segment starts/ends and track middles one frame apart
     (ALLOW_TRACK_SPLITTING / SPLITTING_MAX_DISTANCE /
     ALLOW_TRACK_MERGING / MERGING_MAX_DISTANCE,
-    templates/cyto3.json:31-38) — ``_split_merge_lap``;
+    templates/cyto3.json:31-38) — phase-2 blocks of
+    ``_segment_candidates``;
   - LAP cost shaping (r6/r7, all opt-in): the no-link alternative
     (ALTERNATIVE_LINKING_COST_FACTOR × CUTOFF_PERCENTILE of the
     candidate cost distribution, templates/cyto3.json:26,30) via the
@@ -35,14 +36,22 @@ hard part #5) is *same-shape, simplified* linking:
     cyto3.json:24,30,33-35). r8 adds ``gap_strategy="joint_lap"`` —
     TrackMate's ACTUAL phase-2 discipline: gap closing, splitting and
     merging traded off in ONE Jaqaman matrix with one shared
-    alternative cost b over the combined candidate distribution
-    (_joint_segment_lap), closing the former block-independence
-    deviation (the sequential strategies remain the default for
-    bit-stable goldens; there each block computes its own b).
+    alternative cost b over the combined candidate distribution,
+    closing the former block-independence deviation (the sequential
+    strategies remain the default for bit-stable goldens; there each
+    block computes its own b).
     Remaining documented deviation: the penalty denominator hardens
     (f1+f2) to |f1|+|f2| (identical for TrackMate's nonnegative stock
     features — see _penalty_factor);
   - deterministic: candidate pairs sorted by (distance, src id, dst id).
+
+One linking core serves every tracker: ``_frame_candidates`` is the
+per-frame candidate step and ``_greedy`` the greedy assignment (the
+streaming tracker, streaming/tracker.py, calls the same two), every
+LAP block — phase 1, each sequential phase-2 block and the joint
+phase-2 matrix — goes through ``_assign``, and ``_segment_candidates``
+builds the gap-closing, splitting and merging candidates for both
+phase-2 strategies.
 
 Parallelism: ``applyInPandas`` grouped by timelapse — tracking is
 global per timelapse (the reference runs it as one task too), but
@@ -140,104 +149,26 @@ def _hungarian(cost: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 def _build_spot_feats(
     pdf, penalty_keys: set[str]
 ) -> tuple[dict[int, tuple[int, float, float]], dict[int, dict[str, float]]]:
-    """One iterrows pass building the (frame, x, y) spot lookup and the
-    per-spot penalty-feature dict (TrackMate's UPPERCASE keys matched
-    case-insensitively against detection columns) — shared by all three
-    phase-2 entry points (r8 review: three verbatim copies; one pass,
-    because a second iterrows over a ~72k-row timelapse group doubles
-    the slowest pandas primitive)."""
+    """One pass over a timelapse's detections building the
+    (frame, x, y) spot lookup, in row order, and the per-spot
+    penalty-feature dict (TrackMate's UPPERCASE keys matched
+    case-insensitively against detection columns; NULL values are left
+    out)."""
     cols_by_upper = {c.upper(): c for c in pdf.columns}
     use = {k: cols_by_upper[k] for k in penalty_keys if k in cols_by_upper}
-    spot: dict[int, tuple[int, float, float]] = {}
+    ids = [int(i) for i in pdf["id"].tolist()]
+    spot = {
+        i: (int(f), float(x), float(y))
+        for i, f, x, y in zip(
+            ids, pdf["frame"].tolist(), pdf["x"].tolist(), pdf["y"].tolist()
+        )
+    }
     feats: dict[int, dict[str, float]] = {}
-    for _, r in pdf.iterrows():
-        i = int(r["id"])
-        spot[i] = (int(r["frame"]), float(r["x"]), float(r["y"]))
-        if use:
-            feats[i] = {k: float(r[c]) for k, c in use.items() if pd.notna(r[c])}
+    if use:
+        vals = {k: pdf[c].tolist() for k, c in use.items()}
+        for n, i in enumerate(ids):
+            feats[i] = {k: float(v[n]) for k, v in vals.items() if pd.notna(v[n])}
     return spot, feats
-
-
-def _close_gaps_segment_lap(
-    pdf: pd.DataFrame,
-    edges: list[tuple[int, int, int, float]],
-    max_frame_gap: int,
-    gap_closing_max_distance: float,
-    gap_closing_feature_penalties: dict[str, float] | None = None,
-    alternative_cost_factor: float | None = None,
-    cutoff_percentile: float = 0.9,
-) -> list[tuple[int, int, int, float]]:
-    """TrackMate's second LAP phase, lite (track_images.py:74-123
-    semantics: ALLOW_GAP_CLOSING / MAX_FRAME_GAP /
-    GAP_CLOSING_MAX_DISTANCE): after frame-to-frame linking, ONE
-    Hungarian assignment over (segment end × segment start) candidate
-    pairs — minimising TOTAL reconnection distance globally, where the
-    inline greedy closure commits to locally-shortest links first.
-
-    Candidates: end e → start s with 2 ≤ frame(s) − frame(e) ≤
-    max_frame_gap + 1 (a difference of 1 is consecutive — phase 1's
-    job) and dist ≤ gap_closing_max_distance. Splitting/merging are the
-    separate ``_split_merge_lap`` pass (runs after this one).
-
-    r7 cost shaping: ``gap_closing_feature_penalties``
-    (GAP_CLOSING_FEATURE_PENALTIES, templates/cyto3.json:30) switches
-    candidate costs to penalised squared distances gated at limit²
-    (:func:`_penalty_factor`); ``alternative_cost_factor`` extends the
-    no-link alternative to this phase-2 block (:func:`_lap_picks`) —
-    closing the r6 review gap where phase 2 force-assigned every
-    within-window candidate. Defaults keep r6 behaviour bit-for-bit.
-    """
-    nxt = {s: d for s, d, _, _ in edges}
-    prv = {d: s for s, d, _, _ in edges}
-    spot, feats = _build_spot_feats(
-        pdf, set(gap_closing_feature_penalties or {})
-    )
-    limit = gap_closing_max_distance
-    seg_ends = [i for i in spot if i not in nxt]      # no outgoing link
-    seg_starts = [i for i in spot if i not in prv]    # no incoming link
-    cands: list[tuple[float, int, int, int, float]] = []  # (cost, e, s, gap, d)
-    for e in seg_ends:
-        fe, xe, ye = spot[e]
-        for s in seg_starts:
-            fs, xs, ys = spot[s]
-            dframe = fs - fe
-            if dframe < 2 or dframe > max_frame_gap + 1:
-                continue
-            d = float(np.hypot(xs - xe, ys - ye))
-            if d > limit:
-                continue
-            if gap_closing_feature_penalties:
-                cst = d * d * _penalty_factor(
-                    gap_closing_feature_penalties,
-                    feats.get(e, {}),
-                    feats.get(s, {}),
-                )
-                if cst <= limit * limit:
-                    cands.append((cst, e, s, dframe - 1, d))
-            else:
-                cands.append((d, e, s, dframe - 1, d))
-    if not cands:
-        return edges
-    srcs = sorted({e for _, e, _, _, _ in cands})
-    dsts = sorted({s for _, _, s, _, _ in cands})
-    s_ix = {e: i for i, e in enumerate(srcs)}
-    d_ix = {s: i for i, s in enumerate(dsts)}
-    cost = np.full((len(srcs), len(dsts)), _LAP_BIG)
-    meta: dict[tuple[int, int], tuple[float, int]] = {}
-    for cst, e, s, gap, d in cands:
-        if cst < cost[s_ix[e], d_ix[s]]:
-            cost[s_ix[e], d_ix[s]] = cst
-            meta[(s_ix[e], d_ix[s])] = (d, gap)
-    out = list(edges)
-    for r, c in _lap_picks(
-        cost,
-        alternative_cost_factor,
-        cutoff_percentile,
-        squared=bool(gap_closing_feature_penalties),
-    ):
-        d, gap = meta[(r, c)]
-        out.append((srcs[r], dsts[c], gap, d))
-    return out
 
 
 def _penalty_factor(
@@ -252,7 +183,7 @@ def _penalty_factor(
     distance cost is multiplied by (1 + sum(terms))^2. A pair of
     identical feature values is unpenalised; dissimilar values push
     the candidate's cost up and can push it past the acceptance
-    threshold entirely."""
+    threshold entirely. Symmetric in ``fa`` and ``fb``."""
     s = 0.0
     for feat, p in penalties.items():
         a = fa.get(feat)
@@ -277,10 +208,8 @@ def _lap_picks(
     cutoff_percentile: float = 0.9,
     squared: bool = False,
 ) -> list[tuple[int, int]]:
-    """Solve one LAP block, optionally with TrackMate's NO-LINK
-    alternative (r7 — shared by phase 1 linking, phase 2 gap closing
-    and the split/merge blocks, closing the r6 review gap where only
-    phase 1 honoured ALTERNATIVE_LINKING_COST_FACTOR).
+    """Solve one LAP cost matrix, optionally with TrackMate's NO-LINK
+    alternative.
 
     Without the factor: plain Hungarian; sentinel cells are dropped
     from the solution (non-assignment allowed). With it: costs switch
@@ -289,7 +218,9 @@ def _lap_picks(
     the finite candidate costs, and the Jaqaman-augmented square
     matrix offers every row and column a diagonal alternative at cost
     b — so a within-window candidate costlier than b stays UNLINKED
-    instead of being force-assigned (Jaqaman et al. 2008)."""
+    instead of being force-assigned (Jaqaman et al. 2008). A solution
+    with L links totals sum(C_linked) + (n+m-L)*b, so the net decision
+    rule is "a candidate joins iff its marginal cost <= b"."""
     if alternative_cost_factor is None:
         return [
             (r, c) for r, c in zip(*_hungarian(cost)) if cost[r, c] < _LAP_BIG
@@ -314,268 +245,175 @@ def _lap_picks(
     ]
 
 
-def _split_merge_lap(
-    pdf: pd.DataFrame,
-    edges: list[tuple[int, int, int, float]],
-    allow_splitting: bool,
-    splitting_max_distance: float,
-    allow_merging: bool,
-    merging_max_distance: float,
-    splitting_feature_penalties: dict[str, float] | None = None,
-    merging_feature_penalties: dict[str, float] | None = None,
+def _assign(
+    cands: list[tuple],
     alternative_cost_factor: float | None = None,
     cutoff_percentile: float = 0.9,
-) -> list[tuple[int, int, int, float]]:
-    """TrackMate phase-2 splitting/merging blocks, lite
-    (track_images.py:74-123 wiring; templates/cyto3.json:31-38 enables
-    both by default with SPLITTING_MAX_DISTANCE 5.0 /
-    MERGING_MAX_DISTANCE 50.0):
+    squared: bool = False,
+) -> list[tuple]:
+    """Solve one LAP block over candidate links ``(cost, row, col,
+    *payload)`` — phase-1 frame linking, each sequential phase-2 block
+    and the joint phase-2 matrix all go through here.
 
-    - SPLIT: a segment START s (no incoming link after linking + gap
-      closing) may attach to a MIDDLE spot m of another track (a spot
-      with both incoming and outgoing links) one frame EARLIER, within
-      ``splitting_max_distance`` — emitting a second outgoing edge
-      m → s, the 1→2 division link.
-    - MERGE: a segment END e (no outgoing link) may attach to a middle
-      spot m one frame LATER within ``merging_max_distance`` — emitting
-      a second incoming edge e → m, the 2→1 fusion link.
+    Rows and cols are indexed in sorted key order; pairs outside the
+    candidate list carry the ``_LAP_BIG`` sentinel, and a cell listed
+    twice keeps its first cheapest candidate. Returns the picks
+    ``(row, col, *payload)`` in :func:`_lap_picks` order."""
+    if not cands:
+        return []
+    rows = sorted({c[1] for c in cands})
+    cols = sorted({c[2] for c in cands})
+    r_ix = {r: i for i, r in enumerate(rows)}
+    c_ix = {c: i for i, c in enumerate(cols)}
+    cost = np.full((len(rows), len(cols)), _LAP_BIG)
+    payload: dict[tuple[int, int], tuple] = {}
+    for cst, r, c, *rest in cands:
+        cell = (r_ix[r], c_ix[c])
+        if cst < cost[cell]:
+            cost[cell] = cst
+            payload[cell] = tuple(rest)
+    return [
+        (rows[i], cols[j], *payload[(i, j)])
+        for i, j in _lap_picks(cost, alternative_cost_factor, cutoff_percentile, squared)
+    ]
 
-    Each side is ONE Hungarian assignment (starts × middles and
-    ends × middles), so a middle hosts at most one split and one merge —
-    the assignment discipline of TrackMate's joint phase-2 matrix,
-    solved as two independent blocks (documented deviation: the
-    reference's single matrix also trades split/merge links against
-    gap-closing alternatives). Runs AFTER gap closing so gap-closed
-    starts/ends are no longer candidates. Emitted edges carry gap=0
-    (adjacent frames by construction).
 
-    Feature penalties (r6 — SPLITTING/MERGING_FEATURE_PENALTIES,
-    templates/cyto3.json:33-35, e.g. {"AREA": 0.5} biasing merges
-    toward similar-area pairs): when a penalty map is given, the cost
-    switches to TrackMate's convention — squared distance times
-    :func:`_penalty_factor`, accepted iff cost <= max_distance**2 —
-    so dissimilar-feature pairs rank worse in the assignment and can
-    be rejected outright, exactly the JVM tracker's behaviour.
-    Feature keys are TrackMate's UPPERCASE names matched
-    case-insensitively against the detection columns (AREA -> area).
-    No penalties (the default) keeps the original plain-distance cost
-    bit-for-bit (goldens unchanged).
-    """
+def _greedy(cands: list[tuple]) -> list[tuple]:
+    """Greedy assignment of candidate links ``(cost, src, dst,
+    *payload)``: ascending ``(cost, src, dst)`` — deterministic — with
+    each src and each dst used at most once. Returns the picks
+    ``(src, dst, *payload)`` in that order."""
+    used_src: set = set()
+    used_dst: set = set()
+    picks = []
+    for _cost, src, dst, *rest in sorted(cands):
+        if src in used_src or dst in used_dst:
+            continue
+        used_src.add(src)
+        used_dst.add(dst)
+        picks.append((src, dst, *rest))
+    return picks
+
+
+def _frame_candidates(
+    open_ends: dict,
+    f: int,
+    dets: list[tuple[int, float, float]],
+    linking_max_distance: float,
+    gap_closing_max_distance: float,
+    max_gap: int,
+    vel: dict[int, tuple[float, float]] | None = None,
+    penalty: tuple | None = None,
+) -> list[tuple[float, int, int, int, float]]:
+    """Phase-1 candidate links ``(cost, src, dst, gap, dist)`` from the
+    open track ends ``{id: (frame, x, y, ...)}`` to frame ``f``'s
+    detections ``(id, x, y)`` — the per-frame step of the batch kernel
+    and of the streaming tracker.
+
+    ``gap`` is the number of frames skipped (0 = consecutive). An end
+    from frame ``f`` or later (gap < 0) or silent for more than
+    ``max_gap`` frames is no candidate; the distance window is
+    ``linking_max_distance`` at gap 0, ``gap_closing_max_distance``
+    otherwise. With ``vel`` (method="kalman") an end's position is
+    first carried forward at its constant-velocity estimate — TrackMate's
+    Kalman tracker, lite (predict + gate + assign; no covariance update);
+    an end with no estimate stays put, exactly as in greedy linking.
+    With ``penalty = (feats, linking_penalties, gap_closing_penalties)``
+    the cost is the squared distance times :func:`_penalty_factor`
+    (factor 1 where the gap's map is empty), gated at limit²; otherwise
+    it is the raw distance."""
+    cands = []
+    for src, end in open_ends.items():
+        gap = f - end[0] - 1
+        if gap < 0 or gap > max_gap:
+            continue
+        limit = linking_max_distance if gap == 0 else gap_closing_max_distance
+        ex, ey = end[1], end[2]
+        if vel is not None:
+            vx, vy = vel.get(src, (0.0, 0.0))
+            ex, ey = ex + vx * (f - end[0]), ey + vy * (f - end[0])
+        for dst, x, y in dets:
+            d = float(np.hypot(x - ex, y - ey))
+            if d > limit:
+                continue
+            if penalty is None:
+                cands.append((d, src, dst, gap, d))
+                continue
+            feats, pmap = penalty[0], penalty[1] if gap == 0 else penalty[2]
+            factor = _penalty_factor(pmap, feats.get(src, {}), feats.get(dst, {})) if pmap else 1.0
+            cost = d * d * factor
+            if cost <= limit * limit:
+                cands.append((cost, src, dst, gap, d))
+    return cands
+
+
+def _segment_candidates(
+    spot: dict[int, tuple[int, float, float]],
+    feats: dict[int, dict[str, float]],
+    edges: list[tuple[int, int, int, float]],
+    blocks: dict[str, tuple[float, dict[str, float] | None]],
+    max_frame_gap: int,
+    joint: bool,
+) -> list[tuple]:
+    """Phase-2 candidates over the segments that phase-1 ``edges``
+    leave, laid out as Jaqaman et al. 2008's segment matrix (their
+    Fig. 1c; TrackMate's JaqamanSegmentCostMatrixCreator):
+
+    - "g" gap closing: segment END → segment START 2..max_frame_gap+1
+      frames later (row (0, end), col (0, start));
+    - "s" splitting: track MIDDLE (a spot with both links) → START one
+      frame later (row (1, middle), col (0, start));
+    - "m" merging: END → MIDDLE one frame later (row (0, end),
+      col (1, middle)).
+
+    ``blocks`` maps each enabled kind to its (max distance, feature
+    penalties). Returned as ``(cost, row, col, kind, gap, dist)``; the
+    emitted edge of a pick is always ``(row id, col id, gap, dist)``
+    with the RAW distance. Costs: with ``joint`` every block is in
+    TrackMate's phase-2 units (squared distance x penalty factor,
+    gated at limit²) so one matrix holds coherent costs; otherwise a
+    block with penalties uses those units and a block without keeps
+    the raw distance gated at the limit. The sequential gap-closing
+    block gates the raw distance before its penalised cost too, as
+    phase 1 does."""
     has_out = {e[0] for e in edges}
     has_in = {e[1] for e in edges}
-    spot, feats = _build_spot_feats(
-        pdf,
-        set(splitting_feature_penalties or {})
-        | set(merging_feature_penalties or {}),
-    )
-    mid_by_frame: dict[int, list[int]] = {}
+    ends = [i for i in spot if i not in has_out]
+    starts = [i for i in spot if i not in has_in]
+    mids: dict[int, list[int]] = {}
     for i in spot:
         if i in has_out and i in has_in:
-            mid_by_frame.setdefault(spot[i][0], []).append(i)
-
-    def one_side(
-        loose: list[int],
-        frame_delta: int,
-        max_dist: float,
-        penalties: dict[str, float] | None = None,
-    ) -> list[tuple[int, int, float]]:
-        """Assign loose spots (starts or ends) to middles at
-        frame + frame_delta; returns (loose, middle, dist) picks.
-        With ``penalties``, costs are TrackMate's penalised squared
-        distances gated at max_dist**2 (see the function docstring);
-        the returned third element stays the RAW distance either way
-        (the emitted edge's dist column is a geometric quantity)."""
-        cands: list[tuple[float, int, int, float]] = []  # (cost, a, m, d)
-        for a in loose:
-            fa, xa, ya = spot[a]
-            for m in mid_by_frame.get(fa + frame_delta, []):
-                _, xm, ym = spot[m]
-                d = float(np.hypot(xm - xa, ym - ya))
-                if penalties:
-                    cost = d * d * _penalty_factor(
-                        penalties, feats.get(a, {}), feats.get(m, {})
-                    )
-                    if cost <= max_dist * max_dist:
-                        cands.append((cost, a, m, d))
-                elif d <= max_dist:
-                    cands.append((d, a, m, d))
-        if not cands:
-            return []
-        lefts = sorted({a for _, a, _, _ in cands})
-        mids = sorted({m for _, _, m, _ in cands})
-        l_ix = {a: i for i, a in enumerate(lefts)}
-        m_ix = {m: i for i, m in enumerate(mids)}
-        cost = np.full((len(lefts), len(mids)), _LAP_BIG)
-        dist_of: dict[tuple[int, int], float] = {}
-        for cst, a, m, d in cands:
-            if cst < cost[l_ix[a], m_ix[m]]:
-                cost[l_ix[a], m_ix[m]] = cst
-                dist_of[(l_ix[a], m_ix[m])] = d
-        out = []
-        # r7: the no-link alternative now reaches the split/merge
-        # blocks too (each block gets its own b over its own candidate
-        # distribution — documented deviation: TrackMate's joint
-        # phase-2 matrix shares one; see the module docstring)
-        for r, c in _lap_picks(
-            cost, alternative_cost_factor, cutoff_percentile, squared=bool(penalties)
-        ):
-            out.append((lefts[r], mids[c], dist_of[(r, c)]))
-        return out
-
-    out = list(edges)
-    if allow_splitting:
-        starts = [i for i in spot if i not in has_in]
-        for s, m, d in one_side(
-            starts, -1, splitting_max_distance, splitting_feature_penalties
-        ):
-            out.append((m, s, 0, d))  # parent middle → child start
-    if allow_merging:
-        ends = [i for i in spot if i not in has_out]
-        for e, m, d in one_side(
-            ends, +1, merging_max_distance, merging_feature_penalties
-        ):
-            out.append((e, m, 0, d))  # dying end → surviving middle
-    return out
-
-
-def _joint_segment_lap(
-    pdf: pd.DataFrame,
-    edges: list[tuple[int, int, int, float]],
-    max_frame_gap: int,
-    gap_closing_max_distance: float,
-    allow_splitting: bool,
-    splitting_max_distance: float,
-    allow_merging: bool,
-    merging_max_distance: float,
-    gap_closing_feature_penalties: dict[str, float] | None = None,
-    splitting_feature_penalties: dict[str, float] | None = None,
-    merging_feature_penalties: dict[str, float] | None = None,
-    alternative_cost_factor: float | None = None,
-    cutoff_percentile: float = 0.9,
-) -> list[tuple[int, int, int, float]]:
-    """TrackMate's phase 2 as ONE matrix (r8 — closes the module
-    deviation "phase 2 solves its blocks independently"): the Jaqaman
-    et al. 2008 segment-linking layout (their Fig. 1c; TrackMate's
-    JaqamanSegmentCostMatrixCreator, track_images.py:74-123 drives it
-    via the settings dict):
-
-    - rows = segment ENDS (gap-closing / merging sources) then track
-      MIDDLES (splitting sources);
-    - cols = segment STARTS (gap-closing / splitting targets) then
-      MIDDLES (merging targets);
-    - blocks: ends x starts = gap closing, ends x middles = merging,
-      middles x starts = splitting, middles x middles = forbidden.
-
-    One Hungarian solve trades the three link kinds against each
-    other: an end with both a far within-window reconnection and a
-    cheap fusion takes the fusion and LEAVES THE START UNLINKED —
-    the sequential two-pass form structurally cannot (gap closing
-    runs first and consumes the end). With
-    ``alternative_cost_factor`` the no-link alternative b = factor x
-    percentile is computed over the COMBINED candidate distribution
-    (one b for all of phase 2 — TrackMate's semantics), via the same
-    :func:`_lap_picks` augmentation.
-
-    Costs are ALWAYS TrackMate's phase-2 units here: squared distance
-    x penalty factor, gated at limit² (the raw-distance convention of
-    the separate blocks is a no-penalty r6 compatibility surface; a
-    joint matrix needs all blocks in one coherent unit). Assignment
-    discipline: each end closes one gap OR merges once; each middle
-    hosts at most one split (row) and one merge (col); each start
-    receives at most one reconnection or split. Emitted edges carry
-    the RAW distance and gap count, same as the sequential passes.
-    """
-    nxt = {s for s, _, _, _ in edges}
-    prv = {d for _, d, _, _ in edges}
-    spot, feats = _build_spot_feats(
-        pdf,
-        set(gap_closing_feature_penalties or {})
-        | set(splitting_feature_penalties or {})
-        | set(merging_feature_penalties or {}),
-    )
-    ends = [i for i in spot if i not in nxt]
-    starts = [i for i in spot if i not in prv]
-    mids_by_frame: dict[int, list[int]] = {}
-    for i in spot:
-        if i in nxt and i in prv:
-            mids_by_frame.setdefault(spot[i][0], []).append(i)
-
-    def pf(pmap: dict[str, float] | None, a: int, b_: int) -> float:
-        if not pmap:
-            return 1.0
-        return _penalty_factor(pmap, feats.get(a, {}), feats.get(b_, {}))
-
-    # (cost, row_spot, col_spot, kind, gap, rawdist); kind: g/s/m
-    cands: list[tuple[float, int, int, str, int, float]] = []
-    if max_frame_gap > 0:
-        lim2 = gap_closing_max_distance * gap_closing_max_distance
-        for e in ends:
-            fe, xe, ye = spot[e]
-            for s in starts:
-                fs, xs, ys = spot[s]
-                if not (2 <= fs - fe <= max_frame_gap + 1):
-                    continue
-                d = float(np.hypot(xs - xe, ys - ye))
-                cst = d * d * pf(gap_closing_feature_penalties, e, s)
-                if cst <= lim2:
-                    cands.append((cst, e, s, "g", fs - fe - 1, d))
-    if allow_merging:
-        lim2 = merging_max_distance * merging_max_distance
-        for e in ends:
-            fe, xe, ye = spot[e]
-            for m in mids_by_frame.get(fe + 1, []):
-                _, xm, ym = spot[m]
-                d = float(np.hypot(xm - xe, ym - ye))
-                cst = d * d * pf(merging_feature_penalties, e, m)
-                if cst <= lim2:
-                    cands.append((cst, e, m, "m", 0, d))
-    if allow_splitting:
-        lim2 = splitting_max_distance * splitting_max_distance
-        for s in starts:
-            fs, xs, ys = spot[s]
-            for m in mids_by_frame.get(fs - 1, []):
-                _, xm, ym = spot[m]
-                d = float(np.hypot(xm - xs, ym - ys))
-                cst = d * d * pf(splitting_feature_penalties, m, s)
-                if cst <= lim2:
-                    cands.append((cst, m, s, "s", 0, d))
-    if not cands:
-        return edges
-    row_ends = sorted({r for _, r, _, k, _, _ in cands if k in ("g", "m")})
-    row_mids = sorted({r for _, r, _, k, _, _ in cands if k == "s"})
-    col_starts = sorted({c for _, _, c, k, _, _ in cands if k in ("g", "s")})
-    col_mids = sorted({c for _, _, c, k, _, _ in cands if k == "m"})
-    r_ix = {i: x for x, i in enumerate(row_ends)}
-    r_ix.update({i: len(row_ends) + x for x, i in enumerate(row_mids)})
-    c_ix = {i: x for x, i in enumerate(col_starts)}
-    c_ix.update({i: len(col_starts) + x for x, i in enumerate(col_mids)})
-    n_r = len(row_ends) + len(row_mids)
-    n_c = len(col_starts) + len(col_mids)
-    cost = np.full((n_r, n_c), _LAP_BIG)
-    meta: dict[tuple[int, int], tuple[str, int, float]] = {}
-    for cst, r, c, kind, gap, d in cands:
-        ri, ci = r_ix[r], c_ix[c]
-        if cst < cost[ri, ci]:
-            cost[ri, ci] = cst
-            meta[(ri, ci)] = (kind, gap, d)
-    row_spots = row_ends + row_mids
-    col_spots = col_starts + col_mids
-    gaps_: list[tuple[int, int, int, float]] = []
-    splits: list[tuple[int, int, int, float]] = []
-    merges_: list[tuple[int, int, int, float]] = []
-    for ri, ci in _lap_picks(
-        cost, alternative_cost_factor, cutoff_percentile, squared=True
-    ):
-        kind, gap, d = meta[(ri, ci)]
-        r, c = row_spots[ri], col_spots[ci]
-        if kind == "g":
-            gaps_.append((r, c, gap, d))        # end → start
-        elif kind == "s":
-            splits.append((r, c, 0, d))          # parent middle → child start
+            mids.setdefault(spot[i][0], []).append(i)
+    pairs: list[tuple[str, int, int]] = []
+    if "g" in blocks:
+        pairs += [
+            ("g", e, s)
+            for e in ends
+            for s in starts
+            if 2 <= spot[s][0] - spot[e][0] <= max_frame_gap + 1
+        ]
+    if "m" in blocks:
+        pairs += [("m", e, m) for e in ends for m in mids.get(spot[e][0] + 1, [])]
+    if "s" in blocks:
+        pairs += [("s", m, s) for s in starts for m in mids.get(spot[s][0] - 1, [])]
+    cands = []
+    for kind, a, b in pairs:
+        limit, pmap = blocks[kind]
+        (fa, xa, ya), (fb, xb, yb) = spot[a], spot[b]
+        d = float(np.hypot(xb - xa, yb - ya))
+        squared = joint or bool(pmap)
+        if d > limit and (not squared or (kind == "g" and not joint)):
+            continue
+        if squared:
+            factor = _penalty_factor(pmap, feats.get(a, {}), feats.get(b, {})) if pmap else 1.0
+            cost = d * d * factor
+            if not cost <= limit * limit:
+                continue
         else:
-            merges_.append((r, c, 0, d))         # dying end → surviving middle
-    # same emission order as the sequential passes: gaps, splits, merges
-    return list(edges) + sorted(gaps_) + sorted(splits) + sorted(merges_)
+            cost = d
+        row, col = (int(kind == "s"), a), (int(kind == "m"), b)
+        cands.append((cost, row, col, kind, fb - fa - 1 if kind == "g" else 0, d))
+    return cands
 
 
 def _link_one(
@@ -596,196 +434,115 @@ def _link_one(
     linking_feature_penalties: dict[str, float] | None = None,
     gap_closing_feature_penalties: dict[str, float] | None = None,
 ) -> pd.DataFrame:
+    """Link one timelapse's detections (sorted by frame, id) into
+    ``(timelapse_id, src, dst, gap, dist)`` edges: phase 1 per frame,
+    then the phase-2 segment blocks (see :func:`track_detections`)."""
+    spot, feats = _build_spot_feats(
+        pdf,
+        set(linking_feature_penalties or {})
+        | set(gap_closing_feature_penalties or {})
+        | set(splitting_feature_penalties or {})
+        | set(merging_feature_penalties or {}),
+    )
+    by_frame: dict[int, list[tuple[int, float, float]]] = {}
+    for i, (f, x, y) in spot.items():
+        by_frame.setdefault(f, []).append((i, x, y))
     # segment-LAP closure: phase 1 links consecutive frames ONLY (gap
     # candidates excluded), phase 2 reconnects segments globally
     inline_gap = max_frame_gap if gap_strategy == "inline" else 0
-    frames = sorted(pdf["frame"].unique())
-    by_frame = {
-        f: pdf[pdf["frame"] == f][["id", "x", "y"]].to_numpy() for f in frames
-    }
-    # LINKING/GAP_CLOSING_FEATURE_PENALTIES (r7 — the remaining two
-    # penalty maps of the reference's settings dict,
-    # track_images.py settings / templates/cyto3.json:24,30): when
-    # either is present, phase-1 candidate costs switch to TrackMate's
-    # penalised SQUARED distances gated at limit² (factor 1 where a
-    # map is empty, keeping mixed candidates in coherent units);
-    # without penalties costs stay raw distances, bit-identical to r6.
-    pen_active = bool(linking_feature_penalties) or bool(
-        gap_closing_feature_penalties
+    # LINKING/GAP_CLOSING_FEATURE_PENALTIES (track_images.py settings,
+    # templates/cyto3.json:24,30): when either is present, phase-1
+    # costs are penalised SQUARED distances, so the LAP matrix is
+    # already in squared units
+    pen_active = bool(linking_feature_penalties) or bool(gap_closing_feature_penalties)
+    penalty = (
+        (feats, linking_feature_penalties, gap_closing_feature_penalties)
+        if pen_active
+        else None
     )
-    feats: dict[int, dict[str, float]] = {}
-    if pen_active:
-        by_upper = {c.upper(): c for c in pdf.columns}
-        use = {
-            k: by_upper[k]
-            for k in {
-                **(linking_feature_penalties or {}),
-                **(gap_closing_feature_penalties or {}),
-            }
-            if k in by_upper
-        }
-        for _, r in pdf.iterrows():
-            feats[int(r["id"])] = {
-                k: float(r[c]) for k, c in use.items() if pd.notna(r[c])
-            }
-    # open track ends: spot id -> (frame, x, y)
+    # open track ends: spot id -> (frame, x, y); per-end
+    # constant-velocity estimate, set when a link lands
     open_ends: dict[int, tuple[int, float, float]] = {}
-    # per-end constant-velocity estimate (method="kalman"): set when a
-    # link lands, consulted to PREDICT the end's position at frame f —
-    # TrackMate's Kalman tracker semantics, lite (predict + gate +
-    # assign; no covariance update — the constant-velocity point
-    # prediction is the part that changes which links are possible).
-    # New tracks have no history -> velocity 0 -> identical to greedy.
     vel: dict[int, tuple[float, float]] = {}
     edges: list[tuple[int, int, int, float]] = []
-    for f in frames:
+    for f in sorted(by_frame):
         dets = by_frame[f]
-        det_pos = {int(det[0]): (float(det[1]), float(det[2])) for det in dets}
-        # candidate links (dist, src, dst, gap): open ends within the
-        # distance window; gap = frames skipped (0 = consecutive)
-        cands = []
-        for src, (ef, ex, ey) in open_ends.items():
-            gap = f - ef - 1
-            if gap > inline_gap:
-                continue
-            limit = linking_max_distance if gap == 0 else gap_closing_max_distance
-            if method == "kalman":
-                vx, vy = vel.get(src, (0.0, 0.0))
-                ex_, ey_ = ex + vx * (f - ef), ey + vy * (f - ef)
-            else:
-                ex_, ey_ = ex, ey
-            for det in dets:
-                d = float(np.hypot(det[1] - ex_, det[2] - ey_))
-                if d > limit:
-                    continue
-                if pen_active:
-                    pmap = (
-                        linking_feature_penalties
-                        if gap == 0
-                        else gap_closing_feature_penalties
-                    )
-                    factor = (
-                        _penalty_factor(
-                            pmap, feats.get(int(src), {}), feats.get(int(det[0]), {})
-                        )
-                        if pmap
-                        else 1.0
-                    )
-                    cost = d * d * factor
-                    if cost <= limit * limit:
-                        cands.append((cost, int(src), int(det[0]), gap, d))
-                else:
-                    cands.append((d, int(src), int(det[0]), gap, d))
-        if method == "lap" and cands:
-            # Hungarian per frame: minimise TOTAL link distance instead
-            # of taking locally-shortest links first. Forbidden pairs
-            # (outside the window) carry the _LAP_BIG sentinel and are
-            # dropped from the solution afterwards, so non-assignment
-            # stays allowed exactly as in greedy mode.
-            srcs = sorted({s for _, s, _, _, _ in cands})
-            dsts = sorted({t for _, _, t, _, _ in cands})
-            s_ix = {s: i for i, s in enumerate(srcs)}
-            d_ix = {t: i for i, t in enumerate(dsts)}
-            cost = np.full((len(srcs), len(dsts)), _LAP_BIG)
-            meta: dict[tuple[int, int], tuple[float, int]] = {}
-            for cst, s, t, gap, d in cands:
-                if cst < cost[s_ix[s], d_ix[t]]:
-                    cost[s_ix[s], d_ix[t]] = cst
-                    meta[(s_ix[s], d_ix[t])] = (d, gap)
-            # TrackMate's no-link alternative
-            # (ALTERNATIVE_LINKING_COST_FACTOR + CUTOFF_PERCENTILE,
-            # templates/cyto3.json:26,30; Jaqaman et al. 2008) — see
-            # _lap_picks. A solution with L links totals
-            # sum(C_linked) + (n+m-L)*b, so the net decision rule is
-            # exactly "a candidate joins iff its marginal cost <= b".
-            # With penalties active the matrix is ALREADY in squared
-            # penalised units (squared=True skips the re-square).
-            picks = _lap_picks(
-                cost, alternative_cost_factor, cutoff_percentile, squared=pen_active
+        cands = _frame_candidates(
+            open_ends,
+            f,
+            dets,
+            linking_max_distance,
+            gap_closing_max_distance,
+            inline_gap,
+            vel if method == "kalman" else None,
+            penalty,
+        )
+        if method == "lap":
+            # Hungarian per frame: minimum TOTAL link cost instead of
+            # locally-shortest links first
+            picks = _assign(
+                cands, alternative_cost_factor, cutoff_percentile, squared=pen_active
             )
-            for r, c in picks:
-                d, gap = meta[(r, c)]
-                src, dst = srcs[r], dsts[c]
-                edges.append((src, dst, gap, d))
-                if src in open_ends:
-                    _, ex0, ey0 = open_ends[src]
-                    dx0, dy0 = det_pos[dst]
-                    vel[dst] = ((dx0 - ex0) / (gap + 1), (dy0 - ey0) / (gap + 1))
-                open_ends.pop(src, None)
         else:
-            cands.sort()  # greedy by (cost, src, dst) — deterministic
-            used_src: set[int] = set()
-            used_dst: set[int] = set()
-            for _cst, src, dst, gap, d in cands:
-                if src in used_src or dst in used_dst:
-                    continue
-                used_src.add(src)
-                used_dst.add(dst)
-                edges.append((src, dst, gap, d))
-                if src in open_ends:
-                    _, ex0, ey0 = open_ends[src]
-                    dx0, dy0 = det_pos[dst]
-                    vel[dst] = ((dx0 - ex0) / (gap + 1), (dy0 - ey0) / (gap + 1))
-                open_ends.pop(src, None)  # the end moved forward to dst
+            picks = _greedy(cands)
+        pos = {i: (x, y) for i, x, y in dets}
+        for src, dst, gap, d in picks:
+            edges.append((src, dst, gap, d))
+            _, ex, ey = open_ends.pop(src)  # the end moved forward to dst
+            vel[dst] = ((pos[dst][0] - ex) / (gap + 1), (pos[dst][1] - ey) / (gap + 1))
         # every detection of this frame is now an open end (matched ones
         # continue their track under the new spot id; unmatched ones
         # start prospective tracks); ends past the gap window expire
-        for det in dets:
-            open_ends[int(det[0])] = (f, float(det[1]), float(det[2]))
+        for i, x, y in dets:
+            open_ends[i] = (f, x, y)
         open_ends = {
-            i: (ef, ex, ey)
-            for i, (ef, ex, ey) in open_ends.items()
-            if f - ef - 1 <= inline_gap
+            i: e for i, e in open_ends.items() if f - e[0] - 1 <= inline_gap
         }
+    # phase 2: the enabled segment blocks, kind -> (max distance, penalties)
+    blocks = {}
+    if gap_strategy != "inline" and max_frame_gap > 0:
+        blocks["g"] = (gap_closing_max_distance, gap_closing_feature_penalties)
+    if allow_splitting:
+        blocks["s"] = (splitting_max_distance, splitting_feature_penalties)
+    if allow_merging:
+        blocks["m"] = (merging_max_distance, merging_feature_penalties)
     if gap_strategy == "joint_lap":
-        # r8: TrackMate's actual phase-2 discipline — gap closing,
-        # splitting and merging traded off in ONE Jaqaman matrix with
-        # one shared no-link alternative (see _joint_segment_lap)
-        tl = pdf["timelapse_id"].iloc[0] if len(pdf) else ""
-        return pd.DataFrame(
-            [
-                (tl, s, d, g, dist)
-                for s, d, g, dist in _joint_segment_lap(
-                    pdf,
-                    edges,
-                    max_frame_gap,
-                    gap_closing_max_distance,
-                    allow_splitting,
-                    splitting_max_distance,
-                    allow_merging,
-                    merging_max_distance,
-                    gap_closing_feature_penalties,
-                    splitting_feature_penalties,
-                    merging_feature_penalties,
-                    alternative_cost_factor,
-                    cutoff_percentile,
-                )
-            ],
-            columns=["timelapse_id", "src", "dst", "gap", "dist"],
-        )
-    if gap_strategy == "segment_lap" and max_frame_gap > 0:
-        edges = _close_gaps_segment_lap(
-            pdf,
-            edges,
-            max_frame_gap,
-            gap_closing_max_distance,
-            gap_closing_feature_penalties,
+        # TrackMate's phase 2: gap closing, splitting and merging traded
+        # off in ONE Jaqaman matrix with one shared no-link alternative
+        picks = _assign(
+            _segment_candidates(spot, feats, edges, blocks, max_frame_gap, joint=True),
             alternative_cost_factor,
             cutoff_percentile,
+            squared=True,
         )
-    if allow_splitting or allow_merging:
-        edges = _split_merge_lap(
-            pdf,
-            edges,
-            allow_splitting,
-            splitting_max_distance,
-            allow_merging,
-            merging_max_distance,
-            splitting_feature_penalties,
-            merging_feature_penalties,
-            alternative_cost_factor,
-            cutoff_percentile,
-        )
+        # emission order: gaps, splits, merges, each sorted
+        edges = edges + [
+            e
+            for kind in "gsm"
+            for e in sorted((r[1], c[1], g, d) for r, c, k, g, d in picks if k == kind)
+        ]
+    else:
+
+        def solve_block(linked: list, kind: str) -> list[tuple[int, int, int, float]]:
+            """One sequential phase-2 block with its own no-link
+            alternative b; the split block is solved starts x middles."""
+            cands = _segment_candidates(
+                spot, feats, linked, {kind: blocks[kind]}, max_frame_gap, joint=False
+            )
+            if kind == "s":
+                cands = [(cst, c, r, *rest) for cst, r, c, *rest in cands]
+            picks = _assign(
+                cands, alternative_cost_factor, cutoff_percentile, squared=bool(blocks[kind][1])
+            )
+            if kind == "s":  # parent middle -> child start
+                return [(c[1], r[1], g, d) for r, c, _k, g, d in picks]
+            return [(r[1], c[1], g, d) for r, c, _k, g, d in picks]
+
+        # gap closing first, so gap-closed starts/ends are no longer
+        # split/merge candidates; split and merge see the same segments
+        if "g" in blocks:
+            edges = edges + solve_block(edges, "g")
+        edges = edges + [e for kind in "sm" if kind in blocks for e in solve_block(edges, kind)]
     tl = pdf["timelapse_id"].iloc[0] if len(pdf) else ""
     return pd.DataFrame(
         [(tl, s, d, g, dist) for s, d, g, dist in edges],
@@ -830,7 +587,7 @@ def track_detections(
     blocks afterwards), or "joint_lap" (r8 — TrackMate's ACTUAL
     phase-2 matrix: gap closing, splitting and merging traded off in
     one Jaqaman assignment with one shared no-link alternative; costs
-    in squared penalised units throughout — see _joint_segment_lap).
+    in squared penalised units throughout — see _segment_candidates).
 
     ``allow_splitting`` / ``allow_merging`` enable the phase-2
     division/fusion blocks (ALLOW_TRACK_SPLITTING /
@@ -838,7 +595,7 @@ def track_detections(
     templates/cyto3.json:31-38 — the reference template turns BOTH on):
     a 1→2 split edge from a track middle to a nearby next-frame segment
     start, a 2→1 merge edge from a segment end to a nearby next-frame
-    track middle (``_split_merge_lap``). Defaults mirror the reference
+    track middle (``_segment_candidates``). Defaults mirror the reference
     template's distances; downstream G4 renumbering already assigns
     split children new track ids (domain/lineage.py).
 

@@ -73,17 +73,6 @@ def minmax_normalize(df: DataFrame, keys: list[str], value: str, out_col: str = 
     )
 
 
-def approx_distinct(df: DataFrame, keys: list[str], value: str, rsd: float = 0.02) -> DataFrame:
-    """A7 scale variant: HyperLogLog++ distinct count (SURVEY §7 scale
-    extras). At 100 TB an exact countDistinct shuffles every distinct
-    value; the HLL sketch is map-side mergeable constant memory —
-    the right default for QC dashboards where ±2% is fine. Exact form
-    stays available (a7_count_distinct) for oracle-checked paths."""
-    return df.groupBy(*keys).agg(
-        F.approx_count_distinct(value, rsd=rsd).alias("approx_n_distinct")
-    )
-
-
 def limit_per_group(
     df: DataFrame, keys: list[str], order: list[Column | str], k: int
 ) -> DataFrame:
@@ -96,16 +85,6 @@ def limit_per_group(
         .filter(F.col("_rn") <= k)
         .drop("_rn")
     )
-
-
-def stratified_sample(
-    df: DataFrame, key: str, fractions: dict, seed: int = 7
-) -> DataFrame:
-    """Per-stratum Bernoulli sampling (class rebalancing). Thin wrapper
-    over sampleBy: seeded => reproducible within Spark, but the sampling
-    hash is engine-specific — use limit_per_group when cross-engine
-    determinism is required."""
-    return df.sampleBy(key, fractions, seed)
 
 
 def group_ols(

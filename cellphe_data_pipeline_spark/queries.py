@@ -2439,7 +2439,7 @@ def m3c(spark, sf_dir):
 )
 def m3f(spark, sf_dir):
     """M3 phase 2 as TrackMate's ACTUAL joint matrix (r8;
-    tracking.py _joint_segment_lap; Jaqaman et al. 2008 Fig. 1c —
+    tracking.py _segment_candidates; Jaqaman et al. 2008 Fig. 1c —
     gap closing, splitting and merging traded off in ONE Hungarian
     with one shared no-link alternative, the discipline the
     sequential two-pass form cannot reproduce). The fixture is the

@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from cellphe_data_pipeline_spark.domain.tracking import _frame_candidates, _greedy
+
 
 def streaming_window_rollup(
     events: DataFrame,
@@ -787,8 +789,9 @@ def streaming_tracker(
     """M3 as a STATEFUL STREAMING operator (SURVEY Phase 6 — the
     applyInPandasWithState tracker): per-timelapse state carries the
     open track ends and the track-id counter across micro-batches;
-    each arriving frame's detections are greedily linked against the
-    state exactly like the batch kernel (domain/tracking.py), so when
+    each arriving frame's detections are linked against the state by
+    the batch kernel's own greedy frame step
+    (``domain.tracking._frame_candidates`` + ``_greedy``), so when
     micro-batch boundaries fall on frame boundaries the emitted track
     partition equals the batch tracker's.
 
@@ -798,6 +801,10 @@ def streaming_tracker(
     re-link within gap_closing_max_distance — ends past the gap expire
     from state, which is the streaming retention bound (the reference's
     MAX_FRAME_GAP as state TTL measured in event-time frames).
+    Out-of-order frames start new tracks: a detection only links to an
+    end from an EARLIER frame, so a frame split across micro-batches,
+    or a frame that arrives after a later one, does not join the ends
+    already in state from its own or a later frame.
     """
     import json
 
@@ -834,162 +841,30 @@ def _link_stream_frames(
     max_frame_gap: int,
     gap_closing_max_distance: float,
 ) -> tuple[list, dict, int]:
-    """Shared per-micro-batch linking kernel for both stateful-tracker
-    backends: greedily link each arriving frame against the open ends
-    (same semantics as the batch kernel, domain/tracking.py), mutating
-    `ends` {id: (frame, x, y, tid)} and the track-id counter."""
-    import numpy as np  # noqa: F811
-
-    for f in sorted(pdf["frame"].unique()):
-        dets = pdf[pdf["frame"] == f].sort_values("id")
-        cands = []
-        for src, (ef, ex, ey, tid) in ends.items():
-            gap = int(f) - ef - 1
-            if gap > max_frame_gap:
-                continue
-            limit = linking_max_distance if gap == 0 else gap_closing_max_distance
-            for _, det in dets.iterrows():
-                d = float(np.hypot(det["x"] - ex, det["y"] - ey))
-                if d <= limit:
-                    cands.append((d, int(src), int(det["id"])))
-        cands.sort()
-        used_src, assigned = set(), {}
-        for d, src, dst in cands:
-            if src in used_src or dst in assigned:
-                continue
-            used_src.add(src)
-            assigned[dst] = ends[src][3]  # continue the track
-            del ends[src]
-        for _, det in dets.iterrows():
-            did = int(det["id"])
+    """Per-micro-batch linking: each arriving frame, in frame order, is
+    greedily linked against the open ends ``{id: (frame, x, y, tid)}``
+    by the batch kernel's frame step; this keeps only the track-id
+    bookkeeping (a linked detection continues its end's track, an
+    unlinked one opens a new track)."""
+    for f in sorted(int(v) for v in pdf["frame"].unique()):
+        sub = pdf[pdf["frame"] == f].sort_values("id")
+        dets = [
+            (int(i), float(x), float(y))
+            for i, x, y in zip(sub["id"].tolist(), sub["x"].tolist(), sub["y"].tolist())
+        ]
+        cands = _frame_candidates(
+            ends, f, dets, linking_max_distance, gap_closing_max_distance, max_frame_gap
+        )
+        assigned = {dst: ends.pop(src)[3] for src, dst, _gap, _d in _greedy(cands)}
+        for did, x, y in dets:
             tid = assigned.get(did)
             if tid is None:
                 tid = next_tid
                 next_tid += 1
-            ends[did] = (int(f), float(det["x"]), float(det["y"]), int(tid))
-            out_rows.append(
-                {"timelapse_id": tl, "id": did, "frame": int(f), "track_id": int(tid)}
-            )
-        ends = {i: e for i, e in ends.items() if int(f) - e[0] - 1 <= max_frame_gap}
+            ends[did] = (f, x, y, tid)
+            out_rows.append({"timelapse_id": tl, "id": did, "frame": f, "track_id": tid})
+        ends = {i: e for i, e in ends.items() if f - e[0] - 1 <= max_frame_gap}
     return out_rows, ends, next_tid
-
-
-def _tws_capability_check(spark) -> None:
-    """Fail FAST, driver-side, with an actionable message when the
-    transformWithState runtime prerequisites are absent — instead of a
-    deep opaque worker crash mid-stream (ADVICE r4/r5 low). Checks the
-    two hard requirements this container lacks: the ``protobuf``
-    package (TWS python worker wire format to the JVM state server)
-    and the RocksDB state store provider."""
-    problems = []
-    try:
-        import google.protobuf  # noqa: F401, PLC0415
-    except ImportError:
-        problems.append(
-            "the `protobuf` package is not importable (it is the "
-            "transformWithState python worker's wire format to the JVM "
-            "state server)"
-        )
-    provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "") or ""
-    if "RocksDB" not in provider:
-        problems.append(
-            "spark.sql.streaming.stateStore.providerClass is "
-            f"{provider!r} — transformWithState requires "
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        )
-    if problems:
-        raise RuntimeError(
-            "streaming_tracker_tws (EXPERIMENTAL) cannot run in this "
-            "environment: " + "; ".join(problems) + ". Use "
-            "streaming_tracker (applyInPandasWithState) instead — it is "
-            "the supported, fully tested tracker."
-        )
-
-
-def streaming_tracker_tws(
-    detections: DataFrame,
-    linking_max_distance: float = 10.0,
-    max_frame_gap: int = 4,
-    gap_closing_max_distance: float = 20.0,
-) -> DataFrame:
-    """The streaming tracker on the Spark 4 ``transformWithState``
-    API: the same linking kernel, but state is TYPED — a ValueState
-    long for the track-id counter and a MapState (spot id → open-end
-    struct) for the track ends — instead of the JSON-string blob the
-    3.5-compat ``applyInPandasWithState`` version serialises. Typed
-    state is incrementally updatable (only touched keys are written per
-    micro-batch) and schema-evolvable, and the state store can index it
-    — typed state is where this should land; the compat version stays
-    for pre-4.0 clusters.
-
-    **EXPERIMENTAL — UNVERIFIED IN THIS ENVIRONMENT.** Requires the
-    RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) — a
-    transformWithState constraint, set by the caller/session — and the
-    ``protobuf`` package (the TWS python worker's wire format to the
-    JVM state server; absent from this container, so the equivalence
-    test env-skips and this function has NEVER executed here). The
-    typed-state accesses bake in API assumptions that vary across
-    Spark 4.0.x python releases — ``ValueState.get()`` returning an
-    indexable tuple, MapState key/value tuple shapes, and the
-    ``getValueState``/``getMapState`` schema-string signatures. Run
-    ``tests/test_streaming.py::test_streaming_tracker_tws_matches_compat``
-    on a protobuf-equipped cluster and fix any of those call shapes
-    BEFORE treating this as the production form; until then
-    ``streaming_tracker`` (applyInPandasWithState, fully tested here)
-    is the supported tracker. A call-time capability probe
-    (:func:`_tws_capability_check`) raises a clear driver-side error
-    when protobuf or the RocksDB provider is missing, instead of
-    failing deep in a worker.
-    """
-    _tws_capability_check(detections.sparkSession)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TrackerProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._next = handle.getValueState("next_tid", "next_tid long")
-            self._ends = handle.getMapState(
-                "ends",
-                "id long",
-                "frame int, x double, y double, tid long",
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            next_tid = self._next.get()[0] if self._next.exists() else 1
-            ends = {
-                int(k[0]): (int(v[0]), float(v[1]), float(v[2]), int(v[3]))
-                for k, v in self._ends.iterator()
-            }
-            before = dict(ends)
-            out_rows: list = []
-            for pdf in rows:
-                out_rows, ends, next_tid = _link_stream_frames(
-                    key[0], pdf, ends, next_tid, out_rows,
-                    linking_max_distance, max_frame_gap, gap_closing_max_distance,
-                )
-            # diff-write the typed map: only touched keys hit the store
-            for k in before:
-                if k not in ends:
-                    self._ends.removeKey((k,))
-            for k, v in ends.items():
-                if before.get(k) != v:
-                    self._ends.updateValue((k,), v)
-            self._next.update((next_tid,))
-            yield pd.DataFrame(out_rows, columns=[fld.name for fld in TRACK_OUT.fields])
-
-        def close(self) -> None:
-            pass
-
-    return detections.groupBy("timelapse_id").transformWithStateInPandas(
-        statefulProcessor=TrackerProcessor(),
-        outputStructType=TRACK_OUT,
-        outputMode="append",
-        timeMode="none",
-    )
 
 
 def streaming_interval_pairs(

@@ -97,20 +97,6 @@ def test_timeseries_wavelet_kernel(spark):
     assert math.isclose(r["haar_l1"], l1, rel_tol=1e-12)
 
 
-def test_approx_distinct_within_rsd(spark, sf_dir):
-    from cellphe_data_pipeline_spark.operators.aggregates import approx_distinct
-    from cellphe_data_pipeline_spark.sources.tables import load_table
-    import pyspark.sql.functions as F
-
-    ev = load_table(spark, sf_dir, "events")
-    approx = {r["event_type"]: r["approx_n_distinct"]
-              for r in approx_distinct(ev, ["event_type"], "user_id").collect()}
-    exact = {r["event_type"]: r["n"]
-             for r in ev.groupBy("event_type").agg(F.countDistinct("user_id").alias("n")).collect()}
-    for k, n in exact.items():
-        assert abs(approx[k] - n) <= max(2, 0.1 * n), (k, approx[k], n)
-
-
 def test_timeseries_multi_feature(spark):
     import numpy as np
 
@@ -149,10 +135,10 @@ def test_density_join_negative_coords(spark):
 
 
 def test_stratified_sample_and_limit_per_group(spark, sf_dir):
-    from cellphe_data_pipeline_spark.operators.aggregates import (
-        limit_per_group,
-        stratified_sample,
-    )
+    """``limit_per_group`` keeps, per language, the min(3, group size)
+    longest documents under a total order (the per-group cap used for
+    corpus balancing)."""
+    from cellphe_data_pipeline_spark.operators.aggregates import limit_per_group
     from cellphe_data_pipeline_spark.sources.tables import load_table
     import pyspark.sql.functions as F
 
@@ -171,13 +157,6 @@ def test_stratified_sample_and_limit_per_group(spark, sf_dir):
             reverse=True,
         )
         assert sorted(lens, reverse=True) == all_lens[: len(lens)]
-
-    langs = [r["lang"] for r in d.select("lang").distinct().collect()]
-    frac = {l: 0.5 for l in langs}
-    s1 = stratified_sample(d, "lang", frac, seed=3).count()
-    s2 = stratified_sample(d, "lang", frac, seed=3).count()
-    assert s1 == s2  # seeded => reproducible
-    assert 0 < s1 < d.count()
 
 
 def test_a8b_golden_fixture_numpy_oracle(spark):

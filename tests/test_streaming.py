@@ -360,20 +360,24 @@ def test_streaming_tracker_matches_batch_partition(spark, tmp_path):
     )
     d = tmp_path / "det_stream"
     os.makedirs(d)
-    # one file per pair of frames, named so listing order == frame order
+    # one file per pair of frames, named and stamped so listing order
+    # == frame order: the file source orders micro-batches by
+    # modification time, and files written in a tight loop can share one
     by_frame: dict = {}
     for r in dets:
         by_frame.setdefault(r[2] // 2, []).append(r)
     for g, rows in sorted(by_frame.items()):
         cols = list(zip(*rows))
+        path = str(d / f"b{g:03d}.parquet")
         pq.write_table(
             pa.table(
                 {"timelapse_id": cols[0], "id": cols[1], "frame": cols[2],
                  "x": cols[3], "y": cols[4]},
                 schema=schema,
             ),
-            str(d / f"b{g:03d}.parquet"),
+            path,
         )
+        os.utime(path, (1_000_000 + g,) * 2)
 
     stream = spark.readStream.schema(
         "timelapse_id string, id bigint, frame int, x double, y double"
@@ -411,6 +415,38 @@ def test_streaming_tracker_matches_batch_partition(spark, tmp_path):
     stream_parts = {frozenset(s) for s in stream_tracks.values() if len(s) > 1}
     batch_parts = {frozenset(s) for s in batch_tracks.values() if len(s) > 1}
     assert stream_parts == batch_parts
+
+
+def test_streaming_tracker_links_only_forward_in_time():
+    """A detection links only to a track end from an EARLIER frame, so
+    out-of-order frames start new tracks: two frame-3 cells 3 px apart
+    that arrive in different micro-batches stay on different tracks,
+    and a frame-2 detection that arrives after frame 3 does not join
+    the frame-3 track."""
+    import pandas as pd
+
+    from cellphe_data_pipeline_spark.streaming.tracker import _link_stream_frames
+
+    kw = dict(linking_max_distance=5.0, max_frame_gap=4, gap_closing_max_distance=10.0)
+
+    def batch(*rows):
+        return pd.DataFrame(rows, columns=["timelapse_id", "id", "frame", "x", "y"])
+
+    def feed(*batches):
+        rows, ends, next_tid = [], {}, 1
+        for b in batches:
+            rows, ends, next_tid = _link_stream_frames("t", b, ends, next_tid, rows, **kw)
+        return {r["id"]: r["track_id"] for r in rows}
+
+    # frame 3 split across two micro-batches
+    tid = feed(batch(("t", 1, 2, 0.0, 0.0), ("t", 2, 3, 1.0, 0.0)), batch(("t", 3, 3, 4.0, 0.0)))
+    assert tid[1] == tid[2] != tid[3]
+    # a late frame-2 detection after frame 3
+    tid = feed(batch(("t", 1, 3, 0.0, 0.0)), batch(("t", 2, 2, 1.0, 0.0)))
+    assert tid[1] != tid[2]
+    # in order, the same detections do link (gap closing included)
+    tid = feed(batch(("t", 2, 2, 1.0, 0.0)), batch(("t", 1, 3, 0.0, 0.0), ("t", 3, 6, 8.0, 0.0)))
+    assert tid[1] == tid[2] == tid[3]
 
 
 def test_streaming_interval_pairs_matches_batch(spark, sf_dir, tmp_path):
@@ -454,141 +490,6 @@ def test_streaming_interval_pairs_matches_batch(spark, sf_dir, tmp_path):
     assert sum(batch.values()) > 0  # fixture slice actually has neighbors
     for eid, n in batch.items():
         assert per_left.get(eid, 0) == n
-
-
-def test_streaming_tracker_tws_matches_compat(spark, tmp_path):
-    """The transformWithState (typed-state) tracker emits the SAME
-    per-detection assignments as the applyInPandasWithState compat
-    version on the same frame-aligned micro-batch sequence — including
-    across batch boundaries, where both must reload open ends from the
-    state store. Skipped if the Spark build lacks transformWithState."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from cellphe_data_pipeline_spark.streaming.tracker import (
-        streaming_tracker,
-        streaming_tracker_tws,
-    )
-    from cellphe_data_pipeline_spark.testing.fixtures import TRACK_DETECTIONS
-
-    if not hasattr(
-        spark.createDataFrame([("a",)], "k string").groupBy("k"),
-        "transformWithStateInPandas",
-    ):
-        pytest.skip("transformWithState needs Spark >= 4.0")
-    # the transformWithState python worker speaks protobuf to the JVM
-    # state server; without the package the driver worker crashes at
-    # init (verified: STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE ->
-    # "cannot import google.protobuf") — absent from this container
-    pytest.importorskip("google.protobuf", reason="transformWithState needs protobuf")
-
-    dets = sorted(TRACK_DETECTIONS, key=lambda r: (r[2], r[1]))
-    schema = pa.schema(
-        [("timelapse_id", pa.string()), ("id", pa.int64()), ("frame", pa.int32()),
-         ("x", pa.float64()), ("y", pa.float64())]
-    )
-    d = tmp_path / "det_stream_tws"
-    os.makedirs(d)
-    by_frame: dict = {}
-    for r in dets:
-        by_frame.setdefault(r[2] // 2, []).append(r)
-    for g, rows in sorted(by_frame.items()):
-        cols = list(zip(*rows))
-        pq.write_table(
-            pa.table(
-                {"timelapse_id": cols[0], "id": cols[1], "frame": cols[2],
-                 "x": cols[3], "y": cols[4]},
-                schema=schema,
-            ),
-            str(d / f"b{g:03d}.parquet"),
-        )
-
-    kw = dict(linking_max_distance=5.0, max_frame_gap=4, gap_closing_max_distance=10.0)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        results = {}
-        for name, fn in [("compat", streaming_tracker), ("tws", streaming_tracker_tws)]:
-            stream = spark.readStream.schema(
-                "timelapse_id string, id bigint, frame int, x double, y double"
-            ).option("maxFilesPerTrigger", 1).parquet(str(d))
-            q = (
-                fn(stream, **kw)
-                .writeStream.format("memory")
-                .queryName(f"tws_eq_{name}")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            results[name] = {
-                (r["id"], r["frame"]): r["track_id"]
-                for r in spark.sql(f"SELECT * FROM tws_eq_{name}").collect()
-            }
-    finally:
-        if saved is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, saved)
-
-    assert len(results["tws"]) == len(dets)
-    assert results["tws"] == results["compat"]
-
-
-def test_streaming_tracker_tws_capability_gate(spark):
-    """r6 (VERDICT ask #5): when the transformWithState prerequisites
-    are absent, streaming_tracker_tws must raise a clear DRIVER-side
-    error at call time — naming what is missing and pointing at the
-    supported tracker — instead of crashing deep in a python worker.
-    In this container protobuf is absent, so the gate must always
-    trip when the RocksDB provider is unset; with the provider set,
-    the message must not (falsely) complain about the provider."""
-    from cellphe_data_pipeline_spark.streaming.tracker import (
-        _tws_capability_check,
-        streaming_tracker_tws,
-    )
-
-    have_protobuf = True
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        have_protobuf = False
-
-    dets = spark.createDataFrame(
-        [], "timelapse_id string, id bigint, frame int, x double, y double"
-    )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(provider_key, None)
-    try:
-        # default session: no RocksDB provider -> the gate always trips
-        if saved is None or "RocksDB" not in saved:
-            with pytest.raises(RuntimeError, match="RocksDB"):
-                streaming_tracker_tws(dets)
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        if not have_protobuf:
-            with pytest.raises(RuntimeError) as exc:
-                _tws_capability_check(spark)
-            assert "protobuf" in str(exc.value)
-            # provider IS set now, so only protobuf may be complained about
-            assert "providerClass is" not in str(exc.value)
-            assert "streaming_tracker" in str(exc.value)  # points at the supported path
-        else:
-            _tws_capability_check(spark)  # both present: no error
-    finally:
-        if saved is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, saved)
 
 
 def test_streaming_minhash_neardup_matches_batch(spark, tmp_path):
