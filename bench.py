@@ -37,6 +37,14 @@ JSON now also carries
   not comparable across rounds.
 Read: compare MIN values across rounds, and trust a round-over-round
 regression only if the spread within that round's samples is tight.
+
+"codegen_compiles" holds, per leg, the Janino compiles each repeat
+added (``session.codegen_compiles``). The first repeat of a leg may
+compile its plan's classes; a steady repeat (``runs[1:]``) should find
+them all in the generated-class cache, so a leg whose steady repeats
+compiled anything is named in "warnings" — its repeats paid compile
+time the first run should have paid alone (a cache smaller than the
+working set, or an adaptive plan variant seen for the first time).
 """
 
 from __future__ import annotations
@@ -81,6 +89,22 @@ def _materialise(df) -> None:
     joins/windows/generates the way it legally does under ``count()``
     (whose aggregate needs no input columns)."""
     df.write.format("noop").mode("overwrite").save()
+
+
+def _repeat(spark, n: int, body) -> tuple[list[float], list[int]]:
+    """Run ``body`` ``n`` times; return each repeat's wall seconds and
+    the compiles it added (read outside the timed section)."""
+    from cellphe_data_pipeline_spark.session import codegen_compiles
+
+    runs: list[float] = []
+    compiles: list[int] = []
+    for _ in range(n):
+        c0 = codegen_compiles(spark)
+        t0 = time.perf_counter()
+        body()
+        runs.append(round(time.perf_counter() - t0, 3))
+        compiles.append(codegen_compiles(spark) - c0)
+    return runs, compiles
 
 
 def _preflight_quiet(max_wait_s: float, threshold: float = 2.0) -> list[str]:
@@ -129,18 +153,18 @@ def main() -> None:
 
     times: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
+    codegen: dict[str, list[int]] = {}
     total = 0.0
     for name in HEADLINE:
         # best of 3: the first run pays codegen/scan caches, the two
         # repeats are steady-state — their agreement (not the
         # first-vs-rest gap, which is codegen by design) is the
         # contention signal the spread check below reads
-        runs: list[float] = []
-        for _ in range(3):
-            t0 = time.perf_counter()
+        def headline(name=name):
             df = qs[name](spark, sf_dir)
             _materialise(df)
-            runs.append(round(time.perf_counter() - t0, 3))
+
+        runs, codegen[name] = _repeat(spark, 3, headline)
         samples[name] = runs
         times[name] = min(runs)
         total += times[name]
@@ -161,21 +185,25 @@ def main() -> None:
         ],
         "path string, content binary",
     )
+
+    def pipeline(bins):
+        def body():
+            out = run_pipeline(bins, cc_shuffle_partitions="auto")
+            # materialise BOTH terminal stages: the A8 time-series table
+            # and (new in r5) the frame-summary table — movement ⋈ M4
+            # static features ⋈ the un-stubbed J7 density column, the
+            # reference's final CSV shape
+            # (create_frame_summary_features.py), covering its heaviest
+            # per-op budget (frame features 5 min/16 GB,
+            # nextflow.config:23-92) PLUS the feature it had to disable
+            _materialise(out["timeseries"])
+            _materialise(out["summary"])
+
+        return body
+
     # three repeats for the dominant entry: its spread is the clearest
     # in-artifact contention signal
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        out = run_pipeline(bins, cc_shuffle_partitions="auto")
-        # materialise BOTH terminal stages: the A8 time-series table and
-        # (new in r5) the frame-summary table — movement ⋈ M4 static
-        # features ⋈ the un-stubbed J7 density column, the reference's
-        # final CSV shape (create_frame_summary_features.py), covering
-        # its heaviest per-op budget (frame features 5 min/16 GB,
-        # nextflow.config:23-92) PLUS the feature it had to disable
-        _materialise(out["timeseries"])
-        _materialise(out["summary"])
-        runs.append(round(time.perf_counter() - t0, 3))
+    runs, codegen["pipeline_726frames"] = _repeat(spark, 3, pipeline(bins))
     samples["pipeline_726frames"] = runs
     times["pipeline_726frames"] = min(runs)
     total += times["pipeline_726frames"]
@@ -196,13 +224,7 @@ def main() -> None:
         ],
         "path string, content binary",
     )
-    runs4 = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        out4 = run_pipeline(bins4, cc_shuffle_partitions="auto")
-        _materialise(out4["timeseries"])
-        _materialise(out4["summary"])
-        runs4.append(round(time.perf_counter() - t0, 3))
+    runs4, codegen["pipeline_2904frames"] = _repeat(spark, 2, pipeline(bins4))
     samples["pipeline_2904frames"] = runs4
     scaling = {
         "pipeline_2904frames": min(runs4),
@@ -223,9 +245,7 @@ def main() -> None:
     # measures the composition's wall, not correctness.
     from pyspark.sql import functions as F
 
-    runs_c = []
-    for _ in range(2):
-        t0 = time.perf_counter()
+    def corpus_split():
         split_df = qs["c23_leakage_safe_split"](spark, sf_dir)
         tok_df = qs["t4_token_counts"](spark, sf_dir)
         budget = (
@@ -237,7 +257,8 @@ def main() -> None:
             )
         )
         _materialise(budget)
-        runs_c.append(round(time.perf_counter() - t0, 3))
+
+    runs_c, codegen["corpus_split_pipeline"] = _repeat(spark, 2, corpus_split)
     samples["corpus_split_pipeline"] = runs_c
     corpus = {"corpus_split_pipeline": min(runs_c)}
 
@@ -248,11 +269,9 @@ def main() -> None:
     # tests/test_plans.py). EXCLUDED from the headline total (same
     # cross-round comparability rule as corpus_split_pipeline); two
     # repeats, reported under "corpus".
-    runs_e = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        _materialise(qs["c24_corpus_pipeline"](spark, sf_dir))
-        runs_e.append(round(time.perf_counter() - t0, 3))
+    runs_e, codegen["corpus_e2e_pipeline"] = _repeat(
+        spark, 2, lambda: _materialise(qs["c24_corpus_pipeline"](spark, sf_dir))
+    )
     samples["corpus_e2e_pipeline"] = runs_e
     corpus["corpus_e2e_pipeline"] = min(runs_e)
 
@@ -291,11 +310,9 @@ def main() -> None:
             ),
         )
     )
-    runs_s = []
-    for _ in range(2):
-        t0 = time.perf_counter()
-        _materialise(minhash_band_keys(word_shingles(big)))
-        runs_s.append(round(time.perf_counter() - t0, 3))
+    runs_s, codegen["scale_cpu_probe"] = _repeat(
+        spark, 2, lambda: _materialise(minhash_band_keys(word_shingles(big)))
+    )
     samples["scale_cpu_probe"] = runs_s
     scaling["scale_cpu_probe"] = min(runs_s)
 
@@ -314,6 +331,13 @@ def main() -> None:
             f"({', '.join(sorted(wide))}) — repeats disagree >1.3x; "
             "treat this artifact as contended"
         )
+    recompiled = sorted(n for n, c in codegen.items() if any(c[1:]))
+    if recompiled:
+        warnings.append(
+            f"steady repeats compiled generated classes on {', '.join(recompiled)} "
+            "— their timings include compile work (codegen cache smaller "
+            "than the working set, or a first-seen adaptive plan variant)"
+        )
 
     print(
         json.dumps(
@@ -325,6 +349,7 @@ def main() -> None:
                 "samples": samples,
                 "scaling": scaling,
                 "corpus": corpus,
+                "codegen_compiles": codegen,
                 "loadavg_start": load_start,
                 "loadavg_end": _loadavg(),
                 "warnings": warnings,

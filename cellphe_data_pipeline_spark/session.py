@@ -19,6 +19,15 @@ Scale rationale (100 TB target):
   re-reading the pyspark/py4j zip directories; the package's parent
   directory is put on the workers' ``PYTHONPATH`` so they can import it
   whatever the calling process's working directory and environment.
+- Generated-class cache sized to the engine's working set: one pipeline
+  run compiles 148 distinct codegen classes, but Spark 4.1.2's LRU
+  cache (``spark.sql.codegen.cache.maxEntries``) holds 100 by default,
+  so every repeat of the same plan evicted and recompiled them (144
+  Janino compiles per run on the small-frame benchmark, 7-14 ms each,
+  ≈1 s of driver work per run). 1000 entries keep a run's classes
+  resident with a wide margin; a generated class is ≈2 KB of bytecode,
+  so the cache stays a few MB. ``tests/test_session.py`` pins that no
+  repeat of a pipeline run compiles a class again.
 """
 
 from __future__ import annotations
@@ -96,6 +105,10 @@ def get_spark(
         # and convert in sources.tables.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
+        # static conf, read once per JVM when the codegen cache is built
+        # (the JVM's first generated class); see the module docstring
+        # for the 148-class working set it must hold
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
@@ -107,3 +120,11 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles this JVM has done so far (Spark's
+    ``CodegenMetrics``). A repeat of a plan whose classes the cache holds
+    adds none."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

@@ -50,6 +50,24 @@ def test_bench_source_uses_noop_sink_not_count():
     assert '_materialise(out["summary"])' in src
 
 
+def test_bench_source_records_codegen_compiles():
+    """Every timed leg records the compiles each repeat added, under
+    ``codegen_compiles`` in the artifact, so a steady repeat that paid
+    compile time shows in the artifact instead of as a slower number."""
+    src = (REPO / "bench.py").read_text()
+    assert '"codegen_compiles": codegen' in src
+    assert "codegen_compiles(spark)" in src
+    assert "codegen[name]" in src  # the headline queries
+    for leg in (
+        "pipeline_726frames",
+        "pipeline_2904frames",
+        "corpus_split_pipeline",
+        "corpus_e2e_pipeline",
+        "scale_cpu_probe",
+    ):
+        assert f'codegen["{leg}"]' in src, leg
+
+
 # headline query -> operator markers that MUST survive in the executed
 # plan (the set count() was proven to prune in r6)
 _HEADLINE_OPS = {

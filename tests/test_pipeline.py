@@ -137,11 +137,7 @@ def test_pipeline_split_tracks(spark):
     renumbering keeps the parent's track on one child and assigns the
     other a NEW track id — the reference's division semantics
     (templates/cyto3.json:31-38 + parse_xml.py:151-153)."""
-    import zlib
-
     import numpy as np
-
-    from cellphe_data_pipeline_spark.domain.images import FAKE_MAGIC
 
     h = w = 24
     yy, xx = np.mgrid[0:h, 0:w]
@@ -154,13 +150,8 @@ def test_pipeline_split_tracks(spark):
     disk(frames[1], 10, 10)
     disk(frames[2], 6, 10)   # near child: continues the parent track
     disk(frames[2], 15, 10)  # far child: reachable only via the split link
-    payload = (
-        FAKE_MAGIC
-        + np.array([h, w, 3], dtype="<u4").tobytes()
-        + zlib.compress(frames.tobytes())
-    )
     bins = spark.createDataFrame(
-        [("div.fake", bytearray(payload))], "path string, content binary"
+        [("div.fake", bytearray(fake1_container(frames)))], "path string, content binary"
     )
     out = run_pipeline(
         bins,
@@ -587,8 +578,6 @@ def test_pipeline_frames_starting_with_container_magic(spark):
     frames whose first five pixels are the bytes ``FAKE1`` (the container
     magic) run through M4 like any other frame, and give the same summary
     as the same frames with those five background pixels changed."""
-    import zlib
-
     import numpy as np
 
     from cellphe_data_pipeline_spark.domain.images import (
@@ -610,14 +599,8 @@ def test_pipeline_frames_starting_with_container_magic(spark):
     magic[:, 0, :5] = np.frombuffer(FAKE_MAGIC, dtype=np.uint8)
 
     def summary(stack):
-        n, h, w = stack.shape
-        container = (
-            FAKE_MAGIC
-            + np.array([h, w, n], dtype="<u4").tobytes()
-            + zlib.compress(stack.tobytes())
-        )
         bins = spark.createDataFrame(
-            [("tl.fake", bytearray(container))], "path string, content binary"
+            [("tl.fake", bytearray(fake1_container(stack)))], "path string, content binary"
         )
         rows = run_pipeline(bins)["summary"].collect()
         return sorted(tuple(r) for r in rows)
@@ -625,3 +608,53 @@ def test_pipeline_frames_starting_with_container_magic(spark):
     got = summary(magic)
     assert got, "no QC-surviving cells"
     assert got == summary(frames)
+
+
+def fake1_container(stack) -> bytes:
+    """A FAKE1 container holding the uint8 frames of ``stack`` (n, h, w)."""
+    import zlib
+
+    import numpy as np
+
+    from cellphe_data_pipeline_spark.domain.images import FAKE_MAGIC
+
+    n, h, w = stack.shape
+    return FAKE_MAGIC + np.array([h, w, n], dtype="<u4").tobytes() + zlib.compress(stack.tobytes())
+
+
+def _degenerate_inputs():
+    import numpy as np
+
+    from cellphe_data_pipeline_spark.domain.images import make_fake_timelapse
+
+    return {
+        "empty-dir": {},
+        "zero-frames": {"tl.fake": fake1_container(np.zeros((0, 32, 32), np.uint8))},
+        "all-background": {"tl.fake": fake1_container(np.zeros((4, 32, 32), np.uint8))},
+        "one-frame": {"tl.fake": make_fake_timelapse(seed=7, height=32, width=32, n_frames=1)},
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_degenerate_inputs()))
+def test_cli_publishes_empty_tables_for_degenerate_inputs(spark, tmp_path, case):
+    """The CLI runs to completion on inputs with no trackable cell — an
+    empty input directory, a container with zero frames, frames with no
+    foreground, a one-frame timelapse — and publishes ``summary`` and
+    ``timeseries`` as empty parquet tables with their columns."""
+    import json
+
+    from cellphe_data_pipeline_spark.__main__ import main
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for name, content in _degenerate_inputs()[case].items():
+        (raw / name).write_bytes(content)
+    config = tmp_path / "config.json"
+    config.write_text(json.dumps({}))
+    out = tmp_path / "out"
+
+    assert main(["--input", str(raw), "--config", str(config), "--out", str(out)]) == 0
+    for stage in ("summary", "timeseries"):
+        df = spark.read.parquet(str(out / stage))
+        assert df.columns, stage
+        assert df.count() == 0, stage
