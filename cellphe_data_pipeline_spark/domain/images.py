@@ -64,13 +64,25 @@ def scan_images(spark: SparkSession, path: str, glob: str = "*.tiff") -> DataFra
     )
 
 
+def encode_fake_container(frames) -> bytes:
+    """The FAKE1 multi-frame container: FAKE1 | h | w | n (``<u4``) |
+    zlib(frames as uint8, (n, h, w) C order). ``frames`` is an (n, h, w)
+    stack or a single (h, w) frame. Stands in for multi-page TIFF in
+    tests and fixture queries; ``decode_frame`` reads it back."""
+    stack = np.asarray(frames, dtype=np.uint8)
+    if stack.ndim == 2:
+        stack = stack[None]
+    n, h, w = stack.shape
+    header = FAKE_MAGIC + np.array([h, w, n], dtype="<u4").tobytes()
+    return header + zlib.compress(stack.tobytes())
+
+
 def make_fake_image(seed: int, height: int = 32, width: int = 32, n_frames: int = 1) -> bytes:
-    """Deterministic fake multi-frame container: FAKE1 | h | w | n |
-    zlib(frames as uint8). Stands in for multi-page TIFF in tests."""
+    """Deterministic fake multi-frame container of random pixels."""
     rng = np.random.RandomState(seed)
-    frames = rng.randint(0, 255, size=(n_frames, height, width), dtype=np.uint8)
-    header = FAKE_MAGIC + np.array([height, width, n_frames], dtype="<u4").tobytes()
-    return header + zlib.compress(frames.tobytes())
+    return encode_fake_container(
+        rng.randint(0, 255, size=(n_frames, height, width), dtype=np.uint8)
+    )
 
 
 def _decode_tiff_baseline(content: bytes) -> list[np.ndarray] | None:
@@ -1065,8 +1077,7 @@ def make_fake_timelapse(
             under = p[:, axis] < 6
             vel[over | under, axis] *= -1
             p[:, axis] = np.clip(p[:, axis], 5, limit - 5)
-    header = FAKE_MAGIC + np.array([height, width, n_frames], dtype="<u4").tobytes()
-    return header + zlib.compress(frames.tobytes())
+    return encode_fake_container(frames)
 
 
 PIXEL_SCHEMA = T.StructType(

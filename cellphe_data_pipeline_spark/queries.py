@@ -872,35 +872,38 @@ def _bounded_shuffle_partitions(spark, n: int = 16):
         spark.conf.set(key, saved)
 
 
-def _drain_to_memory(batch_df, stage_name, sink_name, transform, output_mode, label):
-    """Shared protocol for every e*-streaming-runtime query (r8 review:
-    eight verbatim copies collapsed): stage the normalised batch table
-    to a bounded per-query parquet dir (`_stage_dir` — reused and
-    wiped per invocation; readStream cannot apply load_table's session
-    handling mid-plan), readStream it, run `transform` (the streaming
-    operator under test), drain with availableNow into a memory sink
-    under `_bounded_shuffle_partitions`, and return the finished sink
-    table. A drain that exceeds 300s raises rather than returning a
-    partial table."""
-    spark = batch_df.sparkSession
+def _stage_stream(batch_df, stage_name):
+    """Stage the normalised batch table to a bounded per-query parquet
+    dir (`_stage_dir` — reused and wiped per invocation; readStream
+    cannot apply load_table's session handling mid-plan) and return it
+    as a stream; availableNow drains it as one micro-batch."""
     staged = _stage_dir(stage_name)  # fixed, wiped per run — no leak
     batch_df.write.mode("overwrite").parquet(staged)
-    stream = spark.readStream.schema(batch_df.schema).parquet(staged)
+    return batch_df.sparkSession.readStream.schema(batch_df.schema).parquet(
+        staged
+    )
+
+
+def _drain_to_memory(stream, sink_name, transform, output_mode, label):
+    """Shared protocol for every e*-streaming-runtime query: run
+    `transform` (the streaming operator under test) over `stream`
+    (`_stage_stream`, or `ordered_file_stream` over pre-staged ordered
+    batch files), drain it with availableNow into a memory sink under
+    `_bounded_shuffle_partitions`, and return the finished sink table.
+    A drain that exceeds 300s raises rather than returning a partial
+    table. In append mode the trailing no-data batch (on by default)
+    finalizes the watermark, so emission is complete."""
+    from cellphe_data_pipeline_spark.streaming.tracker import drain
+
+    spark = stream.sparkSession
     with _bounded_shuffle_partitions(spark):
-        q = (
+        drain(
             transform(stream)
             .writeStream.format("memory")
             .queryName(sink_name)  # fixed: restart replaces the temp view
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
+            .outputMode(output_mode),
+            label,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                f"{label}: availableNow drain did not finish in 300s — "
-                "refusing to return a partial sink table"
-            )
     return spark.table(sink_name)
 
 
@@ -941,7 +944,7 @@ def e5(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
     sink = _drain_to_memory(
-        ev, "e5_stream_rollup", "e5_rollup_sink",
+        _stage_stream(ev, "e5_stream_rollup"), "e5_rollup_sink",
         streaming_window_rollup, "complete", "e5_streaming_rollup",
     )
     return sink.select(
@@ -1000,7 +1003,7 @@ def e6(spark, sf_dir):
         "value",
     )
     sink = _drain_to_memory(
-        ev, "e6_stream_upsert", "e6_upsert_sink",
+        _stage_stream(ev, "e6_stream_upsert"), "e6_upsert_sink",
         lambda stream: streaming_upsert(stream, t_col="t_us"),
         "append", "e6_streaming_upsert_state",
     )
@@ -2153,21 +2156,16 @@ def mm4(spark, sf_dir):
     import numpy as np
 
     from cellphe_data_pipeline_spark.domain.images import (
-        FAKE_MAGIC,
+        encode_fake_container,
         resize_frames,
         split_frames,
     )
-    import zlib as _zlib
 
     yy, xx = np.mgrid[0:32, 0:32]
     img = ((xx * 7 + yy * 3) % 256).astype(np.uint8)
-    payload = (
-        FAKE_MAGIC
-        + np.array([32, 32, 1], dtype="<u4").tobytes()
-        + _zlib.compress(img.tobytes())
-    )
     bins = spark.createDataFrame(
-        [("rz.fake", bytearray(payload))], "path string, content binary"
+        [("rz.fake", bytearray(encode_fake_container(img)))],
+        "path string, content binary",
     )
     small = resize_frames(split_frames(bins), 8, 8, method="area")
 
@@ -5118,7 +5116,7 @@ def e13(spark, sf_dir):
         )
     )
     sink = _drain_to_memory(
-        ev, "e13_stream_ewma", "e13_ewma_sink",
+        _stage_stream(ev, "e13_stream_ewma"), "e13_ewma_sink",
         streaming_ewma, "append", "e13_streaming_ewma",
     )
     return sink.select(
@@ -5180,7 +5178,7 @@ def e14(spark, sf_dir):
         )
     )
     sink = _drain_to_memory(
-        ev, "e14_stream_gapfill", "e14_gapfill_sink",
+        _stage_stream(ev, "e14_stream_gapfill"), "e14_gapfill_sink",
         streaming_gap_fill, "append", "e14_streaming_gap_fill",
     )
     return sink.select(
@@ -6168,7 +6166,7 @@ def e19(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "value")
     sink = _drain_to_memory(
-        ev, "e19_stream_profile", "e19_profile_sink",
+        _stage_stream(ev, "e19_stream_profile"), "e19_profile_sink",
         lambda stream: streaming_profile(stream, ["value", "user_id"]),
         "complete", "e19_streaming_profile",
     )
@@ -7342,26 +7340,20 @@ def m1b(spark, sf_dir):
     the fixture (Otsu must land between the modes), so it is an
     independent oracle, unlike goldens regenerated from the engine.
     Labeling ≡ pixel-BFS is separately property-tested."""
-    import zlib
-
     import numpy as np
 
     from cellphe_data_pipeline_spark.domain.images import (
-        FAKE_MAGIC,
         decode_segment_centroid,
+        encode_fake_container,
         mask_label_histogram,
     )
 
     img = np.full((20, 20), 10, dtype=np.uint8)
     img[2:6, 3:8] = 200
     img[10:14, 10:17] = 200
-    payload = (
-        FAKE_MAGIC
-        + np.array([20, 20, 1], dtype="<u4").tobytes()
-        + zlib.compress(img.tobytes())
-    )
     bins = spark.createDataFrame(
-        [("bimodal.fake", bytearray(payload))], "path string, content binary"
+        [("bimodal.fake", bytearray(encode_fake_container(img)))],
+        "path string, content binary",
     )
     return mask_label_histogram(
         decode_segment_centroid(bins, method="otsu").select(
@@ -8161,7 +8153,7 @@ def e7(spark, sf_dir):
         ).alias("ts"),
     )
     sink = _drain_to_memory(
-        docs, "e7_stream_dedup", "e7_dedup_sink",
+        _stage_stream(docs, "e7_stream_dedup"), "e7_dedup_sink",
         lambda stream: streaming_exact_dedup(
             stream, ["lang", "content_hash"], ts_col="ts", watermark="30 days"
         ).select("lang", "content_hash"),
@@ -8598,13 +8590,9 @@ def e15(spark, sf_dir):
         (int(r["cluster_id"]), [float(x) for x in r["cvec"]])
         for r in idx.collect()
     ]
-    probe_dir = _stage_dir("e15_probe_stream")
-    new_batch.select("vec_id", "embedding").write.mode("overwrite").parquet(
-        probe_dir
+    probe_stream = _stage_stream(
+        new_batch.select("vec_id", "embedding"), "e15_probe_stream"
     )
-    probe_stream = spark.readStream.schema(
-        new_batch.select("vec_id", "embedding").schema
-    ).parquet(probe_dir)
     out_dir = _stage_dir("e15_topk_out")
     ckpt_dir = _stage_dir("e15_topk_ckpt")  # wiped: stale file-source
     # checkpoints silently skip already-seen paths on replay
@@ -8688,7 +8676,7 @@ def e16(spark, sf_dir):
     )
     redelivered = ev.unionAll(ev.filter(F.col("event_id") % 5 == 0))
     sink = _drain_to_memory(
-        redelivered, "e16_stream_lifecycle", "e16_lifecycle_sink",
+        _stage_stream(redelivered, "e16_stream_lifecycle"), "e16_lifecycle_sink",
         lambda stream: streaming_ingest_lifecycle(
             stream,
             dedup_keys=["user_id", "event_id"],
@@ -8787,7 +8775,7 @@ def e17(spark, sf_dir):
         )
 
     sink = _drain_to_memory(
-        staged, "e17_stream_dedup_rollup", "e17_dedup_rollup_sink",
+        _stage_stream(staged, "e17_stream_dedup_rollup"), "e17_dedup_rollup_sink",
         chain, "append", "e17_streaming_dedup_rollup",
     )
     return sink.select(
@@ -8843,7 +8831,7 @@ def e18(spark, sf_dir):
         [(-1, "sentinel", _dt.datetime(2100, 1, 1), 0.0)], ev.schema
     )
     sink = _drain_to_memory(
-        ev.unionAll(sentinel), "e18_stream_join_rollup",
+        _stage_stream(ev.unionAll(sentinel), "e18_stream_join_rollup"),
         "e18_join_rollup_sink",
         streaming_join_rollup, "append", "e18_streaming_join_rollup",
     )
@@ -9042,7 +9030,7 @@ def e8(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     sink = _drain_to_memory(
-        ev, "e8_stream_interval", "e8_interval_sink",
+        _stage_stream(ev, "e8_stream_interval"), "e8_interval_sink",
         lambda stream: streaming_interval_pairs(
             stream, window_seconds=60, watermark="30 days"
         ),
@@ -9078,12 +9066,10 @@ def mm6(spark, sf_dir):
     absent — the documented environment wall); the Spark plumbing
     (binary payloads → Arrow resize/hash kernels → band join) is the
     real 100 TB path."""
-    import zlib as _zlib
-
     import numpy as np
 
     from cellphe_data_pipeline_spark.domain.images import (
-        FAKE_MAGIC,
+        encode_fake_container,
         frame_dhash,
         split_frames,
     )
@@ -9105,14 +9091,7 @@ def mm6(spark, sf_dir):
         "img7.fake": ((xx * yy + xx * 29) % 256).astype(np.uint8),
     }
     rows = [
-        (
-            name,
-            bytearray(
-                FAKE_MAGIC
-                + np.array([32, 32, 1], dtype="<u4").tobytes()
-                + _zlib.compress(img.tobytes())
-            ),
-        )
+        (name, bytearray(encode_fake_container(img)))
         for name, img in imgs.items()
     ]
     bins = spark.createDataFrame(rows, "path string, content binary")
@@ -9156,12 +9135,10 @@ def mm7(spark, sf_dir):
     flat frames are one structure) but pair with nothing textured.
     Composite (path#frame) ids per the one-code-per-id contract. Decode is the FAKE codec (environment wall); the
     resize/DCT/band plumbing is the real 100 TB path."""
-    import zlib as _zlib
-
     import numpy as np
 
     from cellphe_data_pipeline_spark.domain.images import (
-        FAKE_MAGIC,
+        encode_fake_container,
         frame_phash,
         split_frames,
     )
@@ -9186,14 +9163,7 @@ def mm7(spark, sf_dir):
         "img6.fake": np.full((32, 32), 210, np.uint8),
     }
     rows = [
-        (
-            name,
-            bytearray(
-                FAKE_MAGIC
-                + np.array([32, 32, 1], dtype="<u4").tobytes()
-                + _zlib.compress(img.tobytes())
-            ),
-        )
+        (name, bytearray(encode_fake_container(img)))
         for name, img in imgs.items()
     ]
     bins = spark.createDataFrame(rows, "path string, content binary")
@@ -9910,7 +9880,7 @@ def e9(spark, sf_dir):
         ).alias("ts"),
     )
     sink = _drain_to_memory(
-        docs, "e9_stream_minhash", "e9_minhash_sink",
+        _stage_stream(docs, "e9_stream_minhash"), "e9_minhash_sink",
         lambda stream: streaming_minhash_neardup(
             stream, horizon_seconds=10_000_000, watermark="30 days"
         ),
@@ -9938,7 +9908,7 @@ def e10(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sink = _drain_to_memory(
-        docs, "e10_stream_quality", "e10_quality_sink",
+        _stage_stream(docs, "e10_stream_quality"), "e10_quality_sink",
         gopher_rules, "append", "e10_streaming_quality_gate",
     )
     return sink.select(
@@ -9975,7 +9945,7 @@ def e11(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sink = _drain_to_memory(
-        docs, "e11_stream_cm", "e11_cm_sink",
+        _stage_stream(docs, "e11_stream_cm"), "e11_cm_sink",
         lambda stream: count_min_cells(_doc_tokens(stream), depth=4, width=256),
         "complete", "e11_streaming_count_min",
     )
@@ -10005,7 +9975,7 @@ def e12(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     sink = _drain_to_memory(
-        ev, "e12_stream_sessions", "e12_session_sink",
+        _stage_stream(ev, "e12_stream_sessions"), "e12_session_sink",
         streaming_session_windows, "complete", "e12_streaming_sessionization",
     )
     return sink.select(
@@ -10354,38 +10324,6 @@ def _stage_ordered_batches(parts, stage_name: str) -> str:
     return staged
 
 
-def _drain_staged_stream(
-    spark, schema, staged, transform, output_mode, sink_name, label
-):
-    """availableNow drain over PRE-STAGED ordered batch files, one file
-    per micro-batch (maxFilesPerTrigger=1 — availableNow respects
-    source rate limits, so the staged order IS the batch order). Same
-    protocol as _drain_to_memory otherwise; the trailing no-data batch
-    (on by default) finalizes the watermark so append-mode emission is
-    complete."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    with _bounded_shuffle_partitions(spark):
-        q = (
-            transform(stream)
-            .writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                f"{label}: availableNow drain did not finish in 300s — "
-                "refusing to return a partial sink table"
-            )
-    return spark.table(sink_name)
-
-
 _E20_T1 = "2024-01-12 00:00:00"
 _E20_T2 = "2024-01-24 00:00:00"
 
@@ -10466,6 +10404,7 @@ def e20(spark, sf_dir):
     O(open windows): emitted windows leave the store and their
     stragglers are filtered before the shuffle."""
     from cellphe_data_pipeline_spark.streaming.tracker import (
+        ordered_file_stream,
         streaming_append_rollup,
     )
 
@@ -10487,13 +10426,11 @@ def e20(spark, sf_dir):
         evb.filter(F.col("_b") == k).select("ts", "value") for k in (0, 1, 2)
     ]
     staged = _stage_ordered_batches(parts, "e20_stream_late")
-    sink = _drain_staged_stream(
-        spark,
-        parts[0].schema,
-        staged,
+    sink = _drain_to_memory(
+        ordered_file_stream(spark, parts[0].schema, staged),
+        "e20_late_sink",
         streaming_append_rollup,
         "append",
-        "e20_late_sink",
         "e20_streaming_late_drop",
     )
     return sink.select(
@@ -10575,6 +10512,7 @@ def e21(spark, sf_dir):
     output is append-immediate (no watermark-gated emission), so there
     is no withheld tail — that effect belongs to e20."""
     from cellphe_data_pipeline_spark.streaming.tracker import (
+        ordered_file_stream,
         streaming_dedup_within_watermark,
     )
 
@@ -10603,13 +10541,11 @@ def e21(spark, sf_dir):
         for k, s in enumerate(slices)
     ]
     staged = _stage_ordered_batches(parts, "e21_stream_dedup")
-    sink = _drain_staged_stream(
-        spark,
-        parts[0].schema,
-        staged,
+    sink = _drain_to_memory(
+        ordered_file_stream(spark, parts[0].schema, staged),
+        "e21_dedup_sink",
         streaming_dedup_within_watermark,
         "append",
-        "e21_dedup_sink",
         "e21_streaming_dedup_expiry",
     )
     return sink.select("key", "ts", "src_batch")
@@ -10759,6 +10695,7 @@ def e22(spark, sf_dir):
     join run forever on bounded state — eviction by the interval
     bound is what the time-range condition buys."""
     from cellphe_data_pipeline_spark.streaming.tracker import (
+        ordered_file_stream,
         streaming_left_outer_interval_join,
     )
 
@@ -10774,13 +10711,11 @@ def e22(spark, sf_dir):
     cut = F.lit(_E22_CUT).cast("timestamp")
     parts = [ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)]
     staged = _stage_ordered_batches(parts, "e22_stream_outer")
-    sink = _drain_staged_stream(
-        spark,
-        parts[0].schema,
-        staged,
+    sink = _drain_to_memory(
+        ordered_file_stream(spark, parts[0].schema, staged),
+        "e22_outer_sink",
         streaming_left_outer_interval_join,
         "append",
-        "e22_outer_sink",
         "e22_streaming_outer_join",
     )
     return sink.select("l_id", "l_key", "l_ts", "r_id", "r_ts")
@@ -12195,7 +12130,7 @@ def e24(spark, sf_dir):
         )
     )
     sink = _drain_to_memory(
-        ev, "e24_stream_enrich", "e24_enrich_sink",
+        _stage_stream(ev, "e24_stream_enrich"), "e24_enrich_sink",
         lambda stream: streaming_static_enrich_rollup(stream, dim),
         "complete", "e24_streaming_static_enrich",
     )
@@ -12755,7 +12690,7 @@ def v18(spark, sf_dir):
 )
 def e25(spark, sf_dir):
     """§2.11 exactly-once streaming sink into the snapshot table (r11;
-    tracker.streaming_snapshot_sink_drain + io.snapshot_append_batch)
+    tracker.drain_batches + io.snapshot_append_batch)
     — the twenty-first verified streaming runtime, composing streaming
     with the lakehouse layer: three deterministic micro-batches drain
     through foreachBatch, each CAS-committing a snapshot whose
@@ -12776,9 +12711,7 @@ def e25(spark, sf_dir):
         snapshot_current,
         snapshot_read,
     )
-    from cellphe_data_pipeline_spark.streaming.tracker import (
-        streaming_snapshot_sink_drain,
-    )
+    from cellphe_data_pipeline_spark.streaming.tracker import drain_batches
     import os
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -12790,10 +12723,12 @@ def e25(spark, sf_dir):
     table = os.path.join(root, "table")
     ckpt = os.path.join(root, "ckpt")
     with _bounded_shuffle_partitions(spark):
-        counts = streaming_snapshot_sink_drain(
-            spark, parts[0].schema, staged, table, ckpt
+        results = drain_batches(
+            spark, parts[0].schema, staged, ckpt,
+            lambda b, bid: snapshot_append_batch(table, b, bid),
+            "e25_streaming_snapshot_sink",
         )
-    assert counts == {"committed": 3, "skipped": 0}, counts
+    assert results == [True, True, True], results
     sid = snapshot_current(table)
     assert sid == 3, sid
     # the re-delivery the engine's contract permits: same batch, same
@@ -13199,7 +13134,7 @@ def e26(spark, sf_dir):
         .select("ts", "value")
     )
     sink = _drain_to_memory(
-        ev, "e26_stream_sliding", "e26_sliding_sink",
+        _stage_stream(ev, "e26_stream_sliding"), "e26_sliding_sink",
         streaming_sliding_rollup, "complete", "e26_streaming_sliding_rollup",
     )
     return sink.select(
@@ -13306,13 +13241,12 @@ def s24(spark, sf_dir):
     on metadata + rewritten slices only — each pair's diff costs
     O(that batch's files), never O(table)."""
     from cellphe_data_pipeline_spark.sources.io import (
+        snapshot_append_batch,
         snapshot_changes,
         snapshot_current,
         snapshot_read,
     )
-    from cellphe_data_pipeline_spark.streaming.tracker import (
-        streaming_snapshot_sink_drain,
-    )
+    from cellphe_data_pipeline_spark.streaming.tracker import drain_batches
     import os
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -13324,9 +13258,12 @@ def s24(spark, sf_dir):
     table = os.path.join(root, "table")
     ckpt = os.path.join(root, "ckpt")
     with _bounded_shuffle_partitions(spark):
-        streaming_snapshot_sink_drain(
-            spark, parts[0].schema, staged, table, ckpt
+        results = drain_batches(
+            spark, parts[0].schema, staged, ckpt,
+            lambda b, bid: snapshot_append_batch(table, b, bid),
+            "s24_cdc_feed_replay",
         )
+    assert results == [True, True, True], results
     n_snaps = snapshot_current(table)
     assert n_snaps == 3, n_snaps
 
@@ -13433,7 +13370,7 @@ def e27(spark, sf_dir):
         )
 
     sink = _drain_to_memory(
-        ev, "e27_stream_q", "e27_q_sink", transform,
+        _stage_stream(ev, "e27_stream_q"), "e27_q_sink", transform,
         "complete", "e27_streaming_quantile_audit",
     )
     joined = ev.join(F.broadcast(sink), "event_type")
@@ -13721,7 +13658,7 @@ def j18(spark, sf_dir):
 )
 def e28(spark, sf_dir):
     """§2.11 streaming MERGE sink (r11;
-    tracker.streaming_merge_sink_drain) — the twenty-fourth verified
+    tracker.merge_batch_idempotent) — the twenty-fourth verified
     streaming runtime and e25's append sink upgraded to the
     Delta-streaming-MERGE shape: three micro-batches (full base, then
     two OVERLAPPING correction batches — keys divisible by both 7 and
@@ -13742,7 +13679,8 @@ def e28(spark, sf_dir):
         snapshot_read,
     )
     from cellphe_data_pipeline_spark.streaming.tracker import (
-        streaming_merge_sink_drain,
+        drain_batches,
+        merge_batch_idempotent,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -13759,18 +13697,16 @@ def e28(spark, sf_dir):
     table = os.path.join(root, "table")
     ckpt = os.path.join(root, "ckpt")
     with _bounded_shuffle_partitions(spark):
-        counts = streaming_merge_sink_drain(
-            spark, ev.schema, staged, table, ckpt
+        results = drain_batches(
+            spark, ev.schema, staged, ckpt,
+            lambda b, bid: merge_batch_idempotent(spark, table, b, bid),
+            "e28_streaming_merge_sink",
         )
-    assert counts == {"committed": 3, "skipped": 0}, counts
+    assert results == [True, True, True], results
     assert snapshot_current(table) == 3
     # the replay the engine's contract permits: re-apply the final
     # batch through the sink's own guarded applier — it must refuse
     # BEFORE any merge work, and the table must not advance
-    from cellphe_data_pipeline_spark.streaming.tracker import (
-        merge_batch_idempotent,
-    )
-
     replayed = merge_batch_idempotent(spark, table, u2, 2)
     assert replayed is False and snapshot_current(table) == 3
     return (
@@ -13972,10 +13908,9 @@ def e29(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "ts", "value"
     )
-    staged = _stage_dir("e29_stream_obs")
-    ev.write.mode("overwrite").parquet(staged)
-    stream = spark.readStream.schema(ev.schema).parquet(staged)
-    observed = stream.observe(
+    from cellphe_data_pipeline_spark.streaming.tracker import drain
+
+    observed = _stage_stream(ev, "e29_stream_obs").observe(
         "e29_obs", F.count(F.lit(1)).alias("obs_rows")
     )
     transformed = observed.groupBy("event_type").agg(
@@ -13985,16 +13920,12 @@ def e29(spark, sf_dir):
         .alias("sum_value"),
     )
     with _bounded_shuffle_partitions(spark):
-        q = (
+        q = drain(
             transformed.writeStream.format("memory")
             .queryName("e29_obs_sink")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("complete"),
+            "e29_streaming_observe",
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("e29: drain did not finish in 300s")
     total_obs = 0
     for prog in q.recentProgress:
         om = (prog or {}).get("observedMetrics") or {}
@@ -14481,7 +14412,7 @@ _E30_ORACLE = (
 @register("e30_streaming_ivf_delete", _E30_ORACLE)
 def e30(spark, sf_dir):
     """§2.11 streaming DELETE maintenance of the published IVF index
-    (r12; tracker.streaming_ivf_delete_drain — the r11 verdict's ask
+    (r12; tracker.ivf_delete_batch_idempotent — the r11 verdict's ask
     #6): v19 closed batch takedown; e30 closes the SERVING loop — a
     takedown stream (two ordered micro-batches of vec_ids) applied to
     the live bucket store via foreachBatch, each batch an O(affected
@@ -14505,8 +14436,8 @@ def e30(spark, sf_dir):
         lloyd_centroid_vectors,
     )
     from cellphe_data_pipeline_spark.streaming.tracker import (
+        drain_batches,
         ivf_delete_batch_idempotent,
-        streaming_ivf_delete_drain,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -14523,10 +14454,14 @@ def e30(spark, sf_dir):
     staged = _stage_ordered_batches([d1, d2], "e30_takedown_batches")
     ckpt = os.path.join(_stage_dir("e30_ckpt"), "ckpt")
     with _bounded_shuffle_partitions(spark):
-        counts = streaming_ivf_delete_drain(
-            spark, d1.schema, staged, bucket_dir, ckpt
+        results = drain_batches(
+            spark, d1.schema, staged, ckpt,
+            lambda b, bid: ivf_delete_batch_idempotent(
+                spark, bucket_dir, b, bid
+            ),
+            "e30_streaming_ivf_delete",
         )
-    assert counts == {"committed": 2, "skipped": 0}, counts
+    assert results == [True, True], results
 
     # replay leg 1: the watermark refuses the final batch re-delivery
     assert ivf_delete_batch_idempotent(spark, bucket_dir, d2, 1) is False
@@ -15373,11 +15308,11 @@ def e31(spark, sf_dir):
     table = os.path.join(root, "table")
     seen = os.path.join(root, "seen")
     with _bounded_shuffle_partitions(spark):
-        counts = streaming_corpus_ingest_drain(
+        results = streaming_corpus_ingest_drain(
             spark, parts[0].schema, staged, table, seen,
             os.path.join(root, "ckpt"),
         )
-    assert counts == {"committed": 4, "skipped": 0}, counts
+    assert results == [True] * 4, results
     sid = snapshot_current(table)
 
     def row_hash(df):
@@ -15396,11 +15331,11 @@ def e31(spark, sf_dir):
     # replay leg: same files, fresh checkpoint — the watermark must
     # refuse every batch before any packing work, table unchanged
     with _bounded_shuffle_partitions(spark):
-        counts2 = streaming_corpus_ingest_drain(
+        results = streaming_corpus_ingest_drain(
             spark, parts[0].schema, staged, table, seen,
             os.path.join(root, "ckpt_replay"),
         )
-    assert counts2 == {"committed": 0, "skipped": 4}, counts2
+    assert results == [False] * 4, results
     assert snapshot_current(table) == sid
     assert row_hash(snapshot_read(spark, table, sid)) == pre
     return snapshot_read(spark, table, sid).select(
@@ -15484,11 +15419,11 @@ def e32(spark, sf_dir):
     table = os.path.join(root, "table")
     seen = os.path.join(root, "seen")
     with _bounded_shuffle_partitions(spark):
-        counts = streaming_corpus_full_ingest_drain(
+        results = streaming_corpus_full_ingest_drain(
             spark, parts[0].schema, staged, table, seen,
             os.path.join(root, "ckpt"), clusters_dir, bench_dir,
         )
-    assert counts == {"committed": 4, "skipped": 0}, counts
+    assert results == [True] * 4, results
     sid = snapshot_current(table)
 
     def row_hash(df):
@@ -15505,11 +15440,11 @@ def e32(spark, sf_dir):
 
     pre = row_hash(snapshot_read(spark, table, sid))
     with _bounded_shuffle_partitions(spark):
-        counts2 = streaming_corpus_full_ingest_drain(
+        results = streaming_corpus_full_ingest_drain(
             spark, parts[0].schema, staged, table, seen,
             os.path.join(root, "ckpt_replay"), clusters_dir, bench_dir,
         )
-    assert counts2 == {"committed": 0, "skipped": 4}, counts2
+    assert results == [False] * 4, results
     assert snapshot_current(table) == sid
     assert row_hash(snapshot_read(spark, table, sid)) == pre
     return snapshot_read(spark, table, sid).select(
@@ -16007,7 +15942,7 @@ def o24(spark, sf_dir):
 )
 def e33(spark, sf_dir):
     """§2.11 streaming TAKEDOWN against a published table via MOR
-    tombstone commits (r14; tracker.streaming_mor_takedown_drain) —
+    tombstone commits (r14; tracker.mor_takedown_apply_batch) —
     the table-format completion of the takedown family: c21's closure
     computes WHAT to remove, v19/e30 remove from the serving INDEX,
     this removes from the CORPUS TABLE itself at streaming latency.
@@ -16037,7 +15972,8 @@ def e33(spark, sf_dir):
         snapshot_read,
     )
     from cellphe_data_pipeline_spark.streaming.tracker import (
-        streaming_mor_takedown_drain,
+        drain_batches,
+        mor_takedown_apply_batch,
     )
     import os
 
@@ -16057,12 +15993,19 @@ def e33(spark, sf_dir):
         for lo, hi in bounds
     ]
     staged = _stage_ordered_batches(parts, "e33_batches")
-    with _bounded_shuffle_partitions(spark):
-        counts = streaming_mor_takedown_drain(
-            spark, parts[0].schema, staged, table,
-            os.path.join(root, "ckpt"), "o_orderkey",
-        )
-    assert counts == {"committed": 3, "skipped": 0}, counts
+
+    def takedown_drain(ckpt):
+        with _bounded_shuffle_partitions(spark):
+            return drain_batches(
+                spark, parts[0].schema, staged, os.path.join(root, ckpt),
+                lambda b, bid: mor_takedown_apply_batch(
+                    spark, table, "o_orderkey", b, bid
+                ),
+                "e33_streaming_mor_takedown",
+            )
+
+    results = takedown_drain("ckpt")
+    assert results == [True, True, True], results
     sid = snapshot_current(table)
     assert sid == 9
     # zero data rewrite across all three takedown commits
@@ -16070,12 +16013,8 @@ def e33(spark, sf_dir):
     assert len(snapshot_manifest(table, sid)["delete_files"]) == 3
 
     # replay leg: fresh checkpoint, same batches — all refused
-    with _bounded_shuffle_partitions(spark):
-        counts2 = streaming_mor_takedown_drain(
-            spark, parts[0].schema, staged, table,
-            os.path.join(root, "ckpt_replay"), "o_orderkey",
-        )
-    assert counts2 == {"committed": 0, "skipped": 3}, counts2
+    results = takedown_drain("ckpt_replay")
+    assert results == [False, False, False], results
     assert snapshot_current(table) == sid
 
     def row_hash(df):
@@ -16588,7 +16527,7 @@ def v20(spark, sf_dir):
 )
 def e34(spark, sf_dir):
     """§2.11 streaming DISTINCT-COUNT via stored KMV sketches (r15;
-    tracker.streaming_kmv_distinct_drain) — the streaming aggregate
+    tracker.kmv_distinct_apply_batch) — the streaming aggregate
     whose exact form needs UNBOUNDED state (every distinct key seen),
     solved the way production streams solve it: per-batch bottom-k
     sketches folded into a stored sketch table, state capped at
@@ -16629,7 +16568,8 @@ def e34(spark, sf_dir):
         snapshot_read,
     )
     from cellphe_data_pipeline_spark.streaming.tracker import (
-        streaming_kmv_distinct_drain,
+        drain_batches,
+        kmv_distinct_apply_batch,
     )
 
     k = 512
@@ -16650,21 +16590,24 @@ def e34(spark, sf_dir):
         for i in range(3)
     ]
     staged = _stage_ordered_batches(parts, "e34_batches")
-    with _bounded_shuffle_partitions(spark):
-        counts = streaming_kmv_distinct_drain(
-            spark, parts[0].schema, staged, table,
-            os.path.join(root, "ckpt"), "key", "tag", k=k,
-        )
-    assert counts == {"committed": 3, "skipped": 0}, counts
+
+    def sketch_drain(ckpt):
+        with _bounded_shuffle_partitions(spark):
+            return drain_batches(
+                spark, parts[0].schema, staged, os.path.join(root, ckpt),
+                lambda b, bid: kmv_distinct_apply_batch(
+                    spark, table, "key", "tag", b, bid, k=k
+                ),
+                "e34_streaming_kmv_distinct",
+            )
+
+    results = sketch_drain("ckpt")
+    assert results == [True, True, True], results
     sid = snapshot_current(table)
 
     # replay leg: fresh checkpoint, same batches — all refused
-    with _bounded_shuffle_partitions(spark):
-        counts2 = streaming_kmv_distinct_drain(
-            spark, parts[0].schema, staged, table,
-            os.path.join(root, "ckpt_replay"), "key", "tag", k=k,
-        )
-    assert counts2 == {"committed": 0, "skipped": 3}, counts2
+    results = sketch_drain("ckpt_replay")
+    assert results == [False, False, False], results
     assert snapshot_current(table) == sid
 
     stored = kmv_check_format(snapshot_read(spark, table, sid))
@@ -17342,8 +17285,8 @@ def o29(spark, sf_dir):
     """,
 )
 def e35(spark, sf_dir):
-    """§2.11 streaming CDC-APPLY (r15; tracker.cdc_apply_batch /
-    streaming_cdc_apply_drain) — the CONSUMER half of the
+    """§2.11 streaming CDC-APPLY (r15; tracker.cdc_apply_batch via
+    drain_batches) — the CONSUMER half of the
     change-data-feed story, closing the loop o28's MOR-aware feed
     opened: a change stream maintains a derived table, each change
     class routed to the cost-right primitive of the table format
@@ -17386,7 +17329,8 @@ def e35(spark, sf_dir):
         snapshot_read,
     )
     from cellphe_data_pipeline_spark.streaming.tracker import (
-        streaming_cdc_apply_drain,
+        cdc_apply_batch,
+        drain_batches,
     )
 
     root = _stage_dir("e35_cdc_apply")
@@ -17423,11 +17367,21 @@ def e35(spark, sf_dir):
     )
     staged = _stage_ordered_batches([b1, b2, b3], "e35_batches")
 
-    with _bounded_shuffle_partitions(spark):
-        counts = streaming_cdc_apply_drain(
-            spark, b1.schema, staged, table,
-            os.path.join(root, "ckpt"), "o_orderkey",
-        )
+    def cdc_drain(ckpt):
+        with _bounded_shuffle_partitions(spark):
+            results = drain_batches(
+                spark, b1.schema, staged, os.path.join(root, ckpt),
+                lambda b, bid: cdc_apply_batch(
+                    spark, table, "o_orderkey", b, bid
+                ),
+                "e35_streaming_cdc_apply",
+            )
+        steps = ("merged", "purged", "inserted", "deleted", "undeleted")
+        return {"batches": len(results)} | {
+            step: sum(int(r[step]) for r in results) for step in steps
+        }
+
+    counts = cdc_drain("ckpt")
     assert counts == {
         "batches": 3, "merged": 1, "purged": 1,
         "inserted": 3, "deleted": 1, "undeleted": 1,
@@ -17445,11 +17399,7 @@ def e35(spark, sf_dir):
     assert masked.count() == n_exp, (masked.count(), n_exp)
 
     # replay leg: fresh checkpoint, same batches — nothing applies
-    with _bounded_shuffle_partitions(spark):
-        counts2 = streaming_cdc_apply_drain(
-            spark, b1.schema, staged, table,
-            os.path.join(root, "ckpt_replay"), "o_orderkey",
-        )
+    counts2 = cdc_drain("ckpt_replay")
     assert counts2 == {
         "batches": 3, "merged": 0, "purged": 0,
         "inserted": 0, "deleted": 0, "undeleted": 0,

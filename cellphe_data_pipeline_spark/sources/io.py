@@ -279,6 +279,17 @@ def snapshot_manifest(table_dir: str, snapshot_id: int) -> dict:
         return json.load(f)
 
 
+def snapshot_batch_watermark(table_dir: str) -> tuple[int, int]:
+    """(current snapshot id, its manifest's ``last_batch_id``): the
+    replay guard of every idempotent-by-batch-id sink — a batch at or
+    below the watermark is a replay and must be skipped before any
+    write. An empty table is ``(0, -1)``."""
+    cur = snapshot_current(table_dir)
+    if cur == 0:
+        return 0, -1
+    return cur, snapshot_manifest(table_dir, cur).get("last_batch_id", -1)
+
+
 def snapshot_commit_atomic(
     table_dir: str,
     expected_parent: int,
@@ -1444,10 +1455,7 @@ def snapshot_append_batch(
     cadence that compacts the data files (snapshot_compact_manifests)."""
     import os
 
-    parent = snapshot_current(table_dir)
-    last = -1
-    if parent > 0:
-        last = snapshot_manifest(table_dir, parent).get("last_batch_id", -1)
+    parent, last = snapshot_batch_watermark(table_dir)
     if batch_id <= last:
         return False
     out_dir = os.path.join(table_dir, "data", f"batch_{batch_id}")

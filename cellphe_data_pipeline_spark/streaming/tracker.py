@@ -22,6 +22,12 @@ Scale: state lives in the state store, partitioned by key — per-key
 state is O(1) doubles for movement and O(1) for the summary; watermark
 bounds retention. This is the standard Spark production topology for
 per-entity telemetry at millions of keys.
+
+Every bounded run of a streaming query goes through ``drain`` (one
+availableNow start/await/stop). ``drain_batches`` is the exactly-once
+recipe on top of it: a replayable file source, one staged file per
+micro-batch, feeding an idempotent batch-id-guarded applier through
+``foreachBatch``.
 """
 
 from __future__ import annotations
@@ -36,6 +42,74 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from cellphe_data_pipeline_spark.domain.tracking import _frame_candidates, _greedy
+
+
+def drain(writer, label: str, timeout_s: float = 300):
+    """Run a configured ``DataStreamWriter`` as one availableNow drain
+    and return the finished query (callers read its progress). A drain
+    that has not finished after ``timeout_s`` is stopped and raises
+    ``RuntimeError`` naming ``label`` — no caller ever reads a partial
+    sink. A query that fails raises its ``StreamingQueryException``."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise RuntimeError(
+            f"{label}: availableNow drain did not finish in {timeout_s:.0f}s "
+            "— refusing to leave a partial sink"
+        )
+    return q
+
+
+def ordered_file_stream(spark, schema, source_dir: str) -> DataFrame:
+    """Stream the parquet files of ``source_dir`` one file per
+    micro-batch. The file source orders files by modification time and
+    availableNow honours the rate limit, so staged files with
+    increasing mtimes ARE the batches, in that order — the replay
+    harness that watermark semantics and batch-id idempotency need."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(source_dir)
+    )
+
+
+def drain_batches(
+    spark,
+    schema,
+    source_dir: str,
+    ckpt_dir: str,
+    apply_batch,
+    label: str,
+    plan=None,
+    timeout_s: float = 300,
+) -> list:
+    """Drain ``source_dir`` (one file per micro-batch) through
+    ``plan`` (a stateless stream → stream function, optional) into
+    ``apply_batch(batch_df, batch_id)`` via ``foreachBatch``; return
+    the applier's results in batch order.
+
+    This is the engine's exactly-once recipe: the file source is
+    replayable and the checkpoint at ``ckpt_dir`` records which files
+    each batch read; the applier guards on the batch id (a manifest or
+    sidecar watermark), so the one batch a crash may re-deliver is a
+    no-op. A fresh checkpoint over the same files replays every batch
+    with the same ids, which a guarded applier refuses."""
+    results = []
+
+    def sink(batch_df, batch_id):
+        results.append(apply_batch(batch_df, batch_id))
+
+    stream = ordered_file_stream(spark, schema, source_dir)
+    if plan is not None:
+        stream = plan(stream)
+    drain(
+        stream.writeStream.foreachBatch(sink).option(
+            "checkpointLocation", ckpt_dir
+        ),
+        label,
+        timeout_s,
+    )
+    return results
 
 
 def streaming_window_rollup(
@@ -635,21 +709,15 @@ def streaming_ann_serve(
             .parquet(out_dir)
         )
 
-    q = (
+    drain(
         scored.writeStream.foreachBatch(emit_topk)
         # the caller owns checkpoint lifetime: a STALE checkpoint makes
         # the file source silently skip already-seen paths — bounded
         # replays must wipe it alongside the output dir
-        .option("checkpointLocation", ckpt_dir or out_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt_dir or out_dir + "_ckpt"),
+        "streaming_ann_serve",
+        timeout_s,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(
-            "streaming_ann_serve: availableNow drain did not finish in "
-            f"{timeout_s:.0f}s — refusing to leave a partial result dir"
-        )
 
 
 GAPFILL_STATE = T.StructType(
@@ -1359,28 +1427,18 @@ def streaming_restartable_drain(
     idempotent-committing sink), which is Structured Streaming's
     actual recovery contract — kill -9 between micro-batches replays
     at most the one uncommitted batch, whose sink commit is idempotent.
-    maxFilesPerTrigger=1 keeps micro-batches deterministic (the staged
-    files ARE the batches). Returns the number of committed sink rows
+    One file per micro-batch (``ordered_file_stream``) keeps the
+    batches deterministic. Returns the number of committed sink rows
     after this drain."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    q = (
-        transform(stream)
+    drain(
+        transform(ordered_file_stream(spark, schema, source_dir))
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "restartable drain",
+        timeout_s,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(
-            f"restartable drain did not finish in {timeout_s}s"
-        )
     return spark.read.parquet(out_dir).count()
 
 
@@ -1425,54 +1483,6 @@ def streaming_static_enrich_rollup(
     )
 
 
-def streaming_snapshot_sink_drain(
-    spark,
-    schema,
-    source_dir: str,
-    table_dir: str,
-    ckpt_dir: str,
-    timeout_s: int = 300,
-) -> dict:
-    """availableNow drain through a foreachBatch sink that commits each
-    micro-batch into the SNAPSHOT TABLE idempotently (r11, e25;
-    io.snapshot_append_batch) — the sink-side half of exactly-once,
-    composing the streaming runtime with the lakehouse layer: e23
-    proved the ENGINE restarts without re-reading or re-emitting; e25
-    proves the SINK tolerates the re-delivery the engine's contract
-    still permits (a crash between sink output and checkpoint commit
-    replays that micro-batch). foreachBatch gives the batch_id the
-    idempotency keys on; the snapshot commit records it as the
-    manifest's ``last_batch_id`` watermark, so a replayed batch is a
-    no-op and a reader of ANY snapshot sees each input row exactly
-    once. maxFilesPerTrigger=1 keeps the staged files = the batches.
-    Returns {committed, skipped} counts observed by the sink."""
-    from cellphe_data_pipeline_spark.sources.io import snapshot_append_batch
-
-    counts = {"committed": 0, "skipped": 0}
-
-    def sink(batch_df, batch_id):
-        if snapshot_append_batch(table_dir, batch_df, batch_id):
-            counts["committed"] += 1
-        else:
-            counts["skipped"] += 1
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(f"snapshot-sink drain did not finish in {timeout_s}s")
-    return counts
-
-
 def streaming_sliding_rollup(
     events: DataFrame,
     ts_col: str = "ts",
@@ -1507,21 +1517,17 @@ def streaming_sliding_rollup(
 def merge_batch_idempotent(
     spark, table_dir: str, batch_df, batch_id: int, key_col: str = "event_id"
 ) -> bool:
-    """The e28 sink's per-batch applier, exposed so the replay guard is
-    testable in isolation: skip (return False) if the manifest's
-    batch-id watermark already covers ``batch_id`` — BEFORE any merge
-    work, which is what makes a non-idempotent MERGE replay-safe —
-    else apply the o17 COW merge and commit with the new watermark."""
+    """Streaming MERGE (latest-wins upsert) applier (r11, e28): e28
+    drains correction batches into it through ``drain_batches``, and it
+    is testable alone. Skip (return False) if the manifest's batch-id
+    watermark already covers ``batch_id`` — BEFORE any merge work,
+    which is what makes a non-idempotent MERGE replay-safe — else apply
+    the o17 COW merge (only hit files rewritten) and commit with the
+    new watermark. The first batch bootstraps the empty table."""
     from cellphe_data_pipeline_spark.operators.scale import merge_rows_cow
-    from cellphe_data_pipeline_spark.sources.io import (
-        snapshot_current,
-        snapshot_manifest,
-    )
+    from cellphe_data_pipeline_spark.sources.io import snapshot_batch_watermark
 
-    cur = snapshot_current(table_dir)
-    last = -1
-    if cur > 0:
-        last = snapshot_manifest(table_dir, cur).get("last_batch_id", -1)
+    _, last = snapshot_batch_watermark(table_dir)
     if batch_id <= last:
         return False
     merge_rows_cow(
@@ -1532,62 +1538,14 @@ def merge_batch_idempotent(
     return True
 
 
-def streaming_merge_sink_drain(
-    spark,
-    schema,
-    source_dir: str,
-    table_dir: str,
-    ckpt_dir: str,
-    key_col: str = "event_id",
-    timeout_s: int = 300,
-) -> dict:
-    """Streaming MERGE (latest-wins upsert) into the snapshot table
-    via foreachBatch (r11, e28) — e25's append sink upgraded to the
-    Delta-streaming-MERGE shape: each micro-batch is a correction/
-    upsert batch, applied with the o17 file-level COW merge (zone-map
-    candidate prune, only hit files rewritten, untouched files reused
-    verbatim) and made EXACTLY-ONCE by the same manifest batch-id
-    watermark e25 uses — a replayed batch is skipped BEFORE any merge
-    work runs, so the non-idempotent-by-nature merge (applying an
-    upsert twice is harmless here, but a general MERGE with
-    aggregating clauses is not) is replay-safe by construction. The
-    first batch bootstraps the empty table (merge_rows_cow's r11
-    bootstrap path). Cost per batch: O(candidate files + batch), the
-    o17 economics on a streaming cadence."""
-    counts = {"committed": 0, "skipped": 0}
-
-    def sink(batch_df, batch_id):
-        if merge_batch_idempotent(
-            spark, table_dir, batch_df, batch_id, key_col=key_col
-        ):
-            counts["committed"] += 1
-        else:
-            counts["skipped"] += 1
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(f"merge-sink drain did not finish in {timeout_s}s")
-    return counts
-
-
 def ivf_delete_batch_idempotent(
     spark, bucket_dir: str, ids_df, batch_id: int
 ) -> bool:
-    """The e30 sink's per-batch applier, exposed so the replay guard
-    is testable in isolation (the e28/merge_batch_idempotent
-    discipline): skip (return False) if the index's sidecar batch-id
-    watermark already covers ``batch_id``, else apply the
+    """Streaming DELETE applier for a published IVF serving index
+    (r12, e30): e30 drains takedown batches of vec_ids into it through
+    ``drain_batches``, and its replay legs call it directly. Skip
+    (return False) if the index's sidecar batch-id watermark already
+    covers ``batch_id``, else apply the
     similarity.ivf_delete_ids partition-scoped rewrite and advance
     the watermark. Ordering note: the watermark is written AFTER the
     rewrite — a crash between them replays the batch, and the delete
@@ -1620,49 +1578,6 @@ def ivf_delete_batch_idempotent(
     return True
 
 
-def streaming_ivf_delete_drain(
-    spark,
-    schema,
-    source_dir: str,
-    bucket_dir: str,
-    ckpt_dir: str,
-    timeout_s: int = 300,
-) -> dict:
-    """Streaming DELETE maintenance of a published IVF serving index
-    (r12, e30 — the r11 verdict's ask #6): v19 closes batch takedown;
-    this is its streaming twin, closing the serving loop end-to-end —
-    a takedown STREAM (micro-batches of vec_ids) applied to the live
-    index via foreachBatch, each batch an O(affected lists) partition
-    rewrite (similarity.ivf_delete_ids), replay-safe via the sidecar
-    batch-id watermark. At 100 TB the serving story becomes: ingest
-    appends (v14), takedowns stream in (e30), queries keep hitting
-    the published store throughout — no rebuild, no downtime window,
-    per-batch latency bounded by the takedown's list fan-out."""
-    counts = {"committed": 0, "skipped": 0}
-
-    def sink(batch_df, batch_id):
-        if ivf_delete_batch_idempotent(spark, bucket_dir, batch_df, batch_id):
-            counts["committed"] += 1
-        else:
-            counts["skipped"] += 1
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(f"ivf-delete drain did not finish in {timeout_s}s")
-    return counts
-
-
 def streaming_corpus_ingest_drain(
     spark,
     schema,
@@ -1672,7 +1587,7 @@ def streaming_corpus_ingest_drain(
     ckpt_dir: str,
     window_tokens: int = 512,
     timeout_s: int = 300,
-) -> dict:
+) -> list[bool]:
     """Streaming COMPOSED corpus ingest (r13, e31 — the r12 verdict's
     ask #6: "the curation pipeline IS the ingest path"): c24's
     html→gopher→exact-dedup→pack stage subset as ONE availableNow
@@ -1706,48 +1621,38 @@ def streaming_corpus_ingest_drain(
     the EARLIEST batch containing any member, so earliest-batch-wins
     + min-in-batch == global min doc_id.
 
-    Returns {committed, skipped} as observed by the sink."""
+    Returns the per-batch commit flags (``drain_batches``)."""
+    return drain_batches(
+        spark, schema, source_dir, ckpt_dir,
+        lambda batch_df, batch_id: corpus_ingest_apply_batch(
+            spark, table_dir, seen_dir, batch_df, batch_id, window_tokens
+        ),
+        "corpus-ingest drain",
+        plan=lambda stream: _curated_docs(stream).select(
+            "doc_id", F.col("source").alias("stream"), "text_clean"
+        ),
+        timeout_s=timeout_s,
+    )
+
+
+def _curated_docs(stream: DataFrame) -> DataFrame:
+    """The stateless curation stages of the streaming corpus ingest
+    (html_to_text → gopher_rules): (doc_id, source, text_clean) of the
+    docs that pass every rule. gate_mask=63 gates inside the operator —
+    the external fail_mask filter was optimizer-pushed below the
+    projections, re-running the interpreted HOF tree per row
+    (gopher_rules docstring, r16)."""
     from cellphe_data_pipeline_spark.operators.text import (
         gopher_rules,
         html_to_text,
     )
 
-    counts = {"committed": 0, "skipped": 0}
-
-    def sink(batch_df, batch_id):
-        if corpus_ingest_apply_batch(
-            spark, table_dir, seen_dir, batch_df, batch_id, window_tokens
-        ):
-            counts["committed"] += 1
-        else:
-            counts["skipped"] += 1
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    # gate_mask=63: in-operator gate — the external fail_mask filter
-    # was optimizer-pushed below the projections, re-running the
-    # interpreted HOF tree per row (gopher_rules docstring, r16)
-    curated = gopher_rules(
+    return gopher_rules(
         html_to_text(stream, keep_cols=["source"]),
         text_col="text_clean",
         keep_cols=["source", "text_clean"],
         gate_mask=63,
-    ).select("doc_id", F.col("source").alias("stream"), "text_clean")
-    q = (
-        curated.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(
-            f"corpus-ingest drain did not finish in {timeout_s}s"
-        )
-    return counts
+    ).select("doc_id", "source", "text_clean")
 
 
 def streaming_corpus_full_ingest_drain(
@@ -1764,7 +1669,7 @@ def streaming_corpus_full_ingest_drain(
     train_bps: int = 9000,
     bench_cutoff: int = 20,
     timeout_s: int = 300,
-) -> dict:
+) -> list[bool]:
     """Streaming corpus ingest at FULL c24 stage parity (r14, e32 —
     the r13 verdict's ask #2): all SIX composed-pipeline stages in one
     availableNow plan. e31 streams the ingest→curate→dedup→pack
@@ -1801,9 +1706,7 @@ def streaming_corpus_full_ingest_drain(
     corpus_ingest_apply_batch). Exactly-once is untouched: the gate is
     deterministic per batch, so replays skip at the same watermarks.
 
-    Returns {committed, skipped} as observed by the sink."""
-    from pyspark.sql import functions as F
-
+    Returns the per-batch commit flags (``drain_batches``)."""
     from cellphe_data_pipeline_spark.functions.scalars import (
         portable_hash64,
     )
@@ -1811,84 +1714,54 @@ def streaming_corpus_full_ingest_drain(
         bloom_decontaminate,
         flag_contaminated,
     )
-    from cellphe_data_pipeline_spark.operators.text import (
-        gopher_rules,
-        html_to_text,
-    )
 
     bench = spark.read.parquet(bench_dir).persist()  # (doc_id, text_clean)
-    bench.count()  # materialize once; every batch's gate reuses it
-    clusters = spark.read.parquet(clusters_dir)  # (doc_id, cluster_id)
-    counts = {"committed": 0, "skipped": 0}
-
-    def gate(b):
-        # candidate-first decontamination: bloom prefilter, exact
-        # verify only the flagged docs, then the c24 admission filters
-        cand = bloom_decontaminate(
-            b, bench, n=4, text_col="text_clean"
-        ).select("doc_id")
-        contam = flag_contaminated(
-            b.join(F.broadcast(cand), "doc_id", "semi"),
-            bench,
-            n=4,
-            text_col="text_clean",
-        ).select("doc_id")
-        return b.filter(F.col("doc_id") >= bench_cutoff).join(
-            F.broadcast(contam), "doc_id", "left_anti"
-        )
-
-    def sink(batch_df, batch_id):
-        if corpus_ingest_apply_batch(
-            spark,
-            table_dir,
-            seen_dir,
-            batch_df,
-            batch_id,
-            window_tokens,
-            post_dedup_gate=gate,
-        ):
-            counts["committed"] += 1
-        else:
-            counts["skipped"] += 1
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    # gate_mask=63: in-operator gate — see gopher_rules docstring (r16)
-    curated = gopher_rules(
-        html_to_text(stream, keep_cols=["source"]),
-        text_col="text_clean",
-        keep_cols=["source", "text_clean"],
-        gate_mask=63,
-    ).select("doc_id", "source", "text_clean")
-    key = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
-    split = F.when(
-        portable_hash64(key.cast("string"), seed=split_seed) % 10000
-        < train_bps,
-        "train",
-    ).otherwise("val")
-    labeled = (
-        curated.join(F.broadcast(clusters), "doc_id", "left")
-        .withColumn("stream", F.concat_ws("/", split, F.col("source")))
-        .select("doc_id", "stream", "text_clean")
-    )
-    q = (
-        labeled.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise RuntimeError(
-                f"full corpus-ingest drain did not finish in {timeout_s}s"
+        bench.count()  # materialize once; every batch's gate reuses it
+        clusters = spark.read.parquet(clusters_dir)  # (doc_id, cluster_id)
+
+        def gate(b):
+            # candidate-first decontamination: bloom prefilter, exact
+            # verify only the flagged docs, then the c24 admission filters
+            cand = bloom_decontaminate(
+                b, bench, n=4, text_col="text_clean"
+            ).select("doc_id")
+            contam = flag_contaminated(
+                b.join(F.broadcast(cand), "doc_id", "semi"),
+                bench,
+                n=4,
+                text_col="text_clean",
+            ).select("doc_id")
+            return b.filter(F.col("doc_id") >= bench_cutoff).join(
+                F.broadcast(contam), "doc_id", "left_anti"
             )
+
+        def label(stream):
+            key = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
+            split = F.when(
+                portable_hash64(key.cast("string"), seed=split_seed) % 10000
+                < train_bps,
+                "train",
+            ).otherwise("val")
+            return (
+                _curated_docs(stream)
+                .join(F.broadcast(clusters), "doc_id", "left")
+                .withColumn("stream", F.concat_ws("/", split, F.col("source")))
+                .select("doc_id", "stream", "text_clean")
+            )
+
+        return drain_batches(
+            spark, schema, source_dir, ckpt_dir,
+            lambda batch_df, batch_id: corpus_ingest_apply_batch(
+                spark, table_dir, seen_dir, batch_df, batch_id,
+                window_tokens, post_dedup_gate=gate,
+            ),
+            "full corpus-ingest drain",
+            plan=label,
+            timeout_s=timeout_s,
+        )
     finally:
         bench.unpersist()
-    return counts
 
 
 def mor_takedown_apply_batch(
@@ -1906,17 +1779,14 @@ def mor_takedown_apply_batch(
     o24 MOR tier — snapshot-wide tombstones, so a key taken down in
     batch k stays masked even if some ingest re-delivers it later) and
     the idempotent-by-batch-id commit discipline every streaming sink
-    here uses. Returns True iff this call committed."""
+    here uses. e33 drains takedown batches into it through
+    ``drain_batches``. Returns True iff this call committed."""
     from cellphe_data_pipeline_spark.sources.io import (
-        snapshot_current,
+        snapshot_batch_watermark,
         snapshot_delete_keys,
-        snapshot_manifest,
     )
 
-    cur = snapshot_current(table_dir)
-    last = -1
-    if cur > 0:
-        last = snapshot_manifest(table_dir, cur).get("last_batch_id", -1)
+    _, last = snapshot_batch_watermark(table_dir)
     if batch_id <= last:
         return False
     snapshot_delete_keys(
@@ -1929,59 +1799,6 @@ def mor_takedown_apply_batch(
     return True
 
 
-def streaming_mor_takedown_drain(
-    spark,
-    schema,
-    source_dir: str,
-    table_dir: str,
-    ckpt_dir: str,
-    key_col: str,
-    timeout_s: int = 300,
-) -> dict:
-    """Streaming TAKEDOWN against a published table via MOR tombstone
-    commits (r14, e33) — the table-format completion of the takedown
-    family (c21 closure computes WHAT to remove; v19/e30 delete from
-    the serving index; this removes from the CORPUS TABLE itself):
-    each micro-batch of takedown keys lands as one equality-delete
-    commit, so the keys are masked for every reader at the NEXT read
-    after the commit — takedown latency is one micro-batch, not one
-    compaction cycle — and the data rewrite happens later, bounded by
-    stats, on the maintenance cadence (snapshot_apply_deletes).
-
-    At 100 TB this is the only shape that meets takedown SLAs: the
-    urgent path writes O(keys) bytes; the expensive path (rewriting
-    the files that contain them) is deferred and batched. Exactly-once
-    via the manifest watermark; a full replay is all-refusals with
-    the table byte-identical (asserted by the e33 query)."""
-    counts = {"committed": 0, "skipped": 0}
-
-    def sink(batch_df, batch_id):
-        if mor_takedown_apply_batch(
-            spark, table_dir, key_col, batch_df, batch_id
-        ):
-            counts["committed"] += 1
-        else:
-            counts["skipped"] += 1
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(
-            f"mor-takedown drain did not finish in {timeout_s}s"
-        )
-    return counts
-
-
 def corpus_ingest_apply_batch(
     spark,
     table_dir: str,
@@ -1991,10 +1808,9 @@ def corpus_ingest_apply_batch(
     window_tokens: int = 512,
     post_dedup_gate=None,
 ) -> bool:
-    """The e31 sink's per-batch applier, exposed (the e28
-    merge_batch_idempotent discipline) so the exactly-once semantics
-    are testable in isolation — in particular the PARTIAL-CRASH leg
-    the drain cannot easily orchestrate: the two tables commit
+    """Per-batch applier of the streaming corpus ingest (e31, e32 via
+    ``drain_batches``), testable alone — in particular the
+    PARTIAL-CRASH leg a drain cannot easily orchestrate: the two tables commit
     non-atomically, each guarded by its OWN last_batch_id watermark,
     so a crash between the windows commit and the seen commit replays
     into one skip + one commit, never a double-apply on either side.
@@ -2010,7 +1826,8 @@ def corpus_ingest_apply_batch(
     a replay of the whole batch — "seen missing a batch the
     checkpoint already covers" (which would silently re-admit that
     batch's duplicates forever) cannot occur. Returns True iff the
-    WINDOWS table committed (the drain's counting contract).
+    WINDOWS table committed, which is the commit flag the drain
+    reports for the batch.
 
     ``post_dedup_gate`` (r14, e32): an optional callable applied to
     the deduped, seen-filtered batch to select the subset that PACKS —
@@ -2031,19 +1848,12 @@ def corpus_ingest_apply_batch(
         explode_token_windows,
     )
     from cellphe_data_pipeline_spark.sources.io import (
+        snapshot_batch_watermark,
         snapshot_commit_sharded,
-        snapshot_current,
         snapshot_data_files,
         snapshot_manifest,
         snapshot_read,
     )
-
-    def _last(tdir):
-        cur = snapshot_current(tdir)
-        if cur == 0:
-            return cur, -1, {}
-        man = snapshot_manifest(tdir, cur)
-        return cur, man.get("last_batch_id", -1), man.get("pack_offsets", {})
 
     b = batch_df.withColumn("_h", F.md5("text_clean"))
     win = Window.partitionBy("_h").orderBy("doc_id")
@@ -2052,7 +1862,7 @@ def corpus_ingest_apply_batch(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    seen_cur, seen_last, _ = _last(seen_dir)
+    seen_cur, seen_last = snapshot_batch_watermark(seen_dir)
     if seen_cur > 0:
         b = b.join(
             snapshot_read(spark, seen_dir, seen_cur), "_h", "left_anti"
@@ -2060,8 +1870,13 @@ def corpus_ingest_apply_batch(
     b = b.persist()  # two consumers below; tiny (one micro-batch)
     committed = False
     try:
-        cur, last, offsets = _last(table_dir)
+        cur, last = snapshot_batch_watermark(table_dir)
         if batch_id > last:
+            offsets = (
+                snapshot_manifest(table_dir, cur).get("pack_offsets", {})
+                if cur > 0
+                else {}
+            )
             packable = post_dedup_gate(b) if post_dedup_gate else b
             base = spark.createDataFrame(
                 list(offsets.items()) or [("", 0)],
@@ -2157,30 +1972,25 @@ def kmv_distinct_apply_batch(
     checked against last_batch_id before any write, and each commit
     REPLACES the previous sketch files (removed_files) — sketch-sized
     bytes per commit, never corpus-sized. Returns True iff this call
-    committed."""
+    committed. e34 drains its batches into it through
+    ``drain_batches``."""
     from cellphe_data_pipeline_spark.operators.aggregates import (
         kmv_merge,
         kmv_sketch,
     )
     from cellphe_data_pipeline_spark.sources.io import (
+        snapshot_batch_watermark,
         snapshot_commit_sharded,
-        snapshot_current,
         snapshot_data_files,
         snapshot_files,
-        snapshot_manifest,
         snapshot_read,
     )
     import os
 
-    cur = snapshot_current(table_dir)
-    last = -1
-    old_files: list[str] = []
-    if cur > 0:
-        man = snapshot_manifest(table_dir, cur)
-        last = man.get("last_batch_id", -1)
-        old_files = snapshot_files(table_dir, cur)
+    cur, last = snapshot_batch_watermark(table_dir)
     if batch_id <= last:
         return False
+    old_files = snapshot_files(table_dir, cur) if cur > 0 else []
     batch_sk = kmv_sketch(batch_df, key_col, tag_col, k=k)
     if old_files:
         merged = kmv_merge(
@@ -2200,59 +2010,6 @@ def kmv_distinct_apply_batch(
         extra={"last_batch_id": batch_id},
     )
     return True
-
-
-def streaming_kmv_distinct_drain(
-    spark,
-    schema,
-    source_dir: str,
-    table_dir: str,
-    ckpt_dir: str,
-    key_col: str,
-    tag_col: str,
-    k: int = 512,
-    timeout_s: int = 300,
-) -> dict:
-    """Streaming DISTINCT-COUNT sketches per tag (r15, e34) — the
-    sketch-lifecycle completion of the streaming family: e11 streams
-    count-min (frequency), e19 streams moment profiles, this streams
-    KMV distinct sketches, the one streaming aggregate whose exact
-    form needs unbounded state. Each micro-batch folds into a stored
-    bottom-k sketch table via the kmv_merge semilattice; any later
-    union/intersection across tags or time-slices reads O(k) rows
-    (the a29/a30 lifecycle, fed by a stream instead of a batch
-    ingest). Exactly-once via the manifest watermark; a full replay
-    is all-refusals with the sketch table byte-identical (asserted by
-    the e34 query). At 100 TB: per-batch cost is one distinct shuffle
-    over the BATCH plus a k·tags-row merge; state never exceeds
-    k·tags rows however long the stream runs."""
-    counts = {"committed": 0, "skipped": 0}
-
-    def sink(batch_df, batch_id):
-        if kmv_distinct_apply_batch(
-            spark, table_dir, key_col, tag_col, batch_df, batch_id, k=k
-        ):
-            counts["committed"] += 1
-        else:
-            counts["skipped"] += 1
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(
-            f"kmv-distinct drain did not finish in {timeout_s}s"
-        )
-    return counts
 
 
 def cdc_apply_batch(
@@ -2299,7 +2056,8 @@ def cdc_apply_batch(
     map) to skip completed work. The undelete runs LAST so no earlier
     step of the same attempt can observe the keys unmasked.
     Single-writer contract (one streaming query per checkpoint), as
-    for every sink here. Returns {"merged", "purged", "inserted",
+    for every sink here; e35 drains the feed into it through
+    ``drain_batches``. Returns {"merged", "purged", "inserted",
     "deleted", "undeleted"} booleans — False = skipped (replay) or
     empty."""
     from pyspark.sql import functions as F
@@ -2474,52 +2232,3 @@ def cdc_apply_batch(
         )
         out["undeleted"] = True
     return out
-
-
-def streaming_cdc_apply_drain(
-    spark,
-    schema,
-    source_dir: str,
-    table_dir: str,
-    ckpt_dir: str,
-    key_col: str,
-    timeout_s: int = 300,
-) -> dict:
-    """Streaming CDC-APPLY sink (r15, e35): a change-data feed drains
-    into a materialized downstream table through foreachBatch, each
-    micro-batch routed to the cost-right primitives (COW merge for
-    updates, watermarked append + un-tombstone for inserts, MOR
-    tombstone for deletes — see cdc_apply_batch). This is the
-    consumer topology Delta CDF / Iceberg changelog users run to keep
-    a derived table live; with the r15 MOR-aware feed (o28), the pair
-    closes the loop: takedowns propagate from source table to every
-    derived table at streaming latency, with exactly-once per step.
-    At 100 TB: per-batch cost is O(batch) for inserts/deletes and
-    O(affected files) for updates; the table never rewrites at feed
-    cadence."""
-    counts = {
-        "batches": 0, "merged": 0, "purged": 0,
-        "inserted": 0, "deleted": 0, "undeleted": 0,
-    }
-
-    def sink(batch_df, batch_id):
-        r = cdc_apply_batch(spark, table_dir, key_col, batch_df, batch_id)
-        counts["batches"] += 1
-        for k in ("merged", "purged", "inserted", "deleted", "undeleted"):
-            counts[k] += int(r[k])
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(source_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise RuntimeError(f"cdc-apply drain did not finish in {timeout_s}s")
-    return counts

@@ -167,9 +167,7 @@ def fake_video_df(spark: SparkSession) -> DataFrame:
     """Two-shot video in one FAKE1 container: frames 0-2 are base scene A
     plus small jitter, frames 3-5 are base scene B plus jitter — so the
     only large temporal difference is at frame 3 (the cut)."""
-    import zlib
-
-    from cellphe_data_pipeline_spark.domain.images import FAKE_MAGIC
+    from cellphe_data_pipeline_spark.domain.images import encode_fake_container
 
     rng = np.random.RandomState(11)
     h = w = 16
@@ -179,12 +177,7 @@ def fake_video_df(spark: SparkSession) -> DataFrame:
         np.clip(base + rng.randint(-5, 6, (h, w)), 0, 255)
         for base in [base_a] * 3 + [base_b] * 3
     ]
-    arr = np.stack(frames).astype(np.uint8)
-    payload = (
-        FAKE_MAGIC
-        + np.array([h, w, len(frames)], dtype="<u4").tobytes()
-        + zlib.compress(arr.tobytes())
-    )
+    payload = encode_fake_container(np.stack(frames).astype(np.uint8))
     return spark.createDataFrame(
         [("vid11.fake", bytearray(payload))], "path string, content binary"
     )

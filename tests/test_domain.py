@@ -5,7 +5,6 @@ chain (golden fixture per SURVEY §5)."""
 from __future__ import annotations
 
 import math
-import zlib
 
 import numpy as np
 import pytest
@@ -2601,12 +2600,10 @@ def test_frame_dhash_numpy_oracle(spark):
     equal an independent numpy implementation (block mean, half-up
     rounding, adjacent-column comparisons); brightness shift preserves
     the code family (small hamming), constants hash to 0."""
-    import zlib
-
     import numpy as np
 
     from cellphe_data_pipeline_spark.domain.images import (
-        FAKE_MAGIC,
+        encode_fake_container,
         frame_dhash,
         split_frames,
     )
@@ -2617,11 +2614,7 @@ def test_frame_dhash_numpy_oracle(spark):
         "b.fake": np.minimum(255, ((xx * 7 + yy * 3) % 256) + 40).astype(np.uint8),
         "c.fake": np.full((32, 32), 9, np.uint8),
     }
-    rows = [
-        (n, bytearray(FAKE_MAGIC + np.array([32, 32, 1], "<u4").tobytes()
-                      + zlib.compress(im.tobytes())))
-        for n, im in imgs.items()
-    ]
+    rows = [(n, bytearray(encode_fake_container(im))) for n, im in imgs.items()]
     bins = spark.createDataFrame(rows, "path string, content binary")
     got = {r["path"]: r["dhash"] for r in frame_dhash(split_frames(bins)).collect()}
 
@@ -2757,12 +2750,10 @@ def test_frame_phash_invariances_and_oracle(spark):
     positive contrast scaling (DC dropped + median threshold); a
     structurally different image lands far away in Hamming space."""
     import math
-    import zlib as _zlib
-
     import numpy as np
 
     from cellphe_data_pipeline_spark.domain.images import (
-        FAKE_MAGIC,
+        encode_fake_container,
         frame_phash,
         split_frames,
     )
@@ -2800,14 +2791,7 @@ def test_frame_phash_invariances_and_oracle(spark):
         "other.fake": (((31 - xx) * 11 + yy * 7) % 200).astype(np.uint8),
     }
     rows = [
-        (
-            name,
-            bytearray(
-                FAKE_MAGIC
-                + np.array([32, 32, 1], dtype="<u4").tobytes()
-                + _zlib.compress(img.tobytes())
-            ),
-        )
+        (name, bytearray(encode_fake_container(img)))
         for name, img in imgs.items()
     ]
     bins = spark.createDataFrame(rows, "path string, content binary")
@@ -2833,18 +2817,14 @@ def test_decode_segment_centroid_matches_numpy_oracle(spark):
     bincount, exact for these integer sums). A blank frame must come
     out with ``cents == []``."""
     from cellphe_data_pipeline_spark.domain.images import (
-        FAKE_MAGIC,
         _fake_segment,
         _otsu_segment,
         decode_frame,
+        encode_fake_container,
         make_fake_timelapse,
     )
 
-    blank = (
-        FAKE_MAGIC
-        + np.array([12, 10, 1], dtype="<u4").tobytes()
-        + zlib.compress(np.zeros((12, 10), dtype=np.uint8).tobytes())
-    )
+    blank = encode_fake_container(np.zeros((12, 10), dtype=np.uint8))
     payloads = {
         f"tl_{i}.fake": make_fake_timelapse(seed=200 + i, height=40, width=40, n_frames=4)
         for i in range(3)

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from cellphe_data_pipeline_spark.domain.images import make_fake_image
+from cellphe_data_pipeline_spark.domain.images import encode_fake_container, make_fake_image
 from cellphe_data_pipeline_spark.plans.pipeline import run_pipeline
 
 
@@ -151,7 +151,7 @@ def test_pipeline_split_tracks(spark):
     disk(frames[2], 6, 10)   # near child: continues the parent track
     disk(frames[2], 15, 10)  # far child: reachable only via the split link
     bins = spark.createDataFrame(
-        [("div.fake", bytearray(fake1_container(frames)))], "path string, content binary"
+        [("div.fake", bytearray(encode_fake_container(frames)))], "path string, content binary"
     )
     out = run_pipeline(
         bins,
@@ -600,7 +600,7 @@ def test_pipeline_frames_starting_with_container_magic(spark):
 
     def summary(stack):
         bins = spark.createDataFrame(
-            [("tl.fake", bytearray(fake1_container(stack)))], "path string, content binary"
+            [("tl.fake", bytearray(encode_fake_container(stack)))], "path string, content binary"
         )
         rows = run_pipeline(bins)["summary"].collect()
         return sorted(tuple(r) for r in rows)
@@ -610,18 +610,6 @@ def test_pipeline_frames_starting_with_container_magic(spark):
     assert got == summary(frames)
 
 
-def fake1_container(stack) -> bytes:
-    """A FAKE1 container holding the uint8 frames of ``stack`` (n, h, w)."""
-    import zlib
-
-    import numpy as np
-
-    from cellphe_data_pipeline_spark.domain.images import FAKE_MAGIC
-
-    n, h, w = stack.shape
-    return FAKE_MAGIC + np.array([h, w, n], dtype="<u4").tobytes() + zlib.compress(stack.tobytes())
-
-
 def _degenerate_inputs():
     import numpy as np
 
@@ -629,8 +617,8 @@ def _degenerate_inputs():
 
     return {
         "empty-dir": {},
-        "zero-frames": {"tl.fake": fake1_container(np.zeros((0, 32, 32), np.uint8))},
-        "all-background": {"tl.fake": fake1_container(np.zeros((4, 32, 32), np.uint8))},
+        "zero-frames": {"tl.fake": encode_fake_container(np.zeros((0, 32, 32), np.uint8))},
+        "all-background": {"tl.fake": encode_fake_container(np.zeros((4, 32, 32), np.uint8))},
         "one-frame": {"tl.fake": make_fake_timelapse(seed=7, height=32, width=32, n_frames=1)},
     }
 

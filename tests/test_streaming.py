@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cellphe_data_pipeline_spark.sources.tables import load_table
+from cellphe_data_pipeline_spark.streaming.tracker import drain
 
 
 def _stage_events(spark, sf_dir, tmp_path, n_users=20):
@@ -23,15 +24,14 @@ def test_streaming_window_rollup_matches_batch(spark, sf_dir, tmp_path):
 
     ev, path = _stage_events(spark, sf_dir, tmp_path)
     stream = spark.readStream.schema(ev.schema).parquet(path)
-    q = (
+    drain(
         streaming_window_rollup(stream)
         .writeStream.format("memory")
         .queryName("rollup_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "rollup_test",
+        timeout_s=120,
     )
-    q.awaitTermination(120)
     got = {
         (r["win"]["start"], r["event_type"]): (r["n"], r["sum_value"])
         for r in spark.sql("SELECT * FROM rollup_test").collect()
@@ -73,15 +73,14 @@ def test_streaming_movement_matches_batch(spark, sf_dir, tmp_path):
     staged = str(tmp_path / "pts_stream")
     prep(ev).write.mode("overwrite").parquet(staged)
     stream = spark.readStream.schema(pts).parquet(staged)
-    q = (
+    drain(
         streaming_movement_features(stream, t_col="t")
         .writeStream.format("memory")
         .queryName("move_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "move_test",
+        timeout_s=120,
     )
-    q.awaitTermination(120)
     got = {
         (r["key"], r["seq"]): (r["Dis"], r["frame_dist"], r["Trac"], r["D2T"], r["Vel"])
         for r in spark.sql("SELECT * FROM move_test").collect()
@@ -124,15 +123,14 @@ def test_streaming_session_summary_emits_on_timeout(spark, tmp_path):
         df.coalesce(1).write.mode("append").parquet(path)
 
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
-    q = (
+    drain(
         streaming_session_summary(stream, watermark="1 minute", gap_ms=4 * 60 * 1000)
         .writeStream.format("memory")
         .queryName("sess_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "sess_test",
+        timeout_s=120,
     )
-    q.awaitTermination(120)
     got = {r["key"]: r for r in spark.sql("SELECT * FROM sess_test").collect()}
     assert 1 in got  # user 1's session closed by event-time timeout
     assert got[1]["n_obs"] == 2
@@ -161,15 +159,14 @@ def test_streaming_session_windows_merge_across_batches(spark, sf_dir, tmp_path)
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    q = (
+    drain(
         streaming_session_windows(stream)
         .writeStream.format("memory")
         .queryName("session_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        "session_test",
+        timeout_s=180,
     )
-    assert q.awaitTermination(180)
     got = {
         (r["user_id"], r["session_window"]["start"]): (
             r["session_window"]["end"],
@@ -221,15 +218,14 @@ def test_streaming_session_windows_append_emits_closed_sessions(spark, tmp_path)
     path = str(tmp_path / "append_sessions")
     ev.coalesce(1).write.mode("overwrite").parquet(path)
     stream = spark.readStream.schema(ev.schema).parquet(path)
-    q = (
+    drain(
         streaming_session_windows(stream, watermark="0 seconds")
         .writeStream.format("memory")
         .queryName("session_append_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "session_append_test",
+        timeout_s=180,
     )
-    assert q.awaitTermination(180)
     got = {
         (r["user_id"], r["session_window"]["start"]): (
             r["n_events"],
@@ -251,15 +247,14 @@ def test_streaming_exact_dedup(spark, sf_dir, tmp_path):
 
     ev, path = _stage_events(spark, sf_dir, tmp_path)
     stream = spark.readStream.schema(ev.schema).parquet(path)
-    q = (
+    drain(
         streaming_exact_dedup(stream, ["user_id", "event_type"])
         .writeStream.format("memory")
         .queryName("dedup_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "dedup_test",
+        timeout_s=120,
     )
-    q.awaitTermination(120)
     got = spark.sql("SELECT user_id, event_type FROM dedup_test").collect()
     keys = {(r["user_id"], r["event_type"]) for r in got}
     assert len(got) == len(keys)  # exactly one row per key
@@ -321,14 +316,13 @@ def test_streaming_exact_dedup_eviction_across_watermark(spark, tmp_path):
         batches[int(epoch_id)] = sorted(r["k"] for r in df.collect())
 
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(src))
-    q = (
+    drain(
         streaming_exact_dedup(stream, ["k"], ts_col="ts", watermark="10 minutes")
         .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "test_streaming_exact_dedup_eviction_across_watermark",
+        timeout_s=120,
     )
-    q.awaitTermination(120)
 
     emitted = [ks for _, ks in sorted(batches.items()) if ks]
     assert emitted[0] == ["K", "L"]          # first arrivals
@@ -382,16 +376,15 @@ def test_streaming_tracker_matches_batch_partition(spark, tmp_path):
     stream = spark.readStream.schema(
         "timelapse_id string, id bigint, frame int, x double, y double"
     ).option("maxFilesPerTrigger", 1).parquet(str(d))
-    q = (
+    drain(
         streaming_tracker(stream, linking_max_distance=5.0, max_frame_gap=4,
                           gap_closing_max_distance=10.0)
         .writeStream.format("memory")
         .queryName("strack_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "strack_test",
+        timeout_s=120,
     )
-    q.awaitTermination(120)
     got = spark.sql("SELECT * FROM strack_test").collect()
     assert len(got) == len(dets)  # one assignment per detection
     stream_tracks: dict = {}
@@ -465,15 +458,14 @@ def test_streaming_interval_pairs_matches_batch(spark, sf_dir, tmp_path):
     path = str(tmp_path / "iv_stream")
     ev.write.mode("overwrite").parquet(path)
     stream = spark.readStream.schema(ev.schema).parquet(path)
-    q = (
+    drain(
         streaming_interval_pairs(stream, window_seconds=60)
         .writeStream.format("memory")
         .queryName("iv_pairs")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "iv_pairs",
+        timeout_s=120,
     )
-    q.awaitTermination(120)
     got = spark.sql("SELECT l_id, r_id FROM iv_pairs").collect()
     pairs = {(r["l_id"], r["r_id"]) for r in got}
     assert len(pairs) == len(got)  # ±1-bucket explode introduces no dup pairs
@@ -528,15 +520,14 @@ def test_streaming_minhash_neardup_matches_batch(spark, tmp_path):
     path = str(tmp_path / "docs_stream")
     df.write.mode("overwrite").parquet(path)
     stream = spark.readStream.schema(df.schema).parquet(path)
-    q = (
+    drain(
         streaming_minhash_neardup(stream, horizon_seconds=3600, band_size=2)
         .writeStream.format("memory")
         .queryName("mh_pairs")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "mh_pairs",
+        timeout_s=120,
     )
-    q.awaitTermination(120)
     got = {
         (r["doc_a"], r["doc_b"])
         for r in spark.sql("SELECT doc_a, doc_b FROM mh_pairs").collect()
@@ -589,15 +580,14 @@ def test_streaming_upsert_matches_batch_merge(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    q = (
+    drain(
         streaming_upsert(stream)
         .writeStream.format("memory")
         .queryName("upsert_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "upsert_test",
+        timeout_s=120,
     )
-    q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM upsert_test").collect()
     # a sink applying rows in arrival order keeps each key's LAST row;
     # memory sink appends in batch order, so last occurrence wins
@@ -655,15 +645,14 @@ def test_streaming_upsert_null_only_key_emits_nothing(spark, tmp_path):
     staged = str(tmp_path / "null_upsert")
     spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(staged)
     stream = spark.readStream.schema(schema).parquet(staged)
-    q = (
+    drain(
         streaming_upsert(stream)
         .writeStream.format("memory")
         .queryName("null_upsert_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "null_upsert_test",
+        timeout_s=120,
     )
-    q.awaitTermination(120)
     out = {r["key"]: r for r in spark.sql("SELECT * FROM null_upsert_test").collect()}
     assert 1 not in out  # null-only key: nothing emitted
     assert out[2]["t_ms"] == 100 and out[2]["last_seq"] == 7
@@ -703,15 +692,14 @@ def test_streaming_ewma_chains_state_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    q = (
+    q = drain(
         streaming_ewma(stream)
         .writeStream.format("memory")
         .queryName("ewma_chain_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "ewma_chain_test",
+        timeout_s=120,
     )
-    assert q.awaitTermination(120)
     assert q.lastProgress is not None and q.recentProgress is not None
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
@@ -765,15 +753,14 @@ def test_streaming_gap_fill_emits_gaps_across_batch_boundaries(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    q = (
+    q = drain(
         streaming_gap_fill(stream)
         .writeStream.format("memory")
         .queryName("gapfill_chain_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "gapfill_chain_test",
+        timeout_s=120,
     )
-    assert q.awaitTermination(120)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
     got = {
@@ -820,15 +807,14 @@ def test_streaming_ewma_horizon_one_keeps_no_state(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    q = (
+    drain(
         streaming_ewma(stream, horizon=1)
         .writeStream.format("memory")
         .queryName("ewma_h1_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "ewma_h1_test",
+        timeout_s=120,
     )
-    assert q.awaitTermination(120)
     got = {
         r["event_id"]: r["ewma"]
         for r in spark.sql("SELECT * FROM ewma_h1_test").collect()
@@ -851,15 +837,14 @@ def test_streaming_ewma_null_key_batch_is_dropped_not_crashed(spark, tmp_path):
     staged = str(tmp_path / "ewma_nullkey")
     df.coalesce(1).write.parquet(staged)
     stream = spark.readStream.schema(df.schema).parquet(staged)
-    q = (
+    drain(
         streaming_ewma(stream)
         .writeStream.format("memory")
         .queryName("ewma_nullkey_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "ewma_nullkey_test",
+        timeout_s=120,
     )
-    assert q.awaitTermination(120)
     got = spark.sql("SELECT * FROM ewma_nullkey_test").collect()
     assert sorted(r["event_id"] for r in got) == [0, 2]
 
@@ -892,16 +877,15 @@ def test_streaming_ewma_out_of_order_batch_raises(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    q = (
-        streaming_ewma(stream)
-        .writeStream.format("memory")
-        .queryName("ewma_ooo_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
     with pytest.raises(StreamingQueryException) as ei:
-        q.awaitTermination(120)
+        drain(
+            streaming_ewma(stream)
+            .writeStream.format("memory")
+            .queryName("ewma_ooo_test")
+            .outputMode("append"),
+            "ewma_ooo_test",
+            timeout_s=120,
+        )
     assert "key-monotone ordering contract" in str(ei.value)
 
 
@@ -948,7 +932,7 @@ def test_streaming_ingest_lifecycle_dedups_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    q = (
+    q = drain(
         streaming_ingest_lifecycle(
             stream,
             dedup_keys=["user_id", "event_id"],
@@ -956,11 +940,10 @@ def test_streaming_ingest_lifecycle_dedups_across_batches(spark, tmp_path):
         )
         .writeStream.format("memory")
         .queryName("lifecycle_chain_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "lifecycle_chain_test",
+        timeout_s=120,
     )
-    assert q.awaitTermination(120)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     assert n_batches >= 2, f"expected >=2 micro-batches, got {n_batches}"
     sink = spark.sql("SELECT * FROM lifecycle_chain_test").collect()
@@ -1020,14 +1003,13 @@ def test_streaming_dedup_rollup_chain_across_batches(spark, tmp_path):
         .groupBy("event_type", F.window("ts", "1 hour").alias("win"))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
     )
-    q = (
+    q = drain(
         out.writeStream.format("memory")
         .queryName("dedup_rollup_chain_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "dedup_rollup_chain_test",
+        timeout_s=120,
     )
-    assert q.awaitTermination(120)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
     got = {
@@ -1088,15 +1070,14 @@ def test_streaming_join_rollup_chains_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    q = (
+    q = drain(
         streaming_join_rollup(stream)
         .writeStream.format("memory")
         .queryName("join_rollup_chain_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "join_rollup_chain_test",
+        timeout_s=120,
     )
-    assert q.awaitTermination(120)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
     got = {
@@ -1176,15 +1157,14 @@ def test_streaming_profile_folds_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    q = (
+    q = drain(
         streaming_profile(stream, ["a"])
         .writeStream.format("memory")
         .queryName("profile_fold_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        "profile_fold_test",
+        timeout_s=120,
     )
-    assert q.awaitTermination(120)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     assert n_batches >= 3, f"expected >=3 micro-batches, got {n_batches}"
     r = spark.sql("SELECT * FROM profile_fold_test").collect()
@@ -1251,15 +1231,14 @@ def test_append_rollup_two_watermark_protocol(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(staged)
     )
-    q = (
+    drain(
         streaming_append_rollup(stream)
         .writeStream.format("memory")
         .queryName("late_drop_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "late_drop_test",
+        timeout_s=300,
     )
-    assert q.awaitTermination(300)
     got = {
         r["win"]["start"].strftime("%H"): (r["n"], r["sum_value"])
         for r in spark.table("late_drop_test").collect()
@@ -1320,15 +1299,14 @@ def test_dedup_within_watermark_expiry_lifecycle(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(staged)
     )
-    q = (
+    drain(
         streaming_dedup_within_watermark(stream, watermark="3 days")
         .writeStream.format("memory")
         .queryName("dedup_expiry_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        "dedup_expiry_test",
+        timeout_s=300,
     )
-    assert q.awaitTermination(300)
     got = sorted(
         (r["key"], r["ts"].strftime("%m-%d"))
         for r in spark.table("dedup_expiry_test").collect()
@@ -1430,15 +1408,14 @@ def test_streaming_static_enrich_stateless_join(spark, sf_dir, tmp_path):
         )
     )
     stream = spark.readStream.schema(ev.schema).parquet(path)
-    q = (
+    q = drain(
         streaming_static_enrich_rollup(stream, dim)
         .writeStream.format("memory")
         .queryName("enrich_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        "enrich_test",
+        timeout_s=120,
     )
-    q.awaitTermination(120)
     state_ops = q.lastProgress["stateOperators"]
     assert len(state_ops) == 1, state_ops  # agg only; the join is stateless
     assert state_ops[0]["operatorName"] == "stateStoreSave", state_ops  # the agg's save; no symmetricHashJoin op
@@ -1534,14 +1511,13 @@ def test_streaming_observe_metrics_fold_across_batches(spark, sf_dir, tmp_path):
     observed = stream.observe(
         "obs_test", F.count(F.lit(1)).alias("obs_rows")
     ).groupBy("event_type").count()
-    q = (
+    q = drain(
         observed.writeStream.format("memory")
         .queryName("obs_fold_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("complete"),
+        "obs_fold_sink",
+        timeout_s=120,
     )
-    q.awaitTermination(120)
     per_batch = [
         p["observedMetrics"]["obs_test"]["obs_rows"]
         for p in q.recentProgress
@@ -1904,3 +1880,150 @@ def test_cdc_apply_batch_insert_then_update_and_tombstoned_update(
         "deleted": False, "undeleted": True,
     }, r2
     assert state(t3) == {1: 10, 9: 99}
+
+
+def _stage_marked_files(spark, tmp_path, order):
+    """Stage one single-row parquet file per marker, named in ``order``
+    but with mtimes increasing by marker, so mtime order (the order the
+    file source replays) is not the lexical order of the names."""
+    import os
+
+    staged = str(tmp_path / "marked")
+    os.makedirs(staged)
+    for name, marker in order:
+        d = str(tmp_path / f"tmp_{name}")
+        spark.createDataFrame([(marker,)], "marker int").coalesce(1).write.parquet(d)
+        [f] = [x for x in os.listdir(d) if x.endswith(".parquet")]
+        dst = os.path.join(staged, f"{name}.parquet")
+        os.rename(os.path.join(d, f), dst)
+        t = 1_700_000_000 + 100 * marker
+        os.utime(dst, (t, t))
+    return staged
+
+
+def test_drain_timeout_stops_query_and_names_label(spark, tmp_path):
+    """A drain that has not finished when its timeout expires is
+    stopped, and the error names the caller's label."""
+    from cellphe_data_pipeline_spark.streaming.tracker import ordered_file_stream
+
+    staged = _stage_marked_files(spark, tmp_path, [("a", 0), ("b", 1), ("c", 2)])
+    writer = (
+        ordered_file_stream(spark, "marker int", staged)
+        .writeStream.format("memory")
+        .queryName("drain_timeout_test")
+        .outputMode("append")
+    )
+    with pytest.raises(RuntimeError, match="tiny_timeout_label"):
+        drain(writer, "tiny_timeout_label", timeout_s=0.001)
+    assert spark.streams.active == []
+
+
+def test_drain_batches_applies_files_in_mtime_order(spark, tmp_path):
+    """One staged file per micro-batch, replayed in mtime order: the
+    applier sees batch ids 0, 1, 2 holding the files' markers in that
+    order, and its results come back in batch order."""
+    from cellphe_data_pipeline_spark.streaming.tracker import drain_batches
+
+    staged = _stage_marked_files(spark, tmp_path, [("c", 0), ("a", 1), ("b", 2)])
+
+    def apply(batch_df, batch_id):
+        return batch_id, sorted(r["marker"] for r in batch_df.collect())
+
+    got = drain_batches(
+        spark, "marker int", staged, str(tmp_path / "ckpt"), apply, "order_test"
+    )
+    assert got == [(0, [0]), (1, [1]), (2, [2])]
+
+
+def test_drain_batches_replay_with_fresh_checkpoint_is_refused(spark, tmp_path):
+    """The exactly-once recipe end to end: a second drain of the same
+    files under a fresh checkpoint re-delivers batch ids 0-2, which the
+    snapshot sink's watermark refuses, and the table does not advance."""
+    from cellphe_data_pipeline_spark.sources.io import (
+        snapshot_append_batch,
+        snapshot_current,
+        snapshot_read,
+    )
+    from cellphe_data_pipeline_spark.streaming.tracker import drain_batches
+
+    staged = _stage_marked_files(spark, tmp_path, [("a", 0), ("b", 1), ("c", 2)])
+    table = str(tmp_path / "table")
+
+    def append(batch_df, batch_id):
+        return snapshot_append_batch(table, batch_df, batch_id)
+
+    first = drain_batches(
+        spark, "marker int", staged, str(tmp_path / "ckpt"), append, "replay_test"
+    )
+    assert first == [True, True, True]
+    assert snapshot_current(table) == 3
+    replay = drain_batches(
+        spark, "marker int", staged, str(tmp_path / "ckpt2"), append, "replay_test"
+    )
+    assert replay == [False, False, False]
+    assert snapshot_current(table) == 3
+    assert sorted(r["marker"] for r in snapshot_read(spark, table, 3).collect()) == [0, 1, 2]
+
+
+def test_corpus_full_drain_unpersists_bench_when_start_fails(spark, tmp_path):
+    """The full corpus drain caches the bench table for its gate; a
+    drain that fails before any batch runs (here: a missing source dir)
+    must release it, not leave it cached for the rest of the session."""
+    from pyspark.errors import AnalysisException
+
+    from cellphe_data_pipeline_spark.streaming.tracker import (
+        streaming_corpus_full_ingest_drain,
+    )
+
+    bench_dir = str(tmp_path / "bench")
+    clusters_dir = str(tmp_path / "clusters")
+    spark.createDataFrame([(1, "bench text")], "doc_id bigint, text_clean string").write.parquet(
+        bench_dir
+    )
+    spark.createDataFrame([(1, 1)], "doc_id bigint, cluster_id bigint").write.parquet(clusters_dir)
+
+    def cached():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = cached()
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        streaming_corpus_full_ingest_drain(
+            spark,
+            "doc_id bigint, source string, text string",
+            str(tmp_path / "missing_source"),
+            str(tmp_path / "table"),
+            str(tmp_path / "seen"),
+            str(tmp_path / "ckpt"),
+            clusters_dir,
+            bench_dir,
+        )
+    assert cached() == before
+
+
+def test_package_source_has_one_drain():
+    """Every streaming query in the package starts, waits and stops in
+    ``tracker.drain``, and every one-file-per-batch replay reads through
+    ``tracker.ordered_file_stream``; the per-sink drain wrappers that
+    each repeated that recipe stay deleted."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "cellphe_data_pipeline_spark"
+    sources = {p: p.read_text() for p in pkg.rglob("*.py")}
+    assert sum(s.count("awaitTermination(") for s in sources.values()) == 1
+    assert sum(s.count('"maxFilesPerTrigger"') for s in sources.values()) == 1
+    defined = {
+        node.name
+        for s in sources.values()
+        for node in ast.walk(ast.parse(s))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    deleted = {
+        f"streaming_{sink}_drain"
+        for sink in (
+            "snapshot_sink", "merge_sink", "ivf_delete",
+            "mor_takedown", "kmv_distinct", "cdc_apply",
+        )
+    }
+    assert not defined & deleted
+    assert {"drain", "drain_batches", "ordered_file_stream"} <= defined
