@@ -45,6 +45,12 @@ them all in the generated-class cache, so a leg whose steady repeats
 compiled anything is named in "warnings" — its repeats paid compile
 time the first run should have paid alone (a cache smaller than the
 working set, or an adaptive plan variant seen for the first time).
+
+"python_worker_pools" holds, per leg, the session's Python worker pools
+after the leg (``session.python_worker_pools``; the count only grows).
+Engine code builds driver rows through Arrow and keeps one pool; a leg
+that raises it to 2 ran a list-of-tuples ``createDataFrame`` (a pickled
+PythonRDD job, which starts a second worker daemon).
 """
 
 from __future__ import annotations
@@ -91,10 +97,11 @@ def _materialise(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _repeat(spark, n: int, body) -> tuple[list[float], list[int]]:
-    """Run ``body`` ``n`` times; return each repeat's wall seconds and
-    the compiles it added (read outside the timed section)."""
-    from cellphe_data_pipeline_spark.session import codegen_compiles
+def _repeat(spark, n: int, body) -> tuple[list[float], list[int], int]:
+    """Run ``body`` ``n`` times; return each repeat's wall seconds, the
+    compiles it added, and the session's Python worker pools after the
+    last repeat (all read outside the timed section)."""
+    from cellphe_data_pipeline_spark.session import codegen_compiles, python_worker_pools
 
     runs: list[float] = []
     compiles: list[int] = []
@@ -104,7 +111,7 @@ def _repeat(spark, n: int, body) -> tuple[list[float], list[int]]:
         body()
         runs.append(round(time.perf_counter() - t0, 3))
         compiles.append(codegen_compiles(spark) - c0)
-    return runs, compiles
+    return runs, compiles, python_worker_pools(spark)
 
 
 def _preflight_quiet(max_wait_s: float, threshold: float = 2.0) -> list[str]:
@@ -154,6 +161,7 @@ def main() -> None:
     times: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     codegen: dict[str, list[int]] = {}
+    pools: dict[str, int] = {}
     total = 0.0
     for name in HEADLINE:
         # best of 3: the first run pays codegen/scan caches, the two
@@ -164,7 +172,7 @@ def main() -> None:
             df = qs[name](spark, sf_dir)
             _materialise(df)
 
-        runs, codegen[name] = _repeat(spark, 3, headline)
+        runs, codegen[name], pools[name] = _repeat(spark, 3, headline)
         samples[name] = runs
         times[name] = min(runs)
         total += times[name]
@@ -177,10 +185,12 @@ def main() -> None:
     # relational/graph work, not Cellpose inference.
     from cellphe_data_pipeline_spark.domain.images import make_fake_timelapse
     from cellphe_data_pipeline_spark.plans.pipeline import run_pipeline
+    from cellphe_data_pipeline_spark.sources.io import from_driver_rows
 
-    bins = spark.createDataFrame(
+    bins = from_driver_rows(
+        spark,
         [
-            (f"tl_{i:02d}.fake", bytearray(make_fake_timelapse(seed=100 + i, height=48, width=48, n_frames=22)))
+            (f"tl_{i:02d}.fake", make_fake_timelapse(seed=100 + i, height=48, width=48, n_frames=22))
             for i in range(33)
         ],
         "path string, content binary",
@@ -203,7 +213,7 @@ def main() -> None:
 
     # three repeats for the dominant entry: its spread is the clearest
     # in-artifact contention signal
-    runs, codegen["pipeline_726frames"] = _repeat(spark, 3, pipeline(bins))
+    runs, codegen["pipeline_726frames"], pools["pipeline_726frames"] = _repeat(spark, 3, pipeline(bins))
     samples["pipeline_726frames"] = runs
     times["pipeline_726frames"] = min(runs)
     total += times["pipeline_726frames"]
@@ -217,14 +227,15 @@ def main() -> None:
     # ratio (sub-linear ratio = fixed overheads amortising; a ratio
     # > 4 would flag a superlinear stage). Two repeats: the 1x entry
     # above already paid codegen/warm-up for this plan shape.
-    bins4 = spark.createDataFrame(
+    bins4 = from_driver_rows(
+        spark,
         [
-            (f"tl4_{i:02d}.fake", bytearray(make_fake_timelapse(seed=100 + i, height=48, width=48, n_frames=88)))
+            (f"tl4_{i:02d}.fake", make_fake_timelapse(seed=100 + i, height=48, width=48, n_frames=88))
             for i in range(33)
         ],
         "path string, content binary",
     )
-    runs4, codegen["pipeline_2904frames"] = _repeat(spark, 2, pipeline(bins4))
+    runs4, codegen["pipeline_2904frames"], pools["pipeline_2904frames"] = _repeat(spark, 2, pipeline(bins4))
     samples["pipeline_2904frames"] = runs4
     scaling = {
         "pipeline_2904frames": min(runs4),
@@ -258,7 +269,7 @@ def main() -> None:
         )
         _materialise(budget)
 
-    runs_c, codegen["corpus_split_pipeline"] = _repeat(spark, 2, corpus_split)
+    runs_c, codegen["corpus_split_pipeline"], pools["corpus_split_pipeline"] = _repeat(spark, 2, corpus_split)
     samples["corpus_split_pipeline"] = runs_c
     corpus = {"corpus_split_pipeline": min(runs_c)}
 
@@ -269,7 +280,7 @@ def main() -> None:
     # tests/test_plans.py). EXCLUDED from the headline total (same
     # cross-round comparability rule as corpus_split_pipeline); two
     # repeats, reported under "corpus".
-    runs_e, codegen["corpus_e2e_pipeline"] = _repeat(
+    runs_e, codegen["corpus_e2e_pipeline"], pools["corpus_e2e_pipeline"] = _repeat(
         spark, 2, lambda: _materialise(qs["c24_corpus_pipeline"](spark, sf_dir))
     )
     samples["corpus_e2e_pipeline"] = runs_e
@@ -310,7 +321,7 @@ def main() -> None:
             ),
         )
     )
-    runs_s, codegen["scale_cpu_probe"] = _repeat(
+    runs_s, codegen["scale_cpu_probe"], pools["scale_cpu_probe"] = _repeat(
         spark, 2, lambda: _materialise(minhash_band_keys(word_shingles(big)))
     )
     samples["scale_cpu_probe"] = runs_s
@@ -350,6 +361,7 @@ def main() -> None:
                 "scaling": scaling,
                 "corpus": corpus,
                 "codegen_compiles": codegen,
+                "python_worker_pools": pools,
                 "loadavg_start": load_start,
                 "loadavg_end": _loadavg(),
                 "warnings": warnings,

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cellphe_data_pipeline_spark.domain.images import _raster_dtype, label_contour
+from cellphe_data_pipeline_spark.sources.io import from_driver_rows
 
 STATIC_FEATURE_NAMES = (
     "Area",
@@ -210,8 +211,8 @@ def feature_manifest(spark) -> "DataFrame":
         (i, n, FEATURE_STATUS[n], FEATURE_STATUS[n] == "parity")
         for i, n in enumerate(STATIC_FEATURE_NAMES)
     ]
-    return spark.createDataFrame(
-        rows, "column_index int, feature string, status string, engine_local boolean"
+    return from_driver_rows(
+        spark, rows, "column_index int, feature string, status string, engine_local boolean"
     )
 
 
@@ -780,6 +781,10 @@ def static_features_fused(fused: DataFrame, keep: DataFrame) -> DataFrame:
     keep_agg = keep.groupBy("path", "FrameID").agg(
         F.collect_list(F.struct("CellID", "TRACK_ID")).alias("_keep")
     )
+    # broadcast the narrow keep list (bytes per kept cell), never the
+    # raster side: left to itself, adaptive execution sometimes builds
+    # the hash table from `fused`, shipping every frame's data and mask
+    # through the driver, and each such plan variant compiles new code
     tagged = (
         fused.select(
             "path",
@@ -789,7 +794,7 @@ def static_features_fused(fused: DataFrame, keep: DataFrame) -> DataFrame:
             "data",
             "mask",
         )
-        .join(keep_agg, ["path", "FrameID"])
+        .join(F.broadcast(keep_agg), ["path", "FrameID"])
         .crossJoin(F.broadcast(widths))
     )
 

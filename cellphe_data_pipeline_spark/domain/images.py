@@ -413,31 +413,11 @@ def grayscale_convert(frames: DataFrame) -> DataFrame:
 
 def _fake_segment(img: np.ndarray) -> np.ndarray:
     """Deterministic stand-in for CellposeModel.eval (segment_image.py:
-    20-23): threshold at the image median, 4-connected component label.
-    Pure numpy BFS — fine for 32x32 test rasters."""
-    thr = np.median(img)
-    fg = img > thr
-    labels = np.zeros(img.shape, dtype=np.uint16)
-    cur = 0
-    for i in range(img.shape[0]):
-        for j in range(img.shape[1]):
-            if fg[i, j] and labels[i, j] == 0:
-                cur += 1
-                stack = [(i, j)]
-                labels[i, j] = cur
-                while stack:
-                    a, b = stack.pop()
-                    for da, db in ((1, 0), (-1, 0), (0, 1), (0, -1)):
-                        na, nb = a + da, b + db
-                        if (
-                            0 <= na < img.shape[0]
-                            and 0 <= nb < img.shape[1]
-                            and fg[na, nb]
-                            and labels[na, nb] == 0
-                        ):
-                            labels[na, nb] = cur
-                            stack.append((na, nb))
-    return labels
+    20-23): threshold at the image median, 4-connected component label
+    (:func:`label_components_runs`). Like ``otsu``, a frame whose mask
+    would have more than 65535 components raises instead of wrapping
+    the uint16 labels."""
+    return label_components_runs(img > np.median(img))
 
 
 def otsu_threshold(img: np.ndarray) -> int:
@@ -468,13 +448,13 @@ def otsu_threshold(img: np.ndarray) -> int:
 
 def label_components_runs(fg: np.ndarray) -> np.ndarray:
     """4-connected component labeling via RUN-LENGTH two-pass
-    union-find — the production-raster path next to the per-pixel BFS
-    in :func:`_fake_segment`. Work is O(runs·α) with numpy run
-    extraction per row, so a 2048x2048 frame with hundreds of cells
-    labels in milliseconds where pixel-BFS spends seconds in the
-    interpreter. Numbering matches the BFS exactly: components take
-    1..K in row-major order of their first pixel (equivalence
-    property-tested in tests/test_domain.py)."""
+    union-find — the labeler behind both threshold segmenters. Work is
+    O(runs·α) with numpy run extraction per row, so a 2048x2048 frame
+    with hundreds of cells labels in milliseconds where a per-pixel BFS
+    spends seconds in the interpreter. Numbering matches a BFS exactly:
+    components take 1..K in row-major order of their first pixel
+    (equivalence property-tested in tests/test_domain.py against a BFS
+    oracle)."""
     h, w = fg.shape
     labels = np.zeros((h, w), dtype=np.uint16)
     runs: list[tuple[int, int, int]] = []  # (row, start, end_exclusive)
@@ -982,14 +962,14 @@ def decode_segment_centroid(
     The payload crosses the JVM↔Python boundary ONCE. Frames with zero
     cells carry ``cents == []``, which ``explode`` drops.
 
-    `method`: "median" (median threshold + pixel-BFS labeling — the
-    deterministic fixture kernel, kept as default so every golden stays
-    byte-stable), "otsu" (Otsu auto-threshold + run-based union-find
-    labeling — the vectorised classical path for production raster
-    sizes), or "model" — the reference's deep-model contract
-    (segment_image.py:20-23): ``model_cls(**model_args)`` once per
-    partition, ``model.eval(image, **eval_args)[0].astype(uint16)`` per
-    frame, both dicts passed through VERBATIM (main.nf:38 ships
+    `method`: "median" (median threshold — the deterministic fixture
+    kernel, kept as default so every golden stays byte-stable) or
+    "otsu" (Otsu auto-threshold — the classical path for production
+    imagery), both labeled by :func:`label_components_runs`; or "model"
+    — the reference's deep-model contract (segment_image.py:20-23):
+    ``model_cls(**model_args)`` once per partition,
+    ``model.eval(image, **eval_args)[0].astype(uint16)`` per frame, both
+    dicts passed through VERBATIM (main.nf:38 ships
     params.segmentation.model / .eval as JSON the same way). By default
     ``model_cls`` is ``cellpose.models.CellposeModel`` (import checked
     at CALL time on the driver); any class with that constructor/eval

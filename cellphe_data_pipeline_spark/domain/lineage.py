@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cellphe_data_pipeline_spark.operators.graph import connected_components
+from cellphe_data_pipeline_spark.sources.io import from_driver_rows
 
 #: tracks-per-call bound under which head numbering happens driver-side
 #: (one take(); ~100k heads ≈ a few MB of driver memory).
@@ -84,14 +85,15 @@ def renumber_tracks(
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     if edge_driver_cap:
-        # Arrow on every driver crossing (r16, guide §6 "Arrow for
-        # driver transfers"): the Row-pickle take()/collect() pair and
-        # the list-of-tuples createDataFrame each serialise one object
-        # per field; toPandas / createDataFrame(pandas) move the same
-        # rows as columnar batches. Series.tolist() restores plain
-        # Python scalars, so the oracle's dict keys and the returned
-        # values are identical to the Row path (the DDL schema pins the
-        # return types as before).
+        # Arrow on every driver crossing: toPandas fetches the edge and
+        # node rows as columnar batches, and from_driver_rows hands the
+        # touched ids and the numbered rows back as Arrow tables, so no
+        # crossing runs a Python task (a list-of-tuples createDataFrame
+        # would run a pickled PythonRDD job, which starts a second
+        # worker daemon). Series.tolist() restores plain Python scalars,
+        # so the oracle's dict keys and the returned values are
+        # identical to the Row path (the DDL schema pins the return
+        # types).
         edge_pdf = e.limit(edge_driver_cap + 1).toPandas()
         if len(edge_pdf) <= edge_driver_cap:
             spark = nodes.sparkSession
@@ -103,7 +105,9 @@ def renumber_tracks(
             frame_type = dict(nodes.dtypes)[frame_col]
             node_pdf = nodes.join(
                 F.broadcast(
-                    spark.createDataFrame([(n,) for n in touched], f"{id_col} {id_type}")
+                    from_driver_rows(
+                        spark, [(n,) for n in touched], f"{id_col} {id_type}"
+                    )
                 ),
                 id_col,
                 "left_semi",
@@ -121,16 +125,7 @@ def renumber_tracks(
                 out_schema = (
                     f"{id_col} {id_type}, {frame_col} {frame_type}, TRACK_ID int"
                 )
-                if not out:
-                    return spark.createDataFrame([], out_schema)
-                import pandas as pd
-
-                return spark.createDataFrame(
-                    pd.DataFrame(
-                        out, columns=[id_col, frame_col, "TRACK_ID"]
-                    ),
-                    out_schema,
-                )
+                return from_driver_rows(spark, out, out_schema)
             # else: edges reference ids absent from the node table — the
             # oracle has no frame for them; fall through to the
             # distributed path, which tolerates phantom endpoints
@@ -184,7 +179,8 @@ def renumber_tracks(
         seg_type = dict(labelled.dtypes)["segment"]
         spark = labelled.sparkSession
         track_ids = F.broadcast(
-            spark.createDataFrame(
+            from_driver_rows(
+                spark,
                 [(r["segment"], i) for i, r in enumerate(head_rows, start=1)],
                 f"segment {seg_type}, TRACK_ID int",
             )

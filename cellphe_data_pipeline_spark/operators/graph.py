@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cellphe_data_pipeline_spark.checkpoint import cut_lineage
+from cellphe_data_pipeline_spark.sources.io import empty_with_schema, from_driver_rows
 
 
 def degree(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -155,7 +156,7 @@ def _finish_on_driver(spark, e: DataFrame, pdf) -> DataFrame:
     as a size-known local relation.
 
     Both boundary crossings ride Arrow (r16): ``toPandas`` on the fetch
-    and ``createDataFrame(pandas)`` on the return replace the Row-pickle
+    and ``from_driver_rows`` on the return replace the Row-pickle
     ``take()`` / list-of-tuples ``createDataFrame`` pair, which spent
     ~0.9s of g4's 1.9s bench time serialising ~100k rows each way
     (guide §6 "Arrow for driver transfers"). ``Series.tolist()`` yields
@@ -163,19 +164,12 @@ def _finish_on_driver(spark, e: DataFrame, pdf) -> DataFrame:
     are value-identical to the Row path; the explicit DDL schema pins
     the return types to the edge column type exactly as before.
     """
-    import pandas as pd
-
     parent, find, union = _union_find()
     for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
         union(u, v)
     node_type = dict(e.dtypes)["u"]
     schema = f"node {node_type}, component {node_type}"
-    labels = [(n, find(n)) for n in parent]
-    if not labels:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(
-        pd.DataFrame(labels, columns=["node", "component"]), schema
-    )
+    return from_driver_rows(spark, [(n, find(n)) for n in parent], schema)
 
 
 def connected_components(
@@ -396,8 +390,8 @@ def pagerank(
         # empty (or self-loop-only) edge set: empty result, same schema
         # — mirrors connected_components' empty-graph behavior
         node_type = dict(e.dtypes)["u"]
-        return edges.sparkSession.createDataFrame(
-            [], f"node {node_type}, rank_q bigint"
+        return empty_with_schema(
+            edges.sparkSession, f"node {node_type}, rank_q bigint"
         )
     outdeg = e.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("outdeg")

@@ -204,6 +204,8 @@ def merge_rows_cow(
 
     from cellphe_data_pipeline_spark.sources.io import (
         _manifest_files_and_stats,
+        empty_with_schema,
+        from_driver_rows,
         snapshot_commit_atomic,
         snapshot_current,
         snapshot_data_files,
@@ -239,8 +241,8 @@ def merge_rows_cow(
                 recompute_files = [
                     f for f in base_files if f not in {c[0] for c in covered}
                 ]
-                manifest_stats_df = spark.createDataFrame(
-                    covered, ["_f", "_lo", "_hi"]
+                manifest_stats_df = from_driver_rows(
+                    spark, covered, ["_f", "_lo", "_hi"]
                 )
         if recompute_files:
             recomputed = file_key_stats(
@@ -277,7 +279,7 @@ def merge_rows_cow(
         (
             spark.read.parquet(*hit_files).select(*cols)
             if hit_files
-            else spark.createDataFrame([], delta.schema)
+            else empty_with_schema(spark, delta.schema)
         )
         .join(F.broadcast(keys), F.col(key_col) == F.col("_k"), "left_anti")
         .unionByName(delta)

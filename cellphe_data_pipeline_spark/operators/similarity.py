@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cellphe_data_pipeline_spark.functions.scalars import round_z
+from cellphe_data_pipeline_spark.sources.io import from_driver_rows
 
 
 def _as_double(col):
@@ -353,8 +354,10 @@ def ivf_topk(
         # centers: n_lists x dim doubles — tiny, safe as literals (broadcast)
         centers = [[float(x) for x in c] for c in model.clusterCenters()]
         centers_df = F.broadcast(
-            spark.createDataFrame(
-                [(i, c) for i, c in enumerate(centers)], "list_id int, center array<double>"
+            from_driver_rows(
+                spark,
+                [(i, c) for i, c in enumerate(centers)],
+                "list_id int, center array<double>",
             )
         )
     else:

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cellphe_data_pipeline_spark.functions.scalars import nondeterministic_zero
+from cellphe_data_pipeline_spark.sources.io import from_driver_rows
 
 #: Language set matches the driver's `documents.lang` domain (en/de/fr/es/zh).
 STOPWORDS = {
@@ -1548,8 +1549,10 @@ def bpe_learn_merges(
                     ),
                     name=f"bpe-learn-{i}",
                 )
-        return df.sparkSession.createDataFrame(
-            merges, "merge_rank bigint, lhs string, rhs string, pair_count bigint"
+        return from_driver_rows(
+            df.sparkSession,
+            merges,
+            "merge_rank bigint, lhs string, rhs string, pair_count bigint",
         )
 
     # delta strategy: the ONLY whole-state pair explode is this
@@ -1612,8 +1615,10 @@ def bpe_learn_merges(
             state.withColumn("s", replaced), name=f"bpe-state-{len(merges)}"
         )
     merges = [(i + 1, l, r, c) for i, (_, l, r, c) in enumerate(merges)]
-    return df.sparkSession.createDataFrame(
-        merges, "merge_rank bigint, lhs string, rhs string, pair_count bigint"
+    return from_driver_rows(
+        df.sparkSession,
+        merges,
+        "merge_rank bigint, lhs string, rhs string, pair_count bigint",
     )
 
 

@@ -28,6 +28,16 @@ Scale rationale (100 TB target):
   resident with a wide margin; a generated class is ≈2 KB of bytecode,
   so the cache stays a few MB. ``tests/test_session.py`` pins that no
   repeat of a pipeline run compiles a class again.
+- One Python worker pool per session. Spark starts one daemon, with its
+  forked workers, per distinct task environment, and a pickled
+  PythonRDD job (what a list-of-tuples ``createDataFrame`` runs) has a
+  different environment from the SQL Arrow runners: they add
+  ``SPARK_SIMPLIFIED_TRACEBACK``. The engine therefore builds every
+  relation of driver rows through Arrow
+  (``sources.io.from_driver_rows``), which runs no Python task, and a
+  pipeline run starts no second daemon (≈64 MB plus ≈51 MB per forked
+  worker). ``python_worker_pools`` reads the count; ``tests/
+  test_session.py`` pins it at 1 after a CLI run.
 """
 
 from __future__ import annotations
@@ -128,3 +138,11 @@ def codegen_compiles(spark: SparkSession) -> int:
     adds none."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def python_worker_pools(spark: SparkSession) -> int:
+    """Python worker pools (one daemon each) this JVM has started.
+    Spark keys a pool by the task's Python executable, daemon module
+    and worker environment; every engine task shares one key, so a
+    pipeline session holds exactly one pool."""
+    return spark._jvm.org.apache.spark.SparkEnv.get().pythonWorkers().size()

@@ -35,10 +35,49 @@ def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
     df.write.mode("overwrite").option("header", header).csv(path)
 
 
-def empty_with_schema(spark: SparkSession, schema: T.StructType) -> DataFrame:
+def empty_with_schema(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
     """S7: schema-safe empty relation — downstream `unionByName` keeps
     working (the reference hand-writes a header-only CSV for this)."""
-    return spark.createDataFrame([], schema)
+    return from_driver_rows(spark, [], schema)
+
+
+def from_driver_rows(
+    spark: SparkSession, rows, schema: T.StructType | str | list[str]
+) -> DataFrame:
+    """A DataFrame of driver-side rows, built through Arrow so that no
+    Python task runs.
+
+    ``rows``: tuples in the schema's field order. ``schema``: a
+    StructType, a DDL string, or a list of column names whose types
+    Arrow infers from the values (int → bigint, float → double, str →
+    string, as the list path infers them). None becomes null; values
+    are those the list path gives.
+
+    The rows become one Arrow table, which the driver JVM reads into a
+    local relation. The list-of-tuples ``createDataFrame`` instead runs
+    a pickled PythonRDD job, and Spark starts a second Python worker
+    daemon for it: worker pools are keyed by the task environment, and
+    the SQL Arrow runners add ``SPARK_SIMPLIFIED_TRACEBACK`` to it where
+    PythonRDD does not. ``createDataFrame(pandas)`` falls back to that
+    list path when the frame has no rows or Arrow is off, so the engine
+    hands Spark an Arrow table itself. Outside ``queries.py`` and
+    ``testing/``, every engine relation made from driver rows comes
+    through here (source-guarded in ``tests/test_session.py``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    columns = list(zip(*rows)) or [[] for _ in schema]
+    if isinstance(schema, T.StructType):
+        arrow_schema = to_arrow_schema(schema)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+            schema=arrow_schema,
+        )
+    else:
+        table = pa.Table.from_arrays([pa.array(c) for c in columns], names=schema)
+    return spark.createDataFrame(table, schema)
 
 
 def read_config(spark: SparkSession, path: str) -> dict:
@@ -52,7 +91,9 @@ def read_config(spark: SparkSession, path: str) -> dict:
 def write_config(spark: SparkSession, config: dict, path: str) -> None:
     """S13 sink: persist the run's config snapshot for provenance
     (save_*_config, main.nf:57-89)."""
-    df = spark.createDataFrame([(json.dumps(config, indent=2, sort_keys=True),)], "value string")
+    df = from_driver_rows(
+        spark, [(json.dumps(config, indent=2, sort_keys=True),)], "value string"
+    )
     df.coalesce(1).write.mode("overwrite").text(path)
 
 
@@ -1104,7 +1145,7 @@ def snapshot_changes(
             ]
             + [T.StructField(c, T.StringType()) for c in compare_cols]
         )
-        return spark.createDataFrame([], schema), info
+        return empty_with_schema(spark, schema), info
 
     def sel(df, prefix):
         return df.select(

@@ -1848,6 +1848,7 @@ def corpus_ingest_apply_batch(
         explode_token_windows,
     )
     from cellphe_data_pipeline_spark.sources.io import (
+        from_driver_rows,
         snapshot_batch_watermark,
         snapshot_commit_sharded,
         snapshot_data_files,
@@ -1878,7 +1879,8 @@ def corpus_ingest_apply_batch(
                 else {}
             )
             packable = post_dedup_gate(b) if post_dedup_gate else b
-            base = spark.createDataFrame(
+            base = from_driver_rows(
+                spark,
                 list(offsets.items()) or [("", 0)],
                 "stream string, _base bigint",
             )

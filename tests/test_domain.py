@@ -2088,6 +2088,32 @@ def test_frame_diff_multi_path_separation(spark):
     assert vid[1]["mean_diff"] < 0.1
 
 
+def _bfs_label(fg: np.ndarray) -> np.ndarray:
+    """Per-pixel BFS 4-connected labeling, components numbered 1..K in
+    row-major order of their first pixel: the oracle the run-length
+    labeler is checked against."""
+    h, w = fg.shape
+    labels = np.zeros((h, w), dtype=np.uint16)
+    cur = 0
+    for i in range(h):
+        for j in range(w):
+            if fg[i, j] and labels[i, j] == 0:
+                cur += 1
+                stack = [(i, j)]
+                labels[i, j] = cur
+                while stack:
+                    a, b = stack.pop()
+                    for da, db in ((1, 0), (-1, 0), (0, 1), (0, -1)):
+                        na, nb = a + da, b + db
+                        if (
+                            0 <= na < h and 0 <= nb < w
+                            and fg[na, nb] and labels[na, nb] == 0
+                        ):
+                            labels[na, nb] = cur
+                            stack.append((na, nb))
+    return labels
+
+
 def test_run_labeling_equals_bfs_property():
     """r5b: the run-based union-find labeler must produce EXACTLY the
     per-pixel BFS labeling (same components, same scan-order
@@ -2095,10 +2121,7 @@ def test_run_labeling_equals_bfs_property():
     single-pixel, full, and empty extremes."""
     from hypothesis import given, settings, strategies as st
 
-    from cellphe_data_pipeline_spark.domain.images import (
-        _fake_segment,
-        label_components_runs,
-    )
+    from cellphe_data_pipeline_spark.domain.images import label_components_runs
 
     @settings(max_examples=40, deadline=None)
     @given(
@@ -2110,32 +2133,9 @@ def test_run_labeling_equals_bfs_property():
     def check(h, w, seed, p):
         rng = np.random.RandomState(seed % (2**31))
         fg = rng.rand(h, w) < p
-        # BFS path via _fake_segment's labeling: reuse by building an
-        # image where img > median == fg is not controllable; instead
-        # call the labeling loop directly through a crafted image:
-        # img = fg ? 2 : 0 with threshold median... simpler: inline BFS
-        # oracle here.
-        labels = np.zeros((h, w), dtype=np.uint16)
-        cur = 0
-        for i in range(h):
-            for j in range(w):
-                if fg[i, j] and labels[i, j] == 0:
-                    cur += 1
-                    stack = [(i, j)]
-                    labels[i, j] = cur
-                    while stack:
-                        a, b = stack.pop()
-                        for da, db in ((1, 0), (-1, 0), (0, 1), (0, -1)):
-                            na, nb = a + da, b + db
-                            if (
-                                0 <= na < h and 0 <= nb < w
-                                and fg[na, nb] and labels[na, nb] == 0
-                            ):
-                                labels[na, nb] = cur
-                                stack.append((na, nb))
         got = label_components_runs(fg)
         assert got.dtype == np.uint16
-        assert (got == labels).all()
+        assert (got == _bfs_label(fg)).all()
 
     check()
     # extremes the strategy may not hit
@@ -2148,6 +2148,43 @@ def test_run_labeling_equals_bfs_property():
     got = label_components_runs(cb)
     assert got[cb].min() == 1 and got[cb].max() == 8  # 8 isolated pixels
     assert (got[~cb] == 0).all()
+
+
+def test_median_segment_equals_bfs_oracle():
+    """The median segmenter labels ``img > median(img)`` exactly as the
+    BFS oracle does, on fixture frames and on random uint8 and uint16
+    rasters."""
+    from cellphe_data_pipeline_spark.domain.images import (
+        _fake_segment,
+        decode_frame,
+        make_fake_timelapse,
+    )
+
+    imgs = [
+        img
+        for seed in range(5)
+        for img in decode_frame(
+            make_fake_timelapse(seed=seed, height=48, width=48, n_frames=3)
+        )
+    ]
+    rng = np.random.RandomState(11)
+    imgs += [rng.randint(0, 256, (30, 40)).astype(np.uint8) for _ in range(4)]
+    imgs += [rng.randint(0, 65536, (30, 40)).astype(np.uint16) for _ in range(4)]
+    for img in imgs:
+        got = _fake_segment(img)
+        assert got.dtype == np.uint16
+        assert (got == _bfs_label(img > np.median(img))).all()
+
+
+def test_median_segment_overflow_raises():
+    """A median mask with more than 65535 components raises, as the
+    otsu method does, instead of wrapping labels into background."""
+    from cellphe_data_pipeline_spark.domain.images import _fake_segment
+
+    side = 520  # checkerboard of 0/200: median 100, 135200 isolated pixels
+    img = (np.indices((side, side)).sum(0) % 2 == 0).astype(np.uint8) * 200
+    with pytest.raises(ValueError, match="65535"):
+        _fake_segment(img)
 
 
 def test_otsu_threshold_bimodal_and_segment():

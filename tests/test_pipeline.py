@@ -6,7 +6,11 @@ from __future__ import annotations
 
 import pytest
 
-from cellphe_data_pipeline_spark.domain.images import encode_fake_container, make_fake_image
+from cellphe_data_pipeline_spark.domain.images import (
+    encode_fake_container,
+    make_fake_image,
+    make_fake_timelapse,
+)
 from cellphe_data_pipeline_spark.plans.pipeline import run_pipeline
 
 
@@ -442,6 +446,50 @@ def test_static_features_fused_matches_staged_branch(spark):
     # and the pipeline's features stage IS the fused form now
     prows = out["features"].select(*staged.columns).collect()
     assert key(prows) == key(srows)
+
+
+def _physical_nodes(plan):
+    """Every node of an executed physical plan, looking through adaptive
+    execution's wrappers (the final plan, query stages, reused
+    exchanges)."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _physical_nodes(plan.executedPlan())
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _physical_nodes(plan.plan())
+        return
+    if name == "ReusedExchangeExec":
+        yield from _physical_nodes(plan.child())
+        return
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _physical_nodes(children.apply(i))
+
+
+def test_m4_join_never_broadcasts_the_raster_side(spark):
+    """The M4 join broadcasts the narrow keep list: in the executed
+    summary plan of repeated pipeline runs, no broadcast exchange
+    carries a frame's ``data`` or ``mask``. Left to adaptive execution,
+    the join was sometimes built from the raster side."""
+    bins = spark.createDataFrame(
+        [
+            (f"tl_{i}.fake", bytearray(make_fake_timelapse(seed=60 + i, height=32, width=32, n_frames=6)))
+            for i in range(2)
+        ],
+        "path string, content binary",
+    )
+    for _ in range(4):
+        summary = run_pipeline(bins)["summary"]
+        summary.collect()
+        broadcast = []
+        for node in _physical_nodes(summary._jdf.queryExecution().executedPlan()):
+            if node.nodeName() == "BroadcastExchange":
+                out = node.child().output()
+                broadcast.append({out.apply(i).name() for i in range(out.size())})
+        assert broadcast, "expected broadcast joins in the summary plan"
+        assert not [c for c in broadcast if c & {"data", "mask"}], broadcast
 
 
 PIN_THREAD_OFF_SCRIPT = """

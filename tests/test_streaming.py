@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cellphe_data_pipeline_spark.sources.tables import load_table
-from cellphe_data_pipeline_spark.streaming.tracker import drain
+from cellphe_data_pipeline_spark.streaming.tracker import drain, ordered_file_stream
 
 
 def _stage_events(spark, sf_dir, tmp_path, n_users=20):
@@ -122,7 +122,7 @@ def test_streaming_session_summary_emits_on_timeout(spark, tmp_path):
         )
         df.coalesce(1).write.mode("append").parquet(path)
 
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
+    stream = ordered_file_stream(spark, schema, path)
     drain(
         streaming_session_summary(stream, watermark="1 minute", gap_ms=4 * 60 * 1000)
         .writeStream.format("memory")
@@ -154,11 +154,7 @@ def test_streaming_session_windows_merge_across_batches(spark, sf_dir, tmp_path)
     # for the same user land in different batches (repartition is not
     # user-keyed), exercising the in-store session merge path.
     ev.repartition(3).write.mode("overwrite").parquet(path)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = ordered_file_stream(spark, ev.schema, path)
     drain(
         streaming_session_windows(stream)
         .writeStream.format("memory")
@@ -315,7 +311,7 @@ def test_streaming_exact_dedup_eviction_across_watermark(spark, tmp_path):
     def sink(df, epoch_id):
         batches[int(epoch_id)] = sorted(r["k"] for r in df.collect())
 
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(src))
+    stream = ordered_file_stream(spark, schema, str(src))
     drain(
         streaming_exact_dedup(stream, ["k"], ts_col="ts", watermark="10 minutes")
         .writeStream.foreachBatch(sink)
@@ -373,9 +369,11 @@ def test_streaming_tracker_matches_batch_partition(spark, tmp_path):
         )
         os.utime(path, (1_000_000 + g,) * 2)
 
-    stream = spark.readStream.schema(
-        "timelapse_id string, id bigint, frame int, x double, y double"
-    ).option("maxFilesPerTrigger", 1).parquet(str(d))
+    stream = ordered_file_stream(
+        spark,
+        "timelapse_id string, id bigint, frame int, x double, y double",
+        str(d),
+    )
     drain(
         streaming_tracker(stream, linking_max_distance=5.0, max_frame_gap=4,
                           gap_closing_max_distance=10.0)
@@ -575,11 +573,7 @@ def test_streaming_upsert_matches_batch_merge(spark, sf_dir, tmp_path):
     staged = str(tmp_path / "upsert_stream")
     # several files => several micro-batches => state chains batches
     prep.repartition(4).write.mode("overwrite").parquet(staged)
-    stream = (
-        spark.readStream.schema(prep.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    stream = ordered_file_stream(spark, prep.schema, staged)
     drain(
         streaming_upsert(stream)
         .writeStream.format("memory")
@@ -687,11 +681,7 @@ def test_streaming_ewma_chains_state_across_batches(spark, tmp_path):
             (F.col("t_us") > lo * 1_000_000) & (F.col("t_us") <= hi * 1_000_000)
         ).coalesce(1).write.mode("append").parquet(staged)
         time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    stream = ordered_file_stream(spark, df.schema, staged)
     q = drain(
         streaming_ewma(stream)
         .writeStream.format("memory")
@@ -748,11 +738,7 @@ def test_streaming_gap_fill_emits_gaps_across_batch_boundaries(spark, tmp_path):
             (F.col("h_us") >= lo * H) & (F.col("h_us") < hi * H)
         ).coalesce(1).write.mode("append").parquet(staged)
         time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    stream = ordered_file_stream(spark, df.schema, staged)
     q = drain(
         streaming_gap_fill(stream)
         .writeStream.format("memory")
@@ -802,11 +788,7 @@ def test_streaming_ewma_horizon_one_keeps_no_state(spark, tmp_path):
             (F.col("event_id") >= lo) & (F.col("event_id") < hi)
         ).coalesce(1).write.mode("append").parquet(staged)
         time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    stream = ordered_file_stream(spark, df.schema, staged)
     drain(
         streaming_ewma(stream, horizon=1)
         .writeStream.format("memory")
@@ -872,11 +854,7 @@ def test_streaming_ewma_out_of_order_batch_raises(spark, tmp_path):
             (F.col("event_id") >= lo) & (F.col("event_id") < hi)
         ).coalesce(1).write.mode("append").parquet(staged)
         time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    stream = ordered_file_stream(spark, df.schema, staged)
     with pytest.raises(StreamingQueryException) as ei:
         drain(
             streaming_ewma(stream)
@@ -927,11 +905,7 @@ def test_streaming_ingest_lifecycle_dedups_across_batches(spark, tmp_path):
     with_ts(df1).coalesce(1).write.mode("append").parquet(staged)
     time.sleep(1.1)
     with_ts(df2).coalesce(1).write.mode("append").parquet(staged)
-    stream = (
-        spark.readStream.schema(with_ts(df1).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    stream = ordered_file_stream(spark, with_ts(df1).schema, staged)
     q = drain(
         streaming_ingest_lifecycle(
             stream,
@@ -992,11 +966,7 @@ def test_streaming_dedup_rollup_chain_across_batches(spark, tmp_path):
     for d in (df1, df2, df3):
         d.coalesce(1).write.mode("append").parquet(staged)
         time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(df1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    stream = ordered_file_stream(spark, df1.schema, staged)
     out = (
         stream.withWatermark("ts", "3650 days")
         .dropDuplicatesWithinWatermark(["event_id"])
@@ -1065,11 +1035,7 @@ def test_streaming_join_rollup_chains_across_batches(spark, tmp_path):
     for d in (f1, f2, f3):
         d.coalesce(1).write.mode("append").parquet(staged)
         time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(f1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    stream = ordered_file_stream(spark, f1.schema, staged)
     q = drain(
         streaming_join_rollup(stream)
         .writeStream.format("memory")
@@ -1152,11 +1118,7 @@ def test_streaming_profile_folds_across_batches(spark, tmp_path):
     for d in (f1, f2, f3):
         d.coalesce(1).write.mode("append").parquet(staged)
         time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(f1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    stream = ordered_file_stream(spark, f1.schema, staged)
     q = drain(
         streaming_profile(stream, ["a"])
         .writeStream.format("memory")
@@ -1226,11 +1188,7 @@ def test_append_rollup_two_watermark_protocol(spark, tmp_path):
         t = 1_700_000_000 + 100 * k
         os.utime(dst, (t, t))
     schema = "ts timestamp, value double"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
+    stream = ordered_file_stream(spark, schema, staged)
     drain(
         streaming_append_rollup(stream)
         .writeStream.format("memory")
@@ -1294,11 +1252,7 @@ def test_dedup_within_watermark_expiry_lifecycle(spark, tmp_path):
         shutil.rmtree(tmp)
         t = 1_700_000_000 + 100 * k
         os.utime(dst, (t, t))
-    stream = (
-        spark.readStream.schema("key string, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
+    stream = ordered_file_stream(spark, "key string, ts timestamp", staged)
     drain(
         streaming_dedup_within_watermark(stream, watermark="3 days")
         .writeStream.format("memory")
@@ -1503,11 +1457,7 @@ def test_streaming_observe_metrics_fold_across_batches(spark, sf_dir, tmp_path):
     # restage as three files so the drain runs three micro-batches
     three = str(tmp_path / "three")
     ev.repartition(3).write.mode("overwrite").parquet(three)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(three)
-    )
+    stream = ordered_file_stream(spark, ev.schema, three)
     observed = stream.observe(
         "obs_test", F.count(F.lit(1)).alias("obs_rows")
     ).groupBy("event_type").count()
@@ -1904,7 +1854,6 @@ def _stage_marked_files(spark, tmp_path, order):
 def test_drain_timeout_stops_query_and_names_label(spark, tmp_path):
     """A drain that has not finished when its timeout expires is
     stopped, and the error names the caller's label."""
-    from cellphe_data_pipeline_spark.streaming.tracker import ordered_file_stream
 
     staged = _stage_marked_files(spark, tmp_path, [("a", 0), ("b", 1), ("c", 2)])
     writer = (
