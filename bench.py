@@ -198,7 +198,7 @@ def main() -> None:
 
     def pipeline(bins):
         def body():
-            out = run_pipeline(bins, cc_shuffle_partitions="auto")
+            out = run_pipeline(bins)
             # materialise BOTH terminal stages: the A8 time-series table
             # and (new in r5) the frame-summary table — movement ⋈ M4
             # static features ⋈ the un-stubbed J7 density column, the

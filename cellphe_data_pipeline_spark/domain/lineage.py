@@ -71,13 +71,16 @@ def renumber_tracks(
     frame_col: str = "FRAME",
     src: str = "src",
     dst: str = "dst",
-    loop_shuffle_partitions: int | str | None = None,
     edge_driver_cap: int = EDGE_DRIVER_CAP,
 ) -> DataFrame:
     """Assign 1-indexed TRACK_ID to every non-isolated node.
 
     Output: (id_col, frame_col, TRACK_ID). Isolated nodes (no edges)
     are dropped, as in the reference (parse_xml.py:115-118).
+
+    Beyond the driver cap, segments are the connected components of the
+    keep edges; ``connected_components`` sizes its own loop from their
+    count, so there is no partition setting to pass.
 
     ``edge_driver_cap``: see EDGE_DRIVER_CAP; pass 0 to force the fully
     distributed path (the property tests exercise both and assert exact
@@ -143,9 +146,7 @@ def renumber_tracks(
     keep = keep_edges(e).localCheckpoint(eager=True)
     # segments: CC over keep edges; nodes with no keep edge are their own
     # singleton segment (component = own id)
-    cc = connected_components(
-        keep, "src", "dst", loop_shuffle_partitions=loop_shuffle_partitions
-    )
+    cc = connected_components(keep, "src", "dst")
     # Pinned for the same reason: re-executed by head detection, both
     # numbering passes, and the final track-id join (~3x without a cut).
     labelled = (
@@ -188,20 +189,9 @@ def renumber_tracks(
     else:
         from cellphe_data_pipeline_spark.operators.scale import global_row_number
 
-        track_ids = global_row_number(
-            heads,
-            head_order,
-            "_tid",
-            # track-head table is ~1 row per track; size its passes with
-            # the loop's edge-volume knob, not the scan-sized default
-            # ("auto" is CC's edge-count sizing — meaningless here, so
-            # it falls back to the session default)
-            num_parts=(
-                loop_shuffle_partitions
-                if isinstance(loop_shuffle_partitions, int)
-                else None
-            ),
-        ).select("segment", F.col("_tid").cast("int").alias("TRACK_ID"))
+        track_ids = global_row_number(heads, head_order, "_tid").select(
+            "segment", F.col("_tid").cast("int").alias("TRACK_ID")
+        )
     return labelled.join(track_ids, "segment").select(id_col, frame_col, "TRACK_ID")
 
 

@@ -197,8 +197,9 @@ DIFF_SCHEMA = T.StructType(
 
 def frame_diff_energy(frames: DataFrame) -> DataFrame:
     """Per-frame temporal difference: mean |pixel delta| vs the previous
-    frame of the same path, on [0,1]-scaled uint8 rasters; the first
-    frame of each path is NULL.
+    frame of the same path, on rasters scaled to [0,1] by their dtype's
+    maximum (8- or 16-bit pages, told apart by ``images._raster_dtype``);
+    the first frame of each path is NULL.
 
     Shape: ONE path-keyed window shuffle pairs each frame with its
     predecessor's bytes (F.lag on the binary column — the pairing stays
@@ -211,10 +212,14 @@ def frame_diff_energy(frames: DataFrame) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from cellphe_data_pipeline_spark.domain.images import _raster_dtype
+
     w = Window.partitionBy("path").orderBy("frame_index")
     paired = frames.select(
         "path",
         "frame_index",
+        "height",
+        "width",
         "data",
         F.lag("data").over(w).alias("prev_data"),
     )
@@ -226,9 +231,10 @@ def frame_diff_energy(frames: DataFrame) -> DataFrame:
                 if r["prev_data"] is None:
                     e = None
                 else:
-                    a = np.frombuffer(bytes(r["data"]), np.uint8).astype("float64")
-                    b = np.frombuffer(bytes(r["prev_data"]), np.uint8).astype("float64")
-                    e = float(np.abs(a - b).mean() / 255.0)
+                    dt = _raster_dtype(r["data"], int(r["height"]), int(r["width"]))
+                    a = np.frombuffer(bytes(r["data"]), dt).astype("float64")
+                    b = np.frombuffer(bytes(r["prev_data"]), dt).astype("float64")
+                    e = float(np.abs(a - b).mean() / np.iinfo(dt).max)
                 rows.append(
                     {"path": r["path"], "frame_index": int(r["frame_index"]), "diff_energy": e}
                 )

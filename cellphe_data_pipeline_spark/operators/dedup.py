@@ -806,7 +806,6 @@ def dedup_clusters(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    **cc_kwargs,
 ) -> DataFrame:
     """Near-dup pairs → transitive duplicate clusters → canonical pick.
 
@@ -827,7 +826,7 @@ def dedup_clusters(
     from cellphe_data_pipeline_spark.operators.graph import connected_components
 
     edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    comps = connected_components(edges, "src", "dst", **cc_kwargs)
+    comps = connected_components(edges, "src", "dst")
     w = Window.partitionBy("component")
     return comps.select(
         F.col("node").alias("doc_id"),
@@ -842,7 +841,6 @@ def dedup_keep_list(
     text_col: str = "text",
     id_col: str = "doc_id",
     quality_col: str = "n_chars",
-    cc_kwargs: dict | None = None,
     **minhash_kwargs,
 ) -> DataFrame:
     """Full-corpus dedup KEEP-LIST with quality-based canonical pick
@@ -864,14 +862,13 @@ def dedup_keep_list(
     its own id (AQE broadcasts the cluster/canonical maps when they fit,
     which they do by construction at healthy dup rates).
     """
-    cc_kwargs = cc_kwargs or {}
     pairs = minhash_near_duplicates(df, text_col, id_col, **minhash_kwargs)
     # the cluster table (dup members only, << corpus) feeds THREE
     # consumers (quality join, canonical pick, corpus label join);
     # checkpoint it so the minhash+CC lineage runs once, not three
     # times (sf0.01: 7.7s -> ~2.5s warm)
     clusters = cut_lineage(
-        dedup_clusters(pairs, **cc_kwargs).select("doc_id", "cluster_id"),
+        dedup_clusters(pairs).select("doc_id", "cluster_id"),
         name="dedup-clusters",
     )
     members = clusters.join(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cellphe_data_pipeline_spark.checkpoint import cut_lineage
+from cellphe_data_pipeline_spark.session import session_confs
 from cellphe_data_pipeline_spark.sources.io import empty_with_schema, from_driver_rows
 
 
@@ -177,8 +178,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    loop_shuffle_partitions: int | str | None = None,
-    pre_contract: bool = True,
     driver_finish_cap: int = CC_DRIVER_FINISH_CAP,
 ) -> DataFrame:
     """Undirected connected components → (node, component=min node id).
@@ -188,20 +187,16 @@ def connected_components(
     no driver-side graph state, so the edge set can exceed any single
     machine's memory.
 
-    ``loop_shuffle_partitions``: per-round shuffles carry only the
-    shrinking edge list, so the right partition count tracks EDGE volume,
-    not the session default sized for base-table scans. When set to an
-    int, the session's shuffle-partition conf is lowered for the
-    duration of the loop (restored after). Measured locally at sf0.1:
-    32→8 partitions is 1.4× faster end-to-end; on a cluster size it
-    ~= edge_bytes / 64 MiB. ``"auto"`` (r14) derives the count from the
-    MATERIALIZED edge list instead — one cheap count over the already-
-    checkpointed edges, then ~2M edges (≈64 MiB at ~32 B/row) per
-    partition, clamped to [2, 2×defaultParallelism]. The r14 third-
-    decade probe is why a constant is wrong: c24 pins 2 (measured-right
-    at 5k docs, where the closure carries ~256k pairs), and at 50k docs
-    the same 2 partitions carried a 149 MB closure stage as TWO tasks —
-    a fixed knob is right only at the scale it was measured at.
+    Loop sizing: per-round shuffles carry only the shrinking edge list,
+    so the loop's shuffle-partition count tracks EDGE volume, not the
+    session default sized for base-table scans. It is derived from the
+    materialised edge count CC takes anyway — ~2M edges (≈64 MiB at
+    ~32 B/row) per partition, clamped to [2, 2×defaultParallelism] —
+    and set only for the loop's duration (restored after, also when the
+    loop raises). A fixed count is right only at the scale it was
+    measured at: 2 partitions suits a 5k-doc closure (~256k pairs), but
+    at 50k docs the same 2 carried a 149 MB closure stage as two tasks
+    (SCALE.md, third-decade probe).
 
     ``driver_finish_cap``: see CC_DRIVER_FINISH_CAP; pass 0 to force the
     fully distributed loop (the property tests exercise both paths).
@@ -246,53 +241,34 @@ def connected_components(
         )
 
     spark = edges.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(conf_key)
-    auto = loop_shuffle_partitions == "auto"
-    if loop_shuffle_partitions is not None and not auto:
-        spark.conf.set(conf_key, str(loop_shuffle_partitions))
-    try:
-        # materialise the RAW distinct edge list first (r16): its count
-        # decides both the auto partition sizing and — new — whether the
-        # bounded driver finish can run directly on the raw edges,
-        # SKIPPING the contraction pre-pass entirely. Contraction exists
-        # to collapse intra-partition paths for the distributed
-        # alternation; when the whole edge list fits the driver cap the
-        # union-find swallows raw edges just as well (same shared
-        # union-find, identical min-id labels), and skipping saves the
-        # RangePartitioner sampling job, one Python kernel wave, and one
-        # checkpoint per call (measured ~0.5-0.9s/call at bench scale;
-        # guide §1.2 "don't compute things you throw away"). Checkpointing
-        # the raw list before contraction also stops the contraction's
-        # range-sampling pass from re-executing the upstream lineage.
-        # LAZY cut + count as the materialising action (r16): the eager
-        # localCheckpoint ran one job to store the edge partitions and
-        # the sizing count ran a second job over them; fusing them makes
-        # the count's job do the storing — one pass over the edge build
-        # instead of two (~0.25s/call at bench scale). The count always
-        # runs: it is the honest x for auto sizing AND the driver-finish
-        # gate, and materialising here keeps the loop's multi-reference
-        # rounds reading stored blocks. (Under the replicated-checkpoint
-        # conf the cut is eager parquet regardless — the count is then a
-        # metadata-cheap parquet count.)
-        e = cut_lineage(e, eager=False, name="cc-edges")
-        n_edges = e.count()
-        if driver_finish_cap and n_edges <= driver_finish_cap:
-            return _finish_on_driver(spark, e, e.toPandas())
-        if auto:
-            parts = max(
-                2,
-                min(
-                    2 * spark.sparkContext.defaultParallelism,
-                    -(-n_edges // 2_000_000),
-                ),
-            )
-            spark.conf.set(conf_key, str(parts))
-        if pre_contract:
-            n_parts = (
-                None if auto else loop_shuffle_partitions
-            ) or max(2, spark.sparkContext.defaultParallelism // 4)
-            e = cut_lineage(_contract_local(e, n_parts), name="cc-contracted")
+    # materialise the RAW distinct edge list first (r16): its count
+    # sizes the loop and decides whether the bounded driver finish can
+    # run directly on the raw edges, SKIPPING the contraction pre-pass
+    # entirely. Contraction exists to collapse intra-partition paths for
+    # the distributed alternation; when the whole edge list fits the
+    # driver cap the union-find swallows raw edges just as well (same
+    # shared union-find, identical min-id labels), and skipping saves
+    # the RangePartitioner sampling job, one Python kernel wave, and one
+    # checkpoint per call (measured ~0.5-0.9s/call at bench scale; guide
+    # §1.2 "don't compute things you throw away"). Checkpointing the raw
+    # list before contraction also stops the contraction's range-
+    # sampling pass from re-executing the upstream lineage.
+    # LAZY cut + count as the materialising action (r16): the count's
+    # job does the storing — one pass over the edge build instead of two
+    # (~0.25s/call at bench scale), and the loop's multi-reference
+    # rounds read stored blocks. (Under the replicated-checkpoint conf
+    # the cut is eager parquet regardless — the count is then a
+    # metadata-cheap parquet count.)
+    e = cut_lineage(e, eager=False, name="cc-edges")
+    n_edges = e.count()
+    if driver_finish_cap and n_edges <= driver_finish_cap:
+        return _finish_on_driver(spark, e, e.toPandas())
+    parallelism = spark.sparkContext.defaultParallelism
+    loop_parts = max(2, min(2 * parallelism, -(-n_edges // 2_000_000)))
+    with session_confs(spark, {"spark.sql.shuffle.partitions": loop_parts}):
+        e = cut_lineage(
+            _contract_local(e, max(2, parallelism // 4)), name="cc-contracted"
+        )
         if driver_finish_cap:
             # bounded driver finish (see CC_DRIVER_FINISH_CAP): the raw
             # list was over the cap, but contraction may have shrunk the
@@ -330,9 +306,6 @@ def connected_components(
             if cur == prev_hash:
                 break
             prev_hash = cur
-    finally:
-        if loop_shuffle_partitions is not None or auto:
-            spark.conf.set(conf_key, saved)
 
     labels = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
     mins = labels.groupBy("node").agg(F.min("component").alias("component"))

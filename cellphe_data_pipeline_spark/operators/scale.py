@@ -82,22 +82,20 @@ def overwrite_partitions_dynamic(
     a single-day (or single-source) correction — rewrite the touched
     slice at slice cost, never the table.
 
-    Mechanism: ``spark.sql.sources.partitionOverwriteMode=dynamic``
-    scopes the overwrite to the incoming frame's partition tuples. The
-    conf is read at WRITE time, so it is set only around this write
-    and restored after — under the default (static) mode the very same
-    ``mode("overwrite")`` call DELETES the whole table first and
-    leaves only the backfilled partitions, which is the
-    data-destroying trap this helper exists to fence off
-    (tests/test_scale.py pins both directions)."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set(key, saved)
+    Mechanism: the per-write option ``partitionOverwriteMode=dynamic``
+    scopes the overwrite to the incoming frame's partition tuples. It is
+    a writer option, not a session conf, so the session is never
+    mutated and a concurrent query never sees ``dynamic`` — under the
+    default (static) mode the very same ``mode("overwrite")`` call
+    DELETES the whole table first and leaves only the backfilled
+    partitions, which is the data-destroying trap this helper exists
+    to fence off (tests/test_scale.py pins both directions)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def compact_files(

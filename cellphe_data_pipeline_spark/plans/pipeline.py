@@ -41,7 +41,6 @@ def run_pipeline(
     linking_max_distance: float = 10.0,
     max_frame_gap: int = 4,
     gap_closing_max_distance: float = 20.0,
-    cc_shuffle_partitions: int | str | None = None,
     tracking_method: str = "greedy",
     tracking_gap_strategy: str = "inline",
     allow_splitting: bool = False,
@@ -65,6 +64,9 @@ def run_pipeline(
     Spot ids are (timelapse_idx * 1e9 + frame_index * 1e5 + mask_id):
     unique across timelapses (lineage runs on the union) and monotone in
     frame within one — satisfying the temporal-DAG contract G4 needs.
+    The lineage step takes no partition setting: it numbers tracks on
+    the driver below ``lineage.EDGE_DRIVER_CAP`` edges, and above it
+    connected components size their loop from the edge count.
     """
     qc = {**DEFAULT_QC, **(qc or {})}
 
@@ -220,7 +222,6 @@ def run_pipeline(
     tracks = renumber_tracks(                            # G2-G4
         dets.select(F.col("id").alias("ID"), F.col("frame").alias("FRAME")),
         edges.select("src", "dst"),
-        loop_shuffle_partitions=cc_shuffle_partitions,
     )
     # drop the track table's FRAME before joining: Spark resolves
     # case-insensitively, so dets.frame vs tracks.FRAME would be ambiguous

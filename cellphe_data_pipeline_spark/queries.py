@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import math
 from collections.abc import Callable
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -45,6 +44,8 @@ from cellphe_data_pipeline_spark.operators.qc_filters import (
 )
 from cellphe_data_pipeline_spark.functions.scalars import round_z
 from cellphe_data_pipeline_spark.operators.timeseries import timeseries_stats
+from cellphe_data_pipeline_spark.session import session_confs
+from cellphe_data_pipeline_spark.sources.io import from_driver_rows
 from cellphe_data_pipeline_spark.sources.tables import load_table
 
 
@@ -853,23 +854,15 @@ def e1(spark, sf_dir):
     )
 
 
-@contextmanager
-def _bounded_shuffle_partitions(spark, n: int = 16):
-    """Cap shuffle partitions for the duration of a bounded streaming
-    drain: a stateful streaming query creates spark.sql.shuffle.partitions
-    state-store partitions at first start, so on a VANILLA session
-    (default 200 — the driver does not use this repo's session factory)
-    the sf0.01 drains would spend their time on empty-partition
-    scheduling. Restored afterwards so later queries in the same
-    session keep the caller's setting; the memory-sink table is
-    already materialised when the drain ends, so restoring is safe."""
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, saved)
+# Shuffle-partition cap for the duration of a bounded streaming drain:
+# a stateful streaming query creates spark.sql.shuffle.partitions
+# state-store partitions at first start, so on a VANILLA session
+# (default 200 — the driver does not use this repo's session factory)
+# the sf0.01 drains would spend their time on empty-partition
+# scheduling. `session_confs` restores the caller's setting afterwards;
+# the memory-sink table is already materialised when the drain ends, so
+# restoring is safe.
+DRAIN_CONFS = {"spark.sql.shuffle.partitions": "16"}
 
 
 def _stage_stream(batch_df, stage_name):
@@ -889,14 +882,14 @@ def _drain_to_memory(stream, sink_name, transform, output_mode, label):
     `transform` (the streaming operator under test) over `stream`
     (`_stage_stream`, or `ordered_file_stream` over pre-staged ordered
     batch files), drain it with availableNow into a memory sink under
-    `_bounded_shuffle_partitions`, and return the finished sink table.
+    `DRAIN_CONFS`, and return the finished sink table.
     A drain that exceeds 300s raises rather than returning a partial
     table. In append mode the trailing no-data batch (on by default)
     finalizes the watermark, so emission is complete."""
     from cellphe_data_pipeline_spark.streaming.tracker import drain
 
     spark = stream.sparkSession
-    with _bounded_shuffle_partitions(spark):
+    with session_confs(spark, DRAIN_CONFS):
         drain(
             transform(stream)
             .writeStream.format("memory")
@@ -1247,12 +1240,7 @@ def g4(spark, sf_dir):
     (large-star/small-star) — oracle knows each user's chain is one
     component labelled by its min event id, so the result is fully
     checkable without recursion."""
-    # loop partitions sized to EDGE volume (graph.py docstring: ~64 MiB
-    # per partition): sf0.1 is ~100k edges = ~1.6 MB, so 2 partitions —
-    # fewer rounds AND fewer tasks; at cluster SF scale this knob up.
-    return connected_components(
-        _event_edges(spark, sf_dir), "src", "dst", loop_shuffle_partitions="auto"
-    )
+    return connected_components(_event_edges(spark, sf_dir), "src", "dst")
 
 
 # =====================================================================
@@ -1510,10 +1498,7 @@ def d11(spark, sf_dir):
     of d7's min-id convention."""
     from cellphe_data_pipeline_spark.operators.dedup import dedup_keep_list
 
-    return dedup_keep_list(
-        load_table(spark, sf_dir, "documents"),
-        cc_kwargs={"loop_shuffle_partitions": "auto"},
-    )
+    return dedup_keep_list(load_table(spark, sf_dir, "documents"))
 
 
 @register("d3_minhash_near_dups", _minhash_oracle_sql())
@@ -1949,7 +1934,7 @@ def g4b(spark, sf_dir):
     from cellphe_data_pipeline_spark.testing.fixtures import lineage_dfs
 
     nodes, edges = lineage_dfs(spark)
-    return renumber_tracks(nodes, edges, loop_shuffle_partitions="auto")
+    return renumber_tracks(nodes, edges)
 
 
 @register(
@@ -2163,8 +2148,9 @@ def mm4(spark, sf_dir):
 
     yy, xx = np.mgrid[0:32, 0:32]
     img = ((xx * 7 + yy * 3) % 256).astype(np.uint8)
-    bins = spark.createDataFrame(
-        [("rz.fake", bytearray(encode_fake_container(img)))],
+    bins = from_driver_rows(
+        spark,
+        [("rz.fake", encode_fake_container(img))],
         "path string, content binary",
     )
     small = resize_frames(split_frames(bins), 8, 8, method="area")
@@ -2349,8 +2335,9 @@ def s5(spark, sf_dir):
 
     yy, xx = np.mgrid[0:24, 0:32]
     img = ((xx * 7 + yy * 3) % 256).astype(np.uint8)
-    bins = spark.createDataFrame(
-        [("s5.jpg", bytearray(encode_jpeg_gray(img, quality=100)))],
+    bins = from_driver_rows(
+        spark,
+        [("s5.jpg", encode_jpeg_gray(img, quality=100))],
         "path string, content binary",
     )
     f = grayscale_convert(split_frames(bins))
@@ -2460,8 +2447,8 @@ def m3f(spark, sf_dir):
         ("t", 6, 0, 20.0, 0.0),
         ("t", 7, 2, 20.0, 6.0),
     ]
-    dets = spark.createDataFrame(
-        rows, "timelapse_id string, id long, frame int, x double, y double"
+    dets = from_driver_rows(
+        spark, rows, "timelapse_id string, id long, frame int, x double, y double"
     )
     return track_detections(
         dets,
@@ -2664,8 +2651,9 @@ def m6b(spark, sf_dir):
     m[1:4, 2:6] = 5  # rectangle label 5: rows 1-3, cols 2-5
     m[5:9, 1:3] = 7  # concave L label 7: vertical arm ...
     m[7:9, 1:7] = 7  # ... + horizontal arm
-    masks = spark.createDataFrame(
-        [("cx.fake", 0, 10, 10, bytearray(m.tobytes()))],
+    masks = from_driver_rows(
+        spark,
+        [("cx.fake", 0, 10, 10, m.tobytes())],
         "path string, frame_index int, height int, width int, mask binary",
     )
     return (
@@ -3815,37 +3803,6 @@ def o15(spark, sf_dir):
     )
 
 
-@contextmanager
-def _session_confs(spark, **confs):
-    """Scoped session-conf overrides for a query that must EXECUTE
-    under specific runtime settings (AQE thresholds are read at
-    execution, not plan time, so the caller materialises inside the
-    scope — the j12 pattern). VALUES are restored on exit (not
-    set-state: ``spark.conf.get`` returns the engine default without
-    raising for most SQL confs, so a key never explicitly set before
-    is restored by re-setting that default — becoming session-pinned
-    at its default value; only defaultless keys take the unset
-    path)."""
-    # dotted conf names arrive as **kwargs string keys (CPython allows
-    # any string key through **-expansion; the call sites pass
-    # **X_CONFS dicts verbatim)
-    saved = {}
-    for key, v in confs.items():
-        try:
-            saved[key] = spark.conf.get(key)
-        except Exception:
-            saved[key] = None
-        spark.conf.set(key, str(v))
-    try:
-        yield
-    finally:
-        for key, v in saved.items():
-            if v is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, v)
-
-
 @register(
     "o10_dpp_join",
     """
@@ -3901,16 +3858,24 @@ def o10(spark, sf_dir):
     # threshold collect and AGAIN as the join's dim side). In
     # production the dim filter is a user literal anyway; the
     # computed mean keeps the demo SF-stable, in the oracle's exact
-    # double arithmetic (exact int sum, one double division).
+    # double arithmetic (exact int sum, one double division). The
+    # local relation is cut (lazily, no extra job) before the filter:
+    # on a bare local relation the optimizer evaluates the filter at
+    # plan time (ConvertToLocalRelation), the dim side is left with no
+    # Filter node, and DPP inserts no pruning subquery.
+    from cellphe_data_pipeline_spark.checkpoint import cut_lineage
+
     rows = (
         ev.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_type"))
         .collect()
     )
     thr_val = sum(r["n_type"] for r in rows) / len(rows)
-    dim = spark.createDataFrame(rows).filter(
-        F.col("n_type") >= F.lit(thr_val)
-    )
+    dim = cut_lineage(
+        from_driver_rows(spark, rows, "event_type string, n_type bigint"),
+        eager=False,
+        name="o10-dim",
+    ).filter(F.col("n_type") >= F.lit(thr_val))
     return (
         fact.join(dim, "event_type")
         .groupBy("event_type")
@@ -4234,7 +4199,8 @@ def p16(spark, sf_dir):
         ),
     ).first()
     ok = all(m[k] == rescan[k] for k in m)
-    return spark.createDataFrame(
+    return from_driver_rows(
+        spark,
         [
             (
                 m["n_rows"],
@@ -4317,7 +4283,7 @@ def o12(spark, sf_dir):
         F.col("c_acctbal").cast("double").alias("c_acctbal"),
     )
     staged = _stage_dir("o12_lookup_out")
-    with _session_confs(spark, **O12_BUCKET_CONFS):
+    with session_confs(spark, O12_BUCKET_CONFS):
         out.write.mode("overwrite").parquet(staged)
     return spark.read.parquet(staged)
 
@@ -4405,7 +4371,7 @@ def o11(spark, sf_dir):
     invariant by construction."""
     out = _o11_bloom_join(spark, sf_dir)
     staged = _stage_dir("o11_bloom_out")
-    with _session_confs(spark, **O11_BLOOM_CONFS):
+    with session_confs(spark, O11_BLOOM_CONFS):
         out.write.mode("overwrite").parquet(staged)
     return spark.read.parquet(staged)
 
@@ -4463,7 +4429,7 @@ def j12(spark, sf_dir):
         )
     )
     staged = _stage_dir("j12_skew_out")
-    with _session_confs(spark, **J12_SKEW_CONFS):
+    with session_confs(spark, J12_SKEW_CONFS):
         out.write.mode("overwrite").parquet(staged)
     return spark.read.parquet(staged)
 
@@ -4520,7 +4486,7 @@ def o13(spark, sf_dir):
     values."""
     out = _o13_agg(spark, sf_dir)
     staged = _stage_dir("o13_coalesce_out")
-    with _session_confs(spark, **O13_COALESCE_CONFS):
+    with session_confs(spark, O13_COALESCE_CONFS):
         out.write.mode("overwrite").parquet(staged)
     return spark.read.parquet(staged)
 
@@ -4587,7 +4553,7 @@ def j14(spark, sf_dir):
     confs), result re-read."""
     out = _j14_join(spark, sf_dir)
     staged = _stage_dir("j14_promote_out")
-    with _session_confs(spark, **J14_PROMOTE_CONFS):
+    with session_confs(spark, J14_PROMOTE_CONFS):
         out.write.mode("overwrite").parquet(staged)
     return spark.read.parquet(staged)
 
@@ -5274,7 +5240,7 @@ def d7(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
     pairs = minhash_near_duplicates(d)
-    return dedup_clusters(pairs, loop_shuffle_partitions="auto")
+    return dedup_clusters(pairs)
 
 
 @register(
@@ -6335,9 +6301,9 @@ def m3d(spark, sf_dir):
     )
     from cellphe_data_pipeline_spark.domain.tracking import overlap_links
 
-    bins = spark.createDataFrame(
-        [("tl.fake",
-          bytearray(make_fake_timelapse(seed=101, height=48, width=48, n_frames=4)))],
+    bins = from_driver_rows(
+        spark,
+        [("tl.fake", make_fake_timelapse(seed=101, height=48, width=48, n_frames=4))],
         "path string, content binary",
     )
     masks = decode_segment_centroid(bins).select(
@@ -7189,8 +7155,8 @@ def s6_s7(spark, sf_dir):
             T.StructField("val", T.DoubleType()),
         ]
     )
-    df = spark.createDataFrame(
-        [(1, "alpha", 1.5), (2, "beta", -2.25), (3, None, 0.0)], schema
+    df = from_driver_rows(
+        spark, [(1, "alpha", 1.5), (2, "beta", -2.25), (3, None, 0.0)], schema
     )
     d = _stage_dir("s6_csv") + "/out"
     write_csv(df, d)
@@ -7229,7 +7195,7 @@ def s13(spark, sf_dir):
         (k, json.dumps(back[k], sort_keys=True, separators=(", ", ": ")))
         for k in sorted(back)
     ]
-    return spark.createDataFrame(rows, "key string, value_json string")
+    return from_driver_rows(spark, rows, "key string, value_json string")
 
 
 @register(
@@ -7266,8 +7232,9 @@ def s11(spark, sf_dir):
         ],
         dtype=np.uint16,
     )
-    masks = spark.createDataFrame(
-        [("m.fake", 0, 4, 5, bytearray(mask.tobytes()))],
+    masks = from_driver_rows(
+        spark,
+        [("m.fake", 0, 4, 5, mask.tobytes())],
         "path string, frame_index int, height int, width int, mask binary",
     )
     pngs = mask_to_png(masks)
@@ -7351,8 +7318,9 @@ def m1b(spark, sf_dir):
     img = np.full((20, 20), 10, dtype=np.uint8)
     img[2:6, 3:8] = 200
     img[10:14, 10:17] = 200
-    bins = spark.createDataFrame(
-        [("bimodal.fake", bytearray(encode_fake_container(img)))],
+    bins = from_driver_rows(
+        spark,
+        [("bimodal.fake", encode_fake_container(img))],
         "path string, content binary",
     )
     return mask_label_histogram(
@@ -7401,7 +7369,8 @@ def s15(spark, sf_dir):
     relation including the partition column."""
     from cellphe_data_pipeline_spark.sources.io import publish
 
-    df = spark.createDataFrame(
+    df = from_driver_rows(
+        spark,
         [("a", 1, 0.5), ("a", 2, 1.25), ("b", 3, -4.0)],
         "part string, id int, v double",
     )
@@ -7441,7 +7410,8 @@ def s9_s10(spark, sf_dir):
         ("f1", "00001-00002", [(5, 5), (6, 7)]),
         ("f2", "00002-00001", [(9, 0), (8, 2)]),
     ]
-    df = spark.createDataFrame(
+    df = from_driver_rows(
+        spark,
         [(g, n, [{"x": x, "y": y} for x, y in pts]) for g, n, pts in rows],
         "frame string, ROI_filename string, coords array<struct<x:int,y:int>>",
     )
@@ -8596,7 +8566,7 @@ def e15(spark, sf_dir):
     out_dir = _stage_dir("e15_topk_out")
     ckpt_dir = _stage_dir("e15_topk_ckpt")  # wiped: stale file-source
     # checkpoints silently skip already-seen paths on replay
-    with _bounded_shuffle_partitions(spark):
+    with session_confs(spark, DRAIN_CONFS):
         streaming_ann_serve(
             probe_stream, bucket, centroid_rows, out_dir,
             k=5, n_probe=2, ckpt_dir=ckpt_dir,
@@ -8754,8 +8724,8 @@ def e17(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts", "value"
     )
-    sentinel = spark.createDataFrame(
-        [(-1, "sentinel", _dt.datetime(2100, 1, 1), 0.0)], ev.schema
+    sentinel = from_driver_rows(
+        spark, [(-1, "sentinel", _dt.datetime(2100, 1, 1), 0.0)], ev.schema
     )
     staged = ev.unionAll(ev.filter(F.col("event_id") % 5 == 0)).unionAll(
         sentinel
@@ -8827,8 +8797,8 @@ def e18(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "value"
     )
-    sentinel = spark.createDataFrame(
-        [(-1, "sentinel", _dt.datetime(2100, 1, 1), 0.0)], ev.schema
+    sentinel = from_driver_rows(
+        spark, [(-1, "sentinel", _dt.datetime(2100, 1, 1), 0.0)], ev.schema
     )
     sink = _drain_to_memory(
         _stage_stream(ev.unionAll(sentinel), "e18_stream_join_rollup"),
@@ -9091,10 +9061,9 @@ def mm6(spark, sf_dir):
         "img7.fake": ((xx * yy + xx * 29) % 256).astype(np.uint8),
     }
     rows = [
-        (name, bytearray(encode_fake_container(img)))
-        for name, img in imgs.items()
+        (name, encode_fake_container(img)) for name, img in imgs.items()
     ]
-    bins = spark.createDataFrame(rows, "path string, content binary")
+    bins = from_driver_rows(spark, rows, "path string, content binary")
     # frame_dhash emits one code per (path, frame_index) — key the
     # pairing on the composite id to honor hamming_code_pairs'
     # one-code-per-id contract (r8 ADVICE fix; multi-page inputs would
@@ -9163,10 +9132,9 @@ def mm7(spark, sf_dir):
         "img6.fake": np.full((32, 32), 210, np.uint8),
     }
     rows = [
-        (name, bytearray(encode_fake_container(img)))
-        for name, img in imgs.items()
+        (name, encode_fake_container(img)) for name, img in imgs.items()
     ]
-    bins = spark.createDataFrame(rows, "path string, content binary")
+    bins = from_driver_rows(spark, rows, "path string, content binary")
     codes = frame_phash(split_frames(bins)).select(
         F.concat_ws("#", "path", "frame_index").alias("frame_id"), "phash"
     )
@@ -10610,9 +10578,7 @@ def c21(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     seeds = d.filter(F.col("doc_id") % 83 == 5).select("doc_id")
     pairs = minhash_near_duplicates(d)
-    clusters = dedup_clusters(pairs, loop_shuffle_partitions="auto").select(
-        "doc_id", "cluster_id"
-    )
+    clusters = dedup_clusters(pairs).select("doc_id", "cluster_id")
     seed_clusters = (
         clusters.join(F.broadcast(seeds), "doc_id", "left_semi")
         .select("cluster_id")
@@ -11805,7 +11771,7 @@ def e23(spark, sf_dir):
         for b in names:
             shutil.copy2(f"{staged}/{b}.parquet", f"{src}/{b}.parquet")
 
-    with _bounded_shuffle_partitions(spark):
+    with session_confs(spark, DRAIN_CONFS):
         feed(["b0", "b1"])
         n_first = streaming_restartable_drain(
             spark, schema, src, out, ckpt, transform
@@ -12722,7 +12688,7 @@ def e25(spark, sf_dir):
     root = _stage_dir("e25_sink")
     table = os.path.join(root, "table")
     ckpt = os.path.join(root, "ckpt")
-    with _bounded_shuffle_partitions(spark):
+    with session_confs(spark, DRAIN_CONFS):
         results = drain_batches(
             spark, parts[0].schema, staged, ckpt,
             lambda b, bid: snapshot_append_batch(table, b, bid),
@@ -13033,9 +12999,9 @@ def c23(spark, sf_dir):
     )
 
     d = load_table(spark, sf_dir, "documents")
-    clusters = dedup_clusters(
-        minhash_near_duplicates(d), loop_shuffle_partitions="auto"
-    ).select("doc_id", "cluster_id")
+    clusters = dedup_clusters(minhash_near_duplicates(d)).select(
+        "doc_id", "cluster_id"
+    )
     key = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
     b = portable_hash64(key.cast("string"), seed="leak1-") % 10000
     return d.join(F.broadcast(clusters), "doc_id", "left").select(
@@ -13257,7 +13223,7 @@ def s24(spark, sf_dir):
     root = _stage_dir("s24_replay")
     table = os.path.join(root, "table")
     ckpt = os.path.join(root, "ckpt")
-    with _bounded_shuffle_partitions(spark):
+    with session_confs(spark, DRAIN_CONFS):
         results = drain_batches(
             spark, parts[0].schema, staged, ckpt,
             lambda b, bid: snapshot_append_batch(table, b, bid),
@@ -13696,7 +13662,7 @@ def e28(spark, sf_dir):
     root = _stage_dir("e28_merge_sink")
     table = os.path.join(root, "table")
     ckpt = os.path.join(root, "ckpt")
-    with _bounded_shuffle_partitions(spark):
+    with session_confs(spark, DRAIN_CONFS):
         results = drain_batches(
             spark, ev.schema, staged, ckpt,
             lambda b, bid: merge_batch_idempotent(spark, table, b, bid),
@@ -13919,7 +13885,7 @@ def e29(spark, sf_dir):
         .cast("double")
         .alias("sum_value"),
     )
-    with _bounded_shuffle_partitions(spark):
+    with session_confs(spark, DRAIN_CONFS):
         q = drain(
             transformed.writeStream.format("memory")
             .queryName("e29_obs_sink")
@@ -14223,9 +14189,9 @@ def c24(spark, sf_dir):
         docs.filter(F.col("doc_id") < 20),
         n=4,
     ).select("doc_id")
-    clusters = dedup_clusters(
-        minhash_near_duplicates(docs), loop_shuffle_partitions="auto"
-    ).select("doc_id", "cluster_id")
+    clusters = dedup_clusters(minhash_near_duplicates(docs)).select(
+        "doc_id", "cluster_id"
+    )
 
     corpus = (
         deduped.filter(F.col("doc_id") >= 20)
@@ -14453,7 +14419,7 @@ def e30(spark, sf_dir):
     d2 = emb.filter(F.col("vec_id") % 23 == 5).select("vec_id")
     staged = _stage_ordered_batches([d1, d2], "e30_takedown_batches")
     ckpt = os.path.join(_stage_dir("e30_ckpt"), "ckpt")
-    with _bounded_shuffle_partitions(spark):
+    with session_confs(spark, DRAIN_CONFS):
         results = drain_batches(
             spark, d1.schema, staged, ckpt,
             lambda b, bid: ivf_delete_batch_idempotent(
@@ -14735,9 +14701,9 @@ def d18(spark, sf_dir):
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    clusters = dedup_clusters(
-        minhash_near_duplicates(docs), loop_shuffle_partitions="auto"
-    ).select("doc_id", "cluster_id")
+    clusters = dedup_clusters(minhash_near_duplicates(docs)).select(
+        "doc_id", "cluster_id"
+    )
     scored = (
         docs.select("doc_id", "text")
         .join(F.broadcast(clusters), "doc_id")
@@ -15307,7 +15273,7 @@ def e31(spark, sf_dir):
     root = _stage_dir("e31_sink")
     table = os.path.join(root, "table")
     seen = os.path.join(root, "seen")
-    with _bounded_shuffle_partitions(spark):
+    with session_confs(spark, DRAIN_CONFS):
         results = streaming_corpus_ingest_drain(
             spark, parts[0].schema, staged, table, seen,
             os.path.join(root, "ckpt"),
@@ -15330,7 +15296,7 @@ def e31(spark, sf_dir):
     pre = row_hash(snapshot_read(spark, table, sid))
     # replay leg: same files, fresh checkpoint — the watermark must
     # refuse every batch before any packing work, table unchanged
-    with _bounded_shuffle_partitions(spark):
+    with session_confs(spark, DRAIN_CONFS):
         results = streaming_corpus_ingest_drain(
             spark, parts[0].schema, staged, table, seen,
             os.path.join(root, "ckpt_replay"),
@@ -15396,13 +15362,10 @@ def e32(spark, sf_dir):
     # batch-published static sides (the c23 label table + bench slice)
     clusters_dir = os.path.join(root, "clusters")
     bench_dir = os.path.join(root, "bench")
-    with _bounded_shuffle_partitions(spark):
-        # "auto" sizes the closure loop from the materialized edge
-        # count (r14, graph.connected_components) — the clustering job
-        # is a batch side job whose edge volume the caller cannot know
-        dedup_clusters(
-            minhash_near_duplicates(docs), loop_shuffle_partitions="auto"
-        ).select("doc_id", "cluster_id").write.parquet(clusters_dir)
+    with session_confs(spark, DRAIN_CONFS):
+        dedup_clusters(minhash_near_duplicates(docs)).select(
+            "doc_id", "cluster_id"
+        ).write.parquet(clusters_dir)
         html_to_text(aug.filter(F.col("doc_id") < 20)).select(
             "doc_id", "text_clean"
         ).write.parquet(bench_dir)
@@ -15418,7 +15381,7 @@ def e32(spark, sf_dir):
     staged = _stage_ordered_batches(parts, "e32_batches")
     table = os.path.join(root, "table")
     seen = os.path.join(root, "seen")
-    with _bounded_shuffle_partitions(spark):
+    with session_confs(spark, DRAIN_CONFS):
         results = streaming_corpus_full_ingest_drain(
             spark, parts[0].schema, staged, table, seen,
             os.path.join(root, "ckpt"), clusters_dir, bench_dir,
@@ -15439,7 +15402,7 @@ def e32(spark, sf_dir):
         ).collect()[0][0]
 
     pre = row_hash(snapshot_read(spark, table, sid))
-    with _bounded_shuffle_partitions(spark):
+    with session_confs(spark, DRAIN_CONFS):
         results = streaming_corpus_full_ingest_drain(
             spark, parts[0].schema, staged, table, seen,
             os.path.join(root, "ckpt_replay"), clusters_dir, bench_dir,
@@ -15995,7 +15958,7 @@ def e33(spark, sf_dir):
     staged = _stage_ordered_batches(parts, "e33_batches")
 
     def takedown_drain(ckpt):
-        with _bounded_shuffle_partitions(spark):
+        with session_confs(spark, DRAIN_CONFS):
             return drain_batches(
                 spark, parts[0].schema, staged, os.path.join(root, ckpt),
                 lambda b, bid: mor_takedown_apply_batch(
@@ -16447,7 +16410,8 @@ def a30(spark, sf_dir):
     bound = 4.0 * n_after / (k - 1) ** 0.5
     assert abs(est_rebuilt - n_after) <= bound, (est_rebuilt, n_after)
 
-    return spark.createDataFrame(
+    return from_driver_rows(
+        spark,
         [(n_before, n_after, 4)],
         "n_before bigint, n_after bigint, n_segment_sketches bigint",
     ).select(
@@ -16592,7 +16556,7 @@ def e34(spark, sf_dir):
     staged = _stage_ordered_batches(parts, "e34_batches")
 
     def sketch_drain(ckpt):
-        with _bounded_shuffle_partitions(spark):
+        with session_confs(spark, DRAIN_CONFS):
             return drain_batches(
                 spark, parts[0].schema, staged, os.path.join(root, ckpt),
                 lambda b, bid: kmv_distinct_apply_batch(
@@ -16651,6 +16615,74 @@ def e34(spark, sf_dir):
     )
 
 
+# o27's range layouts sample their boundaries with Spark's RangePartitioner
+# sketch, whose reservoir seed depends on the RDD id, so the 16 file
+# boundaries (and how many files a probe skips) changed from run to run.
+# A per-partition hint this large makes the sketch's sample Spark's 1M-row
+# cap, so every input partition holding fewer than 3M / n_partitions rows
+# is kept whole and the boundaries are a function of the data alone.
+O27_LAYOUT_CONFS = {
+    "spark.sql.execution.rangeExchange.sampleSizePerPartition": "1000000"
+}
+
+
+def _o27_layouts(spark, sf_dir, root):
+    """o27's two 16-file layouts of a lineitem slice under ``root``:
+    ``"z"`` (range-partitioned by the z-key of the rank-normalised
+    l_orderkey and l_partkey) and ``"linear"`` (by l_orderkey). Each is a
+    committed snapshot table with per-file [min, max] stats for both
+    columns; returns the slice, its (orderkey, partkey) bounds and
+    ``{name: (table, n_files, stats)}``."""
+    import os
+
+    from urllib.parse import urlparse
+
+    from cellphe_data_pipeline_spark.operators.scale import (
+        file_key_stats,
+        zorder_key,
+    )
+    from cellphe_data_pipeline_spark.sources.io import (
+        snapshot_commit_sharded,
+        snapshot_data_files,
+    )
+
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_returnflag", "l_quantity"
+    )
+    row = li.agg(
+        F.min("l_orderkey").alias("omn"), F.max("l_orderkey").alias("omx"),
+        F.min("l_partkey").alias("pmn"), F.max("l_partkey").alias("pmx"),
+    ).collect()[0]  # bounded: 1 row
+    omn, omx, pmn, pmx = row["omn"], row["omx"], row["pmn"], row["pmx"]
+    bits = 10
+    top = (1 << bits) - 1
+    x = ((F.col("l_orderkey") - omn) * top / max(omx - omn, 1)).cast("bigint")
+    y = ((F.col("l_partkey") - pmn) * top / max(pmx - pmn, 1)).cast("bigint")
+
+    def publish(df, name):
+        table = os.path.join(root, name)
+        d = os.path.join(table, "data", "s1")
+        with session_confs(spark, O27_LAYOUT_CONFS):
+            df.repartitionByRange(16, F.col("_z")).drop(
+                "_z"
+            ).write.mode("overwrite").parquet(d)
+        files = snapshot_data_files(d)
+        stats = {}
+        for col in ("l_orderkey", "l_partkey"):
+            stats[col] = {
+                urlparse(r["file"]).path: [r["min_v"], r["max_v"]]
+                for r in file_key_stats(spark, files, col).collect()
+            }
+        snapshot_commit_sharded(table, 0, files, stats=stats)
+        return table, len(files), stats
+
+    layouts = {
+        "z": publish(li.withColumn("_z", zorder_key(x, y, bits=bits)), "z"),
+        "linear": publish(li.withColumn("_z", F.col("l_orderkey")), "linear"),
+    }
+    return li, (omn, omx, pmn, pmx), layouts
+
+
 @register(
     "o27_zorder_table",
     """
@@ -16700,52 +16732,12 @@ def o27(spark, sf_dir):
     turns every two-column dashboard/lookup family from full scans
     into O(matching files) reads — data layout as an optimizer
     surface, no index structure to maintain."""
-    import os
+    from cellphe_data_pipeline_spark.sources.io import snapshot_read_pruned
 
-    from urllib.parse import urlparse
-
-    from cellphe_data_pipeline_spark.operators.scale import (
-        file_key_stats,
-        zorder_key,
+    li, (omn, omx, pmn, pmx), layouts = _o27_layouts(
+        spark, sf_dir, _stage_dir("o27_zorder")
     )
-    from cellphe_data_pipeline_spark.sources.io import (
-        snapshot_commit_sharded,
-        snapshot_data_files,
-        snapshot_read_pruned,
-    )
-
-    root = _stage_dir("o27_zorder")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_returnflag", "l_quantity"
-    )
-    row = li.agg(
-        F.min("l_orderkey").alias("omn"), F.max("l_orderkey").alias("omx"),
-        F.min("l_partkey").alias("pmn"), F.max("l_partkey").alias("pmx"),
-    ).collect()[0]  # bounded: 1 row
-    omn, omx, pmn, pmx = row["omn"], row["omx"], row["pmn"], row["pmx"]
-    bits = 10
-    top = (1 << bits) - 1
-    x = ((F.col("l_orderkey") - omn) * top / max(omx - omn, 1)).cast("bigint")
-    y = ((F.col("l_partkey") - pmn) * top / max(pmx - pmn, 1)).cast("bigint")
-
-    def publish(df, order_col, name):
-        table = os.path.join(root, name)
-        d = os.path.join(table, "data", "s1")
-        df.repartitionByRange(16, F.col(order_col)).drop(
-            "_z"
-        ).write.mode("overwrite").parquet(d)
-        files = snapshot_data_files(d)
-        stats = {}
-        for col in ("l_orderkey", "l_partkey"):
-            stats[col] = {
-                urlparse(r["file"]).path: [r["min_v"], r["max_v"]]
-                for r in file_key_stats(spark, files, col).collect()
-            }
-        snapshot_commit_sharded(table, 0, files, stats=stats)
-        return table, len(files)
-
-    ztab, zn = publish(li.withColumn("_z", zorder_key(x, y, bits=bits)), "_z", "z")
-    ltab, ln = publish(li.withColumn("_z", F.col("l_orderkey")), "_z", "linear")
+    (ztab, zn, _), (ltab, ln, _) = layouts["z"], layouts["linear"]
 
     def probe(table, col, lo, hi):
         df, info = snapshot_read_pruned(spark, table, 1, col, lo, hi)
@@ -17368,7 +17360,7 @@ def e35(spark, sf_dir):
     staged = _stage_ordered_batches([b1, b2, b3], "e35_batches")
 
     def cdc_drain(ckpt):
-        with _bounded_shuffle_partitions(spark):
+        with session_confs(spark, DRAIN_CONFS):
             results = drain_batches(
                 spark, b1.schema, staged, os.path.join(root, ckpt),
                 lambda b, bid: cdc_apply_batch(
@@ -17683,7 +17675,7 @@ _DRIVER_WINDOW_PRIORITY = [
     #   2. the CHANGED-CODE re-proof cohort (13): every registered
     #      query whose ENGINE PATH changed this round —
     #      the 8 queries whose CC/closure loops switched from a
-    #      constant loop_shuffle_partitions to "auto" (ask #2: c24,
+    #      constant loop partition count to edge-count sizing (ask #2: c24,
     #      g4, g4b, d7, d11, c21, c23, d18), a28 (sketch merge moved
     #      from an unpartitioned row_number window to the kmv_merge
     #      aggregate, ask #7), s23/s24 (snapshot_changes went

@@ -1,106 +1,11 @@
-"""Explicit StructType schemas for every engine table.
+"""Names of the driver-provided test tables (TESTDATA.md).
 
-The reference's schemas are implicit (CSV headers + pandas inference;
-the only declared contracts are hand-maintained column orders at
-parse_xml.py:170-196 and create_frame_summary_features.py:65-66).
-The engine declares everything: deterministic reads, columnar Parquet
-interchange, DuckDB-oracle comparability, and safe empty-relation
-handling (reference's header-only-CSV fallback frame_features_image.py:72-78
-becomes a typed empty DataFrame for free).
+Engine tables carry their schemas where they are built (for example
+``domain.images.FRAME_SCHEMA``); this module holds only the list of
+parquet tables ``sources.tables.load_tables`` reads.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import types as T
-
-# --- Domain tables (SURVEY §1) -------------------------------------------
-
-#: TrackMate spot fact table — 24-column order mirrors parse_xml.py:170-196.
-#: IDs are 1-indexed at the CSV edge (parse_xml.py:198-200).
-SPOTS_SCHEMA = T.StructType(
-    [
-        T.StructField("LABEL", T.StringType()),
-        T.StructField("ID", T.IntegerType()),
-        T.StructField("TRACK_ID", T.IntegerType()),
-        T.StructField("QUALITY", T.DoubleType()),
-        T.StructField("POSITION_X", T.DoubleType()),
-        T.StructField("POSITION_Y", T.DoubleType()),
-        T.StructField("POSITION_Z", T.DoubleType()),
-        T.StructField("POSITION_T", T.DoubleType()),
-        T.StructField("FRAME", T.IntegerType()),
-        T.StructField("RADIUS", T.DoubleType()),
-        T.StructField("VISIBILITY", T.IntegerType()),
-        T.StructField("MEAN_INTENSITY_CH1", T.DoubleType()),
-        T.StructField("MEDIAN_INTENSITY_CH1", T.DoubleType()),
-        T.StructField("MIN_INTENSITY_CH1", T.DoubleType()),
-        T.StructField("MAX_INTENSITY_CH1", T.DoubleType()),
-        T.StructField("TOTAL_INTENSITY_CH1", T.DoubleType()),
-        T.StructField("STD_INTENSITY_CH1", T.DoubleType()),
-        T.StructField("CONTRAST_CH1", T.DoubleType()),
-        T.StructField("SNR_CH1", T.DoubleType()),
-        T.StructField("AREA", T.DoubleType()),
-        T.StructField("PERIMETER", T.DoubleType()),
-        T.StructField("CIRCULARITY", T.DoubleType()),
-        T.StructField("SOLIDITY", T.DoubleType()),
-        T.StructField("SHAPE_INDEX", T.DoubleType()),
-    ]
-)
-
-#: Per-(cell, frame) static feature rows (frame_features_image.py:66-79).
-#: Real runs append ~74 package feature columns; keys + consumed columns
-#: (x, y, Area — create_frame_summary_features.py:23,28-29,69) are fixed.
-FRAME_FEATURES_KEY_SCHEMA = T.StructType(
-    [
-        T.StructField("FrameID", T.IntegerType()),
-        T.StructField("CellID", T.IntegerType()),
-        T.StructField("ROI_filename", T.StringType()),
-        T.StructField("x", T.DoubleType()),
-        T.StructField("y", T.DoubleType()),
-        T.StructField("Area", T.DoubleType()),
-    ]
-)
-
-#: ROI polygon boundaries (parse_xml.py:97-101): ordered vertex list.
-ROIS_SCHEMA = T.StructType(
-    [
-        T.StructField("roi_filename", T.StringType()),
-        T.StructField("FrameID", T.IntegerType()),
-        T.StructField("CellID", T.IntegerType()),
-        T.StructField(
-            "coords",
-            T.ArrayType(
-                T.StructType(
-                    [T.StructField("x", T.IntegerType()), T.StructField("y", T.IntegerType())]
-                )
-            ),
-        ),
-    ]
-)
-
-#: Track lineage graph (parse_xml.py:83-122).
-TRACK_NODES_SCHEMA = T.StructType(
-    [T.StructField("ID", T.IntegerType()), T.StructField("FRAME", T.IntegerType())]
-)
-TRACK_EDGES_SCHEMA = T.StructType(
-    [
-        T.StructField("SPOT_SOURCE_ID", T.IntegerType()),
-        T.StructField("SPOT_TARGET_ID", T.IntegerType()),
-    ]
-)
-
-#: Image/frame metadata + opaque raster payload (SURVEY §1.1); the pixel
-#: `data` column is absent when only metadata ops run (column pruning).
-FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("frame_id", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("data", T.BinaryType()),
-    ]
-)
-
-# --- Driver test tables (TESTDATA.md) -------------------------------------
 
 #: Names of the driver-provided parquet tables at /root/testdata/sf*/.
 TEST_TABLES = (
@@ -115,6 +20,3 @@ TEST_TABLES = (
     "documents",
     "embeddings",
 )
-
-#: Dimension tables small enough to broadcast at any scale factor.
-BROADCAST_DIMS = frozenset({"region", "nation"})

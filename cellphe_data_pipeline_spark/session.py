@@ -43,7 +43,9 @@ Scale rationale (100 TB target):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
+from pyspark.errors import SparkNoSuchElementException
 from pyspark.sql import SparkSession
 
 #: directory holding the package, for the Python workers' import path
@@ -130,6 +132,37 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def session_confs(spark: SparkSession, confs: dict):
+    """Scoped session-conf overrides: set every ``confs`` key for the
+    duration of the block and restore the previous values on exit,
+    also when the block raises. The one place the engine mutates a
+    running session's conf (``sources.tables`` sets the session's
+    read settings once, at load).
+
+    Runtime settings such as AQE thresholds and shuffle-partition counts
+    are read when a plan EXECUTES, so the caller materialises inside the
+    scope. Values are restored, not set-state: ``spark.conf.get``
+    returns the engine default without raising for most SQL confs, so a
+    key never explicitly set before is restored by re-setting that
+    default; only keys without a default are unset."""
+    saved = {}
+    try:
+        for key, v in confs.items():
+            try:
+                saved[key] = spark.conf.get(key)
+            except SparkNoSuchElementException:
+                saved[key] = None
+            spark.conf.set(key, str(v))
+        yield
+    finally:
+        for key, v in saved.items():
+            if v is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, v)
 
 
 def codegen_compiles(spark: SparkSession) -> int:

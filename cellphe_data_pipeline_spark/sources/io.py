@@ -60,9 +60,9 @@ def from_driver_rows(
     the SQL Arrow runners add ``SPARK_SIMPLIFIED_TRACEBACK`` to it where
     PythonRDD does not. ``createDataFrame(pandas)`` falls back to that
     list path when the frame has no rows or Arrow is off, so the engine
-    hands Spark an Arrow table itself. Outside ``queries.py`` and
-    ``testing/``, every engine relation made from driver rows comes
-    through here (source-guarded in ``tests/test_session.py``)."""
+    hands Spark an Arrow table itself. Every relation the package makes
+    from driver rows comes through here (source-guarded in
+    ``tests/test_session.py``)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from cellphe_data_pipeline_spark.sources.io import from_driver_rows
+
 
 def _spot_xml(sid: int, frame: int, x: float, y: float, area: float,
               boundary: str = "0.0 0.0 2.0 0.0 2.0 2.0") -> str:
@@ -80,30 +82,31 @@ ROI_COORDS = [(0, 0), (3, 0), (3, 3), (0, 3)]
 
 
 def trackmate_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(TRACKMATE_XML,)], "xml string")
+    return from_driver_rows(spark, [(TRACKMATE_XML,)], "xml string")
 
 
 def ome_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(OME_XML,)], "xml string")
+    return from_driver_rows(spark, [(OME_XML,)], "xml string")
 
 
 def lineage_dfs(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     return (
-        spark.createDataFrame(LINEAGE_NODES, "ID bigint, FRAME int"),
-        spark.createDataFrame(LINEAGE_EDGES, "src bigint, dst bigint"),
+        from_driver_rows(spark, LINEAGE_NODES, "ID bigint, FRAME int"),
+        from_driver_rows(spark, LINEAGE_EDGES, "src bigint, dst bigint"),
     )
 
 
 def detections_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
+    return from_driver_rows(
+        spark,
         TRACK_DETECTIONS, "timelapse_id string, id int, frame int, x double, y double"
     )
 
 
 def roi_df(spark: SparkSession) -> DataFrame:
     coords = [{"x": x, "y": y} for x, y in ROI_COORDS]
-    return spark.createDataFrame(
-        [(1, coords)], "id int, coords array<struct<x:int,y:int>>"
+    return from_driver_rows(
+        spark, [(1, coords)], "id int, coords array<struct<x:int,y:int>>"
     )
 
 
@@ -111,15 +114,16 @@ def fake_frames_df(spark: SparkSession, seed: int = 3, n_frames: int = 2) -> Dat
     from cellphe_data_pipeline_spark.domain.images import make_fake_image
 
     payload = make_fake_image(seed=seed, height=16, width=16, n_frames=n_frames)
-    return spark.createDataFrame(
-        [(f"fx{seed}.fake", bytearray(payload))], "path string, content binary"
+    return from_driver_rows(
+        spark, [(f"fx{seed}.fake", payload)], "path string, content binary"
     )
 
 
 def fixture_rois_df(spark: SparkSession) -> DataFrame:
     square = [{"x": x, "y": y} for x in range(4, 8) for y in range(4, 8)]
     tri = [{"x": x, "y": y} for x, y in [(1, 1), (2, 1), (1, 2), (2, 2), (3, 1)]]
-    return spark.createDataFrame(
+    return from_driver_rows(
+        spark,
         [
             (0, 10, "000-01-010", square),
             (0, 11, "000-01-011", tri),
@@ -141,8 +145,8 @@ TIMESERIES_ROWS: list[tuple[int, int, float]] = (
 
 
 def timeseries_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        TIMESERIES_ROWS, "user_id int, seq int, value double"
+    return from_driver_rows(
+        spark, TIMESERIES_ROWS, "user_id int, seq int, value double"
     )
 
 
@@ -160,7 +164,7 @@ def fixture_embeddings_df(spark: SparkSession, n: int = 18, dim: int = 8) -> Dat
         c = centers[i % 3]
         vec = [c[d] + ((i * 7 + d * 3) % 5 - 2) / 10.0 for d in range(dim)]
         rows.append((i, [float(x) for x in vec]))
-    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    return from_driver_rows(spark, rows, "vec_id bigint, embedding array<float>")
 
 
 def fake_video_df(spark: SparkSession) -> DataFrame:
@@ -178,8 +182,8 @@ def fake_video_df(spark: SparkSession) -> DataFrame:
         for base in [base_a] * 3 + [base_b] * 3
     ]
     payload = encode_fake_container(np.stack(frames).astype(np.uint8))
-    return spark.createDataFrame(
-        [("vid11.fake", bytearray(payload))], "path string, content binary"
+    return from_driver_rows(
+        spark, [("vid11.fake", payload)], "path string, content binary"
     )
 
 
@@ -190,10 +194,11 @@ def fake_audio_df(spark: SparkSession) -> DataFrame:
     keep-short-tails contract of sample_windows."""
     from cellphe_data_pipeline_spark.domain.media import make_fake_audio
 
-    return spark.createDataFrame(
+    return from_driver_rows(
+        spark,
         [
-            ("au5.fake", bytearray(make_fake_audio(seed=5, n_samples=9000))),
-            ("au6.fake", bytearray(make_fake_audio(seed=6, n_samples=4500))),
+            ("au5.fake", make_fake_audio(seed=5, n_samples=9000)),
+            ("au6.fake", make_fake_audio(seed=6, n_samples=4500)),
         ],
         "path string, content binary",
     )
@@ -219,8 +224,8 @@ def split_merge_detections_df(spark: SparkSession) -> DataFrame:
         ("tl", 2, 0, 16.0, 10.0), ("tl", 102, 1, 14.0, 10.0),
         ("tl", 202, 2, 12.0, 10.0), ("tl", 302, 3, 10.0, 10.0),
     ]
-    return spark.createDataFrame(
-        rows, "timelapse_id string, id int, frame int, x double, y double"
+    return from_driver_rows(
+        spark, rows, "timelapse_id string, id int, frame int, x double, y double"
     )
 
 
@@ -236,8 +241,8 @@ def gap_closing_detections_df(spark: SparkSession) -> DataFrame:
         ("tl", 7, 4, 4.0, 0.0), ("tl", 8, 5, 4.0, 0.0),
         ("tl", 9, 4, 6.5, 0.0), ("tl", 10, 5, 6.5, 0.0),
     ]
-    return spark.createDataFrame(
-        rows, "timelapse_id string, id int, frame int, x double, y double"
+    return from_driver_rows(
+        spark, rows, "timelapse_id string, id int, frame int, x double, y double"
     )
 
 
@@ -253,6 +258,6 @@ def crossing_detections_df(spark: SparkSession) -> DataFrame:
     for f in range(5):
         rows.append(("tl", 1 + f, f, 0.0 + 10.0 * f, 0.0))       # A: ids 1..5
         rows.append(("tl", 11 + f, f, 41.0 - 10.0 * f, 1.0))     # B: ids 11..15
-    return spark.createDataFrame(
-        rows, "timelapse_id string, id bigint, frame int, x double, y double"
+    return from_driver_rows(
+        spark, rows, "timelapse_id string, id bigint, frame int, x double, y double"
     )

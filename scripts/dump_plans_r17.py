@@ -41,7 +41,7 @@ def main():
                  for i in range(4)],
                 "path string, content binary",
             )
-            out = run_pipeline(bins, cc_shuffle_partitions="auto")
+            out = run_pipeline(bins)
             dump(out["summary" if name.endswith("summary") else "timeseries"], name, suffix)
         elif name == "d10_incremental":
             from cellphe_data_pipeline_spark.operators.dedup import incremental_near_duplicates

@@ -117,13 +117,13 @@ def test_pipeline_under_replicated_cuts(spark, ckpt_dir):
         ],
         "path string, content binary",
     )
-    out = run_pipeline(bins, cc_shuffle_partitions=2)
+    out = run_pipeline(bins)
     flagged = {k: out[k].count() for k in ("detections", "summary")}
     assert flagged["detections"] > 0 and flagged["summary"] > 0
     assert _parquet_cuts(ckpt_dir)  # cuts actually went through parquet
 
     spark.conf.unset(CHECKPOINT_DIR_CONF)
-    out2 = run_pipeline(bins, cc_shuffle_partitions=2)
+    out2 = run_pipeline(bins)
     default = {k: out2[k].count() for k in ("detections", "summary")}
     assert flagged == default
 

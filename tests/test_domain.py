@@ -2047,6 +2047,39 @@ def test_cell_features_total_robustness_hypothesis():
     check()
 
 
+def test_frame_diff_energy_reads_16bit_pages(spark):
+    """A 16-bit page is diffed as uint16 and scaled by 65535, the way
+    ``split_frames`` emits 16-bit TIFF pages; 8-bit pages keep /255."""
+    import numpy as np
+
+    from cellphe_data_pipeline_spark.domain.images import FRAME_SCHEMA
+    from cellphe_data_pipeline_spark.domain.media import frame_diff_energy
+
+    f0 = np.array([[0, 1000], [300, 65535]], np.uint16)
+    f1 = np.array([[2000, 1000], [0, 65000]], np.uint16)
+    g0 = np.array([[0, 10], [200, 255]], np.uint8)
+    g1 = np.array([[5, 10], [0, 250]], np.uint8)
+    frames = spark.createDataFrame(
+        [
+            ("w.tif", 0, 2, 2, f0.tobytes()),
+            ("w.tif", 1, 2, 2, f1.tobytes()),
+            ("n.tif", 0, 2, 2, g0.tobytes()),
+            ("n.tif", 1, 2, 2, g1.tobytes()),
+        ],
+        FRAME_SCHEMA,
+    )
+    got = {
+        (r["path"], r["frame_index"]): r["diff_energy"]
+        for r in frame_diff_energy(frames).collect()
+    }
+    assert got == {
+        ("w.tif", 0): None,
+        ("w.tif", 1): float(np.abs(f1.astype("float64") - f0).mean() / 65535),
+        ("n.tif", 0): None,
+        ("n.tif", 1): float(np.abs(g1.astype("float64") - g0).mean() / 255.0),
+    }
+
+
 def test_frame_diff_multi_path_separation(spark):
     """Two videos in one DataFrame never diff across paths: each path's
     first frame is NULL and its cut structure is unchanged by the other

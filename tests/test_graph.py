@@ -80,10 +80,11 @@ def test_degree_roots_prune(spark):
     assert rts == [1, 4]
 
 
-def test_cc_pre_contract_equivalence(spark):
+def test_cc_contraction_equivalence(spark):
     """The partition-local contraction pre-pass is connectivity-
-    preserving: identical labels with and without it, including on
-    random (no id locality) and shuffled-id graphs."""
+    preserving: the distributed path (which contracts first) gives the
+    union-find labels, including on random (no id locality) and
+    shuffled-id graphs."""
     rng = random.Random(41)
     n = 300
     # scattered ids: destroys range locality on purpose
@@ -95,13 +96,8 @@ def test_cc_pre_contract_equivalence(spark):
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
     with_pre = {
         r["node"]: r["component"]
-        for r in connected_components(df, pre_contract=True).collect()
+        for r in connected_components(df).collect()
     }
-    without = {
-        r["node"]: r["component"]
-        for r in connected_components(df, pre_contract=False).collect()
-    }
-    assert with_pre == without
     assert _partition(with_pre) == _partition(_uf_components(edges))
     # the bounded driver-finish fast path (take + central union-find)
     # and the fully distributed alternation must agree exactly
@@ -449,14 +445,18 @@ def test_common_neighbor_hub_cap_bounds_pair_volume_on_power_law(spark):
     assert got[(0, 1)] == (2, round(2 / 6, 6))
 
 
-def test_cc_auto_loop_partitions_matches_and_restores_conf(spark):
-    """r14 (SCALE.md third-decade finding): loop_shuffle_partitions=
-    "auto" sizes the closure loop from the materialized edge count
-    instead of a constant measured at one scale. Must produce labels
-    identical to the explicit-int and default paths (it only re-sizes
-    shuffles), restore the session conf afterwards, and take the fully
-    distributed loop (cap=0) without error."""
+def test_cc_auto_loop_partitions_matches_and_restores_conf(spark, monkeypatch):
+    """The closure loop sizes its shuffles from the materialized edge
+    count (SCALE.md third-decade finding) and changes the session's
+    shuffle-partition conf only for the loop: labels equal the
+    union-find oracle on the fully distributed path (cap=0), and the
+    conf is back to its value after the call, also when the loop
+    raises."""
     import random
+
+    import pytest
+
+    from cellphe_data_pipeline_spark.operators import graph
 
     rng = random.Random(7)
     n = 400
@@ -470,16 +470,20 @@ def test_cc_auto_loop_partitions_matches_and_restores_conf(spark):
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     auto = {
         r["node"]: r["component"]
-        for r in connected_components(
-            df, loop_shuffle_partitions="auto", driver_finish_cap=0
-        ).collect()
+        for r in connected_components(df, driver_finish_cap=0).collect()
     }
     assert spark.conf.get("spark.sql.shuffle.partitions") == saved
-    explicit = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            df, loop_shuffle_partitions=4, driver_finish_cap=0
-        ).collect()
-    }
-    assert auto == explicit
     assert _partition(auto) == _partition(_uf_components(edges))
+    assert all(auto[v] == min(c) for c in _partition(auto) for v in c)
+
+    seen = []
+
+    def failing_contract(e, num_parts):
+        seen.append(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        raise RuntimeError("contraction failed")
+
+    monkeypatch.setattr(graph, "_contract_local", failing_contract)
+    with pytest.raises(RuntimeError, match="contraction failed"):
+        connected_components(df, driver_finish_cap=0)
+    assert seen == ["2"]  # 300 edges: the [2, 2x parallelism] floor
+    assert spark.conf.get("spark.sql.shuffle.partitions") == saved

@@ -19,7 +19,7 @@ def test_qc_reports(spark):
         [("tl.fake", bytearray(make_fake_timelapse(seed=7, height=40, width=40, n_frames=8, n_cells=5)))],
         "path string, content binary",
     )
-    out = run_pipeline(bins, cc_shuffle_partitions=4)
+    out = run_pipeline(bins)
 
     qc = tracking_qc(out["spots"], out["spots_filtered"])
     lengths = qc["track_lengths"].collect()

@@ -114,6 +114,24 @@ def test_global_row_number_properties(spark):
     assert all(r["rn"] == r["k"] + 1 for r in rows)
 
 
+def test_o27_layouts_are_deterministic(spark, tmp_path):
+    """o27's range-partitioned layouts come out the same on every build:
+    two builds in one session (fresh RDD ids, so fresh sampling seeds)
+    give identical per-file [min, max] stats on both columns."""
+    from cellphe_data_pipeline_spark.queries import _o27_layouts
+
+    def file_stats(root):
+        _, _, layouts = _o27_layouts(spark, "/root/testdata/sf0.01", str(root))
+        return {
+            name: {col: sorted(per_file.values()) for col, per_file in stats.items()}
+            for name, (_, _, stats) in layouts.items()
+        }
+
+    first = file_stats(tmp_path / "a")
+    assert len(first["z"]["l_orderkey"]) == 16
+    assert file_stats(tmp_path / "b") == first
+
+
 def test_zorder_buckets_have_tighter_bboxes_than_row_order(spark):
     """r7 z-order: on a 64x64 grid enumerated row-major, bucketing by
     z-key yields per-bucket bounding boxes that are tight in BOTH
@@ -271,8 +289,8 @@ def test_j12_skew_join_split_fires_and_preserves_values(spark):
     from cellphe_data_pipeline_spark.queries import (
         J12_SKEW_CONFS,
         _j12_skewed_sides,
-        _session_confs,
     )
+    from cellphe_data_pipeline_spark.session import session_confs
 
     sf = "/root/testdata/sf0.01"
     li, dim = _j12_skewed_sides(spark, sf)
@@ -282,7 +300,7 @@ def test_j12_skew_join_split_fires_and_preserves_values(spark):
         .groupBy("l_returnflag")
         .agg(F.count(F.lit(1)).alias("n_rows"))
     )
-    with _session_confs(spark, **J12_SKEW_CONFS):
+    with session_confs(spark, J12_SKEW_CONFS):
         skewed_rows = {r["l_returnflag"]: r["n_rows"] for r in agg.collect()}
         ex = agg._jdf.queryExecution().executedPlan().toString()
     assert "skew=true" in ex or "skewed" in ex, (
@@ -331,12 +349,12 @@ def test_o11_bloom_runtime_filter_fires_and_preserves_values(spark):
     from cellphe_data_pipeline_spark.queries import (
         O11_BLOOM_CONFS,
         _o11_bloom_join,
-        _session_confs,
     )
+    from cellphe_data_pipeline_spark.session import session_confs
 
     sf = "/root/testdata/sf0.01"
     agg = _o11_bloom_join(spark, sf)
-    with _session_confs(spark, **O11_BLOOM_CONFS):
+    with session_confs(spark, O11_BLOOM_CONFS):
         got = {r["l_returnflag"]: (r["n_rows"], r["sum_price"]) for r in agg.collect()}
         ex = agg._jdf.queryExecution().executedPlan().toString()
     assert "might_contain" in ex, "bloom runtime filter did not inject:\n" + ex[:2000]
@@ -357,14 +375,14 @@ def test_o12_bucket_pruning_fires_and_respects_planner_trap(spark):
         O12_BUCKET_CONFS,
         O12_KEYS,
         _o12_pruned_lookup,
-        _session_confs,
     )
+    from cellphe_data_pipeline_spark.session import session_confs
 
     import re
 
     sf = "/root/testdata/sf0.001"
     try:
-        with _session_confs(spark, **O12_BUCKET_CONFS):
+        with session_confs(spark, O12_BUCKET_CONFS):
             t = _o12_pruned_lookup(spark, sf)
             p = _plan(t, mode="formatted")
             m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", p)
@@ -411,17 +429,23 @@ def test_round_z_bits_match_duckdb_round_plus_zero(spark):
 
 
 def test_session_confs_restores_and_unsets(spark):
-    from cellphe_data_pipeline_spark.queries import _session_confs
+    import pytest
+
+    from cellphe_data_pipeline_spark.session import session_confs
 
     key_known = "spark.sql.autoBroadcastJoinThreshold"
     key_fresh = "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold"
     saved = spark.conf.get(key_known)
     before_fresh = spark.conf.get(key_fresh)  # engine default, not session-set
-    with _session_confs(spark, **{key_known: "-1", key_fresh: "1KB"}):
+    with session_confs(spark, {key_known: "-1", key_fresh: "1KB"}):
         assert spark.conf.get(key_known) == "-1"
         assert spark.conf.get(key_fresh) in ("1KB", "1024b")
     assert spark.conf.get(key_known) == saved
     assert spark.conf.get(key_fresh) == before_fresh
+    with pytest.raises(ValueError):
+        with session_confs(spark, {key_known: "-1"}):
+            raise ValueError
+    assert spark.conf.get(key_known) == saved
 
 
 def test_o13_aqe_coalesces_oversized_shuffle(spark):
@@ -432,12 +456,12 @@ def test_o13_aqe_coalesces_oversized_shuffle(spark):
     from cellphe_data_pipeline_spark.queries import (
         O13_COALESCE_CONFS,
         _o13_agg,
-        _session_confs,
     )
+    from cellphe_data_pipeline_spark.session import session_confs
 
     sf = "/root/testdata/sf0.01"
     agg = _o13_agg(spark, sf)
-    with _session_confs(spark, **O13_COALESCE_CONFS):
+    with session_confs(spark, O13_COALESCE_CONFS):
         fused = {r["o_orderpriority"]: r["n_orders"] for r in agg.collect()}
         ex = agg._jdf.queryExecution().executedPlan().toString()
     assert "coalesced" in ex, "AQE coalesce did not fire:\n" + ex[:2000]
@@ -459,12 +483,12 @@ def test_j14_runtime_promotes_smj_to_broadcast(spark):
     from cellphe_data_pipeline_spark.queries import (
         J14_PROMOTE_CONFS,
         _j14_join,
-        _session_confs,
     )
+    from cellphe_data_pipeline_spark.session import session_confs
 
     sf = "/root/testdata/sf0.01"
     agg = _j14_join(spark, sf)
-    with _session_confs(spark, **J14_PROMOTE_CONFS):
+    with session_confs(spark, J14_PROMOTE_CONFS):
         pre = agg._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in pre and "isFinalPlan=false" in pre, (
             "static plan should be SMJ before runtime stats:\n" + pre[:2000]
