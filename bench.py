@@ -51,6 +51,12 @@ after the leg (``session.python_worker_pools``; the count only grows).
 Engine code builds driver rows through Arrow and keeps one pool; a leg
 that raises it to 2 ran a list-of-tuples ``createDataFrame`` (a pickled
 PythonRDD job, which starts a second worker daemon).
+
+"python_worker_rss_mb" holds, per leg, the summed resident memory (MB)
+of those pools' processes after the leg — each daemon and its forked
+workers (``session.python_worker_pids``), read from ``/proc``. A worker
+that has run a pandas kernel holds pandas (≈30–40 MB more than one
+that ran only the engine's ``mapInArrow`` kernels).
 """
 
 from __future__ import annotations
@@ -97,10 +103,25 @@ def _materialise(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _repeat(spark, n: int, body) -> tuple[list[float], list[int], int]:
+def _python_worker_rss_mb() -> float:
+    """Summed VmRSS of the session's Python worker processes, in MB."""
+    from cellphe_data_pipeline_spark.session import python_worker_pids
+
+    kb = 0
+    for pid in python_worker_pids():
+        try:
+            with open(f"/proc/{pid}/status") as f:
+                kb += next(int(line.split()[1]) for line in f if line.startswith("VmRSS:"))
+        except (OSError, StopIteration):
+            continue
+    return round(kb / 1024.0, 1)
+
+
+def _repeat(spark, n: int, body) -> tuple[list[float], list[int], tuple[int, float]]:
     """Run ``body`` ``n`` times; return each repeat's wall seconds, the
-    compiles it added, and the session's Python worker pools after the
-    last repeat (all read outside the timed section)."""
+    compiles it added, and the session's Python worker pools and their
+    summed RSS after the last repeat (all read outside the timed
+    section)."""
     from cellphe_data_pipeline_spark.session import codegen_compiles, python_worker_pools
 
     runs: list[float] = []
@@ -111,7 +132,7 @@ def _repeat(spark, n: int, body) -> tuple[list[float], list[int], int]:
         body()
         runs.append(round(time.perf_counter() - t0, 3))
         compiles.append(codegen_compiles(spark) - c0)
-    return runs, compiles, python_worker_pools(spark)
+    return runs, compiles, (python_worker_pools(spark), _python_worker_rss_mb())
 
 
 def _preflight_quiet(max_wait_s: float, threshold: float = 2.0) -> list[str]:
@@ -161,7 +182,7 @@ def main() -> None:
     times: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     codegen: dict[str, list[int]] = {}
-    pools: dict[str, int] = {}
+    workers: dict[str, tuple[int, float]] = {}
     total = 0.0
     for name in HEADLINE:
         # best of 3: the first run pays codegen/scan caches, the two
@@ -172,7 +193,7 @@ def main() -> None:
             df = qs[name](spark, sf_dir)
             _materialise(df)
 
-        runs, codegen[name], pools[name] = _repeat(spark, 3, headline)
+        runs, codegen[name], workers[name] = _repeat(spark, 3, headline)
         samples[name] = runs
         times[name] = min(runs)
         total += times[name]
@@ -213,7 +234,7 @@ def main() -> None:
 
     # three repeats for the dominant entry: its spread is the clearest
     # in-artifact contention signal
-    runs, codegen["pipeline_726frames"], pools["pipeline_726frames"] = _repeat(spark, 3, pipeline(bins))
+    runs, codegen["pipeline_726frames"], workers["pipeline_726frames"] = _repeat(spark, 3, pipeline(bins))
     samples["pipeline_726frames"] = runs
     times["pipeline_726frames"] = min(runs)
     total += times["pipeline_726frames"]
@@ -235,7 +256,7 @@ def main() -> None:
         ],
         "path string, content binary",
     )
-    runs4, codegen["pipeline_2904frames"], pools["pipeline_2904frames"] = _repeat(spark, 2, pipeline(bins4))
+    runs4, codegen["pipeline_2904frames"], workers["pipeline_2904frames"] = _repeat(spark, 2, pipeline(bins4))
     samples["pipeline_2904frames"] = runs4
     scaling = {
         "pipeline_2904frames": min(runs4),
@@ -269,7 +290,7 @@ def main() -> None:
         )
         _materialise(budget)
 
-    runs_c, codegen["corpus_split_pipeline"], pools["corpus_split_pipeline"] = _repeat(spark, 2, corpus_split)
+    runs_c, codegen["corpus_split_pipeline"], workers["corpus_split_pipeline"] = _repeat(spark, 2, corpus_split)
     samples["corpus_split_pipeline"] = runs_c
     corpus = {"corpus_split_pipeline": min(runs_c)}
 
@@ -280,7 +301,7 @@ def main() -> None:
     # tests/test_plans.py). EXCLUDED from the headline total (same
     # cross-round comparability rule as corpus_split_pipeline); two
     # repeats, reported under "corpus".
-    runs_e, codegen["corpus_e2e_pipeline"], pools["corpus_e2e_pipeline"] = _repeat(
+    runs_e, codegen["corpus_e2e_pipeline"], workers["corpus_e2e_pipeline"] = _repeat(
         spark, 2, lambda: _materialise(qs["c24_corpus_pipeline"](spark, sf_dir))
     )
     samples["corpus_e2e_pipeline"] = runs_e
@@ -321,7 +342,7 @@ def main() -> None:
             ),
         )
     )
-    runs_s, codegen["scale_cpu_probe"], pools["scale_cpu_probe"] = _repeat(
+    runs_s, codegen["scale_cpu_probe"], workers["scale_cpu_probe"] = _repeat(
         spark, 2, lambda: _materialise(minhash_band_keys(word_shingles(big)))
     )
     samples["scale_cpu_probe"] = runs_s
@@ -361,7 +382,8 @@ def main() -> None:
                 "scaling": scaling,
                 "corpus": corpus,
                 "codegen_compiles": codegen,
-                "python_worker_pools": pools,
+                "python_worker_pools": {k: v[0] for k, v in workers.items()},
+                "python_worker_rss_mb": {k: v[1] for k, v in workers.items()},
                 "loadavg_start": load_start,
                 "loadavg_end": _loadavg(),
                 "warnings": warnings,

@@ -12,9 +12,11 @@ defines HOW, idiomatically on Spark:
 - Shuffle-conscious design for 100 TB scale: broadcast joins for dims,
   window functions instead of groupBy+join-back, map-side partial
   aggregation, grid-bucketed range joins for spatial self-joins.
-- Python only at the edges: Arrow-batched pandas UDFs (`applyInPandas` /
-  `mapInPandas`) for numeric kernels Spark can't express (wavelets,
-  image decode); never row-at-a-time Python UDFs in hot paths.
+- Python only at the edges: Arrow-batched kernels for numeric work
+  Spark can't express (wavelets, image decode) — `mapInArrow` over
+  numpy for every kernel the pipeline runs, so its workers never load
+  pandas (`operators/arrow_map.py`); pandas UDFs only in query-only
+  kernels; never row-at-a-time Python UDFs in hot paths.
 """
 
 from cellphe_data_pipeline_spark.session import get_spark

@@ -6,7 +6,7 @@ frame (P4, :46) fetch its ROI (J5, :49-54), clip negatives (F9,
 :55-56), and call ``cellphe.features.extract_static_features`` [pkg]
 (~74 size/shape/boundary/intensity/texture features, Wiseman 2023).
 
-Engine shape: one ``mapInPandas`` over rows that each carry a whole
+Engine shape: one ``mapInArrow`` over rows that each carry a whole
 frame (the raster plus that frame's cells, nested by one aggregation),
 after a round-robin repartition sized to the cores — the image is
 decoded ONCE per frame and all its cells are looped inside the kernel,
@@ -36,12 +36,13 @@ matching the reference.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from cellphe_data_pipeline_spark.domain.images import _raster_dtype, label_contour
+from cellphe_data_pipeline_spark.operators.arrow_map import rows_batch
 from cellphe_data_pipeline_spark.sources.io import from_driver_rows
 
 STATIC_FEATURE_NAMES = (
@@ -663,12 +664,13 @@ def _frame_features(tagged: DataFrame, frame_cells) -> DataFrame:
     yields that frame's ``(CellID, ROI_filename, coords)`` with
     coords an (n, 2) int64 array of (x, y) boundary points — the only
     step in which the two forms differ."""
-    out_cols = [f.name for f in FEATURES_SCHEMA.fields]
+    out = to_arrow_schema(FEATURES_SCHEMA)
+    nan = float("nan")
 
     def kernel(batches):
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for _, r in pdf.iterrows():
+            for r in batch.to_pylist():
                 raw = r["data"]
                 h, w = int(r["height"]), int(r["width"])
                 img = np.frombuffer(raw, dtype=_raster_dtype(raw, h, w)).reshape(
@@ -682,15 +684,15 @@ def _frame_features(tagged: DataFrame, frame_cells) -> DataFrame:
                     if feats is None:
                         continue  # degenerate ROI skip
                     rows.append(
-                        {
-                            "path": r["path"],
-                            "FrameID": int(r["FrameID"]),
-                            "CellID": cell_id,
-                            "ROI_filename": roi_filename,
-                            **feats,
-                        }
+                        (
+                            r["path"],
+                            int(r["FrameID"]),
+                            cell_id,
+                            roi_filename,
+                            *[feats.get(name, nan) for name in STATIC_FEATURE_NAMES],
+                        )
                     )
-            yield pd.DataFrame(rows, columns=out_cols)
+            yield rows_batch(rows, out)
 
     # CPU-bound kernel over tiny rows: spread with an explicit
     # ROUND-ROBIN repartition sized to cores so AQE's byte-based
@@ -702,7 +704,7 @@ def _frame_features(tagged: DataFrame, frame_cells) -> DataFrame:
     # the frames⋈cells join twice per action (measured ~1s/action at
     # the bench shape; guide §2.4 "remove shuffles outright").
     n = max(2, tagged.sparkSession.sparkContext.defaultParallelism)
-    return tagged.repartition(n).mapInPandas(kernel, FEATURES_SCHEMA)
+    return tagged.repartition(n).mapInArrow(kernel, FEATURES_SCHEMA)
 
 
 def static_features(frames: DataFrame, rois: DataFrame) -> DataFrame:

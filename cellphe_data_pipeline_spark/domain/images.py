@@ -2,8 +2,8 @@
 
 Images are opaque ``binary`` payloads with typed metadata — the
 multimodal-column pattern: Spark moves/partitions the bytes, Arrow
-batches them into pandas UDFs, and the codec boundary is a narrow
-per-batch kernel. The real TIFF/JPEG/PNG codecs (Pillow, tifffile,
+batches them into Python map kernels, and the codec boundary is a
+narrow per-batch kernel. The real TIFF/JPEG/PNG codecs (Pillow, tifffile,
 ImageMagick) are NOT in this container, so the decode step is isolated
 behind ``decode_frame``: a clearly-marked stub that raises
 ``NotImplementedError`` for real payloads and produces a DETERMINISTIC
@@ -14,8 +14,8 @@ signatures) is real and tested either way.
 Scale notes:
 - ``scan_images`` (S1, main.nf:418-452): ``binaryFile`` source with
   pathGlobFilter pushdown — list + read parallelised over executors.
-- ``split_frames`` (S3/S4, main.nf:305-320/361-374): UDTF shape via
-  ``mapInPandas`` — 1 container file → N frame rows; one input file per
+- ``split_frames`` (S3/S4, main.nf:305-320/361-374): UDTF shape via a
+  map kernel — 1 container file → N frame rows; one input file per
   Arrow batch keeps executor memory bounded by the largest container,
   independent of corpus size.
 - ``decode_segment_centroid`` (S3/S4 + M1/M2 + detection,
@@ -27,21 +27,28 @@ Scale notes:
 - ``mask_rois`` (M6 / TrackMate ROIs, parse_xml.py:47-67): one ordered
   contour per label, traced by ``label_contour`` — the same tracer the
   M4 kernel uses.
+
+The kernels a pipeline run executes (``decode_segment_centroid`` and
+the highlight pixels, ``mask_boundary_overlay`` / ``mask_pixels``) are
+``mapInArrow`` over numpy and build their output with
+``operators.arrow_map``, so the Python workers never load pandas; the
+query-only kernels are ``mapInPandas`` and import pandas inside.
 """
 
 from __future__ import annotations
 
 import hashlib
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from cellphe_data_pipeline_spark.domain.rois import COORDS_TYPE
+from cellphe_data_pipeline_spark.operators.arrow_map import record_batch, to_arrow
 
 FAKE_MAGIC = b"FAKE1"
 
@@ -211,7 +218,9 @@ def split_frames(binaries: DataFrame) -> DataFrame:
     `frame_index` is the within-file page index (the OME `IFD`); global
     ordering/renumbering is W4's job downstream."""
 
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def split(batches):
+        import pandas as pd
+
         for pdf in batches:
             for _, row in pdf.iterrows():
                 frames = decode_frame(row["content"])
@@ -284,7 +293,9 @@ def jpeg_to_gray_tiff(binaries: DataFrame) -> DataFrame:
     rows are (path, tiff binary) ready for the S15 published-dir sink,
     exactly the reference's convert-then-segment staging."""
 
-    def conv(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def conv(batches):
+        import pandas as pd
+
         from cellphe_data_pipeline_spark.domain.jpeg import decode_jpeg_gray
 
         for pdf in batches:
@@ -326,7 +337,9 @@ def resize_frames(
     if method not in ("area", "nearest"):
         raise ValueError(f"method must be 'area' or 'nearest', got {method!r}")
 
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rs(batches):
+        import pandas as pd
+
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
@@ -363,40 +376,6 @@ def resize_frames(
             yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
 
     return frames.mapInPandas(rs, FRAME_SCHEMA)
-
-
-def frames_to_tiff_stack(frames: DataFrame) -> DataFrame:
-    """E2 step 6 (main.nf:523-525 ``create_tiff_stack``): archive each
-    timelapse's frames as ONE multi-page TIFF — the reference's
-    always-on final packaging step, closed by the in-engine baseline
-    writer. One archive per ``path`` group via applyInPandas (frames
-    sorted by frame_index inside the kernel), so archives parallelise
-    across timelapses exactly like the ROI zip sink; output rows
-    (path, n_frames, tiff) feed the S15 published-dir sink."""
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("frame_index")
-        pages = []
-        for _, r in pdf.iterrows():
-            dt = _raster_dtype(r["data"], int(r["height"]), int(r["width"]))
-            pages.append(
-                np.frombuffer(r["data"], dtype=dt).reshape(r["height"], r["width"])
-            )
-        return pd.DataFrame(
-            [
-                {
-                    "path": pdf["path"].iloc[0],
-                    "n_frames": len(pages),
-                    "tiff": encode_tiff_gray(pages),
-                }
-            ]
-        )
-
-    return (
-        frames.select("path", "frame_index", "height", "width", "data")
-        .groupBy("path")
-        .applyInPandas(pack, "path string, n_frames int, tiff binary")
-    )
 
 
 def grayscale_convert(frames: DataFrame) -> DataFrame:
@@ -600,9 +579,11 @@ def mask_label_histogram(masks: DataFrame) -> DataFrame:
     per-cell pixel areas. UDTF shape: 1 mask → one row per label
     (np.unique with counts); downstream filters mask_id != 0 (P7)."""
 
-    def hist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def hist(batches):
+        import pandas as pd
+
         for pdf in batches:
-            parts: list[pd.DataFrame] = []  # one Arrow batch per input batch
+            parts = []  # one Arrow batch per input batch
             for _, row in pdf.iterrows():
                 m = np.frombuffer(row["mask"], dtype=np.uint16)
                 ids, counts = np.unique(m, return_counts=True)
@@ -636,35 +617,52 @@ def mask_boundary_overlay(masks: DataFrame) -> DataFrame:
         ]
     )
 
-    def bounds(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts: list[pd.DataFrame] = []  # one Arrow batch per input batch
-            for _, row in pdf.iterrows():
-                m = np.frombuffer(row["mask"], dtype=np.uint16).reshape(
-                    row["height"], row["width"]
-                )
-                diff = np.zeros(m.shape, dtype=bool)
-                diff[:-1, :] |= m[:-1, :] != m[1:, :]
-                diff[1:, :] |= m[1:, :] != m[:-1, :]
-                diff[:, :-1] |= m[:, :-1] != m[:, 1:]
-                diff[:, 1:] |= m[:, 1:] != m[:, :-1]
-                diff &= m != 0
-                ys, xs = np.nonzero(diff)
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "path": row["path"],
-                            "frame_index": row["frame_index"],
-                            "px": xs.astype("int32"),
-                            "py": ys.astype("int32"),
-                            "mask_id": m[ys, xs].astype("int32"),
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
+    def boundary(m: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        diff = np.zeros(m.shape, dtype=bool)
+        diff[:-1, :] |= m[:-1, :] != m[1:, :]
+        diff[1:, :] |= m[1:, :] != m[:-1, :]
+        diff[:, :-1] |= m[:, :-1] != m[:, 1:]
+        diff[:, 1:] |= m[:, 1:] != m[:, :-1]
+        diff &= m != 0
+        return np.nonzero(diff)
 
-    return masks.mapInPandas(bounds, schema)
+    return _mask_pixel_rows(masks, boundary, schema)
+
+
+def _mask_pixel_rows(masks: DataFrame, pick, schema: T.StructType) -> DataFrame:
+    """One row per picked pixel of each label mask, as one
+    ``mapInArrow``: ``pick(m)`` returns the ``(ys, xs)`` pixels of a
+    (height, width) uint16 mask, and each becomes a (path, frame_index,
+    px, py, mask_id) row, in ``schema``'s column order, frames in input
+    order and pixels in ``pick``'s order."""
+    out = to_arrow_schema(schema)
+
+    def kernel(batches):
+        for batch in batches:
+            per_frame = []
+            for mask, h, w in zip(
+                batch.column("mask").to_pylist(),
+                batch.column("height").to_pylist(),
+                batch.column("width").to_pylist(),
+            ):
+                m = np.frombuffer(mask, dtype=np.uint16).reshape(h, w)
+                ys, xs = pick(m)
+                per_frame.append((xs, ys, m[ys, xs]))
+            counts = [len(xs) for xs, _, _ in per_frame]
+            if not sum(counts):
+                continue
+            rows = np.repeat(np.arange(len(counts)), counts)
+            cols = {
+                "path": batch.column("path").take(to_arrow(rows, pa.int64())),
+                "frame_index": np.asarray(
+                    batch.column("frame_index").to_pylist(), dtype=np.int32
+                )[rows],
+            }
+            for i, name in enumerate(("px", "py", "mask_id")):
+                cols[name] = np.concatenate([f[i] for f in per_frame]).astype(np.int32)
+            yield record_batch([cols[f.name] for f in out], out)
+
+    return masks.mapInArrow(kernel, schema)
 
 
 def mask_fill_pixels(masks: DataFrame) -> DataFrame:
@@ -834,7 +832,9 @@ def mask_rois(masks: DataFrame) -> DataFrame:
     FRAME-TRACK-ID name and data-driven padding (parse_xml.py:202-211)
     once tracking has run — see ``static_features_fused``."""
 
-    def rois(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rois(batches):
+        import pandas as pd
+
         cols = [f.name for f in ROI_SCHEMA.fields]
         for pdf in batches:
             rows = []
@@ -898,7 +898,9 @@ def mask_to_png(masks: DataFrame) -> DataFrame:
     mask as a 16-bit grayscale PNG via the dependency-free encoder.
     Pure per-row encode, no shuffle."""
 
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def enc(batches):
+        import pandas as pd
+
         for pdf in batches:
             blobs = []
             for _, row in pdf.iterrows():
@@ -976,13 +978,19 @@ def decode_segment_centroid(
     signature can be injected."""
     model_cls = _validate_segment_method(method, model_cls)
 
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    out = to_arrow_schema(FUSED_FRAME_SCHEMA)
+    cent_type = out.field("cents").type.value_type
+
+    def fused(batches):
         model = _make_segmenter(method, model_args, eval_args, model_cls)
-        cols = [f.name for f in FUSED_FRAME_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                for i, img in enumerate(decode_frame(bytes(row["content"]))):
+        for batch in batches:
+            frames = []  # (path, frame_index, height, width, data, mask)
+            cents = {f.name: [] for f in cent_type}  # per-frame arrays
+            n_cents = [0]
+            for path, content in zip(
+                batch.column("path").to_pylist(), batch.column("content").to_pylist()
+            ):
+                for i, img in enumerate(decode_frame(content)):
                     m = model(img)
                     ids, counts = np.unique(m, return_counts=True)
                     keep = ids != 0
@@ -991,38 +999,25 @@ def decode_segment_centroid(
                         ys, xs = np.indices(m.shape)
                         sum_x = np.bincount(m.ravel(), weights=xs.ravel())
                         sum_y = np.bincount(m.ravel(), weights=ys.ravel())
-                        cx = sum_x[ids] / counts
-                        cy = sum_y[ids] / counts
-                        cents = [
-                            {
-                                "mask_id": int(mid),
-                                "area": int(a),
-                                "cx": float(x),
-                                "cy": float(y),
-                            }
-                            for mid, a, x, y in zip(
-                                ids.tolist(),
-                                counts.tolist(),
-                                cx.tolist(),
-                                cy.tolist(),
-                            )
-                        ]
-                    else:
-                        cents = []
-                    rows.append(
-                        {
-                            "path": row["path"],
-                            "frame_index": i,
-                            "height": img.shape[0],
-                            "width": img.shape[1],
-                            "data": img.tobytes(),
-                            "mask": m.tobytes(),
-                            "cents": cents,
-                        }
+                        cents["cx"].append(sum_x[ids] / counts)
+                        cents["cy"].append(sum_y[ids] / counts)
+                    cents["mask_id"].append(ids)
+                    cents["area"].append(counts)
+                    n_cents.append(len(ids))
+                    frames.append(
+                        (path, i, img.shape[0], img.shape[1], img.tobytes(), m.tobytes())
                     )
-            yield pd.DataFrame(rows, columns=cols)
+            structs = pa.StructArray.from_arrays(
+                [to_arrow(np.concatenate(cents[f.name] or [[]]), f.type) for f in cent_type],
+                fields=list(cent_type),
+            )
+            columns = [list(c) for c in zip(*frames)] or [[] for _ in range(6)]
+            columns.append(
+                pa.ListArray.from_arrays(to_arrow(np.cumsum(n_cents), pa.int32()), structs)
+            )
+            yield record_batch(columns, out)
 
-    return binaries.select("path", "content").mapInPandas(fused, FUSED_FRAME_SCHEMA)
+    return binaries.select("path", "content").mapInArrow(fused, FUSED_FRAME_SCHEMA)
 
 
 def make_fake_timelapse(
@@ -1075,33 +1070,9 @@ def mask_pixels(masks: DataFrame) -> DataFrame:
     """Relational pixel view of label masks (r5c): one row per non-
     background pixel — the exploded form that turns mask OVERLAP
     computations (IoU tracking, M3's Overlap tracker option) into plain
-    equi-joins on (path, px, py). One Arrow frame per input batch."""
+    equi-joins on (path, px, py). One Arrow batch per input batch."""
 
-    def pix(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts: list[pd.DataFrame] = []
-            for _, row in pdf.iterrows():
-                m = np.frombuffer(row["mask"], dtype=np.uint16).reshape(
-                    row["height"], row["width"]
-                )
-                ys, xs = np.nonzero(m)
-                if len(ys) == 0:
-                    continue
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "path": row["path"],
-                            "frame_index": np.int32(row["frame_index"]),
-                            "mask_id": m[ys, xs].astype("int32"),
-                            "px": xs.astype("int32"),
-                            "py": ys.astype("int32"),
-                        }
-                    )
-                )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
-
-    return masks.mapInPandas(pix, PIXEL_SCHEMA)
+    return _mask_pixel_rows(masks, np.nonzero, PIXEL_SCHEMA)
 
 
 def frame_dhash(frames: DataFrame, hash_h: int = 8, hash_w: int = 8) -> DataFrame:
@@ -1130,7 +1101,9 @@ def frame_dhash(frames: DataFrame, hash_h: int = 8, hash_w: int = 8) -> DataFram
         )
     small = resize_frames(frames, hash_h, hash_w, method="area")
 
-    def dh(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def dh(batches):
+        import pandas as pd
+
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():
@@ -1214,7 +1187,9 @@ operators.dedup.hamming_code_pairs` band machinery.
     )
     basis[0, :] = np.sqrt(1.0 / n)
 
-    def ph(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def ph(batches):
+        import pandas as pd
+
         for pdf in batches:
             rows = []
             for _, r in pdf.iterrows():

@@ -10,8 +10,9 @@ Kernels:
 - ``interpolate_rois`` (F16, parse_xml.py:13-45): Bresenham-close the
   gaps between consecutive vertices (wrapping last→first), then
   order-preserving dedup (O4, parse_xml.py:38-41). Per-row array work
-  on short polygons (20-200 vertices) → an Arrow-batched pandas UDF;
-  no shuffle at all, embarrassingly parallel over partitions.
+  on short polygons (20-200 vertices) → an Arrow-batched scalar UDF
+  (``arrow_udf``, no pandas); no shuffle at all, embarrassingly
+  parallel over partitions.
 - ``clip_negative`` (F9, frame_features_image.py:55-56): pure
   ``transform``/``greatest`` expression, codegen.
 - ``roi_filename`` (F3, parse_xml.py:202-211): zero-pad to data-driven
@@ -21,10 +22,10 @@ Kernels:
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 COORDS_TYPE = ArrayType(
@@ -88,17 +89,25 @@ def _interp_one(coords: list) -> list[tuple[int, int]]:
 
 def interpolate_rois(df: DataFrame, coords_col: str = "coords") -> DataFrame:
     """F16+O4: gap-free ROI polygons via Bresenham + order-preserving
-    dedup, as an Arrow-batched pandas UDF over the coords array."""
+    dedup, as an Arrow-batched scalar UDF over the coords array (a NULL
+    array becomes an empty polygon)."""
+    from cellphe_data_pipeline_spark.operators.arrow_map import to_arrow
 
-    @F.pandas_udf(COORDS_TYPE)
-    def interp(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda coords: [
-                {"x": x, "y": y}
-                for x, y in _interp_one(
-                    [(c["x"], c["y"]) for c in coords] if coords is not None else []
-                )
-            ]
+    coords_type = to_arrow_type(COORDS_TYPE)
+
+    @F.arrow_udf(COORDS_TYPE)
+    def interp(s: pa.Array) -> pa.Array:
+        return to_arrow(
+            [
+                [
+                    {"x": x, "y": y}
+                    for x, y in _interp_one(
+                        [(c["x"], c["y"]) for c in coords] if coords is not None else []
+                    )
+                ]
+                for coords in s.to_pylist()
+            ],
+            coords_type,
         )
 
     return df.withColumn(coords_col, interp(F.col(coords_col)))
@@ -152,7 +161,7 @@ def rois_to_zip(df: DataFrame, group_col: str, name_col: str = "ROI_filename",
     import struct
     import zipfile
 
-    import pandas as pd  # noqa: F811
+    import pandas as pd
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         buf = io.BytesIO()

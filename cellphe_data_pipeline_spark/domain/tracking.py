@@ -53,13 +53,14 @@ phase-2 matrix — goes through ``_assign``, and ``_segment_candidates``
 builds the gap-closing, splitting and merging candidates for both
 phase-2 strategies.
 
-Parallelism: ``applyInPandas`` grouped by timelapse — tracking is
-global per timelapse (the reference runs it as one task too), but
-timelapses parallelise across the cluster; one group = one timelapse's
-detections (~72k rows for the documented 721-frame run — bounded, fits
-a pandas kernel comfortably). The cross-timelapse fan-out is where the
-100 TB parallelism lives, exactly like the reference's per-run Slurm
-jobs.
+Parallelism: one kernel call per timelapse through
+``operators.arrow_map.map_groups_in_arrow`` (a ``mapInArrow`` over
+timelapse-sorted partitions) — tracking is global per timelapse (the
+reference runs it as one task too), but timelapses parallelise across
+the cluster; one group = one timelapse's detections (~72k rows for the
+documented 721-frame run — bounded, fits one kernel call comfortably).
+The cross-timelapse fan-out is where the 100 TB parallelism lives,
+exactly like the reference's per-run Slurm jobs.
 
 Output edges feed G1-G4 (``domain.lineage.renumber_tracks``) unchanged.
 """
@@ -67,7 +68,6 @@ Output edges feed G1-G4 (``domain.lineage.renumber_tracks``) unchanged.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -147,27 +147,32 @@ def _hungarian(cost: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _build_spot_feats(
-    pdf, penalty_keys: set[str]
+    dets, penalty_keys: set[str]
 ) -> tuple[dict[int, tuple[int, float, float]], dict[int, dict[str, float]]]:
-    """One pass over a timelapse's detections building the
-    (frame, x, y) spot lookup, in row order, and the per-spot
-    penalty-feature dict (TrackMate's UPPERCASE keys matched
-    case-insensitively against detection columns; NULL values are left
-    out)."""
-    cols_by_upper = {c.upper(): c for c in pdf.columns}
+    """One pass over a timelapse's detections (a ``pyarrow.Table``)
+    building the (frame, x, y) spot lookup, in row order, and the
+    per-spot penalty-feature dict (TrackMate's UPPERCASE keys matched
+    case-insensitively against detection columns; NULL and NaN values
+    are left out)."""
+    cols_by_upper = {c.upper(): c for c in dets.column_names}
     use = {k: cols_by_upper[k] for k in penalty_keys if k in cols_by_upper}
-    ids = [int(i) for i in pdf["id"].tolist()]
+    ids = [int(i) for i in dets.column("id").to_pylist()]
     spot = {
         i: (int(f), float(x), float(y))
         for i, f, x, y in zip(
-            ids, pdf["frame"].tolist(), pdf["x"].tolist(), pdf["y"].tolist()
+            ids,
+            dets.column("frame").to_pylist(),
+            dets.column("x").to_pylist(),
+            dets.column("y").to_pylist(),
         )
     }
     feats: dict[int, dict[str, float]] = {}
     if use:
-        vals = {k: pdf[c].tolist() for k, c in use.items()}
+        vals = {k: dets.column(c).to_pylist() for k, c in use.items()}
         for n, i in enumerate(ids):
-            feats[i] = {k: float(v[n]) for k, v in vals.items() if pd.notna(v[n])}
+            feats[i] = {
+                k: float(v[n]) for k, v in vals.items() if v[n] is not None and v[n] == v[n]
+            }
     return spot, feats
 
 
@@ -417,7 +422,7 @@ def _segment_candidates(
 
 
 def _link_one(
-    pdf: pd.DataFrame,
+    group,
     linking_max_distance: float,
     max_frame_gap: int,
     gap_closing_max_distance: float,
@@ -433,12 +438,13 @@ def _link_one(
     merging_feature_penalties: dict[str, float] | None = None,
     linking_feature_penalties: dict[str, float] | None = None,
     gap_closing_feature_penalties: dict[str, float] | None = None,
-) -> pd.DataFrame:
-    """Link one timelapse's detections (sorted by frame, id) into
-    ``(timelapse_id, src, dst, gap, dist)`` edges: phase 1 per frame,
-    then the phase-2 segment blocks (see :func:`track_detections`)."""
+) -> list[tuple[str, int, int, int, float]]:
+    """Link one timelapse's detections (a ``pyarrow.Table`` sorted by
+    frame, id) into ``(timelapse_id, src, dst, gap, dist)`` edge tuples:
+    phase 1 per frame, then the phase-2 segment blocks (see
+    :func:`track_detections`)."""
     spot, feats = _build_spot_feats(
-        pdf,
+        group,
         set(linking_feature_penalties or {})
         | set(gap_closing_feature_penalties or {})
         | set(splitting_feature_penalties or {})
@@ -543,11 +549,8 @@ def _link_one(
         if "g" in blocks:
             edges = edges + solve_block(edges, "g")
         edges = edges + [e for kind in "sm" if kind in blocks for e in solve_block(edges, kind)]
-    tl = pdf["timelapse_id"].iloc[0] if len(pdf) else ""
-    return pd.DataFrame(
-        [(tl, s, d, g, dist) for s, d, g, dist in edges],
-        columns=["timelapse_id", "src", "dst", "gap", "dist"],
-    )
+    tl = group.column("timelapse_id")[0].as_py() if group.num_rows else ""
+    return [(tl, s, d, g, dist) for s, d, g, dist in edges]
 
 
 def track_detections(
@@ -644,9 +647,9 @@ def track_detections(
             "convention (e.g. 0.9), not a percent"
         )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(group) -> list[tuple]:
         return _link_one(
-            pdf.sort_values(["frame", "id"]),
+            group,
             linking_max_distance,
             max_frame_gap,
             gap_closing_max_distance,
@@ -664,12 +667,9 @@ def track_detections(
             gap_closing_feature_penalties,
         )
 
-    # CPU-bound per-timelapse kernel over narrow rows — keep the groups
-    # spread across cores despite AQE's byte-based coalescing
-    # (operators/scale.py `repartition_for_cpu_kernel`)
-    from cellphe_data_pipeline_spark.operators.scale import (
-        repartition_for_cpu_kernel,
-    )
+    # CPU-bound per-timelapse kernel over narrow rows, one call per
+    # timelapse with its rows sorted by (frame, id)
+    from cellphe_data_pipeline_spark.operators.arrow_map import map_groups_in_arrow
 
     # narrow projection by default; penalised features widen it with
     # exactly the columns the penalty maps name (case-insensitive
@@ -689,13 +689,8 @@ def track_detections(
                 f"feature penalties name columns absent from detections: {missing}"
             )
         cols += [by_upper[k] for k in sorted(pen_keys) if by_upper[k] not in cols]
-    return (
-        repartition_for_cpu_kernel(
-            detections.select(*cols),
-            "timelapse_id",
-        )
-        .groupBy("timelapse_id")
-        .applyInPandas(kernel, EDGES_SCHEMA)
+    return map_groups_in_arrow(
+        detections.select(*cols), "timelapse_id", ["frame", "id"], kernel, EDGES_SCHEMA
     )
 
 

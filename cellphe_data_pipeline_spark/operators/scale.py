@@ -602,32 +602,6 @@ def global_row_number(
     return arranged.mapInPandas(number, out_schema)
 
 
-def repartition_for_cpu_kernel(df: DataFrame, *keys: str) -> DataFrame:
-    """Pre-shuffle for a CPU-bound ``groupBy(keys).applyInPandas`` stage:
-    RANGE-repartition on the group keys, sized to CORES.
-
-    Why this exists: AQE's shuffle coalescing is byte-based. Pandas
-    kernel stages whose rows are SMALL but EXPENSIVE (per-cell feature
-    extraction, per-timelapse tracking, per-track wavelets) get their
-    requirement shuffle coalesced to one partition — every group then
-    runs serially through a single task (measured: the 726-frame
-    feature stage at 19s on 32 cores, identical to 1 core). Byte-sized
-    coalescing cannot see per-row kernel cost.
-
-    Why repartitionByRange specifically: a plain
-    ``repartition(n, keys)`` is removed as redundant by the logical
-    optimizer (the downstream clustering requirement subsumes it) and
-    the replacement ENSURE_REQUIREMENTS exchange is AQE-coalesced. The
-    range form survives as a REPARTITION_BY_NUM shuffle —
-    coalesce-exempt — and still satisfies the groupBy's
-    ClusteredDistribution (equal keys co-locate), so no second exchange
-    is added. At production payload sizes the byte-based default is
-    fine either way; this makes the small-payload case correct too.
-    """
-    n = max(2, df.sparkSession.sparkContext.defaultParallelism)
-    return df.repartitionByRange(n, *keys)
-
-
 def zorder_key(x, y, bits: int = 16):
     """Morton/Z-ORDER interleave of the low ``bits`` of two nonneg int
     columns — the lakehouse DATA-SKIPPING layout key (Delta/Iceberg

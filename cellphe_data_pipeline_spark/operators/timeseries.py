@@ -11,25 +11,25 @@ Two implementations:
    skewness via explicit moment sums, ascent/descent via lag) as pure
    native window/agg ops. Used for the DuckDB-oracle correctness gate.
 2. ``timeseries_features_multi`` — the full kernel incl. Haar wavelet
-   detail energies over any number of value columns, as a
-   ``groupBy(key).applyInPandas`` Arrow-batched UDAF.
+   detail energies over any number of value columns, one numpy call
+   set per key group through ``operators.arrow_map.map_groups_in_arrow``
+   (a ``mapInArrow`` over key-sorted partitions).
    ``timeseries_features`` is the same kernel over one column, renamed
    to the single-feature contract. Haar DWT is implemented directly in
    numpy (pairwise sums/diffs per level) — no pywt dependency. One group
    = one trajectory (bounded: ≤ thousands of rows), so executor memory
-   is independent of total data volume; the only shuffle is the groupBy
-   hash partitioning.
+   is independent of total data volume; the only shuffle is the key's
+   range partitioning.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cellphe_data_pipeline_spark.functions.scalars import round_z
-from pyspark.sql import types as T
 
 
 def timeseries_stats(df: DataFrame, key: str, order: list[str], value: str) -> DataFrame:
@@ -144,8 +144,8 @@ def timeseries_features_multi(
     time_series_features.py:13-15 [pkg]). One output row per key with
     ``<feature>_{mean,std,ascent,descent,haar_l*}`` columns.
 
-    Still ONE shuffle: all feature columns ride the same groupBy; the
-    kernel loops features inside the Arrow batch (vectorised numpy per
+    Still ONE shuffle: all feature columns ride the same key shuffle;
+    the kernel loops features inside each group (vectorised numpy per
     feature), so cost is O(features) CPU on an unchanged data motion."""
     per_feature = _stat_names(levels)
     schema = T.StructType(
@@ -156,28 +156,24 @@ def timeseries_features_multi(
             for stat in per_feature
         ]
     )
-    order_cols = list(order)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_cols)
-        row: dict = {key: pdf[key].iloc[0], "n_obs": len(pdf)}
+    def kernel(group) -> list[tuple]:
+        row: list = [group.column(key)[0].as_py(), group.num_rows]
         for v in values:
-            x = pdf[v].to_numpy(dtype="float64")
+            # SQL NULL -> NaN
+            x = np.array(group.column(v).to_pylist(), dtype="float64")
             d = np.diff(x)
-            row[f"{v}_mean"] = float(np.mean(x)) if len(x) else 0.0
-            row[f"{v}_std"] = float(np.std(x)) if len(x) else 0.0
-            row[f"{v}_ascent"] = float(d[d > 0].sum()) if len(d) else 0.0
-            row[f"{v}_descent"] = float(d[d < 0].sum()) if len(d) else 0.0
-            for i, e in enumerate(_haar_details(x, levels)):
-                row[f"{v}_haar_l{i + 1}"] = e
-        return pd.DataFrame([row])
+            row += [
+                float(np.mean(x)) if len(x) else 0.0,
+                float(np.std(x)) if len(x) else 0.0,
+                float(d[d > 0].sum()) if len(d) else 0.0,
+                float(d[d < 0].sum()) if len(d) else 0.0,
+                *_haar_details(x, levels),
+            ]
+        return [tuple(row)]
 
-    from cellphe_data_pipeline_spark.operators.scale import (
-        repartition_for_cpu_kernel,
-    )
+    from cellphe_data_pipeline_spark.operators.arrow_map import map_groups_in_arrow
 
-    return (
-        repartition_for_cpu_kernel(df.select(key, *order_cols, *values), key)
-        .groupBy(key)
-        .applyInPandas(kernel, schema)
+    return map_groups_in_arrow(
+        df.select(key, *order, *values), key, list(order), kernel, schema
     )

@@ -1775,7 +1775,8 @@ def v2(spark, sf_dir):
     """)
 def a8b(spark, sf_dir):
     """A8 full kernel (time_series_features.py:13-15 [pkg]): stats +
-    ascent/descent + Haar detail energies via Arrow applyInPandas.
+    ascent/descent + Haar detail energies, one numpy call set per key
+    group through arrow_map.map_groups_in_arrow (mapInArrow).
     Wavelets are not ANSI-SQL-expressible, so the kernel runs on the
     deterministic TIMESERIES_ROWS fixture and the oracle is a golden
     VALUES relation (cross-checked against a numpy oracle in
@@ -1977,8 +1978,8 @@ def f16(spark, sf_dir):
 )
 def m3(spark, sf_dir):
     """M3 (track_images.py:24-201, simplified per SURVEY §7): greedy
-    frame-pair linking + gap closing (<=4 frames), applyInPandas per
-    timelapse; fixture exercises consecutive links, a 2-frame gap close,
+    frame-pair linking + gap closing (<=4 frames), one kernel call per
+    timelapse (arrow_map.map_groups_in_arrow); fixture exercises consecutive links, a 2-frame gap close,
     and an unlinked noise detection."""
     from cellphe_data_pipeline_spark.domain.tracking import track_detections
     from cellphe_data_pipeline_spark.testing.fixtures import detections_df
@@ -2594,7 +2595,7 @@ def a5b(spark, sf_dir):
 )
 def m4(spark, sf_dir):
     """M4 (frame_features_image.py:57-70): per-(cell,frame) static
-    features via applyInPandas grouped by frame — image decoded once per
+    features via one mapInArrow over frame rows — image decoded once per
     frame, min-max normalised (A6/F10), degenerate ROI skipped; values
     rounded to 6 for the golden."""
     from cellphe_data_pipeline_spark.domain.features import static_features
@@ -13124,7 +13125,7 @@ def e26(spark, sf_dir):
 def a26(spark, sf_dir):
     """Median absolute deviation via a GROUPED-AGG pandas UDF (r11) —
     the one Python-UDF surface the engine had not exercised (scalar
-    pandas_udf: rois.py; applyInPandas: a8/m3/j16; mapInPandas: the
+    arrow_udf: rois.py; applyInPandas: j16; mapInPandas: the
     media kernels; UDTF: t29; this is the Series→scalar aggregate
     form, Arrow-shipping each group's column as ONE pandas Series into
     a custom reduction). The statistic is the robust-dispersion gate

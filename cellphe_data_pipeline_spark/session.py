@@ -8,7 +8,7 @@ Scale rationale (100 TB target):
 - AQE on (coalesce partitions + skew-join splitting) so the static
   ``spark.sql.shuffle.partitions`` only needs to be an upper bound; on a
   real cluster set it to ~2-3x total cores and let AQE coalesce.
-- Arrow transfer on: every pandas-UDF kernel (wavelets, image decode)
+- Arrow transfer on: every Python kernel (wavelets, image decode)
   moves columnar batches, not pickled rows.
 - Session timezone pinned to UTC: deterministic timestamp semantics,
   required for DuckDB-oracle hash equality.
@@ -37,7 +37,9 @@ Scale rationale (100 TB target):
   (``sources.io.from_driver_rows``), which runs no Python task, and a
   pipeline run starts no second daemon (≈64 MB plus ≈51 MB per forked
   worker). ``python_worker_pools`` reads the count; ``tests/
-  test_session.py`` pins it at 1 after a CLI run.
+  test_session.py`` pins it at 1 after a CLI run, and pins that no
+  process of the pool (``python_worker_pids``) maps pandas: every
+  kernel a pipeline run executes is a pandas-free ``mapInArrow``.
 """
 
 from __future__ import annotations
@@ -50,6 +52,8 @@ from pyspark.sql import SparkSession
 
 #: directory holding the package, for the Python workers' import path
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+#: the Python workers' daemon entry (``spark.python.daemon.module``)
+DAEMON_MODULE = "cellphe_data_pipeline_spark.worker"
 
 
 def get_spark(
@@ -106,7 +110,7 @@ def get_spark(
         # other join at runtime.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "134217728")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # bound pandas-UDF batch memory: image rows carry raster payloads,
+        # bound Python-kernel batch memory: image rows carry raster payloads,
         # so a 10k-row default Arrow batch could hold GBs (SURVEY §7 hard
         # part #6); 256 rows bounds executor memory independent of corpus
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
@@ -128,7 +132,7 @@ def get_spark(
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
     )
-    conf["spark.python.daemon.module"] = "cellphe_data_pipeline_spark.worker"
+    conf["spark.python.daemon.module"] = DAEMON_MODULE
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
@@ -179,3 +183,33 @@ def python_worker_pools(spark: SparkSession) -> int:
     and worker environment; every engine task shares one key, so a
     pipeline session holds exactly one pool."""
     return spark._jvm.org.apache.spark.SparkEnv.get().pythonWorkers().size()
+
+
+def python_worker_pids() -> list[int]:
+    """Live processes of the session's Python worker pools: the
+    descendants of this process (its JVM starts the daemons) running
+    ``python -m`` the engine's daemon entry — each daemon and the
+    workers it forked. Read from ``/proc`` (Linux)."""
+    parent: dict[int, int] = {}
+    for d in os.listdir("/proc"):
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                parent[int(d)] = int(f.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, ValueError, IndexError):
+            continue
+    tree = {os.getpid()}
+    while True:
+        grown = tree | {p for p, pp in parent.items() if pp in tree}
+        if grown == tree:
+            break
+        tree = grown
+    pids = []
+    for pid in sorted(tree):
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                argv = f.read().split(b"\0")
+        except OSError:
+            continue
+        if b"-m" in argv[:-1] and argv[argv.index(b"-m") + 1] == DAEMON_MODULE.encode():
+            pids.append(pid)
+    return pids

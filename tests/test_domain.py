@@ -958,15 +958,37 @@ def test_jpeg_to_gray_tiff_conversion(spark):
     assert (pages2[0] == a).all() and (pages2[1] == b).all()
 
 
+def frames_to_tiff_stack(frames):
+    """E2 step 6 (main.nf:523-525 ``create_tiff_stack``): each path's
+    frames as ONE multi-page TIFF, frames in frame_index order, via the
+    in-engine baseline writer — a test helper: no engine stage archives
+    frames, and the round trip below pins the writer against the
+    reader. Rows (path, n_frames, tiff)."""
+    from cellphe_data_pipeline_spark.domain.images import _raster_dtype, encode_tiff_gray
+
+    def pack(pdf):
+        import pandas as pd
+
+        pages = []
+        for _, r in pdf.sort_values("frame_index").iterrows():
+            h, w = int(r["height"]), int(r["width"])
+            pages.append(np.frombuffer(r["data"], dtype=_raster_dtype(r["data"], h, w)).reshape(h, w))
+        return pd.DataFrame(
+            [{"path": pdf["path"].iloc[0], "n_frames": len(pages), "tiff": encode_tiff_gray(pages)}]
+        )
+
+    return (
+        frames.select("path", "frame_index", "height", "width", "data")
+        .groupBy("path")
+        .applyInPandas(pack, "path string, n_frames int, tiff binary")
+    )
+
+
 def test_frames_to_tiff_stack_roundtrip(spark):
     """create_tiff_stack parity (main.nf:523-525): frames re-archive as
     one multi-page TIFF per timelapse, and splitting the archive back
     reproduces the exact frame rasters in frame order."""
-    from cellphe_data_pipeline_spark.domain.images import (
-        frames_to_tiff_stack,
-        make_fake_image,
-        split_frames,
-    )
+    from cellphe_data_pipeline_spark.domain.images import make_fake_image, split_frames
 
     bins = spark.createDataFrame(
         [
@@ -1041,7 +1063,6 @@ def test_frames_to_tiff_stack_16bit(spark):
     from cellphe_data_pipeline_spark.domain.images import (
         decode_frame,
         encode_tiff_gray,
-        frames_to_tiff_stack,
         split_frames,
     )
 

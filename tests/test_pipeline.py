@@ -694,3 +694,28 @@ def test_cli_publishes_empty_tables_for_degenerate_inputs(spark, tmp_path, case)
         df = spark.read.parquet(str(out / stage))
         assert df.columns, stage
         assert df.count() == 0, stage
+
+
+@pytest.mark.parametrize("case", sorted(_degenerate_inputs()))
+def test_resumable_cli_publishes_empty_tables_for_degenerate_inputs(spark, tmp_path, case):
+    """The same inputs through ``--resume-dir``, which publishes every
+    stage: ``summary``, ``timeseries`` and ``track_edges`` come out
+    empty, and the segmentation-highlight table is empty unless a
+    frame has foreground (only the one-frame timelapse has cells)."""
+    import json
+
+    from cellphe_data_pipeline_spark.__main__ import main
+
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for name, content in _degenerate_inputs()[case].items():
+        (raw / name).write_bytes(content)
+    config = tmp_path / "config.json"
+    config.write_text(json.dumps({}))
+    stages = tmp_path / "stages"
+    argv = ["--input", str(raw), "--config", str(config), "--out", str(tmp_path / "out")]
+    assert main(argv + ["--resume-dir", str(stages)]) == 0
+    for stage in ("summary", "timeseries", "track_edges", "segmentation_highlight"):
+        df = spark.read.parquet(str(stages / stage))
+        assert df.columns, stage
+        assert (df.count() > 0) == (stage == "segmentation_highlight" and case == "one-frame"), stage

@@ -2,7 +2,10 @@
 working set: repeating a plan in one session reuses its compiled
 classes instead of recompiling them. And a pipeline session runs one
 Python worker pool: no engine relation is built by a pickled PythonRDD
-job, which would start a second worker daemon.
+job, which would start a second worker daemon. None of that pool's
+processes loads pandas: every kernel a pipeline run executes is a
+``mapInArrow`` that builds its output without pyarrow's pandas
+conversions.
 
 Spark's codegen cache is a JVM-wide LRU sized once, from the static conf
 ``spark.sql.codegen.cache.maxEntries``, when the JVM first generates
@@ -17,6 +20,8 @@ import os
 import re
 import subprocess
 import sys
+
+import pytest
 
 from cellphe_data_pipeline_spark.domain.images import make_fake_timelapse
 from cellphe_data_pipeline_spark.plans.pipeline import run_pipeline
@@ -154,7 +159,24 @@ import sys
 sys.path[:0] = [{repo!r}]
 from cellphe_data_pipeline_spark.__main__ import main
 from cellphe_data_pipeline_spark.domain.images import make_fake_timelapse
-from cellphe_data_pipeline_spark.session import get_spark, python_worker_pools
+from cellphe_data_pipeline_spark.session import (
+    get_spark,
+    python_worker_pids,
+    python_worker_pools,
+)
+
+
+def report(label):
+    procs = python_worker_pids()
+    with_pandas = 0
+    for pid in procs:
+        try:
+            with open(f"/proc/{{pid}}/maps") as f:
+                with_pandas += "pandas/_libs" in f.read()
+        except OSError:
+            pass
+    print(label, python_worker_pools(spark), len(procs), with_pandas, flush=True)
+
 
 os.makedirs("raw")
 for i in range(2):
@@ -165,48 +187,136 @@ with open("params.json", "w") as f:
 argv = ["--input", "raw", "--config", "params.json", "--out", "out"]
 assert main(argv + {extra!r}) == 0
 spark = get_spark()
-print("pools", python_worker_pools(spark), flush=True)
+report("cli")
+# control: one mapInPandas task in the same pool loads pandas in its worker
+spark.range(1).mapInPandas(lambda batches: batches, "id long").collect()
+report("mapInPandas")
 # control: a list-of-tuples createDataFrame runs a pickled PythonRDD job
 spark.createDataFrame([(1,)], "a long").collect()
-print("pools", python_worker_pools(spark), flush=True)
+report("createDataFrame")
 spark.stop()
 """
 
-
-def pools_after_cli_run(tmp_path, extra: list[str]) -> list[int]:
-    """Run the CLI once in a fresh JVM (pools are per JVM) on two small
-    timelapses; return the worker-pool count after the run, then after
-    a list-of-tuples ``createDataFrame`` in the same session."""
-    tests = os.path.dirname(os.path.abspath(__file__))
-    env = {
-        **os.environ,
-        "SPARK_GRAFT_CPUS": "2",
-        "SPARK_GRAFT_SHUFFLE": "2",
-        "SPARK_GRAFT_DRIVER_MEM": "1g",
-    }
-    script = POOLS_SCRIPT.format(repo=os.path.dirname(tests), extra=extra)
-    proc = subprocess.run(
-        [sys.executable, "-c", script],
-        cwd=tmp_path,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    return [int(n) for n in re.findall(r"^pools (\d+)$", proc.stdout, re.M)]
+_CLI_REPORTS: dict[tuple, dict[str, tuple[int, int, int]]] = {}
 
 
-def test_cli_run_starts_one_python_worker_pool(tmp_path):
+def cli_run_reports(tmp_path_factory, extra: list[str]) -> dict[str, tuple[int, int, int]]:
+    """Run the CLI once per path in a fresh JVM (pools are per JVM) on two
+    small timelapses, then a ``mapInPandas`` and a list-of-tuples
+    ``createDataFrame`` in the same session. After each step: the
+    session's worker-pool count, the live processes of its pool (the
+    daemon and its workers) and how many of them map a pandas
+    extension. Cached per path: the tests below share one run."""
+    if tuple(extra) not in _CLI_REPORTS:
+        tests = os.path.dirname(os.path.abspath(__file__))
+        env = {
+            **os.environ,
+            "SPARK_GRAFT_CPUS": "2",
+            "SPARK_GRAFT_SHUFFLE": "2",
+            "SPARK_GRAFT_DRIVER_MEM": "1g",
+        }
+        script = POOLS_SCRIPT.format(repo=os.path.dirname(tests), extra=extra)
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=tmp_path_factory.mktemp("cli"),
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-4000:]
+        _CLI_REPORTS[tuple(extra)] = {
+            label: (int(pools), int(procs), int(pandas))
+            for label, pools, procs, pandas in re.findall(
+                r"^(\w+) (\d+) (\d+) (\d+)$", proc.stdout, re.M
+            )
+        }
+    return _CLI_REPORTS[tuple(extra)]
+
+
+RESUME = ["--resume-dir", "stages"]
+
+
+def test_cli_run_starts_one_python_worker_pool(tmp_path_factory):
     """A default CLI run starts one worker pool; the control after it
     shows that a list-of-tuples createDataFrame starts a second."""
-    assert pools_after_cli_run(tmp_path, []) == [1, 2]
+    reports = cli_run_reports(tmp_path_factory, [])
+    assert [reports[k][0] for k in ("cli", "createDataFrame")] == [1, 2], reports
 
 
-def test_resumable_cli_run_starts_one_python_worker_pool(tmp_path):
+def test_resumable_cli_run_starts_one_python_worker_pool(tmp_path_factory):
     """The --resume-dir path publishes every stage, the feature
     manifest included, and still starts one worker pool."""
-    assert pools_after_cli_run(tmp_path, ["--resume-dir", "stages"]) == [1, 2]
+    reports = cli_run_reports(tmp_path_factory, RESUME)
+    assert [reports[k][0] for k in ("cli", "createDataFrame")] == [1, 2], reports
+
+
+@pytest.mark.parametrize("extra", [[], RESUME], ids=["default", "resume_dir"])
+def test_cli_run_python_workers_load_no_pandas(tmp_path_factory, extra):
+    """After a CLI run — the default path, or --resume-dir, which also
+    runs the segmentation-highlight kernel — no process of the session's
+    one worker pool maps pandas: every kernel the run executes is a
+    ``mapInArrow`` that builds its output without pyarrow's pandas
+    conversions. Control: one ``mapInPandas`` task in the same session
+    loads pandas in a worker of that pool."""
+    reports = cli_run_reports(tmp_path_factory, extra)
+    pools, procs, with_pandas = reports["cli"]
+    assert pools == 1 and procs >= 2 and with_pandas == 0, reports
+    assert reports["mapInPandas"][0] == 1 and reports["mapInPandas"][2] >= 1, reports
+
+
+#: modules holding the kernels a pipeline run executes
+KERNEL_MODULES = (
+    "domain/images.py",
+    "domain/features.py",
+    "domain/tracking.py",
+    "domain/rois.py",
+    "operators/timeseries.py",
+    "operators/arrow_map.py",
+)
+#: the pipeline's kernels and the helpers that run them
+PIPELINE_KERNELS = {
+    "domain/images.py": ("decode_segment_centroid", "mask_boundary_overlay", "mask_pixels",
+                         "_mask_pixel_rows"),
+    "domain/features.py": ("_frame_features", "static_features", "static_features_fused"),
+    "domain/tracking.py": ("track_detections", "_link_one", "_build_spot_feats"),
+    "operators/timeseries.py": ("timeseries_features_multi",),
+    "operators/arrow_map.py": ("map_groups_in_arrow", "to_arrow", "record_batch", "rows_batch"),
+}
+
+
+def test_kernel_modules_import_pandas_only_inside_query_kernels():
+    """Source guard for the pin above: no kernel module imports pandas at
+    module level (a worker imports the module of every kernel it
+    unpickles), and no pipeline kernel calls ``mapInPandas`` or
+    ``applyInPandas`` or names pandas."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "cellphe_data_pipeline_spark",
+    )
+    for rel in KERNEL_MODULES:
+        with open(os.path.join(pkg, rel)) as f:
+            tree = ast.parse(f.read())
+        top = [
+            n.names[0].name if isinstance(n, ast.Import) else n.module
+            for n in tree.body
+            if isinstance(n, (ast.Import, ast.ImportFrom))
+        ]
+        assert not [m for m in top if m and m.split(".")[0] == "pandas"], (rel, top)
+        wanted = PIPELINE_KERNELS.get(rel, ())
+        found = [n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name in wanted]
+        assert sorted(n.name for n in found) == sorted(wanted), rel
+        for fn in found:
+            for n in ast.walk(fn):
+                assert not (
+                    isinstance(n, ast.Attribute) and n.attr in ("mapInPandas", "applyInPandas")
+                ), (rel, fn.name, n.lineno)
+                assert not (isinstance(n, ast.Name) and n.id == "pd"), (rel, fn.name, n.lineno)
+                assert not (
+                    isinstance(n, (ast.Import, ast.ImportFrom))
+                    and any(a.name.split(".")[0] == "pandas" for a in n.names)
+                    or isinstance(n, ast.ImportFrom) and (n.module or "").startswith("pandas")
+                ), (rel, fn.name, n.lineno)
 
 
 def test_engine_builds_driver_rows_only_through_arrow():

@@ -13,8 +13,8 @@ crossing cells, some of which divide, with about 15% of detections
 dropped and an ``area`` column that the ``{"AREA": 0.7}`` penalties
 read. The no-link alternative uses a factor of 0.6 rather than
 TrackMate's 1.05 so that it rejects links in the small phase-2 blocks
-too. The kernel is called directly on pandas frames, so no Spark
-session is needed.
+too. The kernel is called directly on Arrow tables built from pandas
+frames, so no Spark session is needed.
 
 The fixture was written by running this module as a script at the
 commit whose output it pins::
@@ -35,6 +35,7 @@ import sys
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -110,8 +111,8 @@ def edge_digest(dets: pd.DataFrame, kw: dict) -> tuple[str, int]:
     order, each linked as ``track_detections``' kernel links it."""
     lines = []
     for _, pdf in sorted(dets.groupby("timelapse_id"), key=lambda g: g[0]):
-        out = _link_one(pdf.sort_values(["frame", "id"]), **kw)
-        for tl, s, d, g, dist in out.itertuples(index=False):
+        group = pa.Table.from_pandas(pdf.sort_values(["frame", "id"]), preserve_index=False)
+        for tl, s, d, g, dist in _link_one(group, **kw):
             lines.append(f"{tl}\t{int(s)}\t{int(d)}\t{int(g)}\t{float.hex(float(dist))}")
     return hashlib.sha256("\n".join(lines).encode()).hexdigest(), len(lines)
 
