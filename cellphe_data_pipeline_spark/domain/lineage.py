@@ -71,7 +71,6 @@ def renumber_tracks(
     frame_col: str = "FRAME",
     src: str = "src",
     dst: str = "dst",
-    edge_driver_cap: int = EDGE_DRIVER_CAP,
 ) -> DataFrame:
     """Assign 1-indexed TRACK_ID to every non-isolated node.
 
@@ -82,12 +81,13 @@ def renumber_tracks(
     keep edges; ``connected_components`` sizes its own loop from their
     count, so there is no partition setting to pass.
 
-    ``edge_driver_cap``: see EDGE_DRIVER_CAP; pass 0 to force the fully
-    distributed path (the property tests exercise both and assert exact
-    TRACK_ID equality).
+    At or below EDGE_DRIVER_CAP edges the whole renumbering runs on the
+    driver; the cap is read at call time, so the property tests set it
+    to 0 to force the distributed path and assert exact TRACK_ID
+    equality between the two.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    if edge_driver_cap:
+    if EDGE_DRIVER_CAP:
         # Arrow on every driver crossing: toPandas fetches the edge and
         # node rows as columnar batches, and from_driver_rows hands the
         # touched ids and the numbered rows back as Arrow tables, so no
@@ -97,8 +97,8 @@ def renumber_tracks(
         # so the oracle's dict keys and the returned values are
         # identical to the Row path (the DDL schema pins the return
         # types).
-        edge_pdf = e.limit(edge_driver_cap + 1).toPandas()
-        if len(edge_pdf) <= edge_driver_cap:
+        edge_pdf = e.limit(EDGE_DRIVER_CAP + 1).toPandas()
+        if len(edge_pdf) <= EDGE_DRIVER_CAP:
             spark = nodes.sparkSession
             edge_list = list(
                 zip(edge_pdf["src"].tolist(), edge_pdf["dst"].tolist())

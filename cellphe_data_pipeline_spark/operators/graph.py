@@ -178,7 +178,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    driver_finish_cap: int = CC_DRIVER_FINISH_CAP,
 ) -> DataFrame:
     """Undirected connected components → (node, component=min node id).
 
@@ -198,8 +197,9 @@ def connected_components(
     at 50k docs the same 2 carried a 149 MB closure stage as two tasks
     (SCALE.md, third-decade probe).
 
-    ``driver_finish_cap``: see CC_DRIVER_FINISH_CAP; pass 0 to force the
-    fully distributed loop (the property tests exercise both paths).
+    Edge lists within CC_DRIVER_FINISH_CAP finish on the driver; the
+    cap is read at call time, so the property tests set it to 0 to
+    force the fully distributed loop and compare both paths.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -261,7 +261,7 @@ def connected_components(
     # metadata-cheap parquet count.)
     e = cut_lineage(e, eager=False, name="cc-edges")
     n_edges = e.count()
-    if driver_finish_cap and n_edges <= driver_finish_cap:
+    if CC_DRIVER_FINISH_CAP and n_edges <= CC_DRIVER_FINISH_CAP:
         return _finish_on_driver(spark, e, e.toPandas())
     parallelism = spark.sparkContext.defaultParallelism
     loop_parts = max(2, min(2 * parallelism, -(-n_edges // 2_000_000)))
@@ -269,7 +269,7 @@ def connected_components(
         e = cut_lineage(
             _contract_local(e, max(2, parallelism // 4)), name="cc-contracted"
         )
-        if driver_finish_cap:
+        if CC_DRIVER_FINISH_CAP:
             # bounded driver finish (see CC_DRIVER_FINISH_CAP): the raw
             # list was over the cap, but contraction may have shrunk the
             # surviving star graph under it — probe with one
@@ -277,8 +277,8 @@ def connected_components(
             # cap, finish the union-find centrally and return a
             # size-known local relation (so the caller's label join can
             # BROADCAST it).
-            pdf = e.limit(driver_finish_cap + 1).toPandas()
-            if len(pdf) <= driver_finish_cap:
+            pdf = e.limit(CC_DRIVER_FINISH_CAP + 1).toPandas()
+            if len(pdf) <= CC_DRIVER_FINISH_CAP:
                 return _finish_on_driver(spark, e, pdf)
         prev_hash: tuple | int = -1
         for i in range(max_iter):

@@ -330,12 +330,15 @@ def snapshot_compact(
     driver oracle hash-checks exactly that); concurrent readers keep
     the old snapshot via time travel until a vacuum with expiry
     reclaims the pre-compaction files; a concurrent WRITER's commit
-    wins or loses the same CAS every commit uses (a lost compaction is
-    retried against the new parent — compaction never has rebase
-    conflicts of its own because it writes no new rows; production
-    systems additionally validate no concurrent DELETE touched the
-    compacted files — recorded, single-maintainer assumed here, same
-    as Delta's conflict matrix treats OPTIMIZE vs UPDATE). Returns
+    wins or loses the same CAS every commit uses. To retry a lost
+    compaction, run it under ``io.snapshot_retry`` (``lambda _:
+    snapshot_compact(...)``): every attempt re-derives its file list,
+    rewrite and stats from the snapshot current at attempt time, so a
+    concurrent COW delete is respected and a stale file list is never
+    published (rebase by reconstruction, as Iceberg's
+    rewrite_data_files retry; a lost race wastes one rewrite).
+    Concurrent MOR deletes commute with it: they remove no files, and
+    their tombstones carry through the compaction commit. Returns
     (new_snapshot_id, info{replaced, kept, new_files}); the commit
     carries the parent's exactly-once watermark forward automatically
     (the r12 carry-forward contract), so compacting between stream
@@ -453,44 +456,6 @@ def snapshot_compact(
         "kept": kept,
         "new_files": new_files,
     }
-
-
-def snapshot_compact_with_retry(
-    spark: SparkSession,
-    table_dir: str,
-    max_retries: int = 5,
-    **compact_kwargs,
-) -> tuple[int, dict]:
-    """Maintenance-side optimistic retry for compaction (r14) —
-    closing the concurrent-DELETE validation trade snapshot_compact
-    records ("production systems additionally validate no concurrent
-    DELETE touched the compacted files"). The validation here is
-    REBASE-BY-RECONSTRUCTION rather than a conflict matrix: every
-    attempt re-runs snapshot_compact from scratch, which derives its
-    entire state (file list, small-file split, rewrite, stats) from
-    the snapshot CURRENT at attempt time — so a concurrent COW
-    delete/merge that removed files between attempts is respected
-    automatically, and the unsafe commit-level retry (re-publishing a
-    STALE file list, resurrecting concurrently-deleted rows) is
-    structurally impossible, not merely checked for. Wasted work on a
-    lost race is the rewrite of one attempt — the price of not
-    holding a lock, same as Iceberg's rewrite_data_files retry.
-    Concurrent MOR deletes commute with any interleaving: they remove
-    no files, and their tombstones carry through the compaction
-    commit (the delete-list inheritance contract), so the compacted
-    table masks them identically. Returns
-    (snapshot_id, info, )-compatible (new_id, info) from the winning
-    attempt."""
-    from cellphe_data_pipeline_spark.sources.io import SnapshotConflict
-
-    conflicts = 0
-    while True:
-        try:
-            return snapshot_compact(spark, table_dir, **compact_kwargs)
-        except SnapshotConflict:
-            conflicts += 1
-            if conflicts > max_retries:
-                raise
 
 
 def salted_join(

@@ -11259,14 +11259,13 @@ def s20(spark, sf_dir):
     buys at 100 TB: reproducibility (a training run pins the exact
     snapshot its corpus came from), rollback (re-read v1 forever),
     and reader-writer isolation (a manifest read never races a
-    directory listing mid-write). What it honestly lacks vs
-    Iceberg/Delta: the atomic catalog swap — the manifest write is
-    the commit point, single-writer assumed (recorded at the
-    helpers)."""
+    directory listing mid-write). Both snapshots commit through the
+    atomic compare-and-swap (parents 0 and 1) that s21 races, so a
+    concurrent writer would get a conflict, never a lost update."""
     import os
 
     from cellphe_data_pipeline_spark.sources.io import (
-        snapshot_commit,
+        snapshot_commit_atomic,
         snapshot_data_files,
         snapshot_read,
     )
@@ -11283,7 +11282,7 @@ def s20(spark, sf_dir):
         ev.filter(F.col("event_type") == t).write.mode("overwrite").parquet(d)
         per_type_files[t] = snapshot_data_files(d)
         v1_files += per_type_files[t]
-    snapshot_commit(table, 1, v1_files)
+    snapshot_commit_atomic(table, 0, v1_files)
 
     affected = ["click", "purchase"]
     delta = ev.filter(
@@ -11305,7 +11304,7 @@ def s20(spark, sf_dir):
         d = os.path.join(table, "data", "s2", f"type_{t}")
         merged.write.mode("overwrite").parquet(d)
         v2_files += snapshot_data_files(d)
-    snapshot_commit(table, 2, v2_files)
+    snapshot_commit_atomic(table, 1, v2_files)
 
     def rollup(df, sid):
         return df.groupBy("event_type").agg(
@@ -11354,17 +11353,15 @@ def s20(spark, sf_dir):
 )
 def s21(spark, sf_dir):
     """Atomic commit + optimistic concurrency over the snapshot table
-    (r11) — closing the gap s20's docstring records (manifest write was
-    the commit point, single-writer assumed). Two writers race from the
-    same parent snapshot: writer A appends delta_A; writer B reads
-    parent 1, but A commits v2 BEFORE B's CAS lands — B's
-    create-if-absent of manifests/v2.json fails atomically
-    (SnapshotConflict), and the production retry loop
-    (io.snapshot_commit_with_retry) REBASES: re-reads current (now 2),
-    rebuilds its file list against v2's manifest, commits v3. The
-    interleaving is replayed inside the query (A's commit fires inside
-    B's first build callback — the exact lost-race window), so the
-    conflict path is exercised by the driver gate itself, not only by
+    (r11). Two writers race from the same parent snapshot: writer A
+    appends delta_A; writer B reads parent 1, but A commits v2 BEFORE
+    B's CAS lands — B's commit of manifests/v2.json fails atomically
+    (SnapshotConflict), and the table format's one retry loop
+    (io.snapshot_retry) REBASES: it re-reads current (now 2), and B's
+    attempt rebuilds its file list against v2's manifest and commits
+    v3. The interleaving is replayed inside the query (A's commit
+    fires inside B's first attempt — the exact lost-race window), so
+    the conflict path is exercised by the driver gate itself, not only by
     test; `conflicts` carries the operational fact into the hash
     (oracle emits literal 1 — the a16/a20 theorem-column idiom). The
     final state is ORDER-INDEPENDENT because appends commute; the
@@ -11379,10 +11376,10 @@ def s21(spark, sf_dir):
 
     from cellphe_data_pipeline_spark.sources.io import (
         snapshot_commit_atomic,
-        snapshot_commit_with_retry,
         snapshot_data_files,
         snapshot_files,
         snapshot_read,
+        snapshot_retry,
     )
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -11411,13 +11408,15 @@ def s21(spark, sf_dir):
     # read-parent -> build -> CAS window (the lost-race interleaving).
     a_done = {"v": False}
 
-    def b_build(parent: int) -> list[str]:
+    def b_attempt(parent: int) -> int:
         if not a_done["v"]:
             snapshot_commit_atomic(table, 1, base_files + files_a)  # v2
             a_done["v"] = True
-        return snapshot_files(table, parent) + files_b
+        return snapshot_commit_atomic(
+            table, parent, snapshot_files(table, parent) + files_b
+        )
 
-    final_id, conflicts = snapshot_commit_with_retry(table, b_build)
+    final_id, conflicts = snapshot_retry(table, b_attempt)
     assert final_id == 3 and conflicts == 1, (final_id, conflicts)
 
     def rollup(df, sid):
@@ -16195,12 +16194,12 @@ def o26(spark, sf_dir):
 
     from cellphe_data_pipeline_spark.sources.io import (
         snapshot_commit_sharded,
-        snapshot_commit_sharded_with_retry,
         snapshot_current,
         snapshot_data_files,
         snapshot_delete_keys,
         snapshot_manifest,
         snapshot_read,
+        snapshot_retry,
     )
 
     table = _stage_dir("o26_mor_race")
@@ -16242,7 +16241,12 @@ def o26(spark, sf_dir):
     def appender() -> None:
         try:
             barrier.wait()
-            snapshot_commit_sharded_with_retry(table, batch_files)
+            snapshot_retry(
+                table,
+                lambda parent: snapshot_commit_sharded(
+                    table, parent, batch_files
+                ),
+            )
         except BaseException as e:  # noqa: BLE001
             errors.append(e)
 

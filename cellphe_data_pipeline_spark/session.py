@@ -59,7 +59,6 @@ DAEMON_MODULE = "cellphe_data_pipeline_spark.worker"
 def get_spark(
     app_name: str = "cellphe-data-pipeline-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -70,8 +69,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
+    shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
 
     builder = (
         SparkSession.builder.master(master)
@@ -92,12 +90,8 @@ def get_spark(
         # multi-exchange queries, so 256 KiB is the measured optimum.
         # The floor only ever SPLITS nothing — partitions bigger than it
         # are untouched — so at 100 TB (partitions >> 1 MiB) the knob is
-        # inert. Env-overridable for deployments whose per-task overhead
-        # dominates at 256 KiB.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PART", "262144"),
-        )
+        # inert.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "262144")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE demote sort-merge joins to shuffled-hash when the
         # per-partition build side fits 128 MiB (default 0 disables the

@@ -121,8 +121,8 @@ def publish(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> Non
 # read exactly its files (never a directory listing race), old
 # snapshots stay readable forever (time travel / rollback = read an
 # older manifest). This is the Iceberg/Delta contract stripped to what
-# plain parquet + JSON can carry; it lacks their atomic catalog swap —
-# the manifest write is the commit point, single-writer assumed.
+# plain parquet + JSON can carry; every commit is the compare-and-swap
+# described below (snapshot_commit_atomic / snapshot_commit_sharded).
 # ---------------------------------------------------------------------
 
 
@@ -136,18 +136,6 @@ def snapshot_data_files(path: str) -> list[str]:
             if f.endswith(".parquet"):
                 out.append(os.path.join(root, f))
     return sorted(out)
-
-
-def snapshot_commit(table_dir: str, snapshot_id: int, files: list[str]) -> None:
-    """Commit a snapshot: write its explicit file list as
-    manifests/v{id}.json. The manifest IS the snapshot — data files
-    are immutable and shared across snapshots."""
-    import os
-
-    mdir = os.path.join(table_dir, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    with open(os.path.join(mdir, f"v{snapshot_id}.json"), "w") as f:
-        json.dump({"snapshot_id": snapshot_id, "files": sorted(files)}, f)
 
 
 def _manifest_files_and_stats(table_dir: str, man: dict) -> tuple[list[str], dict]:
@@ -225,10 +213,8 @@ def snapshot_read(spark: SparkSession, table_dir: str, snapshot_id: int) -> Data
 
 
 # ---------------------------------------------------------------------
-# Atomic commit + optimistic concurrency (r11, s21) — closing the gap
-# s20's docstring records ("it lacks their atomic catalog swap — the
-# manifest write is the commit point, single-writer assumed"). This is
-# Iceberg's commit protocol in miniature:
+# Atomic commit + optimistic concurrency (r11, s21). This is Iceberg's
+# commit protocol in miniature:
 #   - snapshot ids are SEQUENTIAL; committing snapshot N+1 is a
 #     compare-and-swap on "the table is at N": the commit point is an
 #     atomic create-if-absent (os.link onto manifests/v{N+1}.json —
@@ -236,7 +222,8 @@ def snapshot_read(spark: SparkSession, table_dir: str, snapshot_id: int) -> Data
 #     every POSIX filesystem). Two writers racing from parent N both
 #     try to create v{N+1}; exactly one wins, the loser gets
 #     SnapshotConflict and must REBASE: re-read the current snapshot,
-#     rebuild its file list against it, retry at N+2.
+#     rebuild its file list against it, retry at N+2. snapshot_retry
+#     is the one rebase loop; every writer passes it an attempt.
 #   - the `current` pointer file is a derived convenience cache
 #     advanced AFTER the commit by atomic rename (write-temp +
 #     os.rename replace). It is NOT the commit point: a conditional
@@ -299,14 +286,51 @@ def _tmp_token() -> str:
     return f"{os.getpid()}.{threading.get_ident()}.{next(_TMP_COUNTER)}"
 
 
+def _scratch_path(path: str) -> str:
+    import os
+
+    head, tail = os.path.split(path)
+    return os.path.join(head, f".{tail}.tmp.{_tmp_token()}")
+
+
+def _write_new(path: str, payload: bytes) -> None:
+    """Create ``path`` holding ``payload``, atomically and only if it
+    does not exist: the bytes go to a private scratch file, and link(2)
+    publishes it under the final name or fails with FileExistsError
+    (atomically, on every POSIX filesystem). Readers never see a
+    partial file. The scratch file is always removed. This is the
+    commit point of the table format."""
+    import os
+
+    tmp = _scratch_path(path)
+    with open(tmp, "wb") as f:
+        f.write(payload)
+    try:
+        os.link(tmp, path)
+    finally:
+        os.unlink(tmp)
+
+
+def _write_replace(path: str, payload: bytes) -> None:
+    """Write ``path`` holding ``payload``, atomically replacing any
+    existing file (scratch file + rename(2)): readers see the old bytes
+    or the new ones, never a torn file. Last writer wins."""
+    import os
+
+    tmp = _scratch_path(path)
+    with open(tmp, "wb") as f:
+        f.write(payload)
+    os.rename(tmp, path)
+
+
 def _advance_pointer(table_dir: str, snapshot_id: int) -> None:
     import os
 
     os.makedirs(table_dir, exist_ok=True)
-    tmp = os.path.join(table_dir, f".current.tmp.{_tmp_token()}")
-    with open(tmp, "w") as f:
-        json.dump({"snapshot_id": snapshot_id}, f)
-    os.rename(tmp, os.path.join(table_dir, "current"))  # atomic replace
+    _write_replace(
+        os.path.join(table_dir, "current"),
+        json.dumps({"snapshot_id": snapshot_id}).encode(),
+    )
 
 
 def snapshot_manifest(table_dir: str, snapshot_id: int) -> dict:
@@ -426,27 +450,22 @@ def _cas_publish_manifest(
     new_id = expected_parent + 1
     mdir = os.path.join(table_dir, "manifests")
     os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{new_id}.tmp.{_tmp_token()}")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "snapshot_id": new_id,
-                "parent_id": expected_parent,
-                **body,
-                **carried,
-                **(extra or {}),  # explicit extra overrides the carry
-            },
-            f,
-        )
+    doc = {
+        "snapshot_id": new_id,
+        "parent_id": expected_parent,
+        **body,
+        **carried,
+        **(extra or {}),  # explicit extra overrides the carry
+    }
     try:
-        os.link(tmp, os.path.join(mdir, f"v{new_id}.json"))  # the CAS
+        _write_new(  # the CAS
+            os.path.join(mdir, f"v{new_id}.json"), json.dumps(doc).encode()
+        )
     except FileExistsError:
         raise SnapshotConflict(
             f"lost the race for snapshot {new_id}: another writer "
             f"committed from parent {expected_parent} first"
         ) from None
-    finally:
-        os.unlink(tmp)
     _advance_pointer(table_dir, new_id)
     return new_id
 
@@ -459,12 +478,14 @@ def _write_shard(mdir: str, files: list[str], stats: dict | None) -> str:
     is literal path equality, and untouched-shard byte-identity is
     structural, not a convention (the Iceberg manifest-file contract).
     Stats entries are sliced to this shard's files only."""
+    import contextlib
     import hashlib
     import os
 
+    members = set(files)
     sliced: dict = {}
     for col, per_file in (stats or {}).items():
-        keep = {fp: iv for fp, iv in per_file.items() if fp in set(files)}
+        keep = {fp: iv for fp, iv in per_file.items() if fp in members}
         if keep:
             sliced[col] = keep
     payload = json.dumps(
@@ -473,12 +494,9 @@ def _write_shard(mdir: str, files: list[str], stats: dict | None) -> str:
     ).encode()
     name = f"shard-{hashlib.md5(payload).hexdigest()}.json"
     os.makedirs(mdir, exist_ok=True)
-    path = os.path.join(mdir, name)
-    if not os.path.exists(path):  # content-addressed: idempotent write
-        tmp = path + f".tmp.{_tmp_token()}"
-        with open(tmp, "wb") as f:
-            f.write(payload)
-        os.rename(tmp, path)
+    # content-addressed: an existing shard of this name holds these bytes
+    with contextlib.suppress(FileExistsError):
+        _write_new(os.path.join(mdir, name), payload)
     return os.path.join("manifests", name)
 
 
@@ -621,65 +639,33 @@ def snapshot_commit_sharded(
     }
 
 
-def snapshot_commit_with_retry(
-    table_dir: str,
-    build_files,
-    max_retries: int = 5,
-) -> tuple[int, int]:
-    """Optimistic-concurrency commit loop: ``build_files(parent_id)``
-    rebuilds the new snapshot's file list AGAINST the given parent
-    (append → parent files + new files; the rebase step), then the CAS
-    commit is attempted; on SnapshotConflict the current snapshot is
-    re-read and the build re-runs against it. Returns
-    (committed_snapshot_id, conflicts_hit). Appends always converge;
-    overlapping row-level updates are the caller's rebase problem —
-    exactly Iceberg's serializable-vs-snapshot-isolation validation
-    split."""
-    conflicts = 0
-    while True:
-        parent = snapshot_current(table_dir)
-        try:
-            return snapshot_commit_atomic(
-                table_dir, parent, build_files(parent)
-            ), conflicts
-        except SnapshotConflict:
-            conflicts += 1
-            if conflicts > max_retries:
-                raise
+#: Conflicts one commit may lose before snapshot_retry gives up. Each
+#: lost race means another writer committed a newer snapshot, so N
+#: writers racing from one parent converge within N - 1 conflicts each.
+SNAPSHOT_MAX_CONFLICTS = 8
 
 
-def snapshot_commit_sharded_with_retry(
-    table_dir: str,
-    added_files: list[str],
-    removed_files: list[str] | tuple = (),
-    stats: dict | None = None,
-    extra: dict | None = None,
-    max_retries: int = 5,
-) -> tuple[int, dict, int]:
-    """Optimistic-concurrency loop for the manifest-LIST tier (r14,
-    the r13 verdict's ask #3). The sharded commit carries strictly
-    more state across a retry than the flat one — parent_shards,
-    shard_stats, the flat→sharded conversion — and ALL of it is
-    re-derived inside snapshot_commit_sharded from whatever parent the
-    retry observes, so the rebase here is just "re-read the pointer
-    and go again": the added shard is content-addressed (a retry
-    rewrites the same path with the same bytes), parent-shard reuse is
-    recomputed against the NEW parent's list, and a racing flat commit
-    is converted exactly as a flat parent would be. Disjoint appends
-    always converge; overlapping removed_files across writers are the
-    caller's rebase problem (the snapshot_commit_with_retry caveat,
-    unchanged). Returns (snapshot_id, info, conflicts_hit)."""
+def snapshot_retry(table_dir: str, attempt) -> tuple:
+    """The optimistic-concurrency loop of every commit on the table:
+    read the current snapshot, call ``attempt(parent)``, and on
+    SnapshotConflict read the current snapshot again and retry, up to
+    SNAPSHOT_MAX_CONFLICTS conflicts (the next one is raised). Returns
+    ``(attempt's result, conflicts hit)``.
+
+    The attempt is the REBASE step: it rebuilds its commit against the
+    parent it is given (an append lists parent files + new files; a
+    sharded commit re-derives shard reuse; a delete re-reads the
+    parent's delete list) and may return without committing (a replay
+    skip, a no-op). Disjoint appends always converge; overlapping
+    row-level rewrites are the attempt's rebase problem — exactly
+    Iceberg's serializable-vs-snapshot-isolation validation split."""
     conflicts = 0
     while True:
-        parent = snapshot_current(table_dir)
         try:
-            nid, info = snapshot_commit_sharded(
-                table_dir, parent, added_files, removed_files, stats, extra
-            )
-            return nid, info, conflicts
+            return attempt(snapshot_current(table_dir)), conflicts
         except SnapshotConflict:
             conflicts += 1
-            if conflicts > max_retries:
+            if conflicts > SNAPSHOT_MAX_CONFLICTS:
                 raise
 
 
@@ -749,26 +735,18 @@ def snapshot_delete_keys(
     d = os.path.join(table_dir, "data", "deletes", f"d_{_tmp_token()}")
     keys_df.select(key_col).distinct().write.mode("overwrite").parquet(d)
     entry = {"key": key_col, "paths": snapshot_data_files(d)}
-    conflicts = 0
-    while True:
-        parent = snapshot_current(table_dir)
+
+    def attempt(parent: int) -> int:
         dels = (
-            list(
-                snapshot_manifest(table_dir, parent).get("delete_files", [])
-            )
+            snapshot_manifest(table_dir, parent).get("delete_files", [])
             if parent > 0
             else []
         )
-        try:
-            new_id, _ = snapshot_commit_sharded(
-                table_dir, parent, [], delete_files=dels + [entry],
-                extra=extra,
-            )
-            return new_id
-        except SnapshotConflict:
-            conflicts += 1
-            if conflicts > 8:
-                raise
+        return snapshot_commit_sharded(
+            table_dir, parent, [], delete_files=dels + [entry], extra=extra
+        )[0]
+
+    return snapshot_retry(table_dir, attempt)[0]
 
 
 def snapshot_undelete_keys(
@@ -794,9 +772,8 @@ def snapshot_undelete_keys(
     import os
 
     keys = keys_df.select(key_col).distinct()
-    conflicts = 0
-    while True:
-        parent = snapshot_current(table_dir)
+
+    def attempt(parent: int) -> int:
         if parent == 0:
             return 0
         dels = list(
@@ -828,15 +805,11 @@ def snapshot_undelete_keys(
             )
         if not changed:
             return parent
-        try:
-            new_id, _ = snapshot_commit_sharded(
-                table_dir, parent, [], delete_files=new_dels, extra=extra
-            )
-            return new_id
-        except SnapshotConflict:
-            conflicts += 1
-            if conflicts > 8:
-                raise
+        return snapshot_commit_sharded(
+            table_dir, parent, [], delete_files=new_dels, extra=extra
+        )[0]
+
+    return snapshot_retry(table_dir, attempt)[0]
 
 
 def snapshot_apply_deletes(
@@ -1515,13 +1488,11 @@ def snapshot_append_batch_multiwriter(
     batch_df: DataFrame,
     batch_id: int,
     writer_id: str,
-    max_retries: int = 8,
 ) -> bool:
     """MULTI-WRITER idempotent-by-batch-id append (r14) — closing the
-    trade snapshot_append_batch records in writing ("a multi-writer
-    stream would retry the CAS via snapshot_commit_with_retry and
-    re-check the watermark on rebase — recorded, not needed for one
-    query's one sink"). N independent streaming sinks append to ONE
+    multi-writer trade snapshot_append_batch records: the commit runs
+    through snapshot_retry and re-checks the watermark on every
+    rebase. N independent streaming sinks append to ONE
     table; each carries its own exactly-once watermark in the shared
     manifest's ``last_batch_ids`` map (Delta's per-appId `txn` action
     — one table, many transactional writers):
@@ -1565,9 +1536,8 @@ def snapshot_append_batch_multiwriter(
     )
     batch_df.write.mode("overwrite").parquet(out_dir)
     files = snapshot_data_files(out_dir)
-    conflicts = 0
-    while True:
-        parent = snapshot_current(table_dir)
+
+    def attempt(parent: int) -> bool:
         if batch_id <= _last(parent):
             # rebase re-check: our own watermark advanced while we
             # raced — a concurrent replay of this writer committed
@@ -1578,18 +1548,12 @@ def snapshot_append_batch_multiwriter(
             else {}
         )
         merged[writer_id] = batch_id
-        try:
-            snapshot_commit_sharded(
-                table_dir,
-                parent,
-                files,
-                extra={"last_batch_ids": merged},
-            )
-            return True
-        except SnapshotConflict:
-            conflicts += 1
-            if conflicts > max_retries:
-                raise
+        snapshot_commit_sharded(
+            table_dir, parent, files, extra={"last_batch_ids": merged}
+        )
+        return True
+
+    return snapshot_retry(table_dir, attempt)[0]
 
 
 def snapshot_rollback(table_dir: str, to_id: int) -> int:
@@ -1664,28 +1628,19 @@ def snapshot_set_ref(table_dir: str, name: str, snapshot_id: int) -> None:
     rdir = os.path.join(table_dir, "refs")
     os.makedirs(rdir, exist_ok=True)
     dst = os.path.join(rdir, f"{name}.json")
-    tmp = os.path.join(rdir, f".{name}.tmp.{_tmp_token()}")
-    with open(tmp, "w") as f:
-        json.dump({"name": name, "snapshot_id": snapshot_id}, f)
+    doc = json.dumps({"name": name, "snapshot_id": snapshot_id}).encode()
     try:
-        try:
-            os.link(tmp, dst)  # create-if-absent: atomic when free
-            return
-        except FileExistsError:
-            pass
-        with open(dst) as f:
-            if json.load(f).get("immutable"):
-                raise ValueError(
-                    f"'{name}' is an immutable tag; a tag never moves"
-                )
-        # existing MUTABLE ref: replace atomically. No tag can appear
-        # under the rename (create-if-absent fails on existing files),
-        # so this clobbers only other mutable-ref writes.
-        os.rename(tmp, dst)
-        tmp = None  # consumed by the rename
-    finally:
-        if tmp is not None and os.path.exists(tmp):
-            os.unlink(tmp)
+        _write_new(dst, doc)  # create-if-absent: atomic when free
+        return
+    except FileExistsError:
+        pass
+    with open(dst) as f:
+        if json.load(f).get("immutable"):
+            raise ValueError(f"'{name}' is an immutable tag; a tag never moves")
+    # existing MUTABLE ref: replace atomically. No tag can appear
+    # under the rename (create-if-absent fails on existing files),
+    # so this clobbers only other mutable-ref writes.
+    _write_replace(dst, doc)
 
 
 def snapshot_set_tag(table_dir: str, name: str, snapshot_id: int) -> None:
@@ -1705,21 +1660,13 @@ def snapshot_set_tag(table_dir: str, name: str, snapshot_id: int) -> None:
     snapshot_manifest(table_dir, snapshot_id)  # no dangling tags
     rdir = os.path.join(table_dir, "refs")
     os.makedirs(rdir, exist_ok=True)
-    dst = os.path.join(rdir, f"{name}.json")
-    tmp = os.path.join(rdir, f".{name}.tmp.{_tmp_token()}")
-    with open(tmp, "w") as f:
-        json.dump(
-            {"name": name, "snapshot_id": snapshot_id, "immutable": True},
-            f,
-        )
-    try:
-        os.link(tmp, dst)  # create-if-absent: one winner
+    doc = {"name": name, "snapshot_id": snapshot_id, "immutable": True}
+    try:  # create-if-absent: one winner
+        _write_new(os.path.join(rdir, f"{name}.json"), json.dumps(doc).encode())
     except FileExistsError:
         raise ValueError(
             f"tag '{name}' already exists (tags never move; refs do)"
         ) from None
-    finally:
-        os.unlink(tmp)
 
 
 def snapshot_resolve_ref(table_dir: str, name: str) -> int:

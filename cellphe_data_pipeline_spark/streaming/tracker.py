@@ -1569,12 +1569,9 @@ def ivf_delete_batch_idempotent(
     if batch_id <= last:
         return False
     ivf_delete_ids(spark, bucket_dir, ids_df)
-    from cellphe_data_pipeline_spark.sources.io import _tmp_token
+    from cellphe_data_pipeline_spark.sources.io import _write_replace
 
-    tmp = f"{wm_path}.tmp.{_tmp_token()}"
-    with open(tmp, "w") as f:
-        json.dump({"last_batch_id": batch_id}, f)
-    os.rename(tmp, wm_path)
+    _write_replace(wm_path, json.dumps({"last_batch_id": batch_id}).encode())
     return True
 
 

@@ -59,9 +59,10 @@ def test_cut_lineage_replicated_writes_parquet(spark, ckpt_dir):
     assert all("probe-" in f for f in out.inputFiles()) and out.inputFiles()
 
 
-def test_connected_components_under_replicated_cuts(spark, ckpt_dir):
+def test_connected_components_under_replicated_cuts(spark, ckpt_dir, monkeypatch):
     """The CC loop's per-round cuts run through the parquet publish and
     produce the same components as the default path."""
+    from cellphe_data_pipeline_spark.operators import graph
     from cellphe_data_pipeline_spark.operators.graph import connected_components
 
     # two chains + one triangle, forced through the distributed loop
@@ -69,9 +70,9 @@ def test_connected_components_under_replicated_cuts(spark, ckpt_dir):
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21), (21, 22), (22, 20)],
         "src bigint, dst bigint",
     )
+    monkeypatch.setattr(graph, "CC_DRIVER_FINISH_CAP", 0)
     got = {
-        (r["node"], r["component"])
-        for r in connected_components(edges, driver_finish_cap=0).collect()
+        (r["node"], r["component"]) for r in connected_components(edges).collect()
     }
     want = {(n, 1) for n in (1, 2, 3, 4)} | {(n, 10) for n in (10, 11, 12)} | {
         (n, 20) for n in (20, 21, 22)

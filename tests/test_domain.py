@@ -115,8 +115,10 @@ def test_renumber_tracks_vs_oracle(spark):
     assert sorted(set(got.values())) == list(range(1, len(set(got.values())) + 1))
 
 
-def test_renumber_tracks_random_vs_oracle(spark):
+def test_renumber_tracks_random_vs_oracle(spark, monkeypatch):
     import random
+
+    from cellphe_data_pipeline_spark.domain import lineage
 
     rng = random.Random(5)
     n = 120
@@ -134,13 +136,13 @@ def test_renumber_tracks_random_vs_oracle(spark):
     want = renumber_tracks_oracle(nodes, edges)
     assert got == want
     # the bounded driver path (default) and the fully distributed path
-    # must assign IDENTICAL track ids
+    # (cap 0) must assign IDENTICAL track ids
+    monkeypatch.setattr(lineage, "EDGE_DRIVER_CAP", 0)
     distributed = {
         r["ID"]: r["TRACK_ID"]
         for r in renumber_tracks(
             spark.createDataFrame(nodes, "ID bigint, FRAME int"),
             spark.createDataFrame(edges, "src bigint, dst bigint"),
-            edge_driver_cap=0,
         ).collect()
     }
     assert distributed == want
@@ -2453,7 +2455,9 @@ def test_resample_audio_integer_exact_vs_numpy(spark):
             len(x), int(x.sum()), int((x * x).sum()), int(x[0]), int(x[-1]))
 
 
-def test_renumber_tracks_tolerates_phantom_endpoints_and_cycles(spark):
+def test_renumber_tracks_tolerates_phantom_endpoints_and_cycles(
+    spark, monkeypatch
+):
     """Review-finding regression: the bounded driver path must not crash
     where the distributed path tolerates — edges referencing ids absent
     from the node table (falls back to the distributed path) and
@@ -2476,9 +2480,11 @@ def test_renumber_tracks_tolerates_phantom_endpoints_and_cycles(spark):
     driver = {
         r["ID"]: r["TRACK_ID"] for r in renumber_tracks(nodes2, edges2).collect()
     }
+    from cellphe_data_pipeline_spark.domain import lineage
+
+    monkeypatch.setattr(lineage, "EDGE_DRIVER_CAP", 0)
     dist = {
-        r["ID"]: r["TRACK_ID"]
-        for r in renumber_tracks(nodes2, edges2, edge_driver_cap=0).collect()
+        r["ID"]: r["TRACK_ID"] for r in renumber_tracks(nodes2, edges2).collect()
     }
     assert driver == dist
     assert driver.keys() == {1, 2}

@@ -80,7 +80,7 @@ def test_degree_roots_prune(spark):
     assert rts == [1, 4]
 
 
-def test_cc_contraction_equivalence(spark):
+def test_cc_contraction_equivalence(spark, monkeypatch):
     """The partition-local contraction pre-pass is connectivity-
     preserving: the distributed path (which contracts first) gives the
     union-find labels, including on random (no id locality) and
@@ -100,10 +100,12 @@ def test_cc_contraction_equivalence(spark):
     }
     assert _partition(with_pre) == _partition(_uf_components(edges))
     # the bounded driver-finish fast path (take + central union-find)
-    # and the fully distributed alternation must agree exactly
+    # and the fully distributed alternation (cap 0) must agree exactly
+    from cellphe_data_pipeline_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CC_DRIVER_FINISH_CAP", 0)
     distributed = {
-        r["node"]: r["component"]
-        for r in connected_components(df, driver_finish_cap=0).collect()
+        r["node"]: r["component"] for r in connected_components(df).collect()
     }
     assert with_pre == distributed
 
@@ -467,10 +469,10 @@ def test_cc_auto_loop_partitions_matches_and_restores_conf(spark, monkeypatch):
     edges = [(u, v) for u, v in edges if u != v]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
 
+    monkeypatch.setattr(graph, "CC_DRIVER_FINISH_CAP", 0)
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     auto = {
-        r["node"]: r["component"]
-        for r in connected_components(df, driver_finish_cap=0).collect()
+        r["node"]: r["component"] for r in connected_components(df).collect()
     }
     assert spark.conf.get("spark.sql.shuffle.partitions") == saved
     assert _partition(auto) == _partition(_uf_components(edges))
@@ -484,6 +486,6 @@ def test_cc_auto_loop_partitions_matches_and_restores_conf(spark, monkeypatch):
 
     monkeypatch.setattr(graph, "_contract_local", failing_contract)
     with pytest.raises(RuntimeError, match="contraction failed"):
-        connected_components(df, driver_finish_cap=0)
+        connected_components(df)
     assert seen == ["2"]  # 300 edges: the [2, 2x parallelism] floor
     assert spark.conf.get("spark.sql.shuffle.partitions") == saved

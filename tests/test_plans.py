@@ -139,13 +139,14 @@ def test_summary_plan_no_cartesian(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_renumber_tracks_broadcasts_track_ids_under_cap(spark):
-    """On the DISTRIBUTED path (edge_driver_cap=0 — below EDGE_DRIVER_CAP
+def test_renumber_tracks_broadcasts_track_ids_under_cap(spark, monkeypatch):
+    """On the DISTRIBUTED path (EDGE_DRIVER_CAP set to 0 — below the cap
     the whole renumbering short-circuits to the driver oracle and the
     plan is a LocalTableScan), under TRACK_DIM_DRIVER_CAP the head table
     is numbered driver-side and the final track-id join must be a
     BROADCAST of the tiny id relation, never a shuffle of the labelled
     node table (r5)."""
+    from cellphe_data_pipeline_spark.domain import lineage
     from cellphe_data_pipeline_spark.domain.lineage import renumber_tracks
 
     # 4 cells over 5 frames: node id = frame*4 + cell, edges advance one
@@ -156,7 +157,9 @@ def test_renumber_tracks_broadcasts_track_ids_under_cap(spark):
     edges = spark.createDataFrame(
         [(i, i + 4) for i in range(16)], "src long, dst long"
     )
-    tracks = renumber_tracks(nodes, edges, edge_driver_cap=0)
+    with monkeypatch.context() as m:
+        m.setattr(lineage, "EDGE_DRIVER_CAP", 0)
+        tracks = renumber_tracks(nodes, edges)
     plan = tracks._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
